@@ -104,7 +104,8 @@ class Graft:
         self._jgraft.refreshIndex(name, mode)
 
     def optimize_index(self, name, mode="quick"):
-        """mode: "quick" (files under the size threshold only) | "full"."""
+        """mode: "quick" (files under the size threshold, in groups of at
+        least two: per bucket, per IVF cell, or the whole index) | "full"."""
         self._jgraft.optimizeIndex(name, mode)
 
     def cancel(self, name):

@@ -41,7 +41,9 @@ class Graft(spark: SparkSession) {
     *    lineage — reads only old index data + appended files;
     *  - "quick": metadata-only — record the appended/deleted file delta
     *    in the log so query-time hybrid scan keeps applying it and the
-    *    staleness thresholds re-baseline from this point. */
+    *    staleness thresholds re-baseline from this point.
+    * An incremental or quick refresh that finds no delta and no recorded
+    * update writes no log entry. */
   def refreshIndex(name: String, mode: String = "full"): Unit = mode match {
     case "full" => manager.refreshFull(name)
     case "incremental" => manager.refreshIncremental(name)
@@ -51,7 +53,12 @@ class Graft(spark: SparkSession) {
 
   /** Compact index data files (reference: Hyperspace.scala:110-133).
     * "quick" (default) compacts only files below
-    * spark.graft.index.optimize.fileSizeThreshold; "full" rewrites all. */
+    * spark.graft.index.optimize.fileSizeThreshold, and only in groups
+    * holding at least two of them (covering: per bucket; IVF: per cell;
+    * data-skipping, z-order, MinHash: the whole index); an IVF or MinHash
+    * index with tombstones rewrites every small file to purge them.
+    * "full" rewrites all. When nothing qualifies no log entry is written
+    * and the event says there was nothing to compact. */
   def optimizeIndex(name: String, mode: String = "quick"): Unit =
     manager.optimize(name, mode)
 
@@ -255,7 +262,13 @@ class Graft(spark: SparkSession) {
     *     smaller id survives — pairwise greedy, not transitive closure:
     *     batches are small and re-collide against the corpus once
     *     ingested, where the closure runs at corpus scale).
-    * Returns the surviving batch rows (original columns preserved). */
+    *
+    * The gate runs HERE, at call time, once: the gated `(doc_id, text)`
+    * batch is materialized with `localCheckpoint` (batches are small by
+    * contract — step 2 broadcasts them), and steps 2 and 3 and the
+    * kept-id anti-joins all read that one copy instead of re-scanning
+    * and re-gating the batch per consumer. Returns the surviving batch
+    * rows (original columns preserved); its plan scans `batch` once. */
   def curateBatch(indexName: String, batch: DataFrame,
       idCol: String, textCol: String,
       minEstJaccard: Double = 0.5): DataFrame = {
@@ -269,7 +282,7 @@ class Graft(spark: SparkSession) {
     val quality = graft.queries.Pipeline
       .qualityGate(graft.queries.Pipeline.qualityMetrics(std))
       .select(col("doc_id"))
-    val clean = std.join(quality, "doc_id")
+    val clean = std.join(quality, "doc_id").localCheckpoint()
     val corpusDups = graft.index.minhash.MinHashSearch.dedupAgainst(
         spark, entry, clean, "doc_id", "text", minEstJaccard,
         appendedDf, droppedFids)

@@ -62,13 +62,6 @@ object GraftSession {
       // — it swaps the mmap for a buffered copy but keeps all the files.)
       .config("spark.shuffle.sort.bypassMergeThreshold",
         sys.env.getOrElse("GRAFT_BYPASS_THRESH", "0"))
-      // A/B knobs (OPTIMIZATION_r18 §5): scan-split open cost and the
-      // AQE post-shuffle coalescing floor — both byte-cost constants
-      // whose defaults embed remote-object-storage assumptions
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("GRAFT_OPEN_COST", "4194304"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PARTITION_SIZE", "1048576"))
     if (master != null) b.master(master) else b
   }
 

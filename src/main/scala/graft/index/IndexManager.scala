@@ -127,9 +127,15 @@ final class IndexManager(spark: SparkSession) {
 
   // -------------------------------------------------- state transitions
 
-  private def transition(name: String, from: Set[String],
+  /** Run one action on the latest stable entry. `plan` sees that entry
+    * BEFORE anything is written and returns the op to run, or None when
+    * there is nothing to do: then no log entry is written and the
+    * catalog cache stays warm (reference: the NoChangesException no-op
+    * of actions/Action.scala). Returns the final entry and whether the
+    * action wrote it. */
+  private def transitionIf(name: String, from: Set[String],
       inFlight: String, to: String)(
-      op: IndexLogEntry => IndexLogEntry): IndexLogEntry =
+      plan: IndexLogEntry => Option[() => IndexLogEntry]): (IndexLogEntry, Boolean) =
     GraftRuleGuard.withRuleDisabled {
       preflightLogger()
       val log = logManager(name)
@@ -137,19 +143,27 @@ final class IndexManager(spark: SparkSession) {
         throw new NoSuchElementException(s"Index '$name' does not exist"))
       require(from.contains(latest.state),
         s"Index '$name' is ${latest.state}; expected one of $from")
-      val baseId = log.getLatestId.getOrElse(-1L)
-      require(log.writeLog(baseId + 1,
-        latest.copy(state = inFlight, id = baseId + 1,
-          timestamp = System.currentTimeMillis())),
-        s"Concurrent modification of index '$name'")
-      val updated = op(latest)
-      val fin = updated.copy(state = to, id = baseId + 2,
-        timestamp = System.currentTimeMillis())
-      require(log.writeLog(baseId + 2, fin),
-        s"Concurrent modification of index '$name'")
-      rules.IndexCatalog.invalidate(spark)
-      fin
+      plan(latest) match {
+        case None => (latest, false)
+        case Some(op) =>
+          val baseId = log.getLatestId.getOrElse(-1L)
+          require(log.writeLog(baseId + 1,
+            latest.copy(state = inFlight, id = baseId + 1,
+              timestamp = System.currentTimeMillis())),
+            s"Concurrent modification of index '$name'")
+          val fin = op().copy(state = to, id = baseId + 2,
+            timestamp = System.currentTimeMillis())
+          require(log.writeLog(baseId + 2, fin),
+            s"Concurrent modification of index '$name'")
+          rules.IndexCatalog.invalidate(spark)
+          (fin, true)
+      }
     }
+
+  private def transition(name: String, from: Set[String],
+      inFlight: String, to: String)(
+      op: IndexLogEntry => IndexLogEntry): IndexLogEntry =
+    transitionIf(name, from, inFlight, to)(latest => Some(() => op(latest)))._1
 
   /** Cancel an in-flight action: roll the log forward to the last stable
     * state (reference: Hyperspace.scala:149 + actions/CancelAction). Used
@@ -269,28 +283,30 @@ final class IndexManager(spark: SparkSession) {
     * staleness thresholds re-baseline — only drift accumulated AFTER this
     * point counts against maxAppendedRatio/maxDeletedRatio. O(file
     * listing) — the cheapest way to keep an index usable under steady
-    * append traffic at 100 TB. */
+    * append traffic at 100 TB. An empty delta on an entry with no
+    * recorded update writes no log entry. */
   def refreshQuick(name: String): Unit = {
-    val fin = transition(name, Set(IndexState.Active), IndexState.Refreshing,
-      IndexState.Active) { latest =>
-      val tracker = new FileIdTracker
-      latest.sourceFiles.foreach(tracker.addKnown)
-      val source = readSource(latest)
-      val currentRels = SourceRelation.captureAll(source, tracker)
-      val current = currentRels.flatMap(_.files)
-      def key(f: FileMeta) = (f.path, f.size, f.modifiedTime)
-      val loggedKeys = latest.sourceFiles.map(key)
-      val currentKeys = current.map(key).toSet
-      val appended = current.filterNot(f => loggedKeys.contains(key(f)))
-      val deleted = latest.sourceFiles.toSeq.filterNot(f => currentKeys.contains(key(f)))
-      // empty delta CLEARS any stale recorded update (drift that nets to
-      // zero must not wedge consumers that refuse stale deltas)
-      if (appended.isEmpty && deleted.isEmpty) latest.copy(update = None)
-      else latest.copy(update = Some(UpdateMeta(appended, deleted)))
+    val (fin, changed) = transitionIf(name, Set(IndexState.Active),
+        IndexState.Refreshing, IndexState.Active) { latest =>
+      val delta = sourceDelta(latest)
+      // an empty delta CLEARS any stale recorded update (drift that nets
+      // to zero must not wedge consumers that refuse stale deltas)
+      if (delta.isEmpty) clearUpdate(latest)
+      else Some(() => latest.copy(
+        update = Some(UpdateMeta(delta.appended, delta.deleted))))
     }
     emit(RefreshQuickActionEvent(app, fin,
-      s"Index '$name' refreshed (quick, metadata-only)."))
+      if (changed) s"Index '$name' refreshed (quick, metadata-only)."
+      else unchanged(name)))
   }
+
+  /** The op of a refresh whose listed delta is empty: clear a recorded
+    * update, or nothing at all. */
+  private def clearUpdate(latest: IndexLogEntry): Option[() => IndexLogEntry] =
+    latest.update.map(_ => () => latest.copy(update = None))
+
+  private def unchanged(name: String): String =
+    s"Index '$name' unchanged: no source files appended or deleted."
 
   /** Incremental refresh: fold appended files into the index and drop
     * rows from deleted files — without touching unchanged source data
@@ -309,23 +325,17 @@ final class IndexManager(spark: SparkSession) {
     *    HashPartitioning; small-file accumulation is `optimize`'s job.
     *  - deletes (compaction churn) fall back to filter-and-rewrite via
     *    lineage — the reference makes the same Merge-vs-rewrite split
-    *    (CoveringIndexTrait.scala:58-77 Merge mode vs Delete mode). */
+    *    (CoveringIndexTrait.scala:58-77 Merge mode vs Delete mode).
+    *
+    * An empty delta on an entry with no recorded update writes no log
+    * entry. */
   def refreshIncremental(name: String): Unit = {
-    val fin = transition(name, Set(IndexState.Active), IndexState.Refreshing,
-      IndexState.Active) { latest =>
-      val tracker = new FileIdTracker
-      latest.sourceFiles.foreach(tracker.addKnown)
-      val source = readSource(latest)
-      val currentRels = SourceRelation.captureAll(source, tracker)
-      val current = currentRels.flatMap(_.files)
-      def key(f: FileMeta) = (f.path, f.size, f.modifiedTime)
-      val loggedKeys = latest.sourceFiles.map(key)
-      val currentKeys = current.map(key).toSet
-      val appended = current.filterNot(f => loggedKeys.contains(key(f)))
-      val deleted = latest.sourceFiles.toSeq.filterNot(f => currentKeys.contains(key(f)))
-
-      if (appended.isEmpty && deleted.isEmpty) latest.copy(update = None)
-      else {
+    val (fin, changed) = transitionIf(name, Set(IndexState.Active),
+        IndexState.Refreshing, IndexState.Active) { latest =>
+      val delta = sourceDelta(latest)
+      val SourceDelta(tracker, source, currentRels, appended, deleted) = delta
+      if (delta.isEmpty) clearUpdate(latest)
+      else Some { () =>
         val version = nextVersion(name)
         val dataPath = dataVersionPath(name, version)
         val ctx = IndexBuildContext(spark, dataPath.toString, tracker)
@@ -416,45 +426,40 @@ final class IndexManager(spark: SparkSession) {
       }
     }
     emit(RefreshIncrementalActionEvent(app, fin,
-      s"Index '$name' refreshed (incremental)."))
+      if (changed) s"Index '$name' refreshed (incremental)."
+      else unchanged(name)))
   }
 
   /** Compact index data files (reference: actions/OptimizeAction.scala:57-148
     * — bucket-wise small-file compaction, quick/full modes).
     *
-    *  - "quick" (default): rewrite ONLY files smaller than
-    *    `spark.graft.index.optimize.fileSizeThreshold` (256 MB); files at
-    *    or above the threshold stay in place untouched, so maintenance
-    *    cost is O(small files) — at 100 TB the difference between a
-    *    routine job and a full index rebuild. The resulting content spans
-    *    version dirs; every reader goes through `content.filePaths`.
+    *  - "quick" (default): rewrite only files smaller than
+    *    `spark.graft.index.optimize.fileSizeThreshold` (256 MB), and only
+    *    in groups that hold at least two of them — one small file has
+    *    nothing to merge with. A covering index groups by bucket id, IVF
+    *    by cell; data-skipping, z-order and MinHash are one group each.
+    *    Files at or above the threshold and lone small files stay in
+    *    place, so maintenance cost is O(small files) — at 100 TB the
+    *    difference between a routine job and a full index rebuild. The
+    *    resulting content spans version dirs; every reader goes through
+    *    `content.filePaths`. An IVF or MinHash index that carries
+    *    tombstones rewrites every small file, so they can be purged.
     *  - "full": rewrite everything. Covering: rewrite bucketed (one file
     *    per bucket). Data-skipping: rewrite size-targeted. Z-order:
-    *    re-cluster (global clustering — quick degenerates to full). */
+    *    re-cluster (global clustering — a qualifying quick group
+    *    re-clusters the whole index too).
+    *
+    * When nothing qualifies, no log entry is written; the event still
+    * fires and says there was nothing to compact. */
   def optimize(name: String, mode: String = "quick"): Unit = {
-    val fin = transition(name, Set(IndexState.Active), IndexState.Optimizing,
-      IndexState.Active) { latest =>
-      val tracker = new FileIdTracker
-      latest.sourceFiles.foreach(tracker.addKnown)
-      val threshold = mode match {
-        case "quick" => GraftConf.optimizeFileSizeThreshold(spark)
-        case "full" => Long.MaxValue
-        case m => throw new IllegalArgumentException(s"Unknown optimize mode '$m'")
-      }
-      val (small, kept) = latest.descriptor match {
-        case _: covering.CoveringIndexDescriptor |
-             _: dataskipping.DataSkippingIndexDescriptor |
-             _: graft.index.ivf.IvfIndexDescriptor |
-             _: graft.index.minhash.MinHashIndexDescriptor =>
-          latest.content.files.partition(_.size < threshold)
-        case _ =>
-          // globally-laid-out kinds (z-order clustering) are rebuilt
-          // whole — mixing kept files with a full rewrite would
-          // duplicate rows
-          (latest.content.files, Nil)
-      }
-      if (small.isEmpty) latest // nothing under the threshold: no-op
-      else {
+    require(mode == "quick" || mode == "full", s"Unknown optimize mode '$mode'")
+    val (fin, changed) = transitionIf(name, Set(IndexState.Active),
+        IndexState.Optimizing, IndexState.Active) { latest =>
+      val (small, kept) = compactionSet(latest, mode)
+      if (small.isEmpty) None
+      else Some { () =>
+        val tracker = new FileIdTracker
+        latest.sourceFiles.foreach(tracker.addKnown)
         val version = nextVersion(name)
         val dataPath = dataVersionPath(name, version)
         val ctx = IndexBuildContext(spark, dataPath.toString, tracker)
@@ -463,7 +468,7 @@ final class IndexManager(spark: SparkSession) {
           case ci: covering.CoveringIndexDescriptor =>
             // rows re-hash to their original bucket ids (same key columns,
             // same numBuckets), so compacted files merge per bucket and
-            // coexist with untouched large files of the same bucket
+            // coexist with untouched files of the same bucket
             covering.CoveringIndexDescriptor.writeBucketed(
               spark, compactInput, ctx.dataPath, ci.numBuckets, ci.indexedColumns)
             ci
@@ -487,13 +492,12 @@ final class IndexManager(spark: SparkSession) {
             graft.index.minhash.MinHashBuild.compact(
               ctx, ContentMeta(latest.content.root, small), mh)
             if (kept.isEmpty) mh.copy(tombstones = Nil) else mh
-          case other =>
-            // z-order re-cluster: rebuild from the LOGGED file set, not a
-            // fresh listing — optimize must never fold in source drift
-            // (relations would go stale and hybrid scan would then union
-            // appended rows a second time)
-            other.build(ctx,
-              readFiles(latest, latest.relations.head.files.map(_.path)))
+          case zo: zorder.ZOrderIndexDescriptor =>
+            // re-cluster the index's OWN rows, lineage included: the
+            // source may have drifted or lost files since the logged
+            // snapshot, and folding drift in here would leave relations
+            // stale (hybrid scan would then union appended rows twice)
+            zorder.ZOrderBuild.recluster(ctx, compactInput, zo)
         }
         latest.copy(descriptor = newDescriptor,
           content = ContentMeta(ctx.dataPath,
@@ -501,21 +505,62 @@ final class IndexManager(spark: SparkSession) {
           properties = latest.properties + ("dataVersion" -> version.toString))
       }
     }
-    emit(OptimizeActionEvent(app, fin, s"Index '$name' optimized ($mode)."))
+    emit(OptimizeActionEvent(app, fin,
+      if (changed) s"Index '$name' optimized ($mode)."
+      else s"Index '$name' optimized ($mode): nothing to compact."))
+  }
+
+  /** Split the index files into (files to rewrite, files kept in place)
+    * by the group rule of [[optimize]]. */
+  private def compactionSet(entry: IndexLogEntry, mode: String)
+      : (Seq[FileMeta], Seq[FileMeta]) = {
+    val files = entry.content.files
+    if (mode == "full") return (files, Nil)
+    val threshold = GraftConf.optimizeFileSizeThreshold(spark)
+    val small = files.filter(_.size < threshold)
+    val rewrite: Set[FileMeta] = entry.descriptor match {
+      case iv: graft.index.ivf.IvfIndexDescriptor if iv.tombstones.nonEmpty =>
+        small.toSet
+      case mh: graft.index.minhash.MinHashIndexDescriptor
+          if mh.tombstones.nonEmpty =>
+        small.toSet
+      case _: zorder.ZOrderIndexDescriptor =>
+        // global clustering: a qualifying group re-clusters every file —
+        // mixing kept files with a re-clustered slice would break it
+        if (small.size >= 2) files.toSet else Set.empty
+      case d =>
+        val groupOf: FileMeta => String = d match {
+          case _: covering.CoveringIndexDescriptor => f =>
+            org.apache.spark.sql.execution.datasources.BucketingUtils
+              .getBucketId(new Path(f.path).getName).fold("")(_.toString)
+          case _: graft.index.ivf.IvfIndexDescriptor => f =>
+            new Path(f.path).getParent.getName // graft__cell=<c>
+          case _ => _ => ""
+        }
+        small.groupBy(groupOf).values.filter(_.size >= 2).flatten.toSet
+    }
+    files.partition(rewrite.contains)
   }
 
   /** Diff CURRENT source files against the logged snapshot:
     * (appended, deleted). Driver-side file listing only — used by readers
     * with no hybrid path (annSearch) to refuse silently-stale results. */
   def sourceDrift(entry: IndexLogEntry): (Seq[FileMeta], Seq[FileMeta]) = {
+    val delta = sourceDelta(entry)
+    (delta.appended, delta.deleted)
+  }
+
+  private def sourceDelta(entry: IndexLogEntry): SourceDelta = {
     val tracker = new FileIdTracker
     entry.sourceFiles.foreach(tracker.addKnown)
-    val current = SourceRelation.captureAll(readSource(entry), tracker)
-      .flatMap(_.files)
+    val source = readSource(entry)
+    val relations = SourceRelation.captureAll(source, tracker)
+    val current = relations.flatMap(_.files)
     def key(f: FileMeta) = (f.path, f.size, f.modifiedTime)
     val loggedKeys = entry.sourceFiles.map(key)
     val currentKeys = current.map(key).toSet
-    (current.filterNot(f => loggedKeys.contains(key(f))),
+    SourceDelta(tracker, source, relations,
+      current.filterNot(f => loggedKeys.contains(key(f))),
       entry.sourceFiles.toSeq.filterNot(f => currentKeys.contains(key(f))))
   }
 
@@ -596,6 +641,15 @@ final class IndexManager(spark: SparkSession) {
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
   }
+}
+
+/** The current source listing of an index against its logged snapshot.
+  * `tracker` knows the logged file ids and assigns new ids to appended
+  * files. */
+private final case class SourceDelta(tracker: FileIdTracker,
+    source: DataFrame, relations: Seq[RelationMeta],
+    appended: Seq[FileMeta], deleted: Seq[FileMeta]) {
+  def isEmpty: Boolean = appended.isEmpty && deleted.isEmpty
 }
 
 /** Thread-local guard so maintenance jobs never trigger the optimizer rule

@@ -167,8 +167,16 @@ object MinHashBuild {
   }
 
   /** Compact the given small files for `optimize`: plain rewrite of the
-    * slice (rows are independent), tombstoned rows physically dropped. */
+    * slice (rows are independent), tombstoned rows physically dropped,
+    * into ⌈slice bytes / size threshold⌉ files. Left to the scan split,
+    * every small file would be its own partition (the open cost) and
+    * come out as its own file again. */
   def compact(ctx: IndexBuildContext, smallContent: graft.index.ContentMeta,
-      d: MinHashIndexDescriptor): Unit =
-    write(ctx, antiTombstone(readIndexData(ctx.spark, smallContent), d))
+      d: MinHashIndexDescriptor): Unit = {
+    val threshold = graft.index.GraftConf.optimizeFileSizeThreshold(ctx.spark)
+    val files = math.max(1,
+      math.ceil(smallContent.totalSize.toDouble / threshold).toInt)
+    write(ctx, antiTombstone(readIndexData(ctx.spark, smallContent), d)
+      .coalesce(files))
+  }
 }

@@ -31,40 +31,53 @@ object ZOrderBuild {
 
   def build(ctx: IndexBuildContext, source: DataFrame,
       d: ZOrderIndexDescriptor): IndexDescriptor = {
-    val spark = ctx.spark
-    val nCols = d.indexedColumns.size
-    require(nCols * BitsPerColumn <= 62,
-      s"too many z-order columns (max ${62 / BitsPerColumn})")
-
     d.indexedColumns.foreach { c =>
       val t = source.schema(c).dataType
       require(zOrderable(t), s"z-order column '$c' has unsupported type $t")
     }
+    // optional lineage column: lets hybrid scan drop deleted files' rows
+    // at query time, same machinery as covering indexes (reference shares
+    // this across CI/ZCI via the common covering-index base)
+    val base =
+      if (d.hasLineage)
+        graft.index.covering.CoveringIndexDescriptor.attachLineage(ctx, source)
+      else source
+    cluster(ctx, source, base, d)
+  }
+
+  /** Re-cluster the index's own rows (optimize): its data files already
+    * hold the referenced columns and, with lineage, the lineage column —
+    * the source is never re-read. */
+  def recluster(ctx: IndexBuildContext, indexData: DataFrame,
+      d: ZOrderIndexDescriptor): IndexDescriptor =
+    cluster(ctx, indexData, indexData, d)
+
+  /** The two passes: quantiles over `stats`, the clustered write of
+    * `rows` (the same rows, plus the lineage column when the index has
+    * lineage). */
+  private def cluster(ctx: IndexBuildContext, stats: DataFrame,
+      rows: DataFrame, d: ZOrderIndexDescriptor): IndexDescriptor = {
+    val nCols = d.indexedColumns.size
+    require(nCols * BitsPerColumn <= 62,
+      s"too many z-order columns (max ${62 / BitsPerColumn})")
+    val projCols = (d.indexedColumns ++ d.includedColumns).map(col) ++
+      (if (d.hasLineage)
+        Seq(col(graft.index.covering.CoveringIndexDescriptor.LineageColumn))
+      else Nil)
 
     // ---- pass 1: quantile boundaries per column (one job for all cols)
     val nBuckets = 1 << BitsPerColumn
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val asDouble = source.select(
-      d.indexedColumns.map(c => toDouble(source, c).as(c)): _*)
+    val asDouble = stats.select(
+      d.indexedColumns.map(c => toDouble(stats, c).as(c)): _*)
     val boundaries: Array[Array[Double]] =
       asDouble.stat.approxQuantile(d.indexedColumns.toArray, probs, 0.001)
 
     // ---- pass 2: z-address + range-partitioned sorted write
     val zUdf = udf(new ZAddressFn(boundaries, BitsPerColumn))
-    // optional lineage column: lets hybrid scan drop deleted files' rows
-    // at query time, same machinery as covering indexes (reference shares
-    // this across CI/ZCI via the common covering-index base)
-    val projCols = (d.indexedColumns ++ d.includedColumns).map(col) ++
-      (if (d.hasLineage)
-        Seq(col(graft.index.covering.CoveringIndexDescriptor.LineageColumn))
-      else Nil)
-    val base =
-      if (d.hasLineage)
-        graft.index.covering.CoveringIndexDescriptor.attachLineage(ctx, source)
-      else source
-    val projected = base.select(projCols: _*)
+    val projected = rows.select(projCols: _*)
     val withZ = projected.withColumn(ZAddrColumn,
-      zUdf(array(d.indexedColumns.map(c => toDouble(source, c)): _*)))
+      zUdf(array(d.indexedColumns.map(c => toDouble(projected, c)): _*)))
 
     withZ
       .repartitionByRange(d.numPartitions, col(ZAddrColumn))

@@ -184,6 +184,70 @@ class MinHashIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("curateBatch gates once: same rows as the per-consumer composition, " +
+      "one batch scan in the returned plan") {
+    withDirs { (g, src) =>
+      val docs = spark.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      docs.filter(col("doc_id") % 2 === 0).coalesce(2)
+        .write.mode("overwrite").parquet(src)
+      g.createIndex(spark.read.parquet(src),
+        MinHashIndexConfig("mh_once", "doc_id", "text"))
+      // unseen (odd) docs, copies of corpus docs and of batch docs under
+      // new ids: planted corpus and batch-internal duplicates
+      val odd = docs.filter(col("doc_id") % 2 === 1)
+      val planted = odd.select(col("doc_id").as("new_id"), col("text"))
+        .unionByName(docs.filter(col("doc_id") <= 20L)
+          .select((col("doc_id") + 900000L).as("new_id"), col("text")))
+      val batchDir = Files.createTempDirectory("graft-mh-batch-").toString
+      planted.coalesce(2).write.mode("overwrite").parquet(batchDir)
+      val batch = spark.read.parquet(batchDir)
+
+      val kept = g.curateBatch("mh_once", batch, "new_id", "text")
+      val scans = allNodes(kept.queryExecution.executedPlan).collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.toString.contains(batchDir)) => f
+      }
+      assert(scans.size == 1, s"batch scanned ${scans.size} times")
+
+      // the composition before the gate was materialized: every consumer
+      // re-derives the gated batch from `batch`
+      val entry = g.indexManager.getIndexes().find(_.name == "mh_once").get
+      val d = entry.descriptor.asInstanceOf[graft.index.minhash.MinHashIndexDescriptor]
+      val std = batch.select(col("new_id").cast("long").as("doc_id"),
+        col("text").as("text"))
+      val clean = std.join(graft.queries.Pipeline.qualityGate(
+        graft.queries.Pipeline.qualityMetrics(std)).select(col("doc_id")), "doc_id")
+      val corpusDups = graft.index.minhash.MinHashSearch.dedupAgainst(
+          spark, entry, clean, "doc_id", "text", 0.5)
+        .select(col("batch_id").as("doc_id")).distinct()
+      val internalDups = graft.index.minhash.MinHashSearch.selfPairs(
+          spark, d, clean, "doc_id", "text", 0.5)
+        .select(col("id2").as("doc_id")).distinct()
+      val keptIds = clean.select(col("doc_id"))
+        .join(corpusDups, Seq("doc_id"), "left_anti")
+        .join(internalDups, Seq("doc_id"), "left_anti")
+      val expected = batch.join(keptIds, col("new_id") === col("doc_id"))
+        .drop("doc_id")
+
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("new_id"), col("text")).collect()
+          .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      val got = rows(kept)
+      assert(got == rows(expected))
+      assert(got.nonEmpty && got.size < batch.count(),
+        s"curation kept ${got.size} of ${batch.count()} rows")
+      assert(!got.exists(_._1 >= 900000L), "a planted copy survived curation")
+    }
+  }
+
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      p +: allNodes(a.executedPlan)
+    case other => p +: (other.children ++ other.subqueries).flatMap(allNodes)
+  }
+
   test("deletes tombstone (no data rewrite); optimize full compacts them away") {
     withDirs { (g, src) =>
       writeDocs(src, parts = 2)
