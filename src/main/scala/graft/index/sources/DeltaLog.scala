@@ -740,18 +740,37 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     * as a Delta scan and fingerprints it by table version. */
   val RootOption = "graft.delta.root"
 
-  /** Finish a fenced commit: write the body, close the fence, then fire
-    * the AUTO-CHECKPOINT cadence — every `delta.checkpointInterval`
+  /** The one commit tail every Delta writer goes through: lead with the
+    * `commitInfo` action (plus the monotone in-commit timestamp when
+    * `ict`), then the create-no-overwrite fence on `version` — two
+    * racing writers of the same version, the loser fails (the Delta
+    * optimistic-concurrency contract) after deleting its `staged` data,
+    * DV and cdc files, so its retry starts clean and the winner's log
+    * never references them. The winner writes the body and fires the
+    * AUTO-CHECKPOINT cadence of `conf` — every `delta.checkpointInterval`
     * commits (default 10, `<= 0` disables; delta-spark's own default),
     * so replay cost stays bounded on long-lived tables without anyone
     * calling [[checkpoint]] by hand. Best-effort: a checkpoint failure
     * never fails the already-published commit — the next cadence hit
     * (or a manual call) retries. */
-  private def finishCommit(spark: SparkSession, rootStr: String,
-      out: java.io.OutputStream, lines: Seq[JValue], version: Long,
-      conf: Map[String, String]): Long = {
-    try out.write(lines.map(JsonMethods.compact).mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
+  private def commitVersion(spark: SparkSession, rootStr: String,
+      version: Long, now: Long, operation: String,
+      parameters: Map[String, String], ict: Boolean, actions: Seq[JValue],
+      conf: Map[String, String], staged: Seq[Path] = Nil): Long = {
+    val root = new Path(rootStr)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val info = commitInfoLine(now, operation, parameters,
+      if (ict) Some(nextIct(fs, root, version - 1, now)) else None)
+    fs.mkdirs(DeltaLog.logDir(root))
+    val out = try CommitFence.create(fs,
+        new Path(DeltaLog.logDir(root), f"$version%020d.json"))
+      catch {
+        case e: Throwable =>
+          staged.foreach(fs.delete(_, false))
+          throw e
+      }
+    try out.write((info +: actions).map(JsonMethods.compact)
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
     val interval = conf.get("delta.checkpointInterval")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(10)
@@ -764,6 +783,68 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     }
     version
   }
+
+  /** A table-relative path (what `add`/`remove` actions record) — both
+    * sides qualified, so scheme-less snapshot paths and `file:` staged
+    * paths relativize alike. */
+  private def relOf(fs: FileSystem, root: Path, path: Path): String =
+    fs.makeQualified(root).toUri.relativize(fs.makeQualified(path).toUri)
+      .getPath
+
+  /** Hive partition values (`col=value/` segments, URL-decoded) of a
+    * table-relative file path. */
+  private def partitionValuesOf(rel: String): List[(String, String)] =
+    rel.split('/').init.flatMap { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) => Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
+        case _ => None
+      }
+    }.toList
+
+  private def jsonStrings(kvs: Seq[(String, String)]): JObject =
+    JObject(kvs.map { case (k, v) => k -> (JString(v): JValue) }.toList)
+
+  /** The `deletionVector` descriptor of an `add` action. */
+  private def dvJson(d: DvDescriptor): JValue =
+    JObject(List[(String, JValue)](
+      "storageType" -> JString(d.storageType),
+      "pathOrInlineDv" -> JString(d.pathOrInlineDv)) ++
+      d.offset.map(o => "offset" -> (JInt(BigInt(o)): JValue)).toList ++
+      List[(String, JValue)](
+        "sizeInBytes" -> JInt(BigInt(d.sizeInBytes)),
+        "cardinality" -> JLong(d.cardinality)))
+
+  /** One `add` action — every writer (fresh files, DV re-adds, stats
+    * and row-id backfills, convert, clone, restore) builds it here. */
+  private def addAction(path: String, partitionValues: Seq[(String, String)],
+      size: Long, modificationTime: Long, dataChange: Boolean,
+      dv: Option[DvDescriptor] = None, stats: Option[String] = None,
+      rowIds: List[(String, JValue)] = Nil): JValue =
+    JObject("add" -> JObject(List[(String, JValue)](
+      "path" -> JString(path),
+      "partitionValues" -> jsonStrings(partitionValues),
+      "size" -> JLong(size),
+      "modificationTime" -> JLong(modificationTime),
+      "dataChange" -> JBool(dataChange)) ++
+      dv.map(d => "deletionVector" -> dvJson(d)).toList ++
+      stats.map(sj => "stats" -> (JString(sj): JValue)).toList ++
+      rowIds))
+
+  private def removeAction(rel: String, now: Long,
+      dataChange: Boolean): JValue =
+    JObject("remove" -> JObject(
+      "path" -> JString(rel),
+      "deletionTimestamp" -> JLong(now),
+      "dataChange" -> JBool(dataChange)))
+
+  /** The `txn` (appId, version) idempotence watermark action. */
+  private def txnAction(txn: Option[(String, Long)], now: Long): Seq[JValue] =
+    txn.toSeq.map { case (app, v) =>
+      JObject("txn" -> JObject(
+        "appId" -> JString(app), "version" -> JLong(v),
+        "lastUpdated" -> JLong(now)))
+    }
+
   val VersionOption = "graft.delta.version"
 
   /** Read the table at its latest version — or a historic one via
@@ -878,9 +959,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     // keys and pushed-down filter attributes are physical too, so the
     // skipping below stays consistent)
     val cmMode = DeltaColumnMapping.mode(s.configuration)
-    val readSchema =
-      if (cmMode == "none") s.schema
-      else DeltaColumnMapping.physicalSchema(s.schema)
+    val readSchema = physicalSchemaOf(s)
     val raw = maybeBasePath(spark, root, spark.read
       .schema(readSchema)
       .option(RootOption, root)
@@ -1034,16 +1113,9 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     }
     fs.delete(stage, true)
     val actions: Seq[JValue] = moved.map { case (rel, st) =>
-      val pvals = rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> (JString(java.net.URLDecoder.decode(v, "UTF-8")): JValue))
-          case _ => None
-        }
-      }.toList
       JObject("cdc" -> JObject(
         "path" -> JString("_change_data/" + rel),
-        "partitionValues" -> JObject(pvals),
+        "partitionValues" -> jsonStrings(partitionValuesOf(rel)),
         "size" -> JLong(st.getLen),
         "dataChange" -> JBool(false)))
     }
@@ -1092,13 +1164,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val endSnap = DeltaLog.snapshot(spark, rootStr, Some(end))
     val cmMode = DeltaColumnMapping.mode(endSnap.configuration)
     val logicalSchema = endSnap.schema
-    val physSchema = if (cmMode == "none") logicalSchema
-      else DeltaColumnMapping.physicalSchema(logicalSchema)
-    val physPartCols = endSnap.partitionColumns.map { n =>
-      if (cmMode == "none") n
-      else logicalSchema.fields.find(_.name == n)
-        .map(DeltaColumnMapping.physicalName).getOrElse(n)
-    }
+    val physSchema = physicalSchemaOf(endSnap)
     val cdcReadSchema = StructType(
       physSchema.fields :+ StructField("_change_type", StringType))
 
@@ -1277,7 +1343,9 @@ object DeltaTable extends org.apache.spark.internal.Logging {
    * serialized bitmaps (compressed, metadata-scale) are collected, the
    * same driver footprint as the commit JSON that must list every
    * re-added file. A repeat delete UNIONS into the existing DV, so
-   * deletes compose without rewriting earlier vectors' files.
+   * deletes compose without rewriting earlier vectors' files. A
+   * condition matching no row (an empty table included) commits
+   * nothing and returns the current version.
    */
   def deleteWhere(spark: SparkSession, rootStr: String,
       condition: org.apache.spark.sql.Column): Long =
@@ -1285,91 +1353,80 @@ object DeltaTable extends org.apache.spark.internal.Logging {
 
   private def deleteWhereOnce(spark: SparkSession, rootStr: String,
       condition: org.apache.spark.sql.Column): Long = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, regexp_replace}
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = DeltaLog.snapshot(spark, rootStr)
     writerGate(prior, rootStr, deletesRows = true, kind = "deleteWhere")
     if (prior.files.isEmpty) return prior.version
-
-    def normC(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^file:/+", "/")
-    // evaluate the predicate over the RAW snapshot (previously-deleted
-    // rows may re-match; the union below makes that a no-op); under
-    // column mapping, scan physical names, restore logical ones for the
-    // user's predicate, and keep `_metadata` riding along
-    val cmMode = DeltaColumnMapping.mode(prior.configuration)
-    val raw = maybeBasePath(spark, rootStr, spark.read
-      .schema(if (cmMode == "none") prior.schema
-        else DeltaColumnMapping.physicalSchema(prior.schema)),
-      prior.files.map(_.path))
-      .parquet(prior.files.map(_.path): _*)
-    // log-stats FILE SKIPPING for the doomed-row scan (same wrap the
-    // batch read uses): a narrow delete against a wide table opens only
-    // the files whose [min, max] ranges admit the pushed-down predicate
-    val base =
-      if (cmMode != "none") raw // cm stats key physically; keep-all
-      else StatsPruning.wrap(raw, prior.files.flatMap(f =>
-        f.stats.flatMap(DeltaStats.parse(_, prior.schema))
-          .map(fs => normPath(f.path) -> fs)).toMap)
-    val logical = if (cmMode == "none") base
-      else DeltaColumnMapping.toLogical(base, prior.schema,
-        keep = Seq("_metadata"))
-    val matched = logical
-      .filter(condition)
-      .select(normC(col("_metadata.file_path")).as("p"),
-        col("_metadata.row_index").as("pos"))
-      .as[(String, Long)]
-    val merged: Seq[(DeltaFileMeta, DvDescriptor)] =
-      writeDvs(spark, rootStr, prior, matched)
+    // the predicate runs over the RAW snapshot (previously-deleted rows
+    // may re-match; the DV union makes that a no-op), stats-pruned: a
+    // narrow delete against a wide table opens only the files whose
+    // [min, max] ranges admit the pushed-down predicate
+    val merged = matchDvs(spark, rootStr, prior, prior.files,
+      pruneByStats = true, _.filter(condition))
     if (merged.isEmpty) return prior.version // no matching rows: no commit
-    val dvPaths: Seq[Path] =
-      merged.flatMap(_._2.absolutePath(root).map(_.toString)).distinct
-        .map(new Path(_))
 
     // CHANGE DATA FEED: record the deleted rows as cdc files. Sourced
     // from the POST-DV read so rows a previous delete already removed
     // never re-appear as change rows when the predicate re-matches them.
     val (cdcLines, cdcPaths): (Seq[JValue], Seq[Path]) =
       if (!cdfEnabled(prior.configuration)) (Nil, Nil)
-      else {
-        import org.apache.spark.sql.functions.lit
-        val deleted = read(spark, rootStr).filter(condition)
-        val phys = if (cmMode == "none") deleted
-          else DeltaColumnMapping.toPhysical(deleted, prior.schema)
-        val physParts = prior.partitionColumns.map { n =>
-          if (cmMode == "none") n
-          else prior.schema.fields.find(_.name == n)
-            .map(DeltaColumnMapping.physicalName).getOrElse(n)
-        }
-        writeCdc(spark, fs, root,
-          phys.withColumn("_change_type", lit("delete")), physParts)
-      }
+      else writeCdc(spark, fs, root,
+        physicalRows(prior, read(spark, rootStr).filter(condition))
+          .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete")),
+        physPartitionColumns(prior))
 
-    val version = prior.version + 1
     val now = System.currentTimeMillis()
-
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "DELETE", Map.empty,
-      if (ictEnabled(prior.configuration))
-        Some(nextIct(fs, root, prior.version, now)) else None)
-    dvProtocolLine(prior).foreach(lines += _)
-    lines ++= dvAddRemoveLines(fs, root, merged, now)
-    lines ++= cdcLines
-
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    // same create-no-overwrite fence as commit(): the loser's DV and cdc
-    // files are removed so a retry starts clean
-    val out = try CommitFence.create(fs, commitPath) catch {
-      case e: Throwable =>
-        dvPaths.foreach(fs.delete(_, false))
-        cdcPaths.foreach(fs.delete(_, false))
-        throw e
-    }
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      prior.configuration)
+    commitVersion(spark, rootStr, prior.version + 1, now, "DELETE", Map.empty,
+      ictEnabled(prior.configuration),
+      dvProtocolLine(prior).toSeq ++ dvAddRemoveLines(fs, root, merged, now) ++
+        cdcLines,
+      prior.configuration, staged = dvPaths(root, merged) ++ cdcPaths)
   }
+
+  /** Deletion vectors over the rows `matching` keeps in `files` (the
+    * snapshot's, or a merge's pruned candidates): the shared
+    * [[LakeDml.matchedPositions]] scan under the table's column mapping
+    * (physical names scanned, logical ones restored for `matching`;
+    * mapped stats key physically, so they never prune), bitmapped and
+    * written by [[writeDvs]]. Empty when nothing matched. */
+  private def matchDvs(spark: SparkSession, rootStr: String,
+      prior: DeltaSnapshot, files: Seq[DeltaFileMeta], pruneByStats: Boolean,
+      matching: DataFrame => DataFrame): Seq[(DeltaFileMeta, DvDescriptor)] = {
+    import spark.implicits._
+    val mapped = DeltaColumnMapping.mode(prior.configuration) != "none"
+    val matched = LakeDml.matchedPositions(spark, rootStr, files,
+      physicalSchemaOf(prior),
+      if (pruneByStats && !mapped) Some(prior.schema) else None,
+      scan => matching(if (!mapped) scan
+        else DeltaColumnMapping.toLogical(scan, prior.schema,
+          keep = Seq("_metadata"))))
+    writeDvs(spark, rootStr, prior, matched.as[(String, Long)])
+  }
+
+  /** The DV files a commit's re-adds point into (deleted when the
+    * commit loses its fence). */
+  private def dvPaths(root: Path,
+      merged: Seq[(DeltaFileMeta, DvDescriptor)]): Seq[Path] =
+    merged.flatMap(_._2.absolutePath(root)).distinct
+
+  /** `df` under the table's physical column names (column mapping). */
+  private def physicalRows(s: DeltaSnapshot, df: DataFrame): DataFrame =
+    if (DeltaColumnMapping.mode(s.configuration) == "none") df
+    else DeltaColumnMapping.toPhysical(df, s.schema)
+
+  /** Physical → logical column names of a column-mapped table (empty
+    * when unmapped) — what constraint checks on staged rows resolve. */
+  private def physToLogical(s: DeltaSnapshot): Map[String, String] =
+    if (DeltaColumnMapping.mode(s.configuration) == "none") Map.empty
+    else s.schema.fields.toSeq
+      .map(f => DeltaColumnMapping.physicalName(f) -> f.name).toMap
+
+  /** The table's partition columns under their physical names. */
+  private def physPartitionColumns(s: DeltaSnapshot): Seq[String] =
+    if (DeltaColumnMapping.mode(s.configuration) == "none") s.partitionColumns
+    else s.partitionColumns.map(n => s.schema.fields.find(_.name == n)
+      .map(DeltaColumnMapping.physicalName).getOrElse(n))
 
   /** Protocol-upgrade action for a commit that introduces deletion
     * vectors on a table not yet at (3, 7) + `deletionVectors`. */
@@ -1385,46 +1442,16 @@ object DeltaTable extends org.apache.spark.internal.Logging {
   /** remove + add(withDV) action pairs for files whose deletion vector
     * this commit replaces (the merge-on-read re-add shape). */
   private def dvAddRemoveLines(fs: FileSystem, root: Path,
-      merged: Seq[(DeltaFileMeta, DvDescriptor)], now: Long): Seq[JValue] = {
-    val rootUri = fs.makeQualified(root).toUri
-    def relOf(path: String): String =
-      rootUri.relativize(fs.makeQualified(new Path(path)).toUri).getPath
-    def partitionValuesOf(rel: String): List[(String, JValue)] =
-      rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> (JString(java.net.URLDecoder.decode(v, "UTF-8")): JValue))
-          case _ => None
-        }
-      }.toList
+      merged: Seq[(DeltaFileMeta, DvDescriptor)], now: Long): Seq[JValue] =
     merged.flatMap { case (f, d) =>
-      val rel = relOf(f.path)
-      val dvJson = JObject(
-        "storageType" -> JString(d.storageType),
-        "pathOrInlineDv" -> JString(d.pathOrInlineDv),
-        "offset" -> JInt(BigInt(d.offset.get)),
-        "sizeInBytes" -> JInt(BigInt(d.sizeInBytes)),
-        "cardinality" -> JLong(d.cardinality))
-      Seq(
-        JObject("remove" -> JObject(
-          "path" -> JString(rel),
-          "deletionTimestamp" -> JLong(now),
-          "dataChange" -> JBool(true))),
-        JObject("add" -> JObject(
-          List(
-            "path" -> (JString(rel): JValue),
-            "partitionValues" -> (JObject(partitionValuesOf(rel)): JValue),
-            "size" -> (JLong(f.size): JValue),
-            "modificationTime" -> (JLong(f.modificationTime): JValue),
-            "dataChange" -> (JBool(true): JValue),
-            "deletionVector" -> (dvJson: JValue)) ++
-            // stats describe the file's PHYSICAL rows (Delta convention:
-            // numRecords counts DV-deleted rows too), so they carry forward
-            f.stats.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-            // same file, same rows — row-tracking ids carry forward too
-            carriedRowIdJson(f))))
+      val rel = relOf(fs, root, new Path(f.path))
+      // stats describe the file's PHYSICAL rows (Delta convention:
+      // numRecords counts DV-deleted rows too), so they carry forward;
+      // same file, same rows — row-tracking ids carry forward too
+      Seq(removeAction(rel, now, dataChange = true),
+        addAction(rel, partitionValuesOf(rel), f.size, f.modificationTime,
+          dataChange = true, Some(d), f.stats, carriedRowIdJson(f)))
     }
-  }
 
   /**
    * Build per-file deletion bitmaps for `matched` (normalized-path,
@@ -1532,48 +1559,48 @@ object DeltaTable extends org.apache.spark.internal.Logging {
   }
 
   /** `add` action lines for freshly-landed files: hive partition values
-    * from the relative path, footer stats over the file columns. On a
-    * row-tracking table the new files get FRESH base row ids stamped
-    * with `commitVersion` plus the republished watermark domain (this
-    * writer does not materialize row ids, so rows REWRITTEN into these
-    * files get new identities — the non-preserving-writer posture the
-    * spec allows; appends are always fresh rows anyway). */
+    * from the relative path, footer stats over `statsSchema`. With
+    * `rowTracking` the new files get FRESH base row ids past `priorHwm`
+    * stamped with `version`, plus the republished watermark domain
+    * (this writer does not materialize row ids, so rows REWRITTEN into
+    * these files get new identities — the non-preserving-writer posture
+    * the spec allows; appends are always fresh rows anyway). */
   private def addActionLines(spark: SparkSession, fs: FileSystem,
-      root: Path, added: Seq[FileStatus], prior: DeltaSnapshot,
-      cmMode: String, physParts: Seq[String],
-      commitVersion: Long): Seq[JValue] = {
-    val rootUri = fs.makeQualified(root).toUri
-    val statsSchema = StructType(
-      (if (cmMode == "none") prior.schema
-       else DeltaColumnMapping.physicalSchema(prior.schema))
-        .filterNot(f => physParts.contains(f.name)))
+      root: Path, added: Seq[FileStatus], statsSchema: StructType,
+      rowTracking: Boolean, priorHwm: Long, version: Long,
+      dataChange: Boolean): Seq[JValue] = {
     val statsByPath: Map[String, FileStats] = ParquetFooterStats
       .collect(spark, added.map(_.getPath.toString), statsSchema)
-    val (rowIdsByPath, rowIdDomain) = assignFreshRowIds(
-      rowTrackingOn(prior), rowIdHighWaterMark(prior), commitVersion,
-      added.map(s => s.getPath.toString ->
+    val (rowIdsByPath, rowIdDomain) = assignFreshRowIds(rowTracking,
+      priorHwm, version, added.map(s => s.getPath.toString ->
         statsByPath.get(s.getPath.toString).flatMap(_.numRecords)))
     added.map { s =>
-      val rel = rootUri.relativize(s.getPath.toUri).getPath
-      val pvals = rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> JString(java.net.URLDecoder.decode(v, "UTF-8")))
-          case _ => None
-        }
-      }.toList
-      val statsJson = statsByPath.get(s.getPath.toString)
-        .flatMap(DeltaStats.render(_, statsSchema))
-      JObject("add" -> JObject(
-        List(
-          "path" -> (JString(rel): JValue),
-          "partitionValues" -> (JObject(pvals): JValue),
-          "size" -> (JLong(s.getLen): JValue),
-          "modificationTime" -> (JLong(s.getModificationTime): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++
-          statsJson.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-          rowIdsByPath.getOrElse(s.getPath.toString, Nil)))
+      val rel = relOf(fs, root, s.getPath)
+      addAction(rel, partitionValuesOf(rel), s.getLen, s.getModificationTime,
+        dataChange, stats = statsByPath.get(s.getPath.toString)
+          .flatMap(DeltaStats.render(_, statsSchema)),
+        rowIds = rowIdsByPath.getOrElse(s.getPath.toString, Nil))
     } ++ rowIdDomain
+  }
+
+  /** [[addActionLines]] for a data commit on `prior`: stats over its
+    * physical file columns, row ids when it tracks them. */
+  private def addActionLines(spark: SparkSession, fs: FileSystem,
+      root: Path, added: Seq[FileStatus], prior: DeltaSnapshot,
+      version: Long, dataChange: Boolean): Seq[JValue] =
+    addActionLines(spark, fs, root, added, fileStatsSchema(prior),
+      rowTrackingOn(prior), rowIdHighWaterMark(prior), version, dataChange)
+
+  /** The table's schema under its physical column names. */
+  private def physicalSchemaOf(s: DeltaSnapshot): StructType =
+    if (DeltaColumnMapping.mode(s.configuration) == "none") s.schema
+    else DeltaColumnMapping.physicalSchema(s.schema)
+
+  /** The columns data files hold (partition values live in paths) —
+    * what footer stats cover. */
+  private def fileStatsSchema(s: DeltaSnapshot): StructType = {
+    val parts = physPartitionColumns(s)
+    StructType(physicalSchemaOf(s).filterNot(f => parts.contains(f.name)))
   }
 
   /**
@@ -1599,20 +1626,13 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       txn: Option[(String, Long)]): Long = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, regexp_replace}
+    import org.apache.spark.sql.functions.lit
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = DeltaLog.snapshot(spark, rootStr)
-    txn.foreach { case (app, v) =>
-      if (prior.transactions.get(app).exists(_ >= v)) return prior.version
-    }
+    if (LakeDml.replayed(prior.transactions, txn)) return prior.version
     writerGate(prior, rootStr, deletesRows = true, kind = "update")
-    require(set.nonEmpty, s"update at $rootStr: no SET expressions given")
-    val tableCols = prior.schema.fieldNames.toSeq
-    set.keys.foreach(k => require(tableCols.contains(k),
-      s"update at $rootStr: SET column '$k' is not a table column " +
-        s"(have ${tableCols.mkString(", ")})"))
+    LakeDml.checkSet(rootStr, set, prior.schema, prior.partitionColumns)
     // GENERATED columns derive, IDENTITY columns assign — neither may
     // be SET directly (the delta-spark refusal); generated columns
     // re-derive below after SET in case a referenced column changed
@@ -1626,113 +1646,49 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           "cannot be SET")
     }
     if (prior.files.isEmpty) return prior.version
-    val cmMode = DeltaColumnMapping.mode(prior.configuration)
-    val physParts = prior.partitionColumns.map { n =>
-      if (cmMode == "none") n
-      else prior.schema.fields.find(_.name == n)
-        .map(DeltaColumnMapping.physicalName).getOrElse(n)
-    }
-    require(!set.keys.exists(prior.partitionColumns.contains),
-      s"update at $rootStr: SET touches a partition column " +
-        "(rewrites rows across partitions); use merge instead")
 
-    // ---- matched positions → deletion vectors (stats-pruned scan) ----
-    def normC(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^file:/+", "/")
-    val raw = maybeBasePath(spark, rootStr, spark.read
-      .schema(if (cmMode == "none") prior.schema
-        else DeltaColumnMapping.physicalSchema(prior.schema)),
-      prior.files.map(_.path))
-      .parquet(prior.files.map(_.path): _*)
-    val base =
-      if (cmMode != "none") raw
-      else StatsPruning.wrap(raw, prior.files.flatMap(f =>
-        f.stats.flatMap(DeltaStats.parse(_, prior.schema))
-          .map(fst => normPath(f.path) -> fst)).toMap)
-    val logical = if (cmMode == "none") base
-      else DeltaColumnMapping.toLogical(base, prior.schema,
-        keep = Seq("_metadata"))
-    val matched = logical.filter(condition)
-      .select(normC(col("_metadata.file_path")).as("p"),
-        col("_metadata.row_index").as("pos"))
-      .as[(String, Long)]
-    val merged: Seq[(DeltaFileMeta, DvDescriptor)] =
-      writeDvs(spark, rootStr, prior, matched)
-    if (merged.isEmpty) return prior.version // nothing matched: no commit
-    val dvPaths: Seq[Path] =
-      merged.flatMap(_._2.absolutePath(root).map(_.toString)).distinct
-        .map(new Path(_))
-
-    // ---- updated versions: POST-DV matched rows with SET applied ----
-    val old = read(spark, rootStr).filter(condition)
-    val afterSet = set.foldLeft(old) { case (df, (k, c)) =>
-      df.withColumn(k, c) }
-    // re-derive generated columns: a SET may have changed a column the
-    // generation expression references (deterministic by spec, so
+    // updated versions: POST-DV matched rows with SET applied, then
+    // generated columns re-derived (a SET may have changed a column the
+    // generation expression references; deterministic by spec, so
     // unconditional recomputation equals delta-spark's changed-only one)
-    val updated = genFs.foldLeft(afterSet) { (d, f) =>
+    val old = read(spark, rootStr).filter(condition)
+    val updated = genFs.foldLeft(
+        LakeDml.applySet(rootStr, old, set, prior.schema)) { (d, f) =>
       d.withColumn(f.name, org.apache.spark.sql.functions.expr(
         f.metadata.getString("delta.generationExpression")).cast(f.dataType))
-    }.select(tableCols.map(col): _*)
-    prior.schema.fields.zip(updated.schema.fields).foreach { case (tf, uf) =>
-      require(tf.dataType == uf.dataType,
-        s"update at $rootStr: SET makes column '${tf.name}' " +
-          s"${uf.dataType.simpleString} but the table declares " +
-          s"${tf.dataType.simpleString}; cast inside the expression")
     }
-    val physUpd = if (cmMode == "none") updated
-      else DeltaColumnMapping.toPhysical(updated, prior.schema)
+
+    // matched positions → deletion vectors (stats-pruned scan)
+    val merged = matchDvs(spark, rootStr, prior, prior.files,
+      pruneByStats = true, _.filter(condition))
+    if (merged.isEmpty) return prior.version // nothing matched: no commit
+    val physParts = physPartitionColumns(prior)
     // rules enforce against the STAGED rows — the exact bytes the
     // commit publishes — not a re-execution of the SET expressions
-    val physToLogical: Map[String, String] =
-      if (cmMode == "none") Map.empty
-      else prior.schema.fields.toSeq
-        .map(f => DeltaColumnMapping.physicalName(f) -> f.name).toMap
-    val added = stageNewFiles(fs, root, physUpd, physParts,
+    val added = stageNewFiles(fs, root, physicalRows(prior, updated), physParts,
       validateStaged = Some(st => enforceConstraintsOnStage(
-        spark, prior, rootStr, st, "update", physToLogical)))
+        spark, prior, rootStr, st, "update", physToLogical(prior))))
 
     // ---- CDF: exact pre/post pairs ----
     val (cdcLines, cdcPaths): (Seq[JValue], Seq[Path]) =
       if (!cdfEnabled(prior.configuration)) (Nil, Nil)
-      else {
-        val legs = Seq(old -> "update_preimage", updated -> "update_postimage")
-        val changeRows = legs.map { case (df, tpe) =>
-          val phys = if (cmMode == "none") df
-            else DeltaColumnMapping.toPhysical(df, prior.schema)
-          phys.withColumn("_change_type", lit(tpe))
-        }.reduce(_ unionByName _)
-        writeCdc(spark, fs, root, changeRows, physParts)
-      }
+      else writeCdc(spark, fs, root,
+        Seq(old -> "update_preimage", updated -> "update_postimage")
+          .map { case (df, tpe) =>
+            physicalRows(prior, df).withColumn("_change_type", lit(tpe))
+          }.reduce(_ unionByName _), physParts)
 
     val version = prior.version + 1
     val now = System.currentTimeMillis()
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "UPDATE",
+    commitVersion(spark, rootStr, version, now, "UPDATE",
       Map("matchedFiles" -> merged.size.toString),
-      if (ictEnabled(prior.configuration))
-        Some(nextIct(fs, root, prior.version, now)) else None)
-    txn.foreach { case (app, v) =>
-      lines += JObject("txn" -> JObject(
-        "appId" -> JString(app), "version" -> JLong(v),
-        "lastUpdated" -> JLong(now)))
-    }
-    dvProtocolLine(prior).foreach(lines += _)
-    lines ++= dvAddRemoveLines(fs, root, merged, now)
-    lines ++= addActionLines(spark, fs, root, added, prior, cmMode,
-      physParts, version)
-    lines ++= cdcLines
-
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    val out = try CommitFence.create(fs, commitPath) catch {
-      case e: Throwable =>
-        dvPaths.foreach(fs.delete(_, false))
-        added.foreach(s => fs.delete(s.getPath, false))
-        cdcPaths.foreach(fs.delete(_, false))
-        throw e
-    }
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      prior.configuration)
+      ictEnabled(prior.configuration),
+      txnAction(txn, now) ++ dvProtocolLine(prior).toSeq ++
+        dvAddRemoveLines(fs, root, merged, now) ++
+        addActionLines(spark, fs, root, added, prior, version,
+          dataChange = true) ++ cdcLines,
+      prior.configuration,
+      staged = dvPaths(root, merged) ++ added.map(_.getPath) ++ cdcPaths)
   }
 
   /**
@@ -1770,19 +1726,15 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       source: DataFrame, keys: Seq[String],
       deleteCondition: Option[org.apache.spark.sql.Column],
       txn: Option[(String, Long)]): Long = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{coalesce, col, lit, regexp_replace}
+    import org.apache.spark.sql.functions.{col, lit}
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = DeltaLog.snapshot(spark, rootStr)
     // (appId, version) idempotence INSIDE the retry loop: if the racing
     // winner was this very transaction's twin (a replayed micro-batch),
     // re-applying would double-commit — recognize and no-op instead
-    txn.foreach { case (app, v) =>
-      if (prior.transactions.get(app).exists(_ >= v)) return prior.version
-    }
+    if (LakeDml.replayed(prior.transactions, txn)) return prior.version
     writerGate(prior, rootStr, deletesRows = true, kind = "merge")
-    require(keys.nonEmpty, s"merge into $rootStr: no key columns given")
     // merge sources carry full rows, which a GENERATED ALWAYS identity
     // column forbids; BY DEFAULT accepts the explicit values (they never
     // move the high watermark — syncIdentity re-aligns). Provided
@@ -1795,61 +1747,14 @@ object DeltaTable extends org.apache.spark.internal.Logging {
             "assigns identity values automatically")
       }
     }
-    val tableCols = prior.schema.fieldNames.toSeq
-    keys.foreach(k => require(tableCols.contains(k),
-      s"merge into $rootStr: key column '$k' is not a table column " +
-        s"(have ${tableCols.mkString(", ")})"))
-    // a pre-flagged source (the streaming CDC-apply sink's shape) may
-    // carry the reserved marker column instead of a deleteCondition
-    val (markerless, delCondEff) =
-      if (source.columns.contains(LakeMerge.DeleteMarker)) {
-        require(deleteCondition.isEmpty,
-          s"merge into $rootStr: pass EITHER a ${LakeMerge.DeleteMarker} " +
-            "column or a deleteCondition, not both")
-        (source.drop(LakeMerge.DeleteMarker),
-          Some(col(LakeMerge.DeleteMarker)))
-      } else (source, deleteCondition)
-    require(markerless.columns.toSet == tableCols.toSet,
-      s"merge into $rootStr: source columns " +
-        s"${markerless.columns.mkString(", ")} must match the table columns " +
-        s"${tableCols.mkString(", ")} exactly")
-    val src = markerless.select(tableCols.map(markerless.col): _*)
-    prior.schema.fields.zip(src.schema.fields).foreach { case (tf, sf) =>
-      require(tf.dataType == sf.dataType,
-        s"merge into $rootStr: column '${tf.name}' is " +
-          s"${sf.dataType.simpleString} in the source but the table " +
-          s"declares ${tf.dataType.simpleString}; cast it first")
-    }
-
-    // a source with duplicate keys would update one target row twice —
-    // the ambiguity real MERGE refuses ("multiple source rows matched")
-    val dupes = src.groupBy(keys.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupes == 0L,
-      s"merge into $rootStr: source has duplicate values of " +
-        s"(${keys.mkString(", ")}); deduplicate the source first")
-
-    val delFlag = delCondEff
-      .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
-    // flag against `source` (the marker column, if any, lives there),
-    // then project down to the table columns
-    val flagged = source.withColumn("__graft_is_delete", delFlag)
-    val dels = flagged.filter(col("__graft_is_delete"))
-      .select(tableCols.map(col): _*)
-    val ups = flagged.filter(!col("__graft_is_delete"))
-      .select(tableCols.map(col): _*)
+    val (src, dels, ups) =
+      LakeDml.mergeSource(rootStr, source, keys, deleteCondition, prior.schema)
     val cmMode = DeltaColumnMapping.mode(prior.configuration)
-    val physParts = prior.partitionColumns.map { n =>
-      if (cmMode == "none") n
-      else prior.schema.fields.find(_.name == n)
-        .map(DeltaColumnMapping.physicalName).getOrElse(n)
-    }
+    val physParts = physPartitionColumns(prior)
 
     // ---- matched target positions → deletion vectors (both marker and
     // upsert keys delete the old row; re-marking rows an earlier DV
     // already dropped is a no-op via the executor-side union) ----
-    def normC(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^file:/+", "/")
     // DYNAMIC FILE PRUNING: only files whose log stats admit a key in
     // the source's [min, max] range can hold matched rows — a narrow
     // merge against a 100 TB table scans O(affected files), not the
@@ -1865,42 +1770,20 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val merged: Seq[(DeltaFileMeta, DvDescriptor)] =
       if (candidates.isEmpty) Nil
       else {
-        val base = maybeBasePath(spark, rootStr, spark.read
-          .schema(if (cmMode == "none") prior.schema
-            else DeltaColumnMapping.physicalSchema(prior.schema)),
-          candidates.map(_.path))
-          .parquet(candidates.map(_.path): _*)
-        val logical = if (cmMode == "none") base
-          else DeltaColumnMapping.toLogical(base, prior.schema,
-            keep = Seq("_metadata"))
         val srcKeys = src.select(keys.map(col): _*)
-        val matched = logical
-          .join(srcKeys,
-            keys.map(k => logical(k) === srcKeys(k)).reduce(_ && _),
-            "left_semi")
-          .select(normC(col("_metadata.file_path")).as("p"),
-            col("_metadata.row_index").as("pos"))
-          .as[(String, Long)]
-        writeDvs(spark, rootStr, prior, matched)
+        matchDvs(spark, rootStr, prior, candidates, pruneByStats = false,
+          t => t.join(srcKeys,
+            keys.map(k => t(k) === srcKeys(k)).reduce(_ && _), "left_semi"))
       }
-    val dvPaths: Seq[Path] =
-      merged.flatMap(_._2.absolutePath(root).map(_.toString)).distinct
-        .map(new Path(_))
 
     // ---- insert leg: EVERY upsert row lands as new data (matched ones
     // are the post-image versions of their DV-deleted predecessors) ----
-    val physUps = if (cmMode == "none") ups
-      else DeltaColumnMapping.toPhysical(ups, prior.schema)
     // upserted rows (updates + inserts) must satisfy the table's rules,
     // enforced against the STAGED rows (the published truth — see
     // enforceConstraintsOnStage); delete markers remove rows, no check
-    val mergePhysToLogical: Map[String, String] =
-      if (cmMode == "none") Map.empty
-      else prior.schema.fields.toSeq
-        .map(f => DeltaColumnMapping.physicalName(f) -> f.name).toMap
-    val added = stageNewFiles(fs, root, physUps, physParts,
+    val added = stageNewFiles(fs, root, physicalRows(prior, ups), physParts,
       validateStaged = Some(st => enforceConstraintsOnStage(
-        spark, prior, rootStr, st, "merge", mergePhysToLogical)))
+        spark, prior, rootStr, st, "merge", physToLogical(prior))))
     if (merged.isEmpty && added.isEmpty) return prior.version // no-op merge
 
     // ---- CDF: classify the merge's row-level effect against the LIVE
@@ -1925,44 +1808,23 @@ object DeltaTable extends org.apache.spark.internal.Logging {
             "update_preimage",
           ups.join(liveKeys, keys, "left_semi") -> "update_postimage",
           ups.join(liveKeys, keys, "left_anti") -> "insert")
-        val changeRows = legs.map { case (df, tpe) =>
-          val phys = if (cmMode == "none") df
-            else DeltaColumnMapping.toPhysical(df, prior.schema)
-          phys.withColumn("_change_type", lit(tpe))
-        }.reduce(_ unionByName _)
-        writeCdc(spark, fs, root, changeRows, physParts)
+        writeCdc(spark, fs, root, legs.map { case (df, tpe) =>
+          physicalRows(prior, df).withColumn("_change_type", lit(tpe))
+        }.reduce(_ unionByName _), physParts)
       }
 
     val version = prior.version + 1
     val now = System.currentTimeMillis()
-
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "MERGE",
-      Map("matchedCount" -> merged.map(_._1).size.toString),
-      if (ictEnabled(prior.configuration))
-        Some(nextIct(fs, root, prior.version, now)) else None)
-    txn.foreach { case (app, v) =>
-      lines += JObject("txn" -> JObject(
-        "appId" -> JString(app), "version" -> JLong(v),
-        "lastUpdated" -> JLong(now)))
-    }
-    if (merged.nonEmpty) dvProtocolLine(prior).foreach(lines += _)
-    lines ++= dvAddRemoveLines(fs, root, merged, now)
-    lines ++= addActionLines(spark, fs, root, added, prior, cmMode,
-      physParts, version)
-    lines ++= cdcLines
-
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    fs.mkdirs(DeltaLog.logDir(root))
-    val out = try CommitFence.create(fs, commitPath) catch {
-      case e: Throwable =>
-        dvPaths.foreach(fs.delete(_, false))
-        added.foreach(s => fs.delete(s.getPath, false))
-        cdcPaths.foreach(fs.delete(_, false))
-        throw e
-    }
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      prior.configuration)
+    commitVersion(spark, rootStr, version, now, "MERGE",
+      Map("matchedCount" -> merged.size.toString),
+      ictEnabled(prior.configuration),
+      txnAction(txn, now) ++
+        (if (merged.nonEmpty) dvProtocolLine(prior).toSeq else Nil) ++
+        dvAddRemoveLines(fs, root, merged, now) ++
+        addActionLines(spark, fs, root, added, prior, version,
+          dataChange = true) ++ cdcLines,
+      prior.configuration,
+      staged = dvPaths(root, merged) ++ added.map(_.getPath) ++ cdcPaths)
   }
 
   /** OPTIMIZE — the small-file medicine a 100 TB table needs after
@@ -1999,13 +1861,8 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         parts.head
       }
     val cmMode = DeltaColumnMapping.mode(prior.configuration)
-    val physSchema = if (cmMode == "none") prior.schema
-      else DeltaColumnMapping.physicalSchema(prior.schema)
-    val physPartCols = prior.partitionColumns.map { n =>
-      if (cmMode == "none") n
-      else prior.schema.fields.find(_.name == n)
-        .map(DeltaColumnMapping.physicalName).getOrElse(n)
-    }
+    val physSchema = physicalSchemaOf(prior)
+    val physPartCols = physPartitionColumns(prior)
     if (zorderCols.nonEmpty) {
       require(!zorderCols.exists(prior.partitionColumns.contains),
         s"OPTIMIZE ZORDER BY at $rootStr: z-ordering by a partition " +
@@ -2013,18 +1870,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       zorderCols.foreach(c => require(prior.schema.fieldNames.contains(c),
         s"z-order column '$c' is not a column of $rootStr"))
     }
-    val rootUri = fs.makeQualified(root).toUri
-    def relOf(p: String): String =
-      rootUri.relativize(fs.makeQualified(new Path(p)).toUri).getPath
-    def pvalsOf(rel: String): List[(String, JValue)] =
-      rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> (JString(java.net.URLDecoder.decode(v, "UTF-8")): JValue))
-          case _ => None
-        }
-      }.toList
-
     // candidates: DV-less files (DV'd ones are purge's job), scoped by
     // the OPTIMIZE ... WHERE partition predicate when given — at 100 TB
     // you optimize the hot partition, not the table. Evaluated EXACTLY:
@@ -2040,13 +1885,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         import org.apache.spark.sql.functions.col
         val hiveNull = "__HIVE_DEFAULT_PARTITION__"
         val rows: Seq[org.apache.spark.sql.Row] = unscoped.map { f =>
-          val m = relOf(f.path).split('/').init.flatMap { seg =>
-            seg.split("=", 2) match {
-              case Array(k, v) =>
-                Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
-              case _ => None
-            }
-          }.toMap
+          val m = partitionValuesOf(relOf(fs, root, new Path(f.path))).toMap
           org.apache.spark.sql.Row.fromSeq(f.path +: physPartCols.map(pc =>
             m.get(pc).filterNot(_ == hiveNull).orNull))
         }
@@ -2075,7 +1914,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       } else {
         // bin-pack per partition dir: first-fit over size-sorted smalls
         candidates.filter(_.size < targetSizeBytes)
-          .groupBy(f => relOf(f.path).split('/').init.mkString("/"))
+          .groupBy(f => relOf(fs, root, new Path(f.path)).split('/').init.mkString("/"))
           .values.toSeq.flatMap { group =>
             val bins = mutable.Buffer.empty[(mutable.Buffer[DeltaFileMeta], Long)]
             group.sortBy(-_.size).foreach { f =>
@@ -2150,54 +1989,20 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     }
     fs.delete(stage, true)
 
-    val statsSchema = StructType(physSchema.filterNot(f =>
-      physPartCols.contains(f.name)))
-    val statsByPath = ParquetFooterStats.collect(
-      spark, added.map(_.getPath.toString), statsSchema)
-    val now = System.currentTimeMillis()
     val version = prior.version + 1
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "OPTIMIZE",
-      if (zorderCols.isEmpty) Map.empty
-      else Map("zOrderBy" -> zorderCols.mkString(",")),
-      if (ictEnabled(prior.configuration))
-        Some(nextIct(fs, root, prior.version, now)) else None)
-    rewriteGroups.flatten.foreach { f =>
-      lines += JObject("remove" -> JObject(
-        "path" -> JString(relOf(f.path)),
-        "deletionTimestamp" -> JLong(now),
-        "dataChange" -> JBool(false)))
-    }
+    val now = System.currentTimeMillis()
     // rewritten files are NEW files: fresh base row ids (this writer
     // does not materialize row ids, so an OPTIMIZE re-identifies the
     // rows it moves — the non-preserving posture the spec permits)
-    val (rowIdsByPath, rowIdDomain) = assignFreshRowIds(
-      rowTrackingOn(prior), rowIdHighWaterMark(prior), version,
-      added.map(s => s.getPath.toString ->
-        statsByPath.get(s.getPath.toString).flatMap(_.numRecords)))
-    added.foreach { s =>
-      val rel = relOf(s.getPath.toString)
-      val statsJson = statsByPath.get(s.getPath.toString)
-        .flatMap(DeltaStats.render(_, statsSchema))
-      lines += JObject("add" -> JObject(
-        List(
-          "path" -> (JString(rel): JValue),
-          "partitionValues" -> (JObject(pvalsOf(rel)): JValue),
-          "size" -> (JLong(s.getLen): JValue),
-          "modificationTime" -> (JLong(s.getModificationTime): JValue),
-          "dataChange" -> (JBool(false): JValue)) ++
-          statsJson.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-          rowIdsByPath.getOrElse(s.getPath.toString, Nil)))
-    }
-    lines ++= rowIdDomain
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    val out = try CommitFence.create(fs, commitPath) catch {
-      case e: Throwable =>
-        added.foreach(s => fs.delete(s.getPath, false))
-        throw e
-    }
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      prior.configuration)
+    commitVersion(spark, rootStr, version, now, "OPTIMIZE",
+      if (zorderCols.isEmpty) Map.empty
+      else Map("zOrderBy" -> zorderCols.mkString(",")),
+      ictEnabled(prior.configuration),
+      rewriteGroups.flatten.map(f =>
+        removeAction(relOf(fs, root, new Path(f.path)), now, dataChange = false)) ++
+        addActionLines(spark, fs, root, added, prior, version,
+          dataChange = false),
+      prior.configuration, staged = added.map(_.getPath))
   }
 
   /** ANALYZE — backfill `add.stats` for live files that lack them
@@ -2216,64 +2021,19 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     writerGate(prior, rootStr, deletesRows = false, kind = "analyze")
     val missing = prior.files.filter(_.stats.isEmpty)
     if (missing.isEmpty) return prior.version
-    val cmMode = DeltaColumnMapping.mode(prior.configuration)
-    val physSchema = if (cmMode == "none") prior.schema
-      else DeltaColumnMapping.physicalSchema(prior.schema)
-    val physPartCols = prior.partitionColumns.map { n =>
-      if (cmMode == "none") n
-      else prior.schema.fields.find(_.name == n)
-        .map(DeltaColumnMapping.physicalName).getOrElse(n)
-    }
-    val statsSchema = StructType(physSchema.filterNot(f =>
-      physPartCols.contains(f.name)))
+    val statsSchema = fileStatsSchema(prior)
     val statsByPath = ParquetFooterStats.collect(
       spark, missing.map(_.path), statsSchema)
-    val rootUri = fs.makeQualified(root).toUri
-    def relOf(p: String): String =
-      rootUri.relativize(fs.makeQualified(new Path(p)).toUri).getPath
-    def pvalsOf(rel: String): List[(String, JValue)] =
-      rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> (JString(java.net.URLDecoder.decode(v, "UTF-8")): JValue))
-          case _ => None
-        }
-      }.toList
-    val now = System.currentTimeMillis()
-    val version = prior.version + 1
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "ANALYZE",
+    commitVersion(spark, rootStr, prior.version + 1,
+      System.currentTimeMillis(), "ANALYZE",
       Map("numFiles" -> missing.size.toString),
-      if (ictEnabled(prior.configuration))
-        Some(nextIct(fs, root, prior.version, now)) else None)
-    missing.foreach { f =>
-      val rel = relOf(f.path)
-      val statsJson = statsByPath.get(f.path)
-        .flatMap(DeltaStats.render(_, statsSchema))
-      val dv = f.dv.map { d =>
-        JObject(List(
-          "storageType" -> (JString(d.storageType): JValue),
-          "pathOrInlineDv" -> (JString(d.pathOrInlineDv): JValue)) ++
-          d.offset.map(o => "offset" -> (JInt(BigInt(o)): JValue)).toList ++
-          List(
-            "sizeInBytes" -> (JInt(BigInt(d.sizeInBytes)): JValue),
-            "cardinality" -> (JLong(d.cardinality): JValue)))
-      }
-      lines += JObject("add" -> JObject(
-        List(
-          "path" -> (JString(rel): JValue),
-          "partitionValues" -> (JObject(pvalsOf(rel)): JValue),
-          "size" -> (JLong(f.size): JValue),
-          "modificationTime" -> (JLong(f.modificationTime): JValue),
-          "dataChange" -> (JBool(false): JValue)) ++
-          dv.map(d => "deletionVector" -> d).toList ++
-          statsJson.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-          carriedRowIdJson(f)))
-    }
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    val out = CommitFence.create(fs, commitPath)
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      prior.configuration)
+      ictEnabled(prior.configuration),
+      missing.map { f =>
+        val rel = relOf(fs, root, new Path(f.path))
+        addAction(rel, partitionValuesOf(rel), f.size, f.modificationTime,
+          dataChange = false, f.dv, statsByPath.get(f.path)
+            .flatMap(DeltaStats.render(_, statsSchema)), carriedRowIdJson(f))
+      }, prior.configuration)
   }
 
   /** CONVERT TO DELTA — upgrade a plain parquet directory (flat or
@@ -2302,39 +2062,19 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       inferred.filterNot(f => partitionBy.contains(f.name)))
     val statsByPath = ParquetFooterStats.collect(
       spark, files.map(_.getPath.toString), dataSchema)
-    val rootUri = fs.makeQualified(root).toUri
     val now = System.currentTimeMillis()
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "CONVERT",
-      Map("numFiles" -> files.size.toString))
-    lines += protocolAction(1, 2)
-    lines += metaDataLine(carriedTableId(None), inferred.json,
-      partitionBy, Map.empty, now)
-    files.foreach { st =>
-      val rel = rootUri.relativize(
-        fs.makeQualified(st.getPath).toUri).getPath
-      val pvals: List[(String, JValue)] = rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) if partitionBy.contains(k) =>
-            Some(k -> (JString(java.net.URLDecoder.decode(v, "UTF-8")): JValue))
-          case _ => None
-        }
-      }.toList
-      val statsJson = statsByPath.get(st.getPath.toString)
-        .flatMap(DeltaStats.render(_, dataSchema))
-      lines += JObject("add" -> JObject(
-        List(
-          "path" -> (JString(rel): JValue),
-          "partitionValues" -> (JObject(pvals): JValue),
-          "size" -> (JLong(st.getLen): JValue),
-          "modificationTime" -> (JLong(st.getModificationTime): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++
-          statsJson.map(sj => "stats" -> (JString(sj): JValue)).toList))
-    }
-    val commitPath = new Path(DeltaLog.logDir(root), f"${0L}%020d.json")
-    fs.mkdirs(DeltaLog.logDir(root))
-    val out = CommitFence.create(fs, commitPath)
-    finishCommit(spark, rootStr, out, lines.toSeq, 0L, Map.empty)
+    commitVersion(spark, rootStr, 0L, now, "CONVERT",
+      Map("numFiles" -> files.size.toString), ict = false,
+      Seq(protocolAction(1, 2), metaDataLine(carriedTableId(None),
+        inferred.json, partitionBy, Map.empty, now)) ++
+        files.map { st =>
+          val rel = relOf(fs, root, st.getPath)
+          addAction(rel,
+            partitionValuesOf(rel).filter(kv => partitionBy.contains(kv._1)),
+            st.getLen, st.getModificationTime, dataChange = true,
+            stats = statsByPath.get(st.getPath.toString)
+              .flatMap(DeltaStats.render(_, dataSchema)))
+        }, Map.empty)
   }
 
   /** SHALLOW CLONE — an instant, zero-copy table copy: the clone's
@@ -2364,63 +2104,41 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         "create(read(source), target, partitionBy) instead")
     val srcRoot = new Path(sourceRoot)
     val srcFs = srcRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = new Path(targetRoot)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val now = System.currentTimeMillis()
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "CLONE",
-      Map("source" -> sourceRoot, "sourceVersion" -> s.version.toString))
     // the clone inherits the source's REAL protocol — its files may
     // depend on every reader/writer feature the source declares
-    lines += protocolAction(s.minReaderVersion, s.minWriterVersion,
+    val protocol = protocolAction(s.minReaderVersion, s.minWriterVersion,
       readerFeatures = s.readerFeatures, writerFeatures = s.writerFeatures)
     // a clone is a NEW table (fresh id) restating the source's schema
     // and configuration
-    lines += metaDataLine(carriedTableId(None), s.schemaString,
+    val metaData = metaDataLine(carriedTableId(None), s.schemaString,
       Nil, s.configuration, now)
     // metadata domains copy too: losing delta.clustering would silently
     // uncluster the clone, and losing the delta.rowTracking watermark
     // would let the clone's first append re-assign OVERLAPPING row ids
     // over the carried per-file baseRowIds
-    s.domains.toSeq.sortBy(_._1).foreach { case (d, m) =>
-      lines += JObject("domainMetadata" -> JObject(
+    val domains: Seq[JValue] = s.domains.toSeq.sortBy(_._1).map {
+      case (d, m) => JObject("domainMetadata" -> JObject(
         "domain" -> JString(d),
         "configuration" -> JString(m.configuration),
         "removed" -> JBool(m.removed)))
     }
-    s.files.foreach { f =>
-      val abs = srcFs.makeQualified(new Path(f.path)).toString
+    val adds = s.files.map { f =>
       // a source DV resolves against the SOURCE root; rewrite its
       // descriptor absolute (storageType p) so the clone's reads find
       // it. Inline DVs carry their bytes and copy verbatim.
-      val dv: Option[JValue] = f.dv.map { d =>
-        val (st, pv) = d.storageType match {
-          case "u" => ("p", d.absolutePath(srcRoot).get.toString)
-          case other => (other, d.pathOrInlineDv)
-        }
-        JObject(List(
-          "storageType" -> (JString(st): JValue),
-          "pathOrInlineDv" -> (JString(pv): JValue)) ++
-          d.offset.map(o => "offset" -> (JInt(BigInt(o)): JValue)).toList ++
-          List(
-            "sizeInBytes" -> (JInt(BigInt(d.sizeInBytes)): JValue),
-            "cardinality" -> (JLong(d.cardinality): JValue)))
+      val dv = f.dv.map { d =>
+        if (d.storageType == "u") d.copy(storageType = "p",
+          pathOrInlineDv = d.absolutePath(srcRoot).get.toString)
+        else d
       }
-      lines += JObject("add" -> JObject(
-        List(
-          "path" -> (JString(abs): JValue),
-          "partitionValues" -> (JObject(): JValue),
-          "size" -> (JLong(f.size): JValue),
-          "modificationTime" -> (JLong(f.modificationTime): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++
-          dv.map(d => "deletionVector" -> d).toList ++
-          f.stats.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-          carriedRowIdJson(f)))
+      addAction(srcFs.makeQualified(new Path(f.path)).toString, Nil, f.size,
+        f.modificationTime, dataChange = true, dv, f.stats,
+        carriedRowIdJson(f))
     }
-    val commitPath = new Path(DeltaLog.logDir(root), f"${0L}%020d.json")
-    fs.mkdirs(DeltaLog.logDir(root))
-    val out = CommitFence.create(fs, commitPath)
-    finishCommit(spark, targetRoot, out, lines.toSeq, 0L, s.configuration)
+    commitVersion(spark, targetRoot, 0L, now, "CLONE",
+      Map("source" -> sourceRoot, "sourceVersion" -> s.version.toString),
+      ict = false, Seq(protocol, metaData) ++ domains ++ adds, s.configuration)
   }
 
   /** RESTORE the table to a historic version — the undo operation: a
@@ -2444,35 +2162,17 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           s"${f.path} has been vacuumed away")
     }
     val now = System.currentTimeMillis()
-    val newVersion = current.version + 1
-    val rootUri = fs.makeQualified(root).toUri
-    def relOf(p: String): String =
-      rootUri.relativize(fs.makeQualified(new Path(p)).toUri).getPath
-    def pvalsOf(rel: String): List[(String, JValue)] =
-      rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> (JString(java.net.URLDecoder.decode(v, "UTF-8")): JValue))
-          case _ => None
-        }
-      }.toList
     val currentPaths = current.files.map(f => normPath(f.path)).toSet
     val targetPaths = target.files.map(f => normPath(f.path)).toSet
     val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "RESTORE",
-      Map("version" -> version.toString),
-      if (ictEnabled(current.configuration))
-        Some(nextIct(fs, root, current.version, now)) else None)
     // RESTORE rewinds state, not identity — keep the table id
     lines += metaDataLine(carriedTableId(Some(current)),
       target.schemaString, target.partitionColumns,
       current.configuration, now)
     current.files.filterNot(f => targetPaths.contains(normPath(f.path)))
       .foreach { f =>
-        lines += JObject("remove" -> JObject(
-          "path" -> JString(relOf(f.path)),
-          "deletionTimestamp" -> JLong(now),
-          "dataChange" -> JBool(true)))
+        lines += removeAction(relOf(fs, root, new Path(f.path)), now,
+          dataChange = true)
       }
     target.files.foreach { f =>
       // every target file is (re-)added: files the current version also
@@ -2481,25 +2181,10 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       if (!currentPaths.contains(normPath(f.path)) ||
           current.files.find(c => normPath(c.path) == normPath(f.path))
             .exists(c => c.dv != f.dv)) {
-        val rel = relOf(f.path)
-        val dvJson: List[(String, JValue)] = f.dv.map { d =>
-          "deletionVector" -> (JObject(
-            "storageType" -> JString(d.storageType),
-            "pathOrInlineDv" -> JString(d.pathOrInlineDv),
-            "offset" -> d.offset.map(o => JInt(BigInt(o)): JValue)
-              .getOrElse(JNothing),
-            "sizeInBytes" -> JInt(BigInt(d.sizeInBytes)),
-            "cardinality" -> JLong(d.cardinality)): JValue)
-        }.toList
-        lines += JObject("add" -> JObject(
-          List(
-            "path" -> (JString(rel): JValue),
-            "partitionValues" -> (JObject(pvalsOf(rel)): JValue),
-            "size" -> (JLong(f.size): JValue),
-            "modificationTime" -> (JLong(f.modificationTime): JValue),
-            "dataChange" -> (JBool(true): JValue)) ++ dvJson ++
-            f.stats.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-            carriedRowIdJson(f)))
+        val rel = relOf(fs, root, new Path(f.path))
+        lines += addAction(rel, partitionValuesOf(rel), f.size,
+          f.modificationTime, dataChange = true, f.dv, f.stats,
+          carriedRowIdJson(f))
       }
     }
     // a CDF table's restore records its full row-level effect (current
@@ -2524,16 +2209,9 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           target.partitionColumns)
         (pre._1 ++ post._1, pre._2 ++ post._2)
       }
-    lines ++= cdcLines
-
-    val commitPath = new Path(DeltaLog.logDir(root), f"$newVersion%020d.json")
-    val out = try CommitFence.create(fs, commitPath) catch {
-      case e: Throwable =>
-        cdcPaths.foreach(fs.delete(_, false))
-        throw e
-    }
-    finishCommit(spark, rootStr, out, lines.toSeq, newVersion,
-      current.configuration)
+    commitVersion(spark, rootStr, current.version + 1, now, "RESTORE",
+      Map("version" -> version.toString), ictEnabled(current.configuration),
+      lines.toSeq ++ cdcLines, current.configuration, staged = cdcPaths)
   }
 
   /** Enable COLUMN MAPPING (mode `name`) on an existing table — a
@@ -2592,25 +2270,16 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       operation: String = "SET DOMAIN METADATA"): Long = {
     val prior = DeltaLog.snapshot(spark, rootStr)
     writerGate(prior, rootStr, deletesRows = false, kind = "domainMetadata")
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val version = prior.version + 1
-    val now = System.currentTimeMillis()
-    val ict = if (ictEnabled(prior.configuration))
-      Some(nextIct(fs, root, prior.version, now)) else None
-    val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, operation, Map.empty, ict)
-    lines ++= writerFeatureUpgrade(prior, Set("domainMetadata") ++ extraFeatures)
-    entries.foreach { case (domain, cfg, removed) =>
-      lines += JObject("domainMetadata" -> JObject(
-        "domain" -> JString(domain),
-        "configuration" -> JString(cfg),
-        "removed" -> JBool(removed)))
-    }
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    val out = CommitFence.create(fs, commitPath)
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      prior.configuration)
+    commitVersion(spark, rootStr, prior.version + 1,
+      System.currentTimeMillis(), operation, Map.empty,
+      ictEnabled(prior.configuration),
+      writerFeatureUpgrade(prior, Set("domainMetadata") ++ extraFeatures).toSeq ++
+        entries.map { case (domain, cfg, removed) =>
+          JObject("domainMetadata" -> JObject(
+            "domain" -> JString(domain),
+            "configuration" -> JString(cfg),
+            "removed" -> JBool(removed)))
+        }, prior.configuration)
   }
 
   /** Publish (or replace) a metadata DOMAIN: an opaque per-domain
@@ -2742,17 +2411,11 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val version = prior.version + 1
     val now = System.currentTimeMillis()
-    val ict = if (ictEnabled(prior.configuration))
-      Some(nextIct(fs, root, prior.version, now)) else None
     val cfg = prior.configuration + ("delta.enableRowTracking" -> "true")
     val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, "SET TBLPROPERTIES", Map.empty, ict)
     lines ++= writerFeatureUpgrade(prior, Set("rowTracking", "domainMetadata"))
     lines += metaDataLine(carriedTableId(Some(prior)), prior.schemaString,
       prior.partitionColumns, cfg, now)
-    val rootUri = fs.makeQualified(root).toUri
-    def relOf(p: String): String =
-      rootUri.relativize(fs.makeQualified(new Path(p)).toUri).getPath
     val untracked = prior.files.filter(_.baseRowId.isEmpty)
     val counts: Map[String, Long] = untracked.map { f =>
       val n = f.stats
@@ -2768,37 +2431,14 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       rowIdHighWaterMark(prior), version,
       untracked.map(f => f.path -> counts.get(f.path)))
     untracked.foreach { f =>
-      val rel = relOf(f.path)
-      val pvals = rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> (JString(java.net.URLDecoder.decode(v, "UTF-8")): JValue))
-          case _ => None
-        }
-      }.toList
-      val dvJson: List[(String, JValue)] = f.dv.map { d =>
-        "deletionVector" -> (JObject(List(
-          "storageType" -> (JString(d.storageType): JValue),
-          "pathOrInlineDv" -> (JString(d.pathOrInlineDv): JValue)) ++
-          d.offset.map(o => "offset" -> (JInt(BigInt(o)): JValue)).toList ++
-          List(
-            "sizeInBytes" -> (JInt(BigInt(d.sizeInBytes)): JValue),
-            "cardinality" -> (JLong(d.cardinality): JValue))): JValue)
-      }.toList
-      lines += JObject("add" -> JObject(
-        List(
-          "path" -> (JString(rel): JValue),
-          "partitionValues" -> (JObject(pvals): JValue),
-          "size" -> (JLong(f.size): JValue),
-          "modificationTime" -> (JLong(f.modificationTime): JValue),
-          "dataChange" -> (JBool(false): JValue)) ++ dvJson ++
-          f.stats.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-          byPath.getOrElse(f.path, Nil)))
+      val rel = relOf(fs, root, new Path(f.path))
+      lines += addAction(rel, partitionValuesOf(rel), f.size,
+        f.modificationTime, dataChange = false, f.dv, f.stats,
+        byPath.getOrElse(f.path, Nil))
     }
     lines ++= domainLine
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    val out = CommitFence.create(fs, commitPath)
-    finishCommit(spark, rootStr, out, lines.toSeq, version, cfg)
+    commitVersion(spark, rootStr, version, now, "SET TBLPROPERTIES",
+      Map.empty, ictEnabled(prior.configuration), lines.toSeq, cfg)
   }
 
   /** Rename a column WITHOUT rewriting any data file (the
@@ -2990,16 +2630,8 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       legacyReader: Int = 2, legacyWriter: Int = 5,
       operation: String = "SET TBLPROPERTIES",
       forceFeatures: Boolean = false): Long = {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val version = prior.version + 1
     val now = System.currentTimeMillis()
-    // the enablement commit itself already carries an ICT (cfg holds the
-    // new configuration when this is the enable commit)
-    val ict = if (ictEnabled(cfg) || ictEnabled(prior.configuration))
-      Some(nextIct(fs, root, prior.version, now)) else None
     val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now, operation, Map.empty, ict)
     val onFeatures = forceFeatures || prior.minReaderVersion >= 3 ||
       prior.readerFeatures.nonEmpty || prior.writerFeatures.nonEmpty
     if (onFeatures) {
@@ -3018,10 +2650,11 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     }
     lines += metaDataLine(carriedTableId(Some(prior)), schema.json,
       partitionColumns, cfg, now)
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    val out = CommitFence.create(fs, commitPath)
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      cfg)
+    // the enablement commit itself already carries an ICT (cfg holds the
+    // new configuration when this is the enable commit)
+    commitVersion(spark, rootStr, prior.version + 1, now, operation,
+      Map.empty, ictEnabled(cfg) || ictEnabled(prior.configuration),
+      lines.toSeq, cfg)
   }
 
   /** Writer features this writer can honor. `appendOnly` is honored by
@@ -3359,8 +2992,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
   def syncIdentity(spark: SparkSession, rootStr: String): Long =
       CommitRetry() {
     import org.apache.spark.sql.functions.{col, max, min}
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = DeltaLog.snapshot(spark, rootStr)
     writerGate(prior, rootStr, deletesRows = false, kind = "syncIdentity")
     val idFs = identityFields(prior.schema)
@@ -3397,17 +3028,12 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       }.getOrElse(tf)
     })
     val now = System.currentTimeMillis()
-    val version = prior.version + 1
-    val lines = Seq[JValue](
-      commitInfoLine(now, "SYNC IDENTITY",
-        Map("columns" -> newHwms.keys.toSeq.sorted.mkString(",")),
-        if (ictEnabled(prior.configuration))
-          Some(nextIct(fs, root, prior.version, now)) else None),
-      metaDataLine(carriedTableId(Some(prior)), synced.json,
-        prior.partitionColumns, prior.configuration, now))
-    val out = CommitFence.create(fs,
-      new Path(DeltaLog.logDir(root), f"$version%020d.json"))
-    finishCommit(spark, rootStr, out, lines, version, prior.configuration)
+    commitVersion(spark, rootStr, prior.version + 1, now, "SYNC IDENTITY",
+      Map("columns" -> newHwms.keys.toSeq.sorted.mkString(",")),
+      ictEnabled(prior.configuration),
+      Seq(metaDataLine(carriedTableId(Some(prior)), synced.json,
+        prior.partitionColumns, prior.configuration, now)),
+      prior.configuration)
   }
 
   /** `ALTER TABLE ... ADD CONSTRAINT <name> CHECK (<expr>)`: validate
@@ -3421,8 +3047,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
   def addCheckConstraint(spark: SparkSession, rootStr: String,
       name: String, exprSql: String): Long = CommitRetry() {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = DeltaLog.snapshot(spark, rootStr)
     writerGate(prior, rootStr, deletesRows = false, kind = "addConstraint")
     val key = s"delta.constraints.$name"
@@ -3440,7 +3064,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           "declared on conforming data")
     }
     val now = System.currentTimeMillis()
-    val version = prior.version + 1
     // checkConstraints is WRITER-only: the reader protocol must stay
     // where it was (bumping it would lock legacy readers out of a
     // table that imposes zero new reader obligations) — the spec only
@@ -3452,25 +3075,16 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         Some(protocolAction(prior.minReaderVersion, 3))
       } else None
     val cfg = prior.configuration + (key -> exprSql)
-    val lines = Seq[JValue](
-      commitInfoLine(now, "ADD CONSTRAINT",
-        Map("name" -> name, "expr" -> exprSql),
-        if (ictEnabled(prior.configuration))
-          Some(nextIct(fs, root, prior.version, now)) else None)) ++
-      protocolLine.toSeq :+
-      metaDataLine(carriedTableId(Some(prior)), prior.schemaString,
-        prior.partitionColumns, cfg, now)
-    val out = CommitFence.create(fs,
-      new Path(DeltaLog.logDir(root), f"$version%020d.json"))
-    finishCommit(spark, rootStr, out, lines, version, cfg)
+    commitVersion(spark, rootStr, prior.version + 1, now, "ADD CONSTRAINT",
+      Map("name" -> name, "expr" -> exprSql), ictEnabled(prior.configuration),
+      protocolLine.toSeq :+ metaDataLine(carriedTableId(Some(prior)),
+        prior.schemaString, prior.partitionColumns, cfg, now), cfg)
   }
 
   /** `ALTER TABLE ... DROP CONSTRAINT <name>` — remove the property;
     * refuses an unknown name (delta-spark's non-IF-EXISTS behavior). */
   def dropConstraint(spark: SparkSession, rootStr: String,
       name: String): Long = CommitRetry() {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = DeltaLog.snapshot(spark, rootStr)
     writerGate(prior, rootStr, deletesRows = false, kind = "dropConstraint")
     val key = s"delta.constraints.$name"
@@ -3480,16 +3094,10 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           .map(_.stripPrefix("delta.constraints.")).toSeq.sorted.mkString(", ")})")
     val cfg = prior.configuration - key
     val now = System.currentTimeMillis()
-    val version = prior.version + 1
-    val lines = Seq[JValue](
-      commitInfoLine(now, "DROP CONSTRAINT", Map("name" -> name),
-        if (ictEnabled(prior.configuration))
-          Some(nextIct(fs, root, prior.version, now)) else None),
-      metaDataLine(carriedTableId(Some(prior)), prior.schemaString,
-        prior.partitionColumns, cfg, now))
-    val out = CommitFence.create(fs,
-      new Path(DeltaLog.logDir(root), f"$version%020d.json"))
-    finishCommit(spark, rootStr, out, lines, version, cfg)
+    commitVersion(spark, rootStr, prior.version + 1, now, "DROP CONSTRAINT",
+      Map("name" -> name), ictEnabled(prior.configuration),
+      Seq(metaDataLine(carriedTableId(Some(prior)), prior.schemaString,
+        prior.partitionColumns, cfg, now)), cfg)
   }
 
   /** Keys whose property is the SURFACE of a feature this writer
@@ -3626,8 +3234,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
    */
   def widenColumnTypes(spark: SparkSession, rootStr: String,
       changes: Map[String, DataType]): Long = CommitRetry() {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = DeltaLog.snapshot(spark, rootStr)
     writerGate(prior, rootStr, deletesRows = false, kind = "widenColumnTypes")
     require(changes.nonEmpty, s"widenColumnTypes at $rootStr: no changes")
@@ -3650,19 +3256,15 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val writers = (if (prior.minWriterVersion >= 7) prior.writerFeatures
       else legacyWriterFeatures(prior.minWriterVersion)) + "typeWidening"
     val now = System.currentTimeMillis()
-    val version = prior.version + 1
-    val lines = Seq[JValue](
-      commitInfoLine(now, "CHANGE COLUMN",
-        Map("typeWidening" -> changes.keys.toSeq.sorted.mkString(",")),
-        if (ictEnabled(prior.configuration))
-          Some(nextIct(fs, root, prior.version, now)) else None),
-      protocolAction(3, 7, readerFeatures = readers, writerFeatures = writers),
-      // a type-widening is a metadata change on the SAME table
-      metaDataLine(carriedTableId(Some(prior)), widened.json,
-        prior.partitionColumns, prior.configuration, now))
-    val out = CommitFence.create(fs,
-      new Path(DeltaLog.logDir(root), f"$version%020d.json"))
-    finishCommit(spark, rootStr, out, lines, version, prior.configuration)
+    commitVersion(spark, rootStr, prior.version + 1, now, "CHANGE COLUMN",
+      Map("typeWidening" -> changes.keys.toSeq.sorted.mkString(",")),
+      ictEnabled(prior.configuration),
+      Seq(protocolAction(3, 7, readerFeatures = readers,
+          writerFeatures = writers),
+        // a type-widening is a metadata change on the SAME table
+        metaDataLine(carriedTableId(Some(prior)), widened.json,
+          prior.partitionColumns, prior.configuration, now)),
+      prior.configuration)
   }
 
   private def commit(df: DataFrame, rootStr: String, overwrite: Boolean,
@@ -3697,11 +3299,8 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       }
     // txn idempotence inside the retry loop: if the racing winner was
     // this transaction's own replayed twin, no-op instead of re-applying
-    txn.foreach { case (app, v) =>
-      prior.foreach { p =>
-        if (p.transactions.get(app).exists(_ >= v)) return p.version
-      }
-    }
+    prior.foreach(p =>
+      if (LakeDml.replayed(p.transactions, txn)) return p.version)
 
     // symmetric writer gate — a table whose protocol or configuration
     // demands writer capabilities we don't implement must not be written
@@ -3845,12 +3444,9 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     // source never executes twice (see enforceConstraintsOnStage). A
     // violation deletes the stage; the table is untouched.
     prior.foreach { p =>
-      val physToLogical: Map[String, String] =
-        if (cmMode == "none" || overwrite) Map.empty
-        else p.schema.fields.toSeq
-          .map(f => DeltaColumnMapping.physicalName(f) -> f.name).toMap
       try enforceConstraintsOnStage(spark, p, rootStr, stage,
-        if (overwrite) "overwrite" else "append", physToLogical)
+        if (overwrite) "overwrite" else "append",
+        if (overwrite) Map.empty else physToLogical(p))
       catch { case t: Throwable => fs.delete(stage, true); throw t }
     }
     val staged = dataFiles(fs, stage)
@@ -3879,23 +3475,14 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       else {
         import org.apache.spark.sql.functions.lit
         val p = prior.get
-        val priorCm = DeltaColumnMapping.mode(p.configuration)
+        // prior snapshot is still current: the new files are on disk but
+        // unlogged, so read() serves exactly the pre-image
         val pre =
           if (p.files.isEmpty) None
-          else {
-            // prior snapshot is still current: the new files are on disk
-            // but unlogged, so read() serves exactly the pre-image
-            val logical = read(spark, rootStr)
-            val phys = if (priorCm == "none") logical
-              else DeltaColumnMapping.toPhysical(logical, p.schema)
-            val priorParts = p.partitionColumns.map { n =>
-              if (priorCm == "none") n
-              else p.schema.fields.find(_.name == n)
-                .map(DeltaColumnMapping.physicalName).getOrElse(n)
-            }
-            Some(writeCdc(spark, fs, root,
-              phys.withColumn("_change_type", lit("delete")), priorParts))
-          }
+          else Some(writeCdc(spark, fs, root,
+            physicalRows(p, read(spark, rootStr))
+              .withColumn("_change_type", lit("delete")),
+            physPartitionColumns(p)))
         // insert side reads back the just-moved files (one extra scan of
         // the new data; avoids recomputing a possibly-expensive `df`)
         val post =
@@ -3910,28 +3497,14 @@ object DeltaTable extends org.apache.spark.internal.Logging {
 
     val version = prior.map(_.version + 1).getOrElse(0L)
     val now = System.currentTimeMillis()
-    val rootUri = fs.makeQualified(root).toUri
     // row tracking in force? (an existing table's features/config, or a
     // create with delta.enableRowTracking)
     val rowTrackingActive = prior.map(rowTrackingOn).getOrElse(
       createConfiguration.get("delta.enableRowTracking")
         .exists(_.equalsIgnoreCase("true")))
 
-    def relative(s: FileStatus): String = {
-      val fileUri = s.getPath.toUri
-      rootUri.relativize(fileUri).getPath
-    }
-
     val lines = mutable.Buffer.empty[JValue]
-    lines += commitInfoLine(now,
-      if (version == 0L) "CREATE TABLE AS SELECT" else "WRITE",
-      Map("mode" -> (if (overwrite) "Overwrite" else "Append")),
-      if (ictEnabled(metaCfg)) Some(nextIct(fs, root, version - 1, now)) else None)
-    txn.foreach { case (app, v) =>
-      lines += JObject("txn" -> JObject(
-        "appId" -> JString(app), "version" -> JLong(v),
-        "lastUpdated" -> JLong(now)))
-    }
+    lines ++= txnAction(txn, now)
     if (version == 0L) {
       // legacy versions are cumulative capability demands: a created
       // schema carrying identity (6) or generated (4) field metadata
@@ -3988,69 +3561,27 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         metaCfg, now)
     }
     if (overwrite) prior.foreach(_.files.foreach { f =>
-      // qualify before relativizing: snapshot paths are scheme-less
-      val rel = rootUri.relativize(
-        fs.makeQualified(new Path(f.path)).toUri).getPath
-      lines += JObject("remove" -> JObject(
-        "path" -> JString(rel),
-        "deletionTimestamp" -> JLong(now),
-        "dataChange" -> JBool(true)))
+      lines += removeAction(relOf(fs, root, new Path(f.path)), now,
+        dataChange = true)
     })
     // per-file stats from the parquet footers just written (metadata-only
     // reads, distributed when the commit is large) — the skipping payload
-    // every real Delta reader expects in `add.stats`
-    val statsSchema = StructType(physDf.schema.filterNot(f =>
-      physPartitionBy.contains(f.name)))
-    val statsByPath: Map[String, FileStats] = ParquetFooterStats
-      .collect(spark, added.map(_.getPath.toString), statsSchema)
-    // row tracking: fresh disjoint id ranges for the new files + the
-    // republished watermark (an overwrite's REMOVED files retire their
-    // ranges but the watermark never rewinds — ids are never reused)
-    val (rowIdsByPath, rowIdDomain) = assignFreshRowIds(
-      rowTrackingActive,
-      prior.map(rowIdHighWaterMark).getOrElse(-1L), version,
-      added.map(s => s.getPath.toString ->
-        statsByPath.get(s.getPath.toString).flatMap(_.numRecords)))
-    added.foreach { s =>
-      val rel = relative(s)
-      // hive-layout dirs (`col=value/`) carry the partition values
-      val pvals = rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> JString(java.net.URLDecoder.decode(v, "UTF-8")))
-          case _ => None
-        }
-      }.toList
-      val statsJson = statsByPath.get(s.getPath.toString)
-        .flatMap(DeltaStats.render(_, statsSchema))
-      lines += JObject("add" -> JObject(
-        List(
-          "path" -> (JString(rel): JValue),
-          "partitionValues" -> (JObject(pvals): JValue),
-          "size" -> (JLong(s.getLen): JValue),
-          "modificationTime" -> (JLong(s.getModificationTime): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++
-          statsJson.map(sj => "stats" -> (JString(sj): JValue)).toList ++
-          rowIdsByPath.getOrElse(s.getPath.toString, Nil)))
-    }
-    lines ++= rowIdDomain
-
+    // every real Delta reader expects in `add.stats`. Row tracking: fresh
+    // disjoint id ranges for the new files + the republished watermark
+    // (an overwrite's REMOVED files retire their ranges but the
+    // watermark never rewinds — ids are never reused)
+    lines ++= addActionLines(spark, fs, root, added,
+      StructType(physDf.schema.filterNot(f => physPartitionBy.contains(f.name))),
+      rowTrackingActive, prior.map(rowIdHighWaterMark).getOrElse(-1L),
+      version, dataChange = true)
     lines ++= cdcLines
 
-    val commitPath = new Path(DeltaLog.logDir(root), f"$version%020d.json")
-    fs.mkdirs(DeltaLog.logDir(root))
-    // create-no-overwrite: two racing writers of the same version — the
-    // loser fails, the Delta optimistic-concurrency contract. The loser's
-    // already-moved data and cdc files are removed so its retry starts
-    // clean and the winner's log never references them.
-    val out = try CommitFence.create(fs, commitPath) catch {
-      case e: Throwable =>
-        added.foreach(s => fs.delete(s.getPath, false))
-        cdcPaths.foreach(fs.delete(_, false))
-        throw e
-    }
-    finishCommit(spark, rootStr, out, lines.toSeq, version,
-      prior.map(_.configuration).getOrElse(createConfiguration))
+    commitVersion(spark, rootStr, version, now,
+      if (version == 0L) "CREATE TABLE AS SELECT" else "WRITE",
+      Map("mode" -> (if (overwrite) "Overwrite" else "Append")),
+      ictEnabled(metaCfg), lines.toSeq,
+      prior.map(_.configuration).getOrElse(createConfiguration),
+      staged = added.map(_.getPath) ++ cdcPaths)
   }
 
   /** The `commitInfo` action every real Delta writer leads its commit
@@ -4498,7 +4029,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val s = DeltaLog.snapshot(spark, rootStr)
     val v2 = s.writerFeatures.contains("v2Checkpoint") ||
       s.configuration.get("delta.checkpointPolicy").contains("v2")
-    val rootUri = fs.makeQualified(root).toUri
     // the checkpoint must restate the table's REAL protocol and
     // configuration — writing minimal constants here would downgrade the
     // authoritative protocol and erase config for every later replayer
@@ -4506,14 +4036,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val proto = CkptProtocol(s.minReaderVersion, s.minWriterVersion,
       if (s.readerFeatures.nonEmpty) Some(s.readerFeatures.toSeq.sorted) else None,
       if (s.writerFeatures.nonEmpty) Some(s.writerFeatures.toSeq.sorted) else None)
-    def partitionValuesOf(rel: String): Map[String, String] =
-      rel.split('/').init.flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
-          case _ => None
-        }
-      }.toMap
     val v2Meta: Seq[CkptRow] =
       if (!v2) Nil
       // the spec's mandatory CheckpointMetadata action — v2 readers
@@ -4541,14 +4063,13 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       }
     val addRows: Seq[CkptRow] =
       s.files.map { f =>
-        val rel = rootUri.relativize(
-          fs.makeQualified(new Path(f.path)).toUri).getPath
+        val rel = relOf(fs, root, new Path(f.path))
         // DV descriptors MUST survive the checkpoint: dropping one here
         // would resurrect its deleted rows for every later replayer.
         // Row-tracking fields ride along for the same reason.
         val dv = f.dv.map(d => CkptDv(d.storageType, d.pathOrInlineDv,
           d.offset, d.sizeInBytes, d.cardinality))
-        CkptRow(Some(CkptAdd(rel, partitionValuesOf(rel), f.size,
+        CkptRow(Some(CkptAdd(rel, partitionValuesOf(rel).toMap, f.size,
           f.modificationTime, dataChange = false, dv, f.stats,
           f.baseRowId, f.defaultRowCommitVersion)), None, None, None)
       }

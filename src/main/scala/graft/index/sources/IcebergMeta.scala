@@ -101,6 +101,18 @@ final case class IcebergSnapshot(
     * path-encoded (data files drop it; reads reconstruct it). */
   def partitionColumns: Seq[String] =
     partitionFields.collect { case f if f.kind == TIdentity => f.sourceCol }
+
+  /** Latest committed txn version per appId — the `graft.txn.<appId>`
+    * table properties exactly-once writers stamp. */
+  def transactions: Map[String, Long] = properties.collect {
+    case (k, v) if k.startsWith(IcebergTable.TxnPrefix) =>
+      k.stripPrefix(IcebergTable.TxnPrefix) -> v.toLong
+  }
+
+  /** `live` data files (default: all of them) paired with their
+    * sequence numbers — the existing-data entries a commit republishes. */
+  def liveData(live: Seq[DeltaFileMeta] = files): Seq[(DeltaFileMeta, Long)] =
+    live.map(f => (f, dataSeq.getOrElse(f.path, 0L)))
 }
 
 /**
@@ -1685,15 +1697,31 @@ object IcebergTable {
     * `parquet.field.id` metadata so the files this writer produces are
     * ID-RESOLVABLE — the substrate schema evolution stands on. */
   private def withIdMetadata(df: DataFrame,
-      schemaJson: JValue): DataFrame = {
-    val ids = IcebergMeta.icebergSchemaToSparkWithIds(schemaJson)
-    val byName = ids.fields.map(f => f.name -> f.metadata).toMap
+      schemaJson: JValue): DataFrame =
+    withFieldIds(df, IcebergMeta.icebergSchemaToSparkWithIds(schemaJson)
+      .fields.map(f => f.name -> f.metadata).toMap)
+
+  /** `df` with the `parquet.field.id` metadata `ids` carries per column
+    * name, and Spark's field-id writes switched on — every writer of
+    * id-carrying files (data and equality deletes) comes through here.
+    * The switch is session-wide and stays on. */
+  private def withFieldIds(df: DataFrame,
+      ids: Map[String, Metadata]): DataFrame = {
+    df.sparkSession.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     df.select(df.schema.fieldNames.toSeq.map { n =>
-      byName.get(n) match {
+      ids.get(n) match {
         case Some(md) => df.col(n).as(n, md)
         case None => df.col(n)
       }
     }: _*)
+  }
+
+  /** `parquet.field.id` metadata for the named top-level columns. */
+  private def fieldIdsOf(prior: IcebergSnapshot,
+      names: Seq[String]): Map[String, Metadata] = {
+    val nameToId = prior.fieldIdToName.map { case (i, n) => n -> i }
+    names.map(c => c -> new MetadataBuilder()
+      .putLong(IcebergMeta.ParquetFieldId, nameToId(c).toLong).build()).toMap
   }
 
   /** `partitionColumns` declares the partition spec, fixed at create.
@@ -1752,9 +1780,14 @@ object IcebergTable {
 
   /** Latest committed txn version per appId (from table properties). */
   def transactions(spark: SparkSession, location: String): Map[String, Long] =
-    IcebergMeta.snapshot(spark, location).properties.collect {
-      case (k, v) if k.startsWith("graft.txn.") => k.drop(10) -> v.toLong
-    }
+    IcebergMeta.snapshot(spark, location).transactions
+
+  /** Table-property prefix of the txn watermarks. */
+  private[sources] val TxnPrefix = "graft.txn."
+
+  /** The property a commit carrying `txn` stamps. */
+  private def txnProperty(txn: Option[(String, Long)]): Map[String, String] =
+    txn.map { case (app, v) => s"$TxnPrefix$app" -> v.toString }.toMap
 
   /** Data-manifest entries carry the spec's per-field metrics maps
     * (avro map-as-array encoding, like real Iceberg manifests):
@@ -1957,9 +1990,6 @@ object IcebergTable {
       branch: Option[String] = None): Long = {
     val spark = df.sparkSession
     val root = new Path(location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val metaDir = IcebergMeta.metadataDir(location)
-    val dataDir = new Path(root, "data")
 
     // a branch-targeted write stacks on the BRANCH head (created at the
     // current head on first write); a main write on the current head
@@ -1980,12 +2010,8 @@ object IcebergTable {
     require(branch.isEmpty || prior.exists(_.snapshotId >= 0),
       s"branch write to $location: the table has no snapshot yet")
     // txn idempotence inside the retry loop (see the Delta twin)
-    txn.foreach { case (app, v) =>
-      prior.foreach { p =>
-        if (p.properties.get(s"graft.txn.$app").exists(_.toLong >= v))
-          return p.snapshotId
-      }
-    }
+    prior.foreach(p =>
+      if (LakeDml.replayed(p.transactions, txn)) return p.snapshotId)
     // partition spec resolution: fixed at create, appends must conform.
     // Spec strings parse through [[IceTransforms.parseFieldSpec]]:
     // plain names are identity; "bucket(16, id)" / "days(ts)" / … are
@@ -2032,65 +2058,40 @@ object IcebergTable {
           "dropColumn first, then append matching frames")
     }
 
-    // stage through a per-writer temp dir: the manifest's ADDED entries
-    // are exactly the files this writer produced — a concurrent writer's
-    // files landing in data/ mid-commit can never be absorbed (the
-    // silent-duplication race a before/after directory diff invites)
-    val stage = new Path(root,
-      s".graft-stage-${java.util.UUID.randomUUID().toString}")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    val idDf = withIdMetadata(df, IcebergMeta.publishedSchemaJson(prior, df.schema))
-    writePartitionedStage(idDf, parts, stage)
-    val added = moveStagedData(fs, stage, dataDir)
-
-    // per-file stats from the freshly-written footers (metadata-only
-    // reads) → manifest bounds, the payload every real Iceberg reader
-    // prunes files with. Partitioned files carry only the non-partition
-    // columns; the partition columns' min=max=value bounds are injected
-    // from the hive path, so the one pruning evaluator covers both.
-    val statsByPath = partitionedFooterStats(spark, df.schema, parts,
-      added.map(_.getPath.toString))
-    // ZERO-ROW staged files (an idle micro-batch's empty part) are
-    // dropped here, not committed: a streaming sink firing empty
-    // triggers would otherwise accumulate an empty data file — and,
-    // on the fast-append path, an empty manifest — per trigger
-    added.filter(s => statsByPath.get(s.getPath.toString)
-        .flatMap(_.numRecords).exists(_ == 0L))
-      .foreach(s => fs.delete(s.getPath, false))
-    val addedNonEmpty = added.filter(s =>
-      statsByPath.get(s.getPath.toString)
-        .flatMap(_.numRecords).forall(_ != 0L))
+    val added = stageData(spark, root, df,
+      IcebergMeta.publishedSchemaJson(prior, df.schema), df.schema, parts)
     publishSnapshot(spark, location, prior, df.schema,
       if (replaceData && prior.isDefined) "overwrite" else "append",
-      dataExisting =
-        if (replaceData) Nil
-        else prior.toSeq.flatMap(p =>
-          p.files.map(f => (f, p.dataSeq.getOrElse(f.path, 0L)))),
-      dataAdded = addedNonEmpty.map(s =>
-        DeltaFileMeta(s.getPath.toString, s.getLen, 0L,
-          stats = statsByPath.get(s.getPath.toString)
-            .flatMap(DeltaStats.render(_, df.schema)))),
+      dataExisting = if (replaceData) Nil else prior.toSeq.flatMap(_.liveData()),
+      dataAdded = added,
       deleteExisting =
         if (replaceData) Nil else prior.toSeq.flatMap(_.deleteFiles),
       deleteAdded = Nil,
-      extraProperties = txn
-        .map { case (app, v) => Map(s"graft.txn.$app" -> v.toString) }
-        .getOrElse(Map.empty),
+      extraProperties = txnProperty(txn),
       createPartitionFields = parts,
       branch = branch,
       // a non-replace commit removes nothing: eligible for fast append
       appendOnly = !replaceData)
   }
 
-  /** Stage-write `df` under the table's partition spec: identity
-    * fields partition by the source column itself; transform fields
-    * partition by a DERIVED bookkeeping column (computed per row as a
-    * codegen'd Catalyst column, stripped from the files by
-    * `partitionBy` — it exists only in the path and the manifest's
-    * partition tuple, never in the data, which keeps the source column
-    * in the files as the spec requires). */
-  private def writePartitionedStage(idDf: DataFrame,
-      fields: Seq[IcePartField], stage: Path): Unit = {
+  /** Stage-write `df` (field ids from `schemaJson`) under the partition
+    * spec `fields` through a per-writer temp dir — the manifest's ADDED
+    * entries are exactly the files this writer produced; a concurrent
+    * writer's files landing in data/ mid-commit can never be absorbed
+    * (the silent-duplication race a before/after directory diff
+    * invites) — and land them ([[landStaged]]). Identity fields
+    * partition by the source column itself; transform fields by a
+    * DERIVED bookkeeping column (computed per row as a codegen'd
+    * Catalyst column, stripped from the files by `partitionBy` — it
+    * exists only in the path and the manifest's partition tuple, never
+    * in the data, which keeps the source column in the files as the
+    * spec requires). */
+  private def stageData(spark: SparkSession, root: Path, df: DataFrame,
+      schemaJson: JValue, schema: StructType,
+      fields: Seq[IcePartField]): Seq[DeltaFileMeta] = {
+    val stage = new Path(root,
+      s".graft-stage-${java.util.UUID.randomUUID().toString}")
+    val idDf = withIdMetadata(df, schemaJson)
     val withDerived = fields.filter(_.kind != TIdentity)
       .foldLeft(idDf)((d, f) => d.withColumn(f.name, IceTransforms.column(f, d)))
     // HASH-DISTRIBUTE on the partition values before the write (real
@@ -2105,17 +2106,28 @@ object IcebergTable {
     val w = clustered.write.mode(SaveMode.Append)
     (if (fields.nonEmpty) w.partitionBy(fields.map(_.partitionByName): _*) else w)
       .parquet(stage.toString)
+    landStaged(spark, root, stage, schema, fields)
   }
 
-  /** Move every staged data file into `dataDir`, PRESERVING hive
-    * partition subdirectories, and return the landed statuses. */
-  private def moveStagedData(fs: FileSystem, stage: Path,
-      dataDir: Path): Seq[FileStatus] = {
+  /** Move the files staged under `stage` into `data/` (PRESERVING hive
+    * partition subdirectories) and describe them for the manifest:
+    * footer stats (metadata-only reads) → manifest bounds, the payload
+    * every real Iceberg reader prunes files with. Partitioned files
+    * carry only the non-partition columns; the partition columns'
+    * min=max=value bounds are injected from the hive path, so the one
+    * pruning evaluator covers both. ZERO-ROW staged files (an idle
+    * micro-batch's empty part, an all-marker merge's upserts) are
+    * deleted, not committed: a streaming sink firing empty triggers
+    * would otherwise accumulate an empty data file — and, on the
+    * fast-append path, an empty manifest — per trigger. */
+  private def landStaged(spark: SparkSession, root: Path, stage: Path,
+      schema: StructType, fields: Seq[IcePartField]): Seq[DeltaFileMeta] = {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dataDir = new Path(root, "data")
     fs.mkdirs(dataDir)
     val stageUri = fs.makeQualified(stage).toUri
-    val moved = DeltaTable.dataFiles(fs, stage).map { s =>
-      val rel = stageUri.relativize(s.getPath.toUri).getPath
-      val target = new Path(dataDir, rel)
+    val added = DeltaTable.dataFiles(fs, stage).map { s =>
+      val target = new Path(dataDir, stageUri.relativize(s.getPath.toUri).getPath)
       fs.mkdirs(target.getParent)
       if (!fs.rename(s.getPath, target)) {
         throw new IllegalStateException(
@@ -2124,7 +2136,14 @@ object IcebergTable {
       fs.getFileStatus(target)
     }
     fs.delete(stage, true)
-    moved
+    val statsByPath = partitionedFooterStats(spark, schema, fields,
+      added.map(_.getPath.toString))
+    val (empty, nonEmpty) = added.partition(s =>
+      statsByPath.get(s.getPath.toString).flatMap(_.numRecords).contains(0L))
+    empty.foreach(s => fs.delete(s.getPath, false))
+    nonEmpty.map(s => DeltaFileMeta(s.getPath.toString, s.getLen, 0L,
+      stats = statsByPath.get(s.getPath.toString)
+        .flatMap(DeltaStats.render(_, schema))))
   }
 
   /** Footer stats over the FILE columns (table schema minus partition
@@ -2267,56 +2286,51 @@ object IcebergTable {
     * carries it (content=1). Data files are untouched — that is the
     * point of merge-on-read; [[read]] anti-joins the deletes back out.
     * The position rows are computed and written DISTRIBUTED (metadata
-    * columns + a filtered write), never collected to the driver. */
+    * columns + a filtered write), never collected to the driver. A
+    * predicate matching no row (an empty table included) commits
+    * nothing and returns the current snapshot id. */
   def deleteWhere(spark: SparkSession, location: String,
       predicate: org.apache.spark.sql.Column): Long =
     CommitRetry() { deleteWhereOnce(spark, location, predicate) }
 
   private def deleteWhereOnce(spark: SparkSession, location: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{col, regexp_replace}
-    val root = new Path(location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir = new Path(root, "data")
     require(IcebergMeta.isIcebergTable(spark, location),
       s"deleteWhere on a non-Iceberg directory: $location")
     val prior = IcebergMeta.snapshot(spark, location)
-    require(prior.files.nonEmpty, s"deleteWhere on an empty table: $location")
-
-    // positions of the doomed rows, straight from the parquet reader's
-    // metadata columns — (file, ordinal position), the spec's coordinates.
-    // Paths are stored scheme-normalized, the form real writers use.
-    // Manifest-bounds FILE SKIPPING wraps the scan (same as [[read]]):
-    // a narrow delete opens only the files whose ranges admit the
-    // pushed-down predicate.
-    val rawDoomed = DeltaTable.maybeBasePath(spark, s"$location/data",
-      spark.read.schema(prior.schema), prior.files.map(_.path))
-      .parquet(prior.files.map(_.path): _*)
-    val doomed = StatsPruning.wrap(rawDoomed, prior.files.flatMap(f =>
-        f.stats.flatMap(DeltaStats.parse(_, prior.schema))
-          .map(fs => DeltaTable.normPath(f.path) -> fs)).toMap)
-      .filter(predicate)
-      .select(
-        regexp_replace(col("_metadata.file_path"), "^file:/+", "/").as("file_path"),
-        col("_metadata.row_index").as("pos"))
-    // delete files are sorted by (file_path, pos) per the spec's
-    // recommendation, BANDED on file_path across executor tasks — one
-    // sorted file per non-empty band, never a single-task funnel: a
-    // wide delete on a 100 TB table writes its positions in parallel
-    // and the driver sees only the (path, size) descriptors
-    val added = writeDeleteFiles(spark, fs, root, dataDir, doomed,
-      bandCols = Seq("file_path"), sortCols = Seq("file_path", "pos"),
-      maxShards = math.min(spark.sessionState.conf.numShufflePartitions,
-        prior.files.size),
-      namePrefix = f"delete-${prior.snapshotId + 1}%05d-",
-      content = 1, equalityIds = Nil, seq = prior.snapshotId + 1)
-
+    if (prior.files.isEmpty) return prior.snapshotId
+    val added = positionalDeletes(spark, prior, predicate, "")
+    if (added.isEmpty) return prior.snapshotId // no matching rows: no commit
     publishSnapshot(spark, location, Some(prior), prior.schema, "delete",
-      dataExisting = prior.files.map(f =>
-        (f, prior.dataSeq.getOrElse(f.path, 0L))),
+      dataExisting = prior.liveData(),
       dataAdded = Nil,
       deleteExisting = prior.deleteFiles,
       deleteAdded = added)
+  }
+
+  /** Positional delete files (content=1) over the rows `condition`
+    * matches — positions from the shared stats-pruned
+    * [[LakeDml.matchedPositions]] scan (manifest-bounds FILE SKIPPING,
+    * as in [[read]]), paths stored scheme-normalized, the form real
+    * writers use. The files are sorted by (file_path, pos) per the
+    * spec's recommendation, BANDED on file_path across executor tasks —
+    * one sorted file per non-empty band, never a single-task funnel: a
+    * wide delete on a 100 TB table writes its positions in parallel and
+    * the driver sees only the (path, size) descriptors. Empty when
+    * nothing matched. */
+  private def positionalDeletes(spark: SparkSession, prior: IcebergSnapshot,
+      condition: org.apache.spark.sql.Column,
+      nameTag: String): Seq[IceDeleteFile] = {
+    val root = new Path(prior.location)
+    val doomed = LakeDml.matchedPositions(spark, s"${prior.location}/data",
+      prior.files, prior.schema, Some(prior.schema), _.filter(condition))
+    writeDeleteFiles(spark, root.getFileSystem(spark.sessionState.newHadoopConf()),
+      root, new Path(root, "data"), doomed,
+      bandCols = Seq("file_path"), sortCols = Seq("file_path", "pos"),
+      maxShards = math.min(spark.sessionState.conf.numShufflePartitions,
+        prior.files.size),
+      namePrefix = f"delete-${prior.snapshotId + 1}%05d-$nameTag",
+      content = 1, equalityIds = Nil, seq = prior.snapshotId + 1)
   }
 
   /**
@@ -2329,7 +2343,8 @@ object IcebergTable {
    * versions are computed from the LIVE read). SET expressions must
    * preserve column types; partition columns refuse (a cross-partition
    * rewrite is a merge). Honors the table's partition spec for the
-   * rewritten files.
+   * rewritten files. A condition matching no row commits nothing and
+   * returns the current snapshot id.
    */
   def update(spark: SparkSession, location: String,
       condition: org.apache.spark.sql.Column,
@@ -2341,80 +2356,28 @@ object IcebergTable {
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       txn: Option[(String, Long)]): Long = {
-    import org.apache.spark.sql.functions.{col, regexp_replace}
-    val root = new Path(location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir = new Path(root, "data")
     require(IcebergMeta.isIcebergTable(spark, location),
       s"update on a non-Iceberg directory: $location")
     val prior = IcebergMeta.snapshot(spark, location)
-    txn.foreach { case (app, v) =>
-      if (prior.properties.get(s"graft.txn.$app").exists(_.toLong >= v))
-        return prior.snapshotId
-    }
-    require(set.nonEmpty, s"update at $location: no SET expressions given")
-    val tableCols = prior.schema.fieldNames.toSeq
-    set.keys.foreach(k => require(tableCols.contains(k),
-      s"update at $location: SET column '$k' is not a table column " +
-        s"(have ${tableCols.mkString(", ")})"))
-    require(!set.keys.exists(k =>
-        prior.partitionFields.exists(_.sourceCol == k)),
-      s"update at $location: SET touches a partition source column " +
-        "(rewrites rows across partitions); use merge instead")
+    if (LakeDml.replayed(prior.transactions, txn)) return prior.snapshotId
+    LakeDml.checkSet(location, set, prior.schema,
+      prior.partitionFields.map(_.sourceCol))
     if (prior.files.isEmpty) return prior.snapshotId
-
     // matched LIVE rows (MOR read — earlier deletes already excluded)
-    val live = read(spark, location).filter(condition)
-    val updated = set.foldLeft(live) { case (df, (k, c)) =>
-      df.withColumn(k, c) }.select(tableCols.map(col): _*)
-    prior.schema.fields.zip(updated.schema.fields).foreach { case (tf, uf) =>
-      require(tf.dataType == uf.dataType,
-        s"update at $location: SET makes column '${tf.name}' " +
-          s"${uf.dataType.simpleString} but the table declares " +
-          s"${tf.dataType.simpleString}; cast inside the expression")
-    }
-
-    // positional delete file over the matched LIVE positions
-    val rawScan = DeltaTable.maybeBasePath(spark, s"$location/data",
-      spark.read.schema(prior.schema), prior.files.map(_.path))
-      .parquet(prior.files.map(_.path): _*)
-    val doomed = StatsPruning.wrap(rawScan, prior.files.flatMap(f =>
-        f.stats.flatMap(DeltaStats.parse(_, prior.schema))
-          .map(fst => DeltaTable.normPath(f.path) -> fst)).toMap)
-      .filter(condition)
-      .select(
-        regexp_replace(col("_metadata.file_path"), "^file:/+", "/").as("file_path"),
-        col("_metadata.row_index").as("pos"))
-    // file_path-banded executor-side write, same shape as deleteWhere
-    val delAdded = writeDeleteFiles(spark, fs, root, dataDir, doomed,
-      bandCols = Seq("file_path"), sortCols = Seq("file_path", "pos"),
-      maxShards = math.min(spark.sessionState.conf.numShufflePartitions,
-        prior.files.size),
-      namePrefix = f"delete-${prior.snapshotId + 1}%05d-u",
-      content = 1, equalityIds = Nil, seq = prior.snapshotId + 1)
-
+    val updated = LakeDml.applySet(location,
+      read(spark, location).filter(condition), set, prior.schema)
+    // positional delete file over the matched positions
+    val delAdded = positionalDeletes(spark, prior, condition, "u")
+    if (delAdded.isEmpty) return prior.snapshotId // nothing matched: no commit
     // updated versions land as fresh data files (table partition spec)
-    val stage = new Path(root,
-      s".graft-stage-${java.util.UUID.randomUUID().toString}")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    writePartitionedStage(withIdMetadata(updated,
-      IcebergMeta.publishedSchemaJson(Some(prior), prior.schema)),
-      prior.partitionFields, stage)
-    val added = moveStagedData(fs, stage, dataDir)
-
-    val statsByPath = partitionedFooterStats(spark, prior.schema,
-      prior.partitionFields, added.map(_.getPath.toString))
     publishSnapshot(spark, location, Some(prior), prior.schema, "overwrite",
-      dataExisting = prior.files.map(f =>
-        (f, prior.dataSeq.getOrElse(f.path, 0L))),
-      dataAdded = added.map(s => DeltaFileMeta(s.getPath.toString, s.getLen, 0L,
-        stats = statsByPath.get(s.getPath.toString)
-          .flatMap(DeltaStats.render(_, prior.schema)))),
+      dataExisting = prior.liveData(),
+      dataAdded = stageData(spark, new Path(location), updated,
+        IcebergMeta.publishedSchemaJson(Some(prior), prior.schema),
+        prior.schema, prior.partitionFields),
       deleteExisting = prior.deleteFiles,
       deleteAdded = delAdded,
-      extraProperties = txn
-        .map { case (app, v) => Map(s"graft.txn.$app" -> v.toString) }
-        .getOrElse(Map.empty))
+      extraProperties = txnProperty(txn))
   }
 
   /**
@@ -2447,11 +2410,7 @@ object IcebergTable {
 
     // equality-delete files are read back under the CURRENT column names;
     // field ids keep them resolvable across later renames
-    val keysWithIds = keys.select(keys.columns.toSeq.map { c =>
-      keys.col(c).as(c, new MetadataBuilder()
-        .putLong(IcebergMeta.ParquetFieldId, nameToId(c).toLong).build())
-    }: _*)
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    val keysWithIds = withFieldIds(keys, fieldIdsOf(prior, keys.columns.toSeq))
     val added = writeDeleteFiles(spark, fs, root, dataDir,
       keysWithIds.dropDuplicates(keys.columns.toSeq),
       bandCols = keys.columns.toSeq, sortCols = keys.columns.toSeq,
@@ -2460,8 +2419,7 @@ object IcebergTable {
       content = 2, equalityIds = ids, seq = prior.snapshotId + 1)
 
     publishSnapshot(spark, location, Some(prior), prior.schema, "delete",
-      dataExisting = prior.files.map(f =>
-        (f, prior.dataSeq.getOrElse(f.path, 0L))),
+      dataExisting = prior.liveData(),
       dataAdded = Nil,
       deleteExisting = prior.deleteFiles,
       deleteAdded = added)
@@ -2492,96 +2450,45 @@ object IcebergTable {
       source: DataFrame, keys: Seq[String],
       deleteCondition: Option[org.apache.spark.sql.Column],
       txn: Option[(String, Long)]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val root = new Path(location)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir = new Path(root, "data")
     require(IcebergMeta.isIcebergTable(spark, location),
       s"merge into a non-Iceberg directory: $location (create it first)")
     val prior = IcebergMeta.snapshot(spark, location)
     // (appId, version) idempotence inside the retry loop (see the
     // Delta twin): a replayed twin transaction no-ops, never re-applies
-    txn.foreach { case (app, v) =>
-      if (prior.properties.get(s"graft.txn.$app").exists(_.toLong >= v))
-        return prior.snapshotId
-    }
-    require(keys.nonEmpty, s"merge into $location: no key columns given")
-    val tableCols = prior.schema.fieldNames.toSeq
-    keys.foreach(k => require(tableCols.contains(k),
-      s"merge into $location: key column '$k' is not a table column " +
-        s"(have ${tableCols.mkString(", ")})"))
-    // a pre-flagged source (the streaming CDC-apply sink's shape) may
-    // carry the reserved marker column instead of a deleteCondition
-    val (markerless, delCondEff) =
-      if (source.columns.contains(LakeMerge.DeleteMarker)) {
-        require(deleteCondition.isEmpty,
-          s"merge into $location: pass EITHER a ${LakeMerge.DeleteMarker} " +
-            "column or a deleteCondition, not both")
-        (source.drop(LakeMerge.DeleteMarker),
-          Some(col(LakeMerge.DeleteMarker)))
-      } else (source, deleteCondition)
-    require(markerless.columns.toSet == tableCols.toSet,
-      s"merge into $location: source columns " +
-        s"${markerless.columns.mkString(", ")} must match the table columns " +
-        s"${tableCols.mkString(", ")} exactly")
-    val src = markerless.select(tableCols.map(markerless.col): _*)
-    require(IcebergMeta.sameShape(src.schema, prior.schema),
-      s"merge into $location: source schema ${src.schema.simpleString} " +
-        s"does not match the table schema ${prior.schema.simpleString}")
-    val dupes = src.groupBy(keys.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupes == 0L,
-      s"merge into $location: source has duplicate values of " +
-        s"(${keys.mkString(", ")}); deduplicate the source first")
-
-    val delFlag = delCondEff
-      .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
-    val ups = source.withColumn("__graft_is_delete", delFlag)
-      .filter(!col("__graft_is_delete"))
-      .select(tableCols.map(col): _*)
+    if (LakeDml.replayed(prior.transactions, txn)) return prior.snapshotId
+    val (src, _, ups) =
+      LakeDml.mergeSource(location, source, keys, deleteCondition, prior.schema)
 
     // ---- upsert data files (same staged write as append, honoring the
     // table's partition spec) ----
-    val stage = new Path(root,
-      s".graft-stage-${java.util.UUID.randomUUID().toString}")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    writePartitionedStage(withIdMetadata(ups,
-      IcebergMeta.publishedSchemaJson(Some(prior), prior.schema)),
-      prior.partitionFields, stage)
-    val added = moveStagedData(fs, stage, dataDir)
+    val added = stageData(spark, root, ups,
+      IcebergMeta.publishedSchemaJson(Some(prior), prior.schema),
+      prior.schema, prior.partitionFields)
 
     // ---- equality-delete file over EVERY source key (upserts AND
     // markers — the Flink upsert shape; unmatched keys are no-ops) ----
     val nameToId: Map[String, Int] =
       prior.fieldIdToName.map { case (i, n) => n -> i }
-    val ids: Seq[Int] = keys.map(nameToId)
-    val keyRows = src.select(keys.map { c =>
-      src.col(c).as(c, new MetadataBuilder()
-        .putLong(IcebergMeta.ParquetFieldId, nameToId(c).toLong).build())
-    }: _*)
+    val keyRows = withFieldIds(src.select(keys.map(src.col): _*),
+      fieldIdsOf(prior, keys))
     // banded when the key frame exceeds one write task's worth —
     // a 100 TB CDC merge's delete keys write in parallel, a small
     // batch keeps the single tidy file real Flink writers produce
-    val delAdded = writeDeleteFiles(spark, fs, root, dataDir,
+    val delAdded = writeDeleteFiles(spark, fs, root, new Path(root, "data"),
       keyRows.dropDuplicates(keys),
       bandCols = keys, sortCols = keys,
       maxShards = eqDeleteShards(spark, keyRows),
       namePrefix = f"eq-delete-${prior.snapshotId + 1}%05d-",
-      content = 2, equalityIds = ids, seq = prior.snapshotId + 1)
+      content = 2, equalityIds = keys.map(nameToId), seq = prior.snapshotId + 1)
 
-    val statsByPath = partitionedFooterStats(spark, prior.schema,
-      prior.partitionFields, added.map(_.getPath.toString))
     publishSnapshot(spark, location, Some(prior), prior.schema, "overwrite",
-      dataExisting = prior.files.map(f =>
-        (f, prior.dataSeq.getOrElse(f.path, 0L))),
-      dataAdded = added.map(s => DeltaFileMeta(s.getPath.toString, s.getLen, 0L,
-        stats = statsByPath.get(s.getPath.toString)
-          .flatMap(DeltaStats.render(_, prior.schema)))),
+      dataExisting = prior.liveData(),
+      dataAdded = added,
       deleteExisting = prior.deleteFiles,
       deleteAdded = delAdded,
-      extraProperties = txn
-        .map { case (app, v) => Map(s"graft.txn.$app" -> v.toString) }
-        .getOrElse(Map.empty))
+      extraProperties = txnProperty(txn))
   }
 
   /**
@@ -2616,8 +2523,7 @@ object IcebergTable {
     }
     if (compactAlready) return prior.snapshotId
     publishSnapshot(spark, location, Some(prior), prior.schema, "replace",
-      dataExisting =
-        prior.files.map(f => (f, prior.dataSeq.getOrElse(f.path, 0L))),
+      dataExisting = prior.liveData(),
       dataAdded = Nil,
       deleteExisting = prior.deleteFiles,
       deleteAdded = Nil)
@@ -2633,28 +2539,13 @@ object IcebergTable {
    * A no-op when the table carries no delete files.
    */
   def compact(spark: SparkSession, location: String): Long = {
-    val root = new Path(location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir = new Path(root, "data")
     val prior = IcebergMeta.snapshot(spark, location)
     if (prior.deleteFiles.isEmpty) return prior.snapshotId
-
-    val survivors = read(spark, location)
-    val stage = new Path(root,
-      s".graft-stage-${java.util.UUID.randomUUID().toString}")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    writePartitionedStage(withIdMetadata(survivors,
-      IcebergMeta.publishedSchemaJson(Some(prior), prior.schema)),
-      prior.partitionFields, stage)
-    val added = moveStagedData(fs, stage, dataDir)
-
-    val statsByPath = partitionedFooterStats(spark, prior.schema,
-      prior.partitionFields, added.map(_.getPath.toString))
     publishSnapshot(spark, location, Some(prior), prior.schema, "replace",
       dataExisting = Nil,
-      dataAdded = added.map(s => DeltaFileMeta(s.getPath.toString, s.getLen, 0L,
-        stats = statsByPath.get(s.getPath.toString)
-          .flatMap(DeltaStats.render(_, prior.schema)))),
+      dataAdded = stageData(spark, new Path(location), read(spark, location),
+        IcebergMeta.publishedSchemaJson(Some(prior), prior.schema),
+        prior.schema, prior.partitionFields),
       deleteExisting = Nil,
       deleteAdded = Nil)
   }
@@ -2759,7 +2650,6 @@ object IcebergTable {
         prior.partitionColumns.contains(f.name)))
     val stage = new Path(root,
       s".graft-binpack-${java.util.UUID.randomUUID().toString}")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     // groups are independent single-file writes into disjoint staging
     // dirs — run them from a bounded pool (wall ≈ Σ/maxThreads, not Σ)
     val added = GroupJobs.mapConcurrently(spark, packs) { case ((dir, pack), i) =>
@@ -2788,8 +2678,7 @@ object IcebergTable {
     val statsByPath = partitionedFooterStats(spark, prior.schema,
       prior.partitionFields, added.map(_.getPath.toString))
     publishSnapshot(spark, location, Some(prior), prior.schema, "replace",
-      dataExisting = kept.map(f =>
-        (f, prior.dataSeq.getOrElse(f.path, 0L))),
+      dataExisting = prior.liveData(kept),
       dataAdded = added.map(s => DeltaFileMeta(s.getPath.toString, s.getLen, 0L,
         stats = statsByPath.get(s.getPath.toString)
           .flatMap(DeltaStats.render(_, prior.schema)))),
@@ -2816,8 +2705,6 @@ object IcebergTable {
       where: Option[org.apache.spark.sql.Column] = None): Long = {
     import org.apache.spark.sql.functions.{array, col, udf}
     val root = new Path(location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir = new Path(root, "data")
     val prior = IcebergMeta.snapshot(spark, location)
     require(zorderBy.nonEmpty, s"compactSort at $location: no z-order columns")
     zorderBy.foreach(c => require(prior.schema.fieldNames.contains(c),
@@ -2849,7 +2736,6 @@ object IcebergTable {
 
     val stage = new Path(root,
       s".graft-zsort-${java.util.UUID.randomUUID().toString}")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     // Z-ORDER WITHIN PARTITIONS on a partitioned table: range-cluster
     // on (partition values, z-address) in ONE distributed pass — rows
     // stay in their hive/hidden partition (partitionBy splits any
@@ -2869,20 +2755,13 @@ object IcebergTable {
     val w = withIdMetadata(clustered, JsonMethods.parse(prior.schemaJsonStr)).write
     (if (parts.nonEmpty) w.partitionBy(parts.map(_.partitionByName): _*) else w)
       .parquet(stage.toString)
-    val added = moveStagedData(fs, stage, dataDir)
+    val added = landStaged(spark, root, stage, prior.schema, parts)
 
-    val statsByPath =
-      if (parts.isEmpty) ParquetFooterStats.collect(
-        spark, added.map(_.getPath.toString), prior.schema)
-      else partitionedFooterStats(spark, prior.schema, parts,
-        added.map(_.getPath.toString))
     val scopedPaths = scoped.map(_.path).toSet
     publishSnapshot(spark, location, Some(prior), prior.schema, "replace",
-      dataExisting = prior.files.filterNot(f => scopedPaths.contains(f.path))
-        .map(f => (f, prior.dataSeq.getOrElse(f.path, 0L))),
-      dataAdded = added.map(s => DeltaFileMeta(s.getPath.toString, s.getLen, 0L,
-        stats = statsByPath.get(s.getPath.toString)
-          .flatMap(DeltaStats.render(_, prior.schema)))),
+      dataExisting = prior.liveData(
+        prior.files.filterNot(f => scopedPaths.contains(f.path))),
+      dataAdded = added,
       deleteExisting = Nil,
       deleteAdded = Nil)
   }

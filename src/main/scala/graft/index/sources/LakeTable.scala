@@ -4,20 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /**
- * Format-dispatching facade over the two jarless lakehouse sources: one
- * entry point that detects whether a path is a DELTA or ICEBERG table
- * and routes to the matching implementation, so pipeline code written
- * against it is table-format-agnostic — the practical shape of a
- * migration between formats (or a mixed estate) at 100 TB, where the
- * calling job should not care which log format a dataset landed in.
- *
- * The per-format modules ([[DeltaTable]], [[IcebergTable]]) stay the
- * richer, format-specific surface; this facade covers the operations
- * with a clean common meaning. Format-specific column names are
- * preserved (`_commit_version` vs `_commit_snapshot_id` in [[changes]])
- * — papering over them would hide which clock the feed is keyed by.
- */
-/**
  * The COMMIT FENCE itself: create-no-overwrite of the next log /
  * metadata version. Hadoop's local filesystem implements
  * `create(path, overwrite = false)` as a NON-ATOMIC exists-check then
@@ -88,6 +74,24 @@ object LakeMerge {
   val DeleteMarker = "__graft_delete"
 }
 
+/**
+ * Format-dispatching facade over the two jarless lakehouse sources: one
+ * entry point that detects whether a path is a DELTA or ICEBERG table
+ * and routes to the matching implementation, so pipeline code written
+ * against it is table-format-agnostic — the practical shape of a
+ * migration between formats (or a mixed estate) at 100 TB, where the
+ * calling job should not care which log format a dataset landed in.
+ *
+ * The per-format modules ([[DeltaTable]], [[IcebergTable]]) stay the
+ * richer, format-specific surface; this facade covers the operations
+ * with a clean common meaning. Format-specific column names are
+ * preserved (`_commit_version` vs `_commit_snapshot_id` in [[changes]])
+ * — papering over them would hide which clock the feed is keyed by.
+ * The format-independent steps of the row-level DML verbs
+ * ([[deleteWhere]], [[update]], [[merge]]) — txn replay check,
+ * matched-position scan, SET checks, merge-source validation — live in
+ * [[LakeDml]], which both formats call.
+ */
 object LakeTable {
 
   /** Whether the directory is a recognized lake table of either format

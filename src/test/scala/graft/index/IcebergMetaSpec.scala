@@ -214,11 +214,35 @@ class IcebergMetaSpec extends AnyFunSuite {
   test("deleteWhere matching nothing commits no delete files") {
     val loc = tmp("graft-ice-noop-")
     IcebergTable.create(customer.limit(50), loc)
-    IcebergTable.deleteWhere(spark, loc, col("c_custkey") < 0)
+    val before = IcebergMeta.snapshot(spark, loc).snapshotId
+    assert(IcebergTable.deleteWhere(spark, loc, col("c_custkey") < 0) == before)
     val snap = IcebergMeta.snapshot(spark, loc)
+    assert(snap.snapshotId == before, "a no-match delete published a snapshot")
     assert(snap.deleteFiles.isEmpty,
       "a no-match delete committed an empty delete file")
     assert(IcebergTable.read(spark, loc).count() == 50)
+  }
+
+  test("update matching nothing commits nothing") {
+    val loc = tmp("graft-ice-noop-upd-")
+    IcebergTable.create(customer.limit(50), loc)
+    val before = IcebergMeta.snapshot(spark, loc)
+    assert(IcebergTable.update(spark, loc, col("c_custkey") < 0,
+      Map("c_acctbal" -> lit(0.0))) == before.snapshotId)
+    val after = IcebergMeta.snapshot(spark, loc)
+    assert(after.snapshotId == before.snapshotId,
+      "a no-match update published a snapshot")
+    assert(after.files.map(_.path) == before.files.map(_.path))
+    assert(after.deleteFiles.isEmpty)
+  }
+
+  test("deleteWhere on a table with no data files commits nothing") {
+    val loc = tmp("graft-ice-noop-empty-")
+    IcebergTable.create(customer.limit(0), loc)
+    val before = IcebergMeta.snapshot(spark, loc)
+    assert(before.files.isEmpty)
+    assert(IcebergTable.deleteWhere(spark, loc, lit(true)) == before.snapshotId)
+    assert(IcebergMeta.snapshot(spark, loc).snapshotId == before.snapshotId)
   }
 
   test("equality-delete keys band across files past the size threshold") {

@@ -2,11 +2,13 @@ package graft.index
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.index.sources.{DeltaLog, DeltaTable, IcebergMeta, IcebergTable, LakeTable}
+import graft.index.sources.{DeltaLog, DeltaTable, IcebergMeta, IcebergTable,
+  LakeMerge, LakeTable}
 
 /**
  * Row-level UPDATE on both jarless legs: matched rows are replaced by
@@ -115,26 +117,48 @@ class LakeUpdateSpec extends AnyFunSuite {
       customer.select(sum(col("c_acctbal").cast("decimal(18,2)"))).head())
   }
 
-  test("refusals: partition-column SET, type-changing SET, unknown column") {
-    val loc = tmp("graft-upd-refuse-")
-    IcebergTable.create(customer, loc, partitionColumns = Seq("c_mktsegment"))
-    intercept[IllegalArgumentException] {
-      IcebergTable.update(spark, loc, lit(true),
-        Map("c_mktsegment" -> lit("X")))
-    }
-    intercept[IllegalArgumentException] {
-      IcebergTable.update(spark, loc, lit(true),
-        Map("c_acctbal" -> lit("not-a-number")))
-    }
-    intercept[IllegalArgumentException] {
-      IcebergTable.update(spark, loc, lit(true),
-        Map("no_such_col" -> lit(1)))
-    }
-    val root = tmp("graft-upd-refuse-d-")
-    DeltaTable.create(customer, root)
-    intercept[IllegalArgumentException] {
-      DeltaTable.update(spark, root, lit(true),
-        Map("c_acctbal" -> lit("not-a-number")))
+  test("refusals: both formats refuse the same bad update and merge inputs") {
+    val rows = customer.limit(100)
+    val d = tmp("graft-refuse-d-")
+    val i = tmp("graft-refuse-i-")
+    DeltaTable.create(rows, d, partitionBy = Seq("c_mktsegment"))
+    IcebergTable.create(rows, i, partitionColumns = Seq("c_mktsegment"))
+    val src = rows.limit(5)
+    // (expected message fragment, SET map)
+    val updates: Seq[(String, Map[String, Column])] = Seq(
+      "no SET expressions" -> Map.empty,
+      "is not a table column" -> Map("no_such_col" -> lit(1)),
+      "SET touches a partition column" -> Map("c_mktsegment" -> lit("X")),
+      "cast inside the expression" -> Map("c_acctbal" -> lit("not-a-number")))
+    // (expected message fragment, source, keys, deleteCondition)
+    val merges: Seq[(String, DataFrame, Seq[String], Option[Column])] = Seq(
+      ("no key columns", src, Nil, None),
+      ("key column 'nope' is not a table column", src, Seq("nope"), None),
+      ("must match the table columns", src.drop("c_acctbal"),
+        Seq("c_custkey"), None),
+      ("cast it first", src.withColumn("c_acctbal", col("c_acctbal").cast("string")),
+        Seq("c_custkey"), None),
+      ("duplicate values", src.union(src), Seq("c_custkey"), None),
+      ("EITHER", src.withColumn(LakeMerge.DeleteMarker, lit(false)),
+        Seq("c_custkey"), Some(lit(true))))
+    Seq("delta" -> d, "iceberg" -> i).foreach { case (fmt, root) =>
+      def head(): Long =
+        if (fmt == "delta") DeltaLog.snapshot(spark, root).version
+        else IcebergMeta.snapshot(spark, root).snapshotId
+      val before = head()
+      updates.foreach { case (want, set) =>
+        val e = intercept[IllegalArgumentException] {
+          LakeTable.update(spark, root, lit(true), set)
+        }
+        assert(e.getMessage.contains(want), s"$fmt update: ${e.getMessage}")
+      }
+      merges.foreach { case (want, source, keys, cond) =>
+        val e = intercept[IllegalArgumentException] {
+          LakeTable.merge(spark, root, source, keys, cond)
+        }
+        assert(e.getMessage.contains(want), s"$fmt merge: ${e.getMessage}")
+      }
+      assert(head() == before, s"$fmt: a refused verb committed")
     }
   }
 
