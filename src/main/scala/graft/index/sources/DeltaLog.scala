@@ -791,16 +791,6 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     fs.makeQualified(root).toUri.relativize(fs.makeQualified(path).toUri)
       .getPath
 
-  /** Hive partition values (`col=value/` segments, URL-decoded) of a
-    * table-relative file path. */
-  private def partitionValuesOf(rel: String): List[(String, String)] =
-    rel.split('/').init.flatMap { seg =>
-      seg.split("=", 2) match {
-        case Array(k, v) => Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
-        case _ => None
-      }
-    }.toList
-
   private def jsonStrings(kvs: Seq[(String, String)]): JObject =
     JObject(kvs.map { case (k, v) => k -> (JString(v): JValue) }.toList)
 
@@ -847,77 +837,57 @@ object DeltaTable extends org.apache.spark.internal.Logging {
 
   val VersionOption = "graft.delta.version"
 
-  /** Read the table at its latest version — or a historic one via
-    * `versionAsOf` (time travel) — pinned: the returned frame keeps
-    * reading exactly this snapshot's files even if the table commits
-    * again. Partition values are recovered from the directory layout via
-    * `basePath` (hive-style layout, which [[create]] and the delta
-    * writers both produce). Historic reads work because Delta never
-    * rewrites data files in place — an overwritten version's files stay
-    * on disk until VACUUM. */
-  /** `timestampAsOf` companion to [[read]]'s `versionAsOf`: resolves to
-    * the LATEST commit whose timestamp is at or before `tsMillis`, then
-    * reads that version. Commit time = `commitInfo.inCommitTimestamp`
-    * when the commit carries one (the IN-COMMIT TIMESTAMPS feature —
-    * the authoritative clock, immune to log copies/restores), else the
-    * commit file's modification time, OSS Delta's default clock — both
-    * monotone per table. Mixed histories (feature enabled mid-table)
-    * resolve each commit by its own clock, which is the spec's rule.
-    * Fails loudly when `tsMillis` precedes the first commit. */
-  /** Every commit's (version, wall-clock millis) — the in-commit
-    * timestamp when the table runs ICT, the commit file's mtime
-    * otherwise. Driver-side listing, one JSON peek per commit only
-    * under ICT. */
-  private[sources] def commitTimes(spark: SparkSession,
-      root: String): Seq[(Long, Long)] = {
+  /** The commit TIMELINE, oldest first: every commit's (version,
+    * timestamp millis, operation). The timestamp is the Delta
+    * protocol's commit clock — `commitInfo.inCommitTimestamp` when the
+    * commit carries one (the IN-COMMIT TIMESTAMPS feature: the
+    * authoritative clock, immune to log copies/restores), else the
+    * commit file's modification time; mixed histories (feature enabled
+    * mid-table) resolve each commit by its own clock, the spec's rule.
+    * History, `TIMESTAMP AS OF`, `startingTimestamp` and the change
+    * feed all read this one clock ([[LakeTable.historyOf]]). Operation
+    * is `commitInfo.operation` (null when unrecorded). Driver-side: one
+    * listing plus each commit's commitInfo line. */
+  private[sources] def commits(spark: SparkSession,
+      root: String): Seq[(Long, Long, String)] = {
     val dir = DeltaLog.logDir(new Path(root))
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(dir), s"not a Delta table (no _delta_log): $root")
-    // ICT only needs the per-commit file peeked when the head snapshot
-    // says the feature is on — the common case stays one listStatus
-    val ictOn = ictEnabled(
-      DeltaLog.snapshot(spark, root).configuration)
-    val commits = fs.listStatus(dir).toSeq.flatMap { st =>
+    val out = fs.listStatus(dir).toSeq.flatMap { st =>
       st.getPath.getName match {
         case DeltaLog.CommitRe(v) =>
-          val ict: Option[Long] =
-            if (!ictOn) None
-            else DeltaLog.readLines(fs, st.getPath).iterator
-              .map(JsonMethods.parse(_))
-              .collectFirst(Function.unlift { j =>
-                (j \ "commitInfo" \ "inCommitTimestamp") match {
-                  case JInt(n) => Some(n.toLong)
-                  case JLong(n) => Some(n)
-                  case _ => None
-                }
-              })
-          Some(v.toLong -> ict.getOrElse(st.getModificationTime))
+          // read up to the commitInfo line only (writers put it first)
+          val in = fs.open(st.getPath)
+          val info =
+            try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+              .filter(_.contains("\"commitInfo\""))
+              .map(l => JsonMethods.parse(l) \ "commitInfo")
+              .find(_ != JNothing).getOrElse(JNothing)
+            finally in.close()
+          val ts = (info \ "inCommitTimestamp") match {
+            case JInt(n) => n.toLong
+            case JLong(n) => n
+            case _ => st.getModificationTime
+          }
+          Some((v.toLong, ts, (info \ "operation") match {
+            case JString(op) => op
+            case _ => null
+          }))
         case _ => None
       }
     }
-    require(commits.nonEmpty, s"Delta log at $root has no commit files")
-    commits
+    require(out.nonEmpty, s"Delta log at $root has no commit files")
+    out.sortBy(_._1)
   }
 
-  /** First version committed AT OR AFTER `tsMillis` — the streaming
-    * `startingTimestamp` contract. A timestamp past the last commit
-    * resolves to latest+1 (serve only future commits). */
-  private[sources] def firstVersionAtOrAfter(spark: SparkSession,
-      root: String, tsMillis: Long): Long = {
-    val commits = commitTimes(spark, root)
-    commits.filter(_._2 >= tsMillis).map(_._1).minOption
-      .getOrElse(commits.map(_._1).max + 1)
-  }
-
+  /** `timestampAsOf` companion to [[read]]'s `versionAsOf`: reads the
+    * LATEST commit whose timestamp ([[commits]]) is at or before
+    * `tsMillis`. Fails loudly when `tsMillis` precedes the first
+    * commit. */
   def readTimestampAsOf(spark: SparkSession, root: String,
-      tsMillis: Long): DataFrame = {
-    val commits = commitTimes(spark, root)
-    val eligible = commits.filter(_._2 <= tsMillis)
-    require(eligible.nonEmpty,
-      s"timestampAsOf $tsMillis precedes the first commit " +
-        s"(${commits.map(_._2).min}) at $root")
-    read(spark, root, versionAsOf = Some(eligible.map(_._1).max))
-  }
+      tsMillis: Long): DataFrame =
+    read(spark, root, versionAsOf = Some(
+      LakeTable.idAsOf(commits(spark, root), tsMillis, root)))
 
   /** Snapshot read with the table's ROW IDS surfaced: two extra
     * columns, `_row_id` (stable under appends, DV deletes, restore and
@@ -932,6 +902,14 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       versionAsOf: Option[Long] = None): DataFrame =
     read(spark, root, versionAsOf, withRowIds = true)
 
+  /** Read the table at its latest version — or a historic one via
+    * `versionAsOf` (time travel) — pinned: the returned frame keeps
+    * reading exactly this snapshot's files even if the table commits
+    * again. Partition values are recovered from the directory layout via
+    * `basePath` (hive-style layout, which [[create]] and the delta
+    * writers both produce). Historic reads work because Delta never
+    * rewrites data files in place — an overwritten version's files stay
+    * on disk until VACUUM. */
   def read(spark: SparkSession, root: String,
       versionAsOf: Option[Long] = None,
       withRowIds: Boolean = false): DataFrame = {
@@ -1115,7 +1093,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val actions: Seq[JValue] = moved.map { case (rel, st) =>
       JObject("cdc" -> JObject(
         "path" -> JString("_change_data/" + rel),
-        "partitionValues" -> jsonStrings(partitionValuesOf(rel)),
+        "partitionValues" -> jsonStrings(LakeMaint.hiveValues(rel)),
         "size" -> JLong(st.getLen),
         "dataChange" -> JBool(false)))
     }
@@ -1182,13 +1160,8 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       val removesDc = mutable.Buffer.empty[String]
       DeltaLog.readLines(fs, st.getPath).foreach { line =>
         val j = JsonMethods.parse(line)
-        (j \ "commitInfo" \ "timestamp") match {
-          case JInt(n) => ts = n.toLong
-          case JLong(n) => ts = n
-          case _ =>
-        }
-        // on ICT tables the monotone table clock outranks the
-        // informational stamp, keeping CDF agreed with history() and
+        // the commit clock of [[commits]] (in-commit timestamp, else the
+        // file's mtime), keeping CDF agreed with history() and
         // readTimestampAsOf()
         (j \ "commitInfo" \ "inCommitTimestamp") match {
           case JInt(n) => ts = n.toLong
@@ -1449,7 +1422,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       // numRecords counts DV-deleted rows too), so they carry forward;
       // same file, same rows — row-tracking ids carry forward too
       Seq(removeAction(rel, now, dataChange = true),
-        addAction(rel, partitionValuesOf(rel), f.size, f.modificationTime,
+        addAction(rel, LakeMaint.hiveValues(rel), f.size, f.modificationTime,
           dataChange = true, Some(d), f.stats, carriedRowIdJson(f)))
     }
 
@@ -1576,7 +1549,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         statsByPath.get(s.getPath.toString).flatMap(_.numRecords)))
     added.map { s =>
       val rel = relOf(fs, root, s.getPath)
-      addAction(rel, partitionValuesOf(rel), s.getLen, s.getModificationTime,
+      addAction(rel, LakeMaint.hiveValues(rel), s.getLen, s.getModificationTime,
         dataChange, stats = statsByPath.get(s.getPath.toString)
           .flatMap(DeltaStats.render(_, statsSchema)),
         rowIds = rowIdsByPath.getOrElse(s.getPath.toString, Nil))
@@ -1837,10 +1810,11 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     * rewrite tightens). All removes/adds carry `dataChange = false`:
     * the logical content is untouched, so change feeds and append
     * streams correctly serve nothing for the commit. Files carrying
-    * deletion vectors are left to [[purge]]; z-ordering a
-    * hive-partitioned table is refused (cluster within partitions by
-    * running per-partition). Returns the committed version (the prior
-    * one when nothing qualified). */
+    * deletion vectors are left to [[purge]]; on a hive-partitioned
+    * table the z-order clusters rows within their partition. Planning
+    * is [[LakeMaint]]'s, clustering [[graft.index.zorder.ZOrderBuild.clustered]].
+    * Returns the committed version (the prior one when nothing
+    * qualified). */
   def optimizeCompact(spark: SparkSession, rootStr: String,
       targetSizeBytes: Long = 128L << 20,
       zorderBy: Seq[String] = Nil,
@@ -1872,63 +1846,20 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     }
     // candidates: DV-less files (DV'd ones are purge's job), scoped by
     // the OPTIMIZE ... WHERE partition predicate when given — at 100 TB
-    // you optimize the hot partition, not the table. Evaluated EXACTLY:
-    // a one-row-per-file frame of the files' typed partition values is
-    // filtered by the user's predicate (Catalyst semantics, not string
-    // matching), so `date_col >= '2024-01-01'` scopes correctly.
-    val unscoped = prior.files.filter(_.dv.forall(_.cardinality == 0L))
-    val candidates = where match {
-      case None => unscoped
-      case Some(w) =>
-        require(prior.partitionColumns.nonEmpty,
-          s"OPTIMIZE WHERE at $rootStr: the table is unpartitioned")
-        import org.apache.spark.sql.functions.col
-        val hiveNull = "__HIVE_DEFAULT_PARTITION__"
-        val rows: Seq[org.apache.spark.sql.Row] = unscoped.map { f =>
-          val m = partitionValuesOf(relOf(fs, root, new Path(f.path))).toMap
-          org.apache.spark.sql.Row.fromSeq(f.path +: physPartCols.map(pc =>
-            m.get(pc).filterNot(_ == hiveNull).orNull))
-        }
-        val rawSchema = StructType(StructField("__path", StringType) +:
-          prior.partitionColumns.map(n => StructField(n, StringType)))
-        val typed = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), rawSchema)
-          .select(col("__path") +: prior.partitionColumns.map { n =>
-            col(n).cast(prior.schema(n).dataType).as(n)
-          }: _*)
-        val kept =
-          try typed.filter(w).select("__path").collect()
-            .map(_.getString(0)).toSet
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new IllegalArgumentException(
-                s"OPTIMIZE WHERE at $rootStr must reference partition " +
-                  s"columns only (${prior.partitionColumns.mkString(", ")})",
-                e)
-          }
-        unscoped.filter(f => kept.contains(f.path))
+    // you optimize the hot partition, not the table
+    val physOf = prior.partitionColumns.zip(physPartCols).toMap
+    val candidates = LakeMaint.scopeByPartition(spark,
+      prior.files.filter(_.dv.forall(_.cardinality == 0L)), where,
+      prior.partitionColumns.map(n => n -> prior.schema(n).dataType),
+      s"OPTIMIZE WHERE at $rootStr") { f =>
+      val m = LakeMaint.hiveValues(relOf(fs, root, new Path(f.path))).toMap
+      physOf.flatMap { case (n, pc) => m.get(pc).map(n -> _) }
     }
     val rewriteGroups: Seq[Seq[DeltaFileMeta]] =
       if (zorderCols.nonEmpty) {
-        if (candidates.size < 1) Nil else Seq(candidates)
-      } else {
-        // bin-pack per partition dir: first-fit over size-sorted smalls
-        candidates.filter(_.size < targetSizeBytes)
-          .groupBy(f => relOf(fs, root, new Path(f.path)).split('/').init.mkString("/"))
-          .values.toSeq.flatMap { group =>
-            val bins = mutable.Buffer.empty[(mutable.Buffer[DeltaFileMeta], Long)]
-            group.sortBy(-_.size).foreach { f =>
-              bins.find(_._2 + f.size <= targetSizeBytes) match {
-                case Some(bin) =>
-                  bin._1 += f
-                  val i = bins.indexOf(bin)
-                  bins(i) = (bin._1, bin._2 + f.size)
-                case None => bins += ((mutable.Buffer(f), f.size))
-              }
-            }
-            bins.map(_._1.toSeq).filter(_.size >= 2)
-          }
-      }
+        if (candidates.isEmpty) Nil else Seq(candidates)
+      } else LakeMaint.binPack(candidates, targetSizeBytes)(f =>
+        relOf(fs, root, new Path(f.path)).split('/').init.mkString("/"))
     if (rewriteGroups.isEmpty) return prior.version
 
     // rewrite each group through a stage dir, then move in (commit shape)
@@ -1949,26 +1880,13 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         (if (physPartCols.nonEmpty) w.partitionBy(physPartCols: _*) else w)
           .parquet(groupStage.toString)
       } else {
-        import org.apache.spark.sql.functions.{array, col, udf}
-        val bits = graft.index.zorder.ZOrderBuild.BitsPerColumn
-        val asDouble = zCols.map(c => df.col(c).cast("double"))
-        val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
-        val boundaries = df
-          .select(zCols.zip(asDouble).map { case (n, c) => c.as(n) }: _*)
-          .stat.approxQuantile(zCols.toArray, probs, 0.001)
-        val zUdf = udf(new graft.index.zorder.ZAddressFn(boundaries, bits))
-        val nFiles = math.max(1L,
-          (group.map(_.size).sum + targetSizeBytes - 1) / targetSizeBytes).toInt
         // partitioned tables z-order WITHIN partitions: range-cluster on
         // (partition values, z-address) in one pass — partitionBy splits
         // any straddling range boundary into per-partition files
-        val withZ = df.withColumn("_graft_zaddr", zUdf(array(asDouble: _*)))
-        val keys = physPartCols.map(withZ.col) :+ col("_graft_zaddr")
-        val zw = withZ
-          .repartitionByRange(nFiles, keys: _*)
-          .sortWithinPartitions(keys: _*)
-          .drop("_graft_zaddr")
-          .write
+        val nFiles = math.max(1L,
+          (group.map(_.size).sum + targetSizeBytes - 1) / targetSizeBytes).toInt
+        val zw = graft.index.zorder.ZOrderBuild.clustered(df, df, zCols,
+          physPartCols, nFiles).write
         (if (physPartCols.nonEmpty) zw.partitionBy(physPartCols: _*) else zw)
           .parquet(groupStage.toString)
       }
@@ -2030,7 +1948,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       ictEnabled(prior.configuration),
       missing.map { f =>
         val rel = relOf(fs, root, new Path(f.path))
-        addAction(rel, partitionValuesOf(rel), f.size, f.modificationTime,
+        addAction(rel, LakeMaint.hiveValues(rel), f.size, f.modificationTime,
           dataChange = false, f.dv, statsByPath.get(f.path)
             .flatMap(DeltaStats.render(_, statsSchema)), carriedRowIdJson(f))
       }, prior.configuration)
@@ -2070,7 +1988,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         files.map { st =>
           val rel = relOf(fs, root, st.getPath)
           addAction(rel,
-            partitionValuesOf(rel).filter(kv => partitionBy.contains(kv._1)),
+            LakeMaint.hiveValues(rel).filter(kv => partitionBy.contains(kv._1)),
             st.getLen, st.getModificationTime, dataChange = true,
             stats = statsByPath.get(st.getPath.toString)
               .flatMap(DeltaStats.render(_, dataSchema)))
@@ -2182,7 +2100,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           current.files.find(c => normPath(c.path) == normPath(f.path))
             .exists(c => c.dv != f.dv)) {
         val rel = relOf(fs, root, new Path(f.path))
-        lines += addAction(rel, partitionValuesOf(rel), f.size,
+        lines += addAction(rel, LakeMaint.hiveValues(rel), f.size,
           f.modificationTime, dataChange = true, f.dv, f.stats,
           carriedRowIdJson(f))
       }
@@ -2432,7 +2350,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       untracked.map(f => f.path -> counts.get(f.path)))
     untracked.foreach { f =>
       val rel = relOf(fs, root, new Path(f.path))
-      lines += addAction(rel, partitionValuesOf(rel), f.size,
+      lines += addAction(rel, LakeMaint.hiveValues(rel), f.size,
         f.modificationTime, dataChange = false, f.dv, f.stats,
         byPath.getOrElse(f.path, Nil))
     }
@@ -3712,45 +3630,11 @@ object DeltaTable extends org.apache.spark.internal.Logging {
   }
 
   /** Table HISTORY — one row per commit (newest first): version,
-    * in-commit timestamp (file mtime for commits without commitInfo),
-    * and operation (`null` when unrecorded) — the jarless
-    * `DESCRIBE HISTORY`. Driver-side metadata walk, same cost class as
-    * snapshot replay. */
-  def history(spark: SparkSession, rootStr: String): DataFrame = {
-    val root = new Path(rootStr)
-    val dir = DeltaLog.logDir(root)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(dir), s"not a Delta table (no _delta_log): $rootStr")
-    val rows = fs.listStatus(dir).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case DeltaLog.CommitRe(v) =>
-          var ts = st.getModificationTime
-          var op: String = null
-          DeltaLog.readLines(fs, st.getPath).foreach { line =>
-            val j = JsonMethods.parse(line)
-            (j \ "commitInfo" \ "timestamp") match {
-              case JInt(n) => ts = n.toLong
-              case JLong(n) => ts = n
-              case _ =>
-            }
-            // the monotone table clock outranks the informational stamp
-            (j \ "commitInfo" \ "inCommitTimestamp") match {
-              case JInt(n) => ts = n.toLong
-              case JLong(n) => ts = n
-              case _ =>
-            }
-            (j \ "commitInfo" \ "operation") match {
-              case JString(s) => op = s
-              case _ =>
-            }
-          }
-          Some((v.toLong, new java.sql.Timestamp(ts), op))
-        case _ => None
-      }
-    }.sortBy(-_._1)
-    import spark.implicits._
-    rows.toDF("version", "timestamp", "operation")
-  }
+    * commit timestamp ([[commits]]' clock) and operation (`null` when
+    * unrecorded) — the jarless `DESCRIBE HISTORY`. Driver-side metadata
+    * walk, same cost class as snapshot replay. */
+  def history(spark: SparkSession, rootStr: String): DataFrame =
+    LakeTable.historyOf(spark, commits(spark, rootStr), "version")
 
   /** VACUUM — delete data, DV, and cdc files that are (a) not referenced
     * by the CURRENT snapshot and (b) older than `retentionMs` — the
@@ -3758,8 +3642,9 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     * the log; vacuum bounds the data directory, without which a 100 TB
     * table's storage grows with every overwrite forever). Time travel to
     * versions whose files are vacuumed stops working, exactly as for
-    * real VACUUM; retention is the knob. Returns the deleted paths
-    * (empty on `dryRun = false` with nothing eligible). */
+    * real VACUUM; retention is the knob. Crashed writers' `.graft-*`
+    * staging dirs past retention go too ([[FsSweep.sweep]]). Returns the
+    * deleted paths (empty on `dryRun = false` with nothing eligible). */
   def vacuum(spark: SparkSession, rootStr: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000,
       dryRun: Boolean = false): Seq[String] = {
@@ -3799,40 +3684,21 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         case _ =>
       }
     }
-    val cutoff = System.currentTimeMillis() - retentionMs
-    // parallel tree walk (ctx = under _change_data); at 100 TB the
-    // hive-partition fan-out is where the serial walk used to burn
-    // hours of filesystem RPC
-    val listed = FsSweep.walk(spark, fs, root, false) { (st, under) =>
-      val n = st.getPath.getName
-      if (n == "_change_data") Some(true)
-      else if (!n.startsWith("_") && !n.startsWith(".")) Some(under)
-      else None
-    }
-    val doomed = listed.collect {
-      case (st, underChangeData)
-          if !st.getPath.getName.startsWith(".") &&
-            !st.getPath.getName.startsWith("_") &&
-            // cdc files are never "live": they serve only CDF reads
-            // within retention, the same rule real VACUUM applies
-            (underChangeData ||
-              !live.contains(normPath(st.getPath.toString))) && {
-              tombstoneTs.get(normPath(st.getPath.toString)) match {
-                case Some(ts) => ts < cutoff
-                case None => st.getModificationTime < cutoff
-              }
-            } =>
-        st.getPath
-    }
-    if (!dryRun) {
-      FsSweep.deleteFiles(spark, fs, doomed)
-      // prune ONLY the partition dirs this sweep emptied — a blanket
-      // empty-dir delete would race an in-flight writer's fresh dirs
-      FsSweep.pruneEmptiedDirs(fs, root, doomed)(n =>
-        !n.startsWith("_") && !n.startsWith("."))
-    }
-    doomed.map(_.toString)
+    // cdc files are never "live": they serve only CDF reads within
+    // retention, the same rule real VACUUM applies
+    FsSweep.sweep(spark, fs, root, System.currentTimeMillis() - retentionMs,
+      dryRun, age = st => tombstoneTs.getOrElse(normPath(st.getPath.toString),
+        st.getModificationTime))(sweepsInto)(_.filter { st =>
+      FsSweep.plain(st.getPath.getName) &&
+        (relOf(fs, root, st.getPath).startsWith("_change_data/") ||
+          !live.contains(normPath(st.getPath.toString)))
+    }).map(_.toString)
   }
+
+  /** The directories the orphan sweeps walk: the data tree and
+    * `_change_data`. */
+  private def sweepsInto(n: String): Boolean =
+    FsSweep.plain(n) || n == "_change_data"
 
   /** ORPHAN sweep — delete files under the table that NO retained log
     * state references at all (crash-leftover staging junk, foreign
@@ -3864,26 +3730,21 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     DeltaLog.snapshot(spark, rootStr) // assert it IS a Delta table
     val referenced = mutable.Set.empty[String]
-    def refDv(j: JValue): Unit = (j \ "deletionVector") match {
-      case dv: JObject =>
-        ((dv \ "storageType"), (dv \ "pathOrInlineDv")) match {
-          case (JString(st), JString(p)) =>
-            DvDescriptor(st, p, None, 0, 0L).absolutePath(root)
-              .foreach(ap => referenced += normPath(ap.toString))
-          case _ =>
-        }
-      case _ =>
-    }
     def refAction(j: JValue): Unit =
       Seq("add", "remove", "cdc").foreach { kind =>
         (j \ kind \ "path") match {
           case JString(raw) =>
             referenced += normPath(DeltaLog.resolvePath(root, raw))
-            refDv(j \ kind)
+            ((j \ kind \ "deletionVector" \ "storageType"),
+              (j \ kind \ "deletionVector" \ "pathOrInlineDv")) match {
+              case (JString(st), JString(p)) =>
+                DvDescriptor(st, p, None, 0, 0L).absolutePath(root)
+                  .foreach(ap => referenced += normPath(ap.toString))
+              case _ =>
+            }
           case _ =>
         }
       }
-    val logDir = DeltaLog.logDir(root)
     val ckFiles = mutable.Buffer.empty[String]
     var ckBytes = 0L
     def scanLogTree(dir: Path): Unit =
@@ -3898,73 +3759,18 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           ckBytes += st.getLen
         }
       }
-    scanLogTree(logDir)
-    // classic/multi-part/v2 checkpoints + sidecars all carry file
-    // actions as parquet rows; only the retained log can vouch for a
-    // file, so every frame counts — read them in ONE batched job
-    // (mergeSchema reconciles action-struct drift across checkpoint
-    // generations), not one Spark job per file
-    def refCheckpointAdds(ckf: org.apache.spark.sql.DataFrame): Unit =
-      Seq("add", "remove").foreach { kind =>
-        if (ckf.schema.fieldNames.contains(kind)) {
-          val hasDv = ckf.schema(kind).dataType
-            .asInstanceOf[StructType].fieldNames.contains("deletionVector")
-          val cols = Seq(s"$kind.path as p") ++
-            (if (hasDv) Seq(s"$kind.deletionVector.storageType as dst",
-              s"$kind.deletionVector.pathOrInlineDv as dp")
-            else Seq("cast(null as string) as dst",
-              "cast(null as string) as dp"))
-          ckf.where(s"$kind is not null").selectExpr(cols: _*)
-            .collect().foreach { r =>
-              if (!r.isNullAt(0))
-                referenced += normPath(
-                  DeltaLog.resolvePath(root, r.getString(0)))
-              if (!r.isNullAt(1) && !r.isNullAt(2))
-                DvDescriptor(r.getString(1), r.getString(2), None, 0, 0L)
-                  .absolutePath(root)
-                  .foreach(ap => referenced += normPath(ap.toString))
-            }
-        }
-      }
-    val cutoff = olderThanMs
-    // parallel walk; ctx = inside a `.graft-*` writer staging dir — the
-    // canonical crash leftover. Their FILES are swept under the same age
-    // gate (never referenced by the log by construction); other dot-dirs
-    // stay untouched (foreign tools own them).
-    val listed = FsSweep.walk(spark, fs, root, false) { (st, inStaging) =>
-      val n = st.getPath.getName
-      val stagingDir = inStaging || n.startsWith(".graft-")
-      if ((!n.startsWith("_") && !n.startsWith(".")) ||
-          n == "_change_data" || stagingDir) Some(stagingDir)
-      else None
-    }
-    val candidates = listed.collect {
-      case (st, inStaging)
-          if (inStaging || (!st.getPath.getName.startsWith(".") &&
-            !st.getPath.getName.startsWith("_"))) &&
-            st.getModificationTime < cutoff &&
-            !referenced.contains(normPath(st.getPath.toString)) =>
-        st.getPath
-    }
-    // Checkpoint-referenced membership. Below the byte threshold the
-    // checkpoint paths collect into the driver set (~100 bytes per live
-    // file — the snapshot-replay envelope); past it the membership test
-    // becomes a DISTRIBUTED ANTI-JOIN of the age-eligible candidates
-    // against the referenced-path frame, so a checkpoint carrying tens
-    // of millions of live files never materializes on the driver.
-    val doomed: Seq[Path] =
-      if (ckFiles.isEmpty) candidates
-      else if (ckBytes <= FsSweep.antiJoinBytes(spark)) {
-        try refCheckpointAdds(spark.read.option("mergeSchema", "true")
-          .parquet(ckFiles.toSeq: _*))
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            // incompatible frames (a foreign writer's exotic checkpoint
-            // schema): fall back to per-file reads rather than refusing
-            ckFiles.foreach(p => refCheckpointAdds(spark.read.parquet(p)))
-        }
-        candidates.filterNot(p => referenced.contains(normPath(p.toString)))
-      } else {
+    scanLogTree(DeltaLog.logDir(root))
+    FsSweep.sweep(spark, fs, root, olderThanMs, dryRun)(sweepsInto) { files =>
+      val candidates = files.filter(st => FsSweep.plain(st.getPath.getName) &&
+        !referenced.contains(normPath(st.getPath.toString)))
+      if (ckFiles.isEmpty || candidates.isEmpty) candidates
+      else {
+        // classic/multi-part/v2 checkpoints + sidecars all carry file
+        // actions as parquet rows; only the retained log can vouch for a
+        // file, so every frame counts — read them in ONE batched job
+        // (mergeSchema reconciles action-struct drift across checkpoint
+        // generations), falling back to per-file reads for a foreign
+        // writer's incompatible frames rather than refusing
         val frames =
           try Seq(spark.read.option("mergeSchema", "true")
             .parquet(ckFiles.toSeq: _*))
@@ -3972,38 +3778,29 @@ object DeltaTable extends org.apache.spark.internal.Logging {
             case scala.util.control.NonFatal(_) =>
               ckFiles.toSeq.map(p => spark.read.parquet(p))
           }
-        val rootQ = fs.makeQualified(root).toString
-        val refDs = frames.map(f =>
-          CkOrphanRefs.referencedPaths(spark, rootQ, f))
-          .reduce(_ union _)
-        import spark.implicits._
-        val byNorm = candidates.map(p => normPath(p.toString) -> p).toMap
-        val survivors = spark.createDataset(byNorm.keys.toSeq).toDF("p")
-          .join(refDs.toDF("p"), Seq("p"), "left_anti")
-          .as[String].collect()
+        val refDs = frames.map(f => CkOrphanRefs.referencedPaths(spark,
+          fs.makeQualified(root).toString, f)).reduce(_ union _)
+        val byNorm = candidates.map(st => normPath(st.getPath.toString) -> st)
+        // Below the byte threshold the checkpoint paths collect into the
+        // driver set (~100 bytes per live file — the snapshot-replay
+        // envelope); past it the membership test becomes a DISTRIBUTED
+        // ANTI-JOIN of the candidates against the referenced-path frame,
+        // so a checkpoint carrying tens of millions of live files never
+        // materializes on the driver.
+        val keep: Set[String] =
+          if (ckBytes <= FsSweep.antiJoinBytes(spark)) {
+            val ckRefs = refDs.collect().toSet
+            byNorm.map(_._1).filterNot(ckRefs.contains).toSet
+          } else {
+            import spark.implicits._
+            spark.createDataset(byNorm.map(_._1)).toDF("p")
+              .join(refDs.toDF("p"), Seq("p"), "left_anti")
+              .as[String].collect().toSet
+          }
         // keep walk order for a deterministic report
-        val keep = survivors.toSet
-        candidates.filter(p => keep.contains(normPath(p.toString)))
+        byNorm.collect { case (n, st) if keep.contains(n) => st }
       }
-    if (!dryRun) {
-      FsSweep.deleteFiles(spark, fs, doomed)
-      // prune only what this sweep emptied (partition dirs, staging
-      // trees); a blanket empty-dir delete would race an in-flight
-      // writer's freshly created staging dir
-      FsSweep.pruneEmptiedDirs(fs, root, doomed)(n =>
-        (!n.startsWith("_") && !n.startsWith(".")) ||
-          n.startsWith(".graft-"))
-      // a crashed writer may have mkdir'd its staging dir and died
-      // before staging any file: already-empty `.graft-*` dirs go too,
-      // under the SAME age gate (an in-flight writer's fresh dir stays)
-      fs.listStatus(root).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.startsWith(".graft-") &&
-            st.getModificationTime < cutoff &&
-            fs.listStatus(st.getPath).isEmpty)
-          fs.delete(st.getPath, false)
-      }
-    }
-    doomed.map(_.toString)
+    }.map(_.toString)
   }
 
   /** Write a parquet checkpoint at the current version so replay cost
@@ -4069,7 +3866,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         // Row-tracking fields ride along for the same reason.
         val dv = f.dv.map(d => CkptDv(d.storageType, d.pathOrInlineDv,
           d.offset, d.sizeInBytes, d.cardinality))
-        CkptRow(Some(CkptAdd(rel, partitionValuesOf(rel).toMap, f.size,
+        CkptRow(Some(CkptAdd(rel, LakeMaint.hiveValues(rel).toMap, f.size,
           f.modificationTime, dataChange = false, dv, f.stats,
           f.baseRowId, f.defaultRowCommitVersion)), None, None, None)
       }

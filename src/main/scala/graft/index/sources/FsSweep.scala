@@ -121,6 +121,68 @@ object FsSweep {
     files.toSeq
   }
 
+  /** Prefix of every writer staging directory (`<root>/.graft-*`). */
+  val StagingPrefix = ".graft-"
+
+  /** A data-tree name: not `_`-prefixed (a lake log, `_change_data`,
+    * Spark's markers) nor `.`-prefixed (staging, checksums, foreign
+    * tools' dirs). */
+  def plain(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /**
+   * THE orphan sweep — Delta VACUUM and remove-orphans, Iceberg
+   * removeOrphanFiles; each caller supplies only its rule for which files
+   * no retained state references.
+   *  - WALK `root` on the bounded pool, descending into the directories
+   *    `descend` admits by name and into root-level `.graft-*` writer
+   *    staging directories.
+   *  - AGE GATE: a file is a candidate only when `age(file) < cutoff`
+   *    (default its mtime; VACUUM keys off the remove tombstone).
+   *    `orphans` then keeps the candidates nothing references — a batch
+   *    call, so a caller can test membership as a distributed join.
+   *  - STALE STAGING: a staging directory older than `cutoff` whose
+   *    every file is too is a crashed writer's leftover and goes whole;
+   *    a younger one (an in-flight writer's) stays untouched.
+   *  - Unless `dryRun`: delete the orphans across the delete pool, prune
+   *    the [[plain]] directories this sweep emptied, then remove the
+   *    stale staging directories.
+   * Returns the orphan files and the stale staging directories.
+   */
+  def sweep(spark: SparkSession, fs: FileSystem, root: Path, cutoff: Long,
+      dryRun: Boolean, age: FileStatus => Long = _.getModificationTime)(
+      descend: String => Boolean)(
+      orphans: Seq[FileStatus] => Seq[FileStatus]): Seq[Path] = {
+    // ctx: (depth below root, the staging directory a file sits in)
+    val stages = mutable.Buffer.empty[FileStatus]
+    val listed = walk(spark, fs, root, (0, Option.empty[FileStatus])) {
+      case (st, (depth, stage)) =>
+        val n = st.getPath.getName
+        if (stage.isDefined) Some((depth + 1, stage))
+        else if (depth == 0 && n.startsWith(StagingPrefix)) {
+          stages += st
+          Some((1, Some(st)))
+        } else if (descend(n)) Some((depth + 1, None))
+        else None
+    }
+    val (staged, tree) = listed.partition(_._2._2.isDefined)
+    val youngStages = staged.collect {
+      case (st, (_, Some(stage))) if st.getModificationTime >= cutoff =>
+        stage.getPath
+    }.toSet
+    val staleStages = stages.filter(st => st.getModificationTime < cutoff &&
+      !youngStages.contains(st.getPath)).map(_.getPath).toSeq
+    val doomed = orphans(tree.map(_._1).filter(age(_) < cutoff)).map(_.getPath)
+    if (!dryRun) {
+      deleteFiles(spark, fs, doomed)
+      // prune ONLY the directories this sweep emptied — a blanket
+      // empty-dir delete would race an in-flight writer's fresh dirs
+      pruneEmptiedDirs(fs, root, doomed)
+      staleStages.foreach(fs.delete(_, true))
+    }
+    doomed ++ staleStages
+  }
+
   /** One walk level as a Spark job: the directory list parallelizes to
     * executors, each lists its slice and ships back (path, isDir, len,
     * mtime) tuples — the fields every sweep decision (age gates,
@@ -176,14 +238,15 @@ object FsSweep {
   /**
    * Prune directories this sweep EMPTIED: starting from the deleted
    * files' parents, deepest first, delete a directory iff it is now
-   * empty and `prunable(name)` admits it; a pruned directory promotes
-   * its own parent to candidacy. `root` itself is never pruned.
+   * empty and its name is [[plain]] (the log, `_change_data`, staging
+   * and foreign dot-dirs stay); a pruned directory promotes its own
+   * parent to candidacy. `root` itself is never pruned.
    * Pre-existing empty directories (which the sweep deleted nothing
    * from) are never touched — an in-flight writer's fresh staging dir
    * stays.
    */
-  def pruneEmptiedDirs(fs: FileSystem, root: Path, deleted: Seq[Path])(
-      prunable: String => Boolean): Seq[Path] = {
+  private def pruneEmptiedDirs(fs: FileSystem, root: Path,
+      deleted: Seq[Path]): Unit = {
     val rootUri = fs.makeQualified(root).toUri
     def depth(p: Path): Int = {
       var d = 0; var cur = p
@@ -194,7 +257,6 @@ object FsSweep {
       val u = fs.makeQualified(p).toUri
       u != rootUri && u.getPath.startsWith(rootUri.getPath + "/")
     }
-    val pruned = mutable.Buffer.empty[Path]
     // deepest-first queue; a pruned dir enqueues its parent
     val queue = mutable.PriorityQueue.empty[(Int, String)](
       Ordering.by(_._1)) // max-heap on depth
@@ -207,14 +269,12 @@ object FsSweep {
     while (queue.nonEmpty) {
       val (_, dirStr) = queue.dequeue()
       val dir = new Path(dirStr)
-      if (prunable(dir.getName) && fs.exists(dir) &&
+      if (plain(dir.getName) && fs.exists(dir) &&
           fs.listStatus(dir).isEmpty) {
         fs.delete(dir, false)
-        pruned += dir
         Option(dir.getParent).foreach(offer)
       }
     }
-    pruned.toSeq
   }
 
   /** Bounded-pool map preserving input order; single item or single

@@ -177,6 +177,45 @@ private[sources] final case class RawBounds(
     lower: Map[Int, Array[Byte]],
     upper: Map[Int, Array[Byte]])
 
+/** One `snapshots[]` entry of an Iceberg metadata document. */
+private[sources] final case class IceSnapEntry(id: Long,
+    parentId: Option[Long], timestampMs: Long, operation: Option[String],
+    json: JValue)
+
+/** A metadata document's `snapshots[]` in file order, with its
+  * `current-snapshot-id` (-1 = no snapshot yet) — parsed once by
+  * [[IcebergMeta.snapshotLog]], the one reader of snapshot ids, lineage,
+  * commit times and operations. */
+private[sources] final case class IceSnapLog(entries: Seq[IceSnapEntry],
+    currentId: Long) {
+  lazy val byId: Map[Long, IceSnapEntry] = entries.map(e => e.id -> e).toMap
+
+  def contains(id: Long): Boolean = byId.contains(id)
+
+  /** `parent-snapshot-id`; metadata without lineage falls back to the
+    * previous entry in file order. */
+  def parentOf(id: Long): Option[Long] =
+    byId.get(id).flatMap(_.parentId).orElse {
+      val i = entries.indexWhere(_.id == id)
+      if (i > 0) Some(entries(i - 1).id) else None
+    }
+
+  /** The lineage `(from, to]`, oldest first, walked back from `to`:
+    * `Right((ids, reached))`, `reached` telling whether the walk met
+    * `from` (else it ran off the root of the lineage), or `Left(id)`
+    * when it met an id missing from snapshots[] (expired). */
+  def lineage(from: Long, to: Long): Either[Long, (Seq[Long], Boolean)] = {
+    val chain = mutable.Buffer.empty[Long]
+    var cursor: Option[Long] = Some(to)
+    while (cursor.exists(_ != from)) {
+      if (!contains(cursor.get)) return Left(cursor.get)
+      chain += cursor.get
+      cursor = parentOf(cursor.get)
+    }
+    Right((chain.reverse.toSeq, cursor.isDefined))
+  }
+}
+
 object IcebergMeta {
 
   // ------------------------------------------------------- metadata json
@@ -258,6 +297,42 @@ object IcebergMeta {
     finally in.close()
   }
 
+  /** The current metadata document and its file. */
+  private[sources] def currentMetadata(fs: FileSystem,
+      location: String): (Path, JValue) = {
+    val f = currentMetadataFile(fs, location)
+    (f, JsonMethods.parse(readString(fs, f)))
+  }
+
+  /** A metadata document's `properties`. */
+  private[sources] def propertiesOf(j: JValue): Map[String, String] =
+    (j \ "properties") match {
+      case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+      case _ => Map.empty
+    }
+
+  private def longOf(v: JValue): Option[Long] = v match {
+    case JInt(n) => Some(n.toLong)
+    case JLong(n) => Some(n)
+    case _ => None
+  }
+
+  /** Parse `snapshots[]` and `current-snapshot-id` (entries without an
+    * id are skipped; an absent timestamp reads 0). */
+  private[sources] def snapshotLog(j: JValue): IceSnapLog =
+    IceSnapLog(((j \ "snapshots") match {
+      case JArray(snaps) => snaps
+      case _ => Nil
+    }).flatMap { sj =>
+      longOf(sj \ "snapshot-id").map(id => IceSnapEntry(id,
+        longOf(sj \ "parent-snapshot-id"),
+        longOf(sj \ "timestamp-ms").getOrElse(0L),
+        (sj \ "summary" \ "operation") match {
+          case JString(o) => Some(o)
+          case _ => None
+        }, sj))
+    }, longOf(j \ "current-snapshot-id").filter(_ >= 0).getOrElse(-1L))
+
   /** Resolve a snapshot: the current one, or — TIME TRAVEL — any
     * snapshot still listed in `snapshots[]` via `snapshotAsOf`. Schema is
     * the metadata file's current schema (this engine's fixtures never
@@ -266,8 +341,8 @@ object IcebergMeta {
   def snapshot(spark: SparkSession, location: String,
       snapshotAsOf: Option[Long] = None): IcebergSnapshot = {
     val fs = fsOf(spark, new Path(location))
-    val metaFile = currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(readString(fs, metaFile))
+    val (metaFile, j) = currentMetadata(fs, location)
+    val log = snapshotLog(j)
 
     val schemaJson: JValue = (j \ "schemas") match {
       // v2: schemas[] selected by current-schema-id
@@ -282,7 +357,7 @@ object IcebergMeta {
       case _ => j \ "schema"
     }
     val schema = icebergSchemaToSpark(schemaJson)
-    val fieldIdsEarly: Map[Int, String] = (schemaJson \ "fields") match {
+    val fieldIds: Map[Int, String] = (schemaJson \ "fields") match {
       case JArray(fields) => fields.flatMap { f =>
         ((f \ "id"), (f \ "name")) match {
           case (JInt(i), JString(n)) => Some(i.toInt -> n)
@@ -313,7 +388,7 @@ object IcebergMeta {
                 // canonicality check — throws on unsupported transforms
                 IceTransforms.parseTransform(transform)
                 val src = (f \ "source-id") match {
-                  case JInt(sid) => fieldIdsEarly.getOrElse(sid.toInt,
+                  case JInt(sid) => fieldIds.getOrElse(sid.toInt,
                     throw new IllegalArgumentException(
                       s"partition spec of $location names source-id $sid, " +
                         "not a top-level column of the current schema"))
@@ -341,38 +416,20 @@ object IcebergMeta {
       }
     }
 
-    val currentId = (j \ "current-snapshot-id") match {
-      case JInt(n) if n.toLong >= 0 => n.toLong
-      case JLong(n) if n >= 0 => n
-      case _ => -1L // empty table: no snapshot yet
-    }
-    val snapshotId = snapshotAsOf.getOrElse(currentId)
+    val snapshotId = snapshotAsOf.getOrElse(log.currentId)
     if (snapshotId < 0)
       return IcebergSnapshot(location, -1L, schema, Nil,
         schemaJsonStr = JsonMethods.compact(JsonMethods.render(schemaJson)),
-        properties = (j \ "properties") match {
-          case JObject(fields) => fields.collect {
-            case (k, JString(v)) => k -> v
-          }.toMap
-          case _ => Map.empty
-        },
+        properties = propertiesOf(j),
         metadataVersion = metadataVersionOf(metaFile.getName),
         partitionFields = partFieldsParsed, refs = parseRefs(j))
 
-    val snap = (j \ "snapshots") match {
-      case JArray(snaps) =>
-        snaps.find(s => (s \ "snapshot-id") match {
-          case JInt(n) => n.toLong == snapshotId
-          case JLong(n) => n == snapshotId
-          case _ => false
-        }).getOrElse(throw new IllegalArgumentException(
-          if (snapshotAsOf.isDefined)
-            s"snapshotAsOf $snapshotId not in snapshots[] of $metaFile " +
-              "(expired or never existed)"
-          else
-            s"current-snapshot-id $snapshotId not in snapshots[] of $metaFile"))
-      case _ => throw new IllegalStateException(s"no snapshots[] in $metaFile")
-    }
+    val snap = log.byId.getOrElse(snapshotId, throw new IllegalArgumentException(
+      if (snapshotAsOf.isDefined)
+        s"snapshotAsOf $snapshotId not in snapshots[] of $metaFile " +
+          "(expired or never existed)"
+      else
+        s"current-snapshot-id $snapshotId not in snapshots[] of $metaFile")).json
 
     // v1 snapshots may carry an inline "manifests" array; v1/v2 normally
     // carry a "manifest-list" avro file. Entries are (path, content):
@@ -401,15 +458,6 @@ object IcebergMeta {
       }.toMap
     val deleteFiles = manifests.collect { case (m, 1) => m }
       .flatMap(m => readDeleteManifest(fs, resolve(location, m)))
-    val fieldIds: Map[Int, String] = (schemaJson \ "fields") match {
-      case JArray(fields) => fields.flatMap { f =>
-        ((f \ "id"), (f \ "name")) match {
-          case (JInt(i), JString(n)) => Some(i.toInt -> n)
-          case _ => None
-        }
-      }.toMap
-      case _ => Map.empty
-    }
     // decode manifest bounds into the shared stats dialect (carried on
     // DeltaFileMeta.stats like the Delta leg, so both sources prune
     // through one evaluator and re-publish existing entries losslessly)
@@ -429,12 +477,7 @@ object IcebergMeta {
       }
       (f.copy(stats = statsJson), seq)
     }
-    val properties: Map[String, String] = (j \ "properties") match {
-      case JObject(fields) => fields.collect {
-        case (k, JString(v)) => k -> v
-      }.toMap
-      case _ => Map.empty
-    }
+    val properties = propertiesOf(j)
     val lastColId = (j \ "last-column-id") match {
       case JInt(n) => n.toInt
       case _ => 0
@@ -453,24 +496,15 @@ object IcebergMeta {
       case JObject(fields) => fields.flatMap { case (name, v) =>
         if (name == "main") None
         else {
-          val id = (v \ "snapshot-id") match {
-            case JInt(n) => Some(n.toLong)
-            case JLong(n) => Some(n)
-            case _ => None
-          }
+          val id = longOf(v \ "snapshot-id")
           val tpe = (v \ "type") match {
             case JString(t) => t
             case _ => "branch"
           }
-          def longOf(key: String): Option[Long] = (v \ key) match {
-            case JInt(n) => Some(n.toLong)
-            case JLong(n) => Some(n)
-            case _ => None
-          }
           id.map(i => name -> IceRef(i, tpe,
-            maxRefAgeMs = longOf("max-ref-age-ms"),
-            minSnapshotsToKeep = longOf("min-snapshots-to-keep").map(_.toInt),
-            maxSnapshotAgeMs = longOf("max-snapshot-age-ms")))
+            maxRefAgeMs = longOf(v \ "max-ref-age-ms"),
+            minSnapshotsToKeep = longOf(v \ "min-snapshots-to-keep").map(_.toInt),
+            maxSnapshotAgeMs = longOf(v \ "max-snapshot-age-ms")))
         }
       }.toMap
       case _ => Map.empty
@@ -549,26 +583,21 @@ object IcebergMeta {
       path: String): Seq[GenericRecord] =
     readAvro(fs, path)
 
-  /** A snapshot JSON's id (absent/malformed → None). */
-  private[sources] def snapshotIdOf(s: JValue): Option[Long] =
-    (s \ "snapshot-id") match {
-      case JInt(n) => Some(n.toLong)
-      case JLong(n) => Some(n)
-      case _ => None
-    }
-
-  /** The resolved manifest-list path of `snapshotId` within a
-    * metadata document's snapshots array — the ONE resolution shared
-    * by fast appends, the orphan sweep, and the inspection table.
-    * None when the snapshot is absent or is a v1 snapshot carrying an
-    * inline `manifests` array instead ([[inlineManifestsOf]]). */
+  /** The resolved manifest-list path of `snapshotId` — the ONE
+    * resolution shared by fast appends, manifest compaction and the
+    * inspection table. None when the snapshot is absent or is a v1
+    * snapshot carrying an inline `manifests` array instead
+    * ([[inlineManifestsOf]]). */
   private[sources] def manifestListPathOf(location: String,
-      snapshots: Seq[JValue], snapshotId: Long): Option[String] =
-    snapshots.find(snapshotIdOf(_).contains(snapshotId))
-      .flatMap(s => (s \ "manifest-list") match {
-        case JString(ml) => Some(resolve(location, ml))
-        case _ => None
-      })
+      log: IceSnapLog, snapshotId: Long): Option[String] =
+    log.byId.get(snapshotId).flatMap(s => manifestListOf(location, s.json))
+
+  /** A snapshot JSON's resolved `manifest-list` path. */
+  private[sources] def manifestListOf(location: String,
+      s: JValue): Option[String] = (s \ "manifest-list") match {
+    case JString(ml) => Some(resolve(location, ml))
+    case _ => None
+  }
 
   /** A v1 snapshot's inline `manifests` array (data manifests listed
     * directly on the snapshot, no manifest-list file). */
@@ -977,58 +1006,15 @@ object IcebergTable {
       strict: Boolean = true): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val snapsInOrder: Seq[JValue] = (j \ "snapshots") match {
-      case JArray(snaps) => snaps
-      case _ => throw new IllegalStateException(s"no snapshots[] in $metaFile")
-    }
-    def idOf(s: JValue): Long = (s \ "snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case other => throw new IllegalStateException(s"snapshot-id is $other")
-    }
-    val byId: Map[Long, JValue] = snapsInOrder.map(s => idOf(s) -> s).toMap
-    val orderedIds = snapsInOrder.map(idOf)
-    val current = (j \ "current-snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case _ => throw new IllegalStateException(s"no current snapshot at $location")
-    }
-    val to = toSnapshotId.getOrElse(current)
-    require(byId.contains(to), s"toSnapshotId $to not in snapshots[] of $metaFile")
-    require(fromSnapshotId == 0L || byId.contains(fromSnapshotId),
+    val (metaFile, j) = IcebergMeta.currentMetadata(fs, location)
+    val log = IcebergMeta.snapshotLog(j)
+    require(log.currentId >= 0, s"no current snapshot at $location")
+    val to = toSnapshotId.getOrElse(log.currentId)
+    require(log.contains(to), s"toSnapshotId $to not in snapshots[] of $metaFile")
+    require(fromSnapshotId == 0L || log.contains(fromSnapshotId),
       s"fromSnapshotId $fromSnapshotId not in snapshots[] of $metaFile " +
         "(expired or never existed); pass 0 to read from the beginning")
-
-    def parentOf(id: Long): Option[Long] = (byId(id) \ "parent-snapshot-id") match {
-      case JInt(n) => Some(n.toLong)
-      case JLong(n) => Some(n)
-      case _ => // legacy metadata without lineage: previous in file order
-        orderedIds.indexOf(id) match {
-          case 0 => None
-          case i if i > 0 => Some(orderedIds(i - 1))
-          case _ => None
-        }
-    }
-    // ancestor chain to → from (exclusive), then oldest-first
-    val chain = mutable.Buffer.empty[Long]
-    var cursor: Option[Long] = Some(to)
-    while (cursor.isDefined && cursor.get != fromSnapshotId) {
-      if (!byId.contains(cursor.get)) {
-        throw new IllegalArgumentException(
-          s"snapshot ${cursor.get} in the lineage of $to has been " +
-            s"EXPIRED from $location; the incremental range " +
-            s"($fromSnapshotId, $to] is no longer reconstructible")
-      }
-      chain += cursor.get
-      cursor = parentOf(cursor.get)
-    }
-    if (cursor.isEmpty && fromSnapshotId != 0L) {
-      throw new IllegalArgumentException(
-        s"fromSnapshotId $fromSnapshotId is not an ancestor of $to at $location")
-    }
-    val ordered = chain.reverse.toSeq
+    val ordered = lineageOrRefuse(log, location, fromSnapshotId, to)
 
     // walk oldest-first, diffing manifest file sets against the parent
     var prevPaths: Set[String] =
@@ -1038,19 +1024,12 @@ object IcebergTable {
     final case class Slice(id: Long, tsMs: Long, paths: Seq[String])
     val slices = mutable.Buffer.empty[Slice]
     ordered.foreach { sid =>
-      val snapJ = byId(sid)
-      val op = (snapJ \ "summary" \ "operation") match {
-        case JString(s) => s
-        case _ => "append" // v1 metadata may omit the summary
-      }
-      val tsMs = (snapJ \ "timestamp-ms") match {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case _ => 0L
-      }
+      val e = log.byId(sid)
+      val tsMs = e.timestampMs
       val s = IcebergMeta.snapshot(spark, location, Some(sid))
       val paths = s.files.map(f => DeltaTable.normPath(f.path))
-      op match {
+      // v1 metadata may omit the summary
+      e.operation.getOrElse("append") match {
         case "append" =>
           val added = s.files.filterNot(f =>
             prevPaths.contains(DeltaTable.normPath(f.path)))
@@ -1096,6 +1075,22 @@ object IcebergTable {
     }
   }
 
+  /** The lineage `(from, to]` oldest first, refusing a range an
+    * expiration cut or whose `from` is not an ancestor of `to` (`from`
+    * 0 = from the beginning). */
+  private def lineageOrRefuse(log: IceSnapLog, location: String,
+      from: Long, to: Long): Seq[Long] =
+    log.lineage(from, to) match {
+      case Left(gone) => throw new IllegalArgumentException(
+        s"snapshot $gone in the lineage of $to has been EXPIRED from " +
+          s"$location; the incremental range ($from, $to] is no longer " +
+          "reconstructible")
+      case Right((ids, reached)) =>
+        require(reached || from == 0L,
+          s"fromSnapshotId $from is not an ancestor of $to at $location")
+        ids
+    }
+
   /** Per-snapshot ADMISSION LOAD along the lineage `(fromSnapshotId,
     * toSnapshotId]` — (snapshot id, files added, bytes added), file-set
     * diffed against each parent. Metadata-only (manifest replay per
@@ -1111,36 +1106,11 @@ object IcebergTable {
       memo: mutable.Map[Long, (Long, Long)] = mutable.Map.empty)
       : Seq[(Long, Long, Long)] = {
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val snaps: Seq[JValue] = (j \ "snapshots") match {
-      case JArray(s) => s
-      case _ => return Nil
+    val log = IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, location)._2)
+    val ordered = log.lineage(fromSnapshotId, toSnapshotId) match {
+      case Right((ids, _)) => ids
+      case Left(_) => return Nil // expired mid-walk
     }
-    def idOf(s: JValue): Long = (s \ "snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case other => throw new IllegalStateException(s"snapshot-id is $other")
-    }
-    val byId = snaps.map(s => idOf(s) -> s).toMap
-    val orderedIds = snaps.map(idOf)
-    def parentOf(id: Long): Option[Long] =
-      (byId(id) \ "parent-snapshot-id") match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => orderedIds.indexOf(id) match {
-          case i if i > 0 => Some(orderedIds(i - 1))
-          case _ => None
-        }
-      }
-    val chain = mutable.Buffer.empty[Long]
-    var cursor: Option[Long] = Some(toSnapshotId)
-    while (cursor.isDefined && cursor.get != fromSnapshotId) {
-      if (!byId.contains(cursor.get)) return Nil // expired mid-walk
-      chain += cursor.get
-      cursor = parentOf(cursor.get)
-    }
-    val ordered = chain.reverse.toSeq
     val (cachedIds, freshIds) = ordered.span(memo.contains)
     def fileSet(sid: Long): Set[String] =
       IcebergMeta.snapshot(spark, location, Some(sid))
@@ -1152,7 +1122,7 @@ object IcebergTable {
         // start) — ONE snapshot replay, then one per unmeasured link
         var prevPaths: Set[String] = cachedIds.lastOption match {
           case Some(anchor) => fileSet(anchor)
-          case None if fromSnapshotId != 0L && byId.contains(fromSnapshotId) =>
+          case None if fromSnapshotId != 0L && log.contains(fromSnapshotId) =>
             fileSet(fromSnapshotId)
           case None => Set.empty
         }
@@ -1187,48 +1157,14 @@ object IcebergTable {
       fromSnapshotId: Long, toSnapshotId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, regexp_replace}
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val snapsInOrder: Seq[JValue] = (j \ "snapshots") match {
-      case JArray(snaps) => snaps
-      case _ => throw new IllegalStateException(s"no snapshots[] in $metaFile")
-    }
-    def idOf(s: JValue): Long = (s \ "snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case other => throw new IllegalStateException(s"snapshot-id is $other")
-    }
-    val byId = snapsInOrder.map(s => idOf(s) -> s).toMap
-    val orderedIds = snapsInOrder.map(idOf)
-    val current = (j \ "current-snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case _ => throw new IllegalStateException(s"no current snapshot at $location")
-    }
-    val to = toSnapshotId.getOrElse(current)
-    require(byId.contains(to), s"toSnapshotId $to not in snapshots[] of $metaFile")
-    require(fromSnapshotId == 0L || byId.contains(fromSnapshotId),
+    val (metaFile, j) = IcebergMeta.currentMetadata(fs, location)
+    val log = IcebergMeta.snapshotLog(j)
+    require(log.currentId >= 0, s"no current snapshot at $location")
+    val to = toSnapshotId.getOrElse(log.currentId)
+    require(log.contains(to), s"toSnapshotId $to not in snapshots[] of $metaFile")
+    require(fromSnapshotId == 0L || log.contains(fromSnapshotId),
       s"fromSnapshotId $fromSnapshotId not in snapshots[] of $metaFile")
-    def parentOf(id: Long): Option[Long] = (byId(id) \ "parent-snapshot-id") match {
-      case JInt(n) => Some(n.toLong)
-      case JLong(n) => Some(n)
-      case _ => orderedIds.indexOf(id) match {
-        case i if i > 0 => Some(orderedIds(i - 1))
-        case _ => None
-      }
-    }
-    val chain = mutable.Buffer.empty[Long]
-    var cursor: Option[Long] = Some(to)
-    while (cursor.isDefined && cursor.get != fromSnapshotId) {
-      require(byId.contains(cursor.get),
-        s"snapshot ${cursor.get} in the lineage of $to has been EXPIRED " +
-          s"from $location; the range ($fromSnapshotId, $to] is gone")
-      chain += cursor.get
-      cursor = parentOf(cursor.get)
-    }
-    require(cursor.isDefined || fromSnapshotId == 0L,
-      s"fromSnapshotId $fromSnapshotId is not an ancestor of $to at $location")
-    val ordered = chain.reverse.toSeq
+    val ordered = lineageOrRefuse(log, location, fromSnapshotId, to)
 
     val toSnap = IcebergMeta.snapshot(spark, location, Some(to))
     val stamps = Seq("_change_type", "_commit_snapshot_id", "_commit_timestamp")
@@ -1253,18 +1189,10 @@ object IcebergTable {
     }
     val parts = mutable.Buffer.empty[DataFrame]
     ordered.foreach { sid =>
-      val snapJ = byId(sid)
-      val op = (snapJ \ "summary" \ "operation") match {
-        case JString(s) => s
-        case _ => "append"
-      }
-      val tsMs = (snapJ \ "timestamp-ms") match {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case _ => 0L
-      }
+      val e = log.byId(sid)
+      val tsMs = e.timestampMs
       val s = IcebergMeta.snapshot(spark, location, Some(sid))
-      op match {
+      e.operation.getOrElse("append") match {
         case "append" =>
           val added = s.files.filterNot(f =>
             prevFiles.contains(DeltaTable.normPath(f.path)))
@@ -1275,7 +1203,7 @@ object IcebergTable {
               .parquet(added.map(_.path): _*), "insert", sid, tsMs)
           }
         case "replace" => // row-transparent
-        case "delete" | "overwrite" =>
+        case op @ ("delete" | "overwrite") =>
           // a rewriting overwrite (data files REMOVED) has no row-level
           // replay; merge/delete snapshots only carry adds + delete files
           val removedData = prevFiles --
@@ -1330,7 +1258,7 @@ object IcebergTable {
             // deletes killed; the spec's sequence rule holds because
             // every parent file's seq <= parent snapshot id < the new
             // delete's seq (this writer commits delete seq = prior+1).
-            val parentSid = prevSid.orElse(parentOf(sid))
+            val parentSid = prevSid.orElse(log.parentOf(sid))
             parentSid.foreach { p =>
               val parentLive = read(spark, location, Some(p))
               eqNew.groupBy(_.equalityIds.sorted).foreach { case (eids, group) =>
@@ -1645,8 +1573,7 @@ object IcebergTable {
       transform: (List[JValue], Int) => (List[JValue], Int)): Long = {
     val fs = new Path(location)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
+    val (metaFile, j) = IcebergMeta.currentMetadata(fs, location)
     val schemas: List[JValue] = (j \ "schemas") match {
       case JArray(ss) if ss.nonEmpty => ss
       case _ => throw new UnsupportedOperationException(
@@ -1675,22 +1602,11 @@ object IcebergTable {
     val newSchema: JValue = setFields(current,
       "schema-id" -> JInt(maxSchemaId + 1),
       "fields" -> JArray(newFields))
-    val version = IcebergMeta.metadataVersionOf(metaFile.getName) + 1L
-    val updated = setFields(j,
+    publishMetadata(fs, location, nextVersion(metaFile), setFields(j,
       "schemas" -> JArray(schemas :+ newSchema),
       "current-schema-id" -> JInt(maxSchemaId + 1),
       "last-column-id" -> JInt(math.max(lastColId, newLastColId)),
-      "last-updated-ms" -> JLong(System.currentTimeMillis()))
-    val metaDir = IcebergMeta.metadataDir(location)
-    val metaOut = new Path(metaDir, f"v$version%05d.metadata.json")
-    val os = CommitFence.create(fs, metaOut)
-    try os.write(JsonMethods.pretty(JsonMethods.render(updated))
-      .getBytes(StandardCharsets.UTF_8))
-    finally os.close()
-    val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
-    version
+      "last-updated-ms" -> JLong(System.currentTimeMillis())))
   }
 
   /** Attach each top-level column's iceberg field id as
@@ -2511,13 +2427,9 @@ object IcebergTable {
     // O(files) rewrite plus a spurious history entry
     val fs = new Path(location).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val metaJson = JsonMethods.parse(IcebergMeta.readString(
-      fs, IcebergMeta.currentMetadataFile(fs, location)))
     val compactAlready = IcebergMeta.manifestListPathOf(location,
-      (metaJson \ "snapshots") match {
-        case JArray(s) => s
-        case _ => Nil
-      }, prior.snapshotId).exists { ml =>
+      IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, location)._2),
+      prior.snapshotId).exists { ml =>
       val kinds = IcebergMeta.readManifestList(fs, ml).map(_._2)
       kinds.count(_ == 0) <= 1 && kinds.count(_ == 1) <= 1
     }
@@ -2550,6 +2462,23 @@ object IcebergTable {
       deleteAdded = Nil)
   }
 
+  /** `files` scoped by a `WHERE` over the partition fields — the
+    * `rewriteDataFiles(filter)` shape ([[LakeMaint.scopeByPartition]]):
+    * identity fields are referenced by their source column name,
+    * transform fields by the DERIVED field name (`ts_year`,
+    * `id_bucket`, … — the names the partitions inspection table shows)
+    * typed by the transform's result. */
+  private def scopeByPartition(spark: SparkSession, prior: IcebergSnapshot,
+      files: Seq[DeltaFileMeta], where: Option[Column],
+      verb: String): Seq[DeltaFileMeta] =
+    LakeMaint.scopeByPartition(spark, files, where,
+      prior.partitionFields.map { f =>
+        val srcType = prior.schema.fields.find(_.name == f.sourceCol)
+          .map(_.dataType).getOrElse(StringType)
+        f.partitionByName -> IceTransforms.resultType(f, srcType)
+      }, s"$verb WHERE at ${prior.location}")(f =>
+        LakeMaint.hiveValues(f.path).toMap)
+
   /** SMALL-FILE COMPACTION (rewriteDataFiles binpack analogue, the
     * Iceberg sibling of [[DeltaTable.optimizeCompact]]): data files
     * under `targetSizeBytes` are bin-packed per first-fit and each
@@ -2560,59 +2489,6 @@ object IcebergTable {
     * rewrite would invalidate — so MOR state routes through [[compact]]
     * first; refused loudly otherwise. Returns the new snapshot id (the
     * current one when nothing qualified). */
-  /** Scope `files` to those whose partition values satisfy `where` —
-    * the `rewriteDataFiles(filter)` shape: identity fields are
-    * referenced by their source column name, transform fields by the
-    * DERIVED field name (`ts_year`, `id_bucket`, … — the names the
-    * partitions inspection table shows) typed by the transform's result.
-    * Exact Catalyst evaluation over a one-row-per-file frame of
-    * path-parsed values; O(files) driver metadata, no data scan. */
-  private def scopeByPartition(spark: SparkSession, prior: IcebergSnapshot,
-      files: Seq[DeltaFileMeta],
-      where: Option[org.apache.spark.sql.Column],
-      verb: String): Seq[DeltaFileMeta] = where match {
-    case None => files
-    case Some(w) =>
-      require(prior.partitionFields.nonEmpty,
-        s"$verb WHERE at ${prior.location}: the table is unpartitioned")
-      import org.apache.spark.sql.functions.col
-      val colTypes: Seq[(String, DataType)] = prior.partitionFields.map { f =>
-        val srcType = prior.schema.fields.find(_.name == f.sourceCol)
-          .map(_.dataType).getOrElse(StringType)
-        f.partitionByName -> IceTransforms.resultType(f, srcType)
-      }
-      val hiveNull = "__HIVE_DEFAULT_PARTITION__"
-      val rows: Seq[org.apache.spark.sql.Row] = files.map { f =>
-        val m = f.path.split('/').init.flatMap { seg =>
-          seg.split("=", 2) match {
-            case Array(k, v) =>
-              Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
-            case _ => None
-          }
-        }.toMap
-        org.apache.spark.sql.Row.fromSeq(f.path +: colTypes.map {
-          case (n, _) => m.get(n).filterNot(_ == hiveNull).orNull
-        })
-      }
-      val rawSchema = StructType(StructField("__path", StringType) +:
-        colTypes.map { case (n, _) => StructField(n, StringType) })
-      val typed = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), rawSchema)
-        .select(col("__path") +: colTypes.map { case (n, dt) =>
-          col(n).cast(dt).as(n)
-        }: _*)
-      val kept =
-        try typed.filter(w).select("__path").collect()
-          .map(_.getString(0)).toSet
-        catch {
-          case e: org.apache.spark.sql.AnalysisException =>
-            throw new IllegalArgumentException(
-              s"$verb WHERE at ${prior.location} must reference partition " +
-                s"fields only (${colTypes.map(_._1).mkString(", ")})", e)
-        }
-      files.filter(f => kept.contains(f.path))
-  }
-
   def compactSmall(spark: SparkSession, location: String,
       targetSizeBytes: Long = 128L << 20,
       where: Option[org.apache.spark.sql.Column] = None): Long = {
@@ -2623,27 +2499,13 @@ object IcebergTable {
       s"compactSmall at $location: delete files are in force; their " +
         "(file, position) references would dangle across a rewrite — " +
         "run compact() first")
-    val smalls = scopeByPartition(spark, prior,
-      prior.files.filter(_.size < targetSizeBytes), where, "compactSmall")
     // bins never cross a partition: a rewritten file must keep a single
-    // partition tuple (one hive directory), so packing groups by the
-    // file's parent directory first
-    val bins = mutable.Buffer.empty[(String, mutable.Buffer[DeltaFileMeta], Long)]
-    smalls.sortBy(-_.size).foreach { f =>
-      val dir = new Path(f.path).getParent.toString
-      bins.zipWithIndex.find { case ((d, _, sz), _) =>
-        d == dir && sz + f.size <= targetSizeBytes } match {
-        case Some(((d, bin, sz), i)) =>
-          bin += f
-          bins(i) = (d, bin, sz + f.size)
-        case None => bins += ((dir, mutable.Buffer(f), f.size))
-      }
-    }
-    val packs: Seq[(String, Seq[DeltaFileMeta])] =
-      bins.collect { case (d, b, _) if b.size >= 2 => (d, b.toSeq) }.toSeq
+    // partition tuple (one hive directory)
+    val packs = LakeMaint.binPack(
+      scopeByPartition(spark, prior, prior.files, where, "compactSmall"),
+      targetSizeBytes)(f => new Path(f.path).getParent.toString)
     if (packs.isEmpty) return prior.snapshotId
 
-    val dataDir = new Path(root, "data")
     val fileSchema =
       if (prior.partitionColumns.isEmpty) prior.schema
       else StructType(prior.schema.filterNot(f =>
@@ -2652,7 +2514,7 @@ object IcebergTable {
       s".graft-binpack-${java.util.UUID.randomUUID().toString}")
     // groups are independent single-file writes into disjoint staging
     // dirs — run them from a bounded pool (wall ≈ Σ/maxThreads, not Σ)
-    val added = GroupJobs.mapConcurrently(spark, packs) { case ((dir, pack), i) =>
+    val added = GroupJobs.mapConcurrently(spark, packs) { (pack, i) =>
       // read WITHOUT basePath: rewrite exactly the file columns, then
       // land the packed file back in the same partition directory
       val df = spark.read.schema(fileSchema).parquet(pack.map(_.path): _*)
@@ -2661,7 +2523,7 @@ object IcebergTable {
       fs.listStatus(new Path(stage, i.toString)).toSeq
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map { s =>
-          val target = new Path(new Path(dir),
+          val target = new Path(new Path(pack.head.path).getParent,
             s"binpack-${prior.snapshotId + 1}-$i-${s.getPath.getName}")
           if (!fs.rename(s.getPath, target)) {
             throw new IllegalStateException(
@@ -2672,7 +2534,7 @@ object IcebergTable {
     }.flatten
     fs.delete(stage, true)
 
-    val packed = packs.flatMap(_._2).map(f => DeltaTable.normPath(f.path)).toSet
+    val packed = packs.flatten.map(f => DeltaTable.normPath(f.path)).toSet
     val kept = prior.files.filterNot(f =>
       packed.contains(DeltaTable.normPath(f.path)))
     val statsByPath = partitionedFooterStats(spark, prior.schema,
@@ -2695,15 +2557,13 @@ object IcebergTable {
    * manifest bounds on every z-order column tighten, so multi-column
    * filtered scans prune files they previously had to open. Refused
    * while delete files are in force (their positional references would
-   * dangle — run [[compact]] first) and on partitioned tables
-   * (z-order within a partition by running per-partition, the same
-   * posture as the Delta leg).
+   * dangle — run [[compact]] first); on a partitioned table rows are
+   * z-clustered within their partition, as on the Delta leg.
    */
   def compactSort(spark: SparkSession, location: String,
       zorderBy: Seq[String],
       targetSizeBytes: Long = 128L << 20,
       where: Option[org.apache.spark.sql.Column] = None): Long = {
-    import org.apache.spark.sql.functions.{array, col, udf}
     val root = new Path(location)
     val prior = IcebergMeta.snapshot(spark, location)
     require(zorderBy.nonEmpty, s"compactSort at $location: no z-order columns")
@@ -2724,13 +2584,6 @@ object IcebergTable {
     val df = DeltaTable.maybeBasePath(spark, s"$location/data",
       spark.read.schema(prior.schema), scoped.map(_.path))
       .parquet(scoped.map(_.path): _*)
-    val bits = graft.index.zorder.ZOrderBuild.BitsPerColumn
-    val asDouble = zorderBy.map(c => df.col(c).cast("double"))
-    val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
-    val boundaries = df
-      .select(zorderBy.zip(asDouble).map { case (n, c) => c.as(n) }: _*)
-      .stat.approxQuantile(zorderBy.toArray, probs, 0.001)
-    val zUdf = udf(new graft.index.zorder.ZAddressFn(boundaries, bits))
     val nFiles = math.max(1L,
       (scoped.map(_.size).sum + targetSizeBytes - 1) / targetSizeBytes).toInt
 
@@ -2743,15 +2596,10 @@ object IcebergTable {
     // files) and are z-clustered inside it, the same rewrite
     // rewriteDataFiles(zorder) performs per partition.
     val parts = prior.partitionFields
-    val withZ = df.withColumn("_graft_zaddr", zUdf(array(asDouble: _*)))
     val withDerived = parts.filter(_.kind != TIdentity)
-      .foldLeft(withZ)((d, f) => d.withColumn(f.name, IceTransforms.column(f, d)))
-    val clusterKeys: Seq[Column] =
-      parts.map(f => withDerived.col(f.partitionByName)) :+ col("_graft_zaddr")
-    val clustered = withDerived
-      .repartitionByRange(nFiles, clusterKeys: _*)
-      .sortWithinPartitions(clusterKeys: _*)
-      .drop("_graft_zaddr")
+      .foldLeft(df)((d, f) => d.withColumn(f.name, IceTransforms.column(f, d)))
+    val clustered = graft.index.zorder.ZOrderBuild.clustered(df, withDerived,
+      zorderBy, parts.map(_.partitionByName), nFiles)
     val w = withIdMetadata(clustered, JsonMethods.parse(prior.schemaJsonStr)).write
     (if (parts.nonEmpty) w.partitionBy(parts.map(_.partitionByName): _*) else w)
       .parquet(stage.toString)
@@ -2766,9 +2614,6 @@ object IcebergTable {
       deleteAdded = Nil)
   }
 
-  /** Table HISTORY — one row per retained snapshot (newest first):
-    * snapshot id, commit timestamp, and summary operation — the Iceberg
-    * sibling of [[DeltaTable.history]]. Driver-side metadata. */
   /** MIGRATE — upgrade a plain parquet directory to an Iceberg table
     * IN PLACE (the `migrate` procedure shape): files stay where they
     * are, referenced by absolute path from the first snapshot's
@@ -2847,101 +2692,31 @@ object IcebergTable {
         else None)
   }
 
-  /** Every retained snapshot's (id, timestamp-ms), oldest-first —
-    * driver-side metadata (one JSON read). */
-  private[sources] def snapshotTimes(spark: SparkSession,
-      location: String): Seq[(Long, Long)] = {
+  /** The snapshot TIMELINE, oldest first: every retained snapshot's
+    * (id, `timestamp-ms`, summary operation) from the current metadata
+    * document — the Iceberg sibling of [[DeltaTable.commits]]. */
+  private[sources] def commits(spark: SparkSession,
+      location: String): Seq[(Long, Long, String)] = {
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    ((j \ "snapshots") match {
-      case JArray(snaps) => snaps
-      case _ => Nil
-    }).flatMap { s =>
-      val id = (s \ "snapshot-id") match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => None
-      }
-      val ts = (s \ "timestamp-ms") match {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case _ => 0L
-      }
-      id.map(_ -> ts)
-    }.sortBy(_._2)
+    IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, location)._2)
+      .entries.map(e => (e.id, e.timestampMs, e.operation.orNull))
+      .sortBy(c => (c._2, c._1))
   }
 
-  def history(spark: SparkSession, location: String): DataFrame = {
-    val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val rows = ((j \ "snapshots") match {
-      case JArray(snaps) => snaps
-      case _ => Nil
-    }).flatMap { s =>
-      ((s \ "snapshot-id"), (s \ "timestamp-ms")) match {
-        case (JInt(id), ts) =>
-          val tsMs = ts match {
-            case JInt(n) => n.toLong
-            case JLong(n) => n
-            case _ => 0L
-          }
-          val op = (s \ "summary" \ "operation") match {
-            case JString(o) => o
-            case _ => null
-          }
-          Some((id.toLong, new java.sql.Timestamp(tsMs), op))
-        case (JLong(id), ts) =>
-          val tsMs = ts match {
-            case JInt(n) => n.toLong
-            case JLong(n) => n
-            case _ => 0L
-          }
-          val op = (s \ "summary" \ "operation") match {
-            case JString(o) => o
-            case _ => null
-          }
-          Some((id, new java.sql.Timestamp(tsMs), op))
-        case _ => None
-      }
-    }.sortBy(-_._1)
-    import spark.implicits._
-    rows.toDF("snapshot_id", "timestamp", "operation")
-  }
+  /** Table HISTORY — one row per retained snapshot (newest first):
+    * snapshot id, commit timestamp, and summary operation — the Iceberg
+    * sibling of [[DeltaTable.history]]. Driver-side metadata. */
+  def history(spark: SparkSession, location: String): DataFrame =
+    LakeTable.historyOf(spark, commits(spark, location), "snapshot_id")
 
   /** `TIMESTAMP AS OF` time travel: read the LATEST snapshot whose
     * `timestamp-ms` is at or before `tsMillis` (the Iceberg spec's
     * snapshot-log resolution rule). Fails loudly when the timestamp
     * precedes the first snapshot. */
   def readTimestampAsOf(spark: SparkSession, location: String,
-      tsMillis: Long): DataFrame = {
-    val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val snaps: Seq[(Long, Long)] = ((j \ "snapshots") match {
-      case JArray(s) => s
-      case _ => Nil
-    }).flatMap { s =>
-      val id = (s \ "snapshot-id") match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => None
-      }
-      val ts = (s \ "timestamp-ms") match {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case _ => 0L
-      }
-      id.map(_ -> ts)
-    }
-    val eligible = snaps.filter(_._2 <= tsMillis)
-    require(eligible.nonEmpty,
-      s"timestampAsOf $tsMillis precedes the first snapshot " +
-        s"(${if (snaps.isEmpty) "none" else snaps.map(_._2).min.toString}) " +
-        s"at $location")
-    read(spark, location, snapshotAsOf = Some(eligible.maxBy(_._2)._1))
-  }
+      tsMillis: Long): DataFrame =
+    read(spark, location, snapshotAsOf = Some(
+      LakeTable.idAsOf(commits(spark, location), tsMillis, location)))
 
   /** ROLLBACK to a retained ANCESTOR snapshot — the undo operation,
     * metadata-only: `current-snapshot-id` is repointed at the target
@@ -2954,108 +2729,62 @@ object IcebergTable {
     * current lineage. */
   def rollback(spark: SparkSession, location: String, snapshotId: Long): Long = {
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val snaps: List[JValue] = (j \ "snapshots") match {
-      case JArray(s) => s
-      case _ => throw new IllegalStateException(s"no snapshots[] in $metaFile")
-    }
-    def idOf(s: JValue): Option[Long] = (s \ "snapshot-id") match {
-      case JInt(n) => Some(n.toLong)
-      case JLong(n) => Some(n)
-      case _ => None
-    }
-    val ids = snaps.flatMap(idOf).toSet
-    require(ids.contains(snapshotId),
+    val (metaFile, j) = IcebergMeta.currentMetadata(fs, location)
+    val log = IcebergMeta.snapshotLog(j)
+    require(log.contains(snapshotId),
       s"rollback target $snapshotId not in snapshots[] of $metaFile " +
         "(expired or never existed)")
-    val current = (j \ "current-snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case _ => -1L
-    }
-    if (current == snapshotId) return snapshotId
+    if (log.currentId == snapshotId) return snapshotId
     // ancestry check along parent-snapshot-id (file order as fallback)
-    val byId = snaps.flatMap(s => idOf(s).map(_ -> s)).toMap
-    val ordered = snaps.flatMap(idOf)
-    def parentOf(id: Long): Option[Long] =
-      (byId(id) \ "parent-snapshot-id") match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => ordered.indexOf(id) match {
-          case i if i > 0 => Some(ordered(i - 1))
-          case _ => None
-        }
-      }
-    var cursor: Option[Long] = Some(current)
-    var isAncestor = false
-    while (cursor.isDefined && !isAncestor) {
-      if (cursor.get == snapshotId) isAncestor = true
-      else cursor = cursor.flatMap(c =>
-        if (byId.contains(c)) parentOf(c) else None)
-    }
-    require(isAncestor,
+    require(log.lineage(snapshotId, log.currentId).exists(_._2),
       s"rollback target $snapshotId is not an ancestor of the current " +
-        s"snapshot $current at $location")
-
-    val version = IcebergMeta.metadataVersionOf(metaFile.getName) + 1L
-    val newMeta = setFields(j,
+        s"snapshot ${log.currentId} at $location")
+    publishMetadata(fs, location, nextVersion(metaFile), setFields(j,
       "current-snapshot-id" -> JLong(snapshotId),
-      "last-updated-ms" -> JLong(System.currentTimeMillis()))
-    val metaDir = IcebergMeta.metadataDir(location)
-    val target = new Path(metaDir, f"v$version%05d.metadata.json")
-    val os = CommitFence.create(fs, target)
-    try os.write(JsonMethods.pretty(JsonMethods.render(newMeta))
-      .getBytes(StandardCharsets.UTF_8))
-    finally os.close()
-    val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
+      "last-updated-ms" -> JLong(System.currentTimeMillis())))
     snapshotId
   }
 
-  /** EXPIRE SNAPSHOTS — the metadata half of the Iceberg lifecycle
-    * ([[compact]] rewrites data; this bounds history): drop every
-    * snapshot except the current one, the `keepLast` most recent, and
-    * any newer than `olderThanMs`, publishing a metadata version whose
-    * snapshots[] holds only the survivors. With `deleteFiles` (default),
-    * the data files, delete files, manifests, and manifest lists
-    * referenced ONLY by expired snapshots are removed from disk — on a
-    * 100 TB table this, not the metadata trim, is the storage relief:
-    * every compaction's pre-image stays fully on disk until expired.
-    * Time travel and incremental scans into the expired range fail
-    * loudly afterward, exactly as for real `expireSnapshots`. Returns
-    * the deleted (or would-delete) paths. */
   // ---- snapshot refs: branches + tags (write-audit-publish) ----
 
-  /** Fenced metadata-only publish: read the current metadata.json,
-    * apply `mutate`, write version+1 (create-no-overwrite fence) and
-    * repoint the hint — the [[rollback]] shape, shared by the ref
-    * verbs. O(metadata), no data or manifest writes. */
-  private def publishMetadataOnly(spark: SparkSession, location: String)(
-      mutate: JValue => JValue): Long = {
-    val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val newMeta = setFields(mutate(j),
-      "last-updated-ms" -> JLong(System.currentTimeMillis()))
-    val version = IcebergMeta.metadataVersionOf(metaFile.getName) + 1L
+  /** THE metadata publish tail every Iceberg commit ends in: write
+    * `newMeta` as `v<version>.metadata.json` behind the
+    * create-no-overwrite COMMIT FENCE, repoint `version-hint.text`, then
+    * prune the metadata history by the document's own properties
+    * ([[IcebergMeta.pruneMetadataHistory]]). `onLostFence` runs before a
+    * lost fence's collision propagates. Returns `version`. */
+  private def publishMetadata(fs: FileSystem, location: String,
+      version: Long, newMeta: JValue,
+      onLostFence: () => Unit = () => ()): Long = {
     val metaDir = IcebergMeta.metadataDir(location)
-    val target = new Path(metaDir, f"v$version%05d.metadata.json")
-    val os = CommitFence.create(fs, target)
+    val os =
+      try CommitFence.create(fs, new Path(metaDir, f"v$version%05d.metadata.json"))
+      catch { case e: Throwable => onLostFence(); throw e }
     try os.write(JsonMethods.pretty(JsonMethods.render(newMeta))
       .getBytes(StandardCharsets.UTF_8))
     finally os.close()
     val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
     try hint.write(version.toString.getBytes(StandardCharsets.UTF_8))
     finally hint.close()
-    IcebergMeta.pruneMetadataHistory(fs, location, (newMeta \ "properties") match {
-      case JObject(fields) => fields.collect {
-        case (k, JString(v)) => k -> v
-      }.toMap
-      case _ => Map.empty
-    })
+    IcebergMeta.pruneMetadataHistory(fs, location,
+      IcebergMeta.propertiesOf(newMeta))
     version
+  }
+
+  /** The metadata version after the current document `metaFile`. */
+  private def nextVersion(metaFile: Path): Long =
+    IcebergMeta.metadataVersionOf(metaFile.getName) + 1L
+
+  /** Fenced metadata-only publish: read the current metadata.json,
+    * apply `mutate`, publish it as the next version ([[publishMetadata]])
+    * — shared by the ref and property verbs. O(metadata), no data or
+    * manifest writes. */
+  private def publishMetadataOnly(spark: SparkSession, location: String)(
+      mutate: JValue => JValue): Long = {
+    val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
+    val (metaFile, j) = IcebergMeta.currentMetadata(fs, location)
+    publishMetadata(fs, location, nextVersion(metaFile), setFields(mutate(j),
+      "last-updated-ms" -> JLong(System.currentTimeMillis())))
   }
 
   /** `graft.*` properties are ENGINE bookkeeping — txn idempotence
@@ -3189,22 +2918,24 @@ object IcebergTable {
       target
     }
 
+  /** `j` with its refs replaced by `refs` wholesale (json4s merge can't
+    * REMOVE a key). */
+  private def withRefs(j: JValue, refs: Map[String, IceRef]): JValue =
+    JObject((j match {
+      case JObject(fields) => fields.filterNot(_._1 == "refs")
+      case _ => Nil
+    }) ++ (renderRefs(refs) match {
+      case JObject(f) if refs.nonEmpty => f
+      case _ => Nil
+    }))
+
   /** Drop a branch or tag. Unknown names are a no-op. */
   def dropRef(spark: SparkSession, location: String, name: String): Unit =
     CommitRetry() {
       val snap = IcebergMeta.snapshot(spark, location)
       if (snap.refs.contains(name)) {
         val kept = snap.refs - name
-        publishMetadataOnly(spark, location) { j =>
-          // json4s merge can't REMOVE a key: rewrite refs wholesale
-          JObject((j match {
-            case JObject(fields) => fields.filterNot(_._1 == "refs")
-            case _ => Nil
-          }) ++ (renderRefs(kept) match {
-            case JObject(f) if kept.nonEmpty => f
-            case _ => Nil
-          }))
-        }
+        publishMetadataOnly(spark, location)(withRefs(_, kept))
       }
     }
 
@@ -3226,33 +2957,12 @@ object IcebergTable {
     if (ref.snapshotId == current) return current
     // current must be an ANCESTOR of the branch head
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    val j = JsonMethods.parse(IcebergMeta.readString(
-      fs, IcebergMeta.currentMetadataFile(fs, location)))
-    val byId: Map[Long, JValue] = (j \ "snapshots") match {
-      case JArray(snaps) => snaps.flatMap(s => ((s \ "snapshot-id") match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => None
-      }).map(_ -> s)).toMap
-      case _ => Map.empty
-    }
-    var cursor: Option[Long] = Some(ref.snapshotId)
-    var isAncestor = false
-    var expiredGap: Option[Long] = None
-    while (cursor.isDefined && !isAncestor && expiredGap.isEmpty) {
-      val c = cursor.get
-      if (c == current) isAncestor = true
-      else byId.get(c) match {
-        // a chain id missing from snapshots[] was EXPIRED, not forked:
-        // distinguish "unverifiable" from a genuine divergence below
-        case None => expiredGap = Some(c)
-        case Some(s) => cursor = (s \ "parent-snapshot-id") match {
-          case JInt(n) => Some(n.toLong)
-          case JLong(n) => Some(n)
-          case _ => None
-        }
-      }
-    }
+    val lineage = IcebergMeta.snapshotLog(
+      IcebergMeta.currentMetadata(fs, location)._2).lineage(current, ref.snapshotId)
+    // a chain id missing from snapshots[] was EXPIRED, not forked:
+    // distinguish "unverifiable" from a genuine divergence below
+    val expiredGap = lineage.left.toOption
+    val isAncestor = lineage.exists(_._2)
     require(isAncestor || current < 0, expiredGap match {
       case Some(g) =>
         s"fastForward at $location: ancestry of branch '$branchName' " +
@@ -3283,38 +2993,32 @@ object IcebergTable {
     }
   }
 
+  /** EXPIRE SNAPSHOTS — the metadata half of the Iceberg lifecycle
+    * ([[compact]] rewrites data; this bounds history): drop every
+    * snapshot except the current one, the `keepLast` most recent, and
+    * any newer than `olderThanMs`, publishing a metadata version whose
+    * snapshots[] holds only the survivors. With `deleteFiles` (default),
+    * the data files, delete files, manifests, and manifest lists
+    * referenced ONLY by expired snapshots are removed from disk — on a
+    * 100 TB table this, not the metadata trim, is the storage relief:
+    * every compaction's pre-image stays fully on disk until expired.
+    * Time travel and incremental scans into the expired range fail
+    * loudly afterward, exactly as for real `expireSnapshots`. Returns
+    * the deleted (or would-delete) paths. */
   def expireSnapshots(spark: SparkSession, location: String,
       keepLast: Int = 1, olderThanMs: Option[Long] = None,
       deleteFiles: Boolean = true): Seq[String] = {
     require(keepLast >= 1, "keepLast must retain at least the current snapshot")
     val root = new Path(location)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val snaps: List[JValue] = (j \ "snapshots") match {
-      case JArray(s) => s
-      case _ => return Nil // no snapshots: nothing to expire
-    }
-    def idOf(s: JValue): Long = (s \ "snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case other => throw new IllegalStateException(s"snapshot-id is $other")
-    }
-    def tsOf(s: JValue): Long = (s \ "timestamp-ms") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case _ => 0L
-    }
-    val current = (j \ "current-snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case _ => -1L
-    }
+    val (metaFile, j) = IcebergMeta.currentMetadata(fs, location)
+    val log = IcebergMeta.snapshotLog(j)
+    val current = log.currentId
     // newest-first by commit timestamp (file order as tiebreak)
-    val newestFirst = snaps.zipWithIndex
-      .sortBy { case (s, i) => (-tsOf(s), -i) }.map(_._1)
+    val newestFirst = log.entries.zipWithIndex
+      .sortBy { case (e, i) => (-e.timestampMs, -i) }.map(_._1.id)
     val now = System.currentTimeMillis()
-    val tsOfId: Map[Long, Long] = snaps.map(s => idOf(s) -> tsOf(s)).toMap
+    val tsOfId: Map[Long, Long] = log.byId.map { case (id, e) => id -> e.timestampMs }
     // refs past their own RETAIN window (`max-ref-age-ms`, measured
     // from the pinned snapshot's commit time, the spec's rule) age out
     // HERE: the ref leaves the metadata and its snapshot becomes
@@ -3325,8 +3029,8 @@ object IcebergTable {
         tsOfId.get(r.snapshotId).exists(ts => now - ts > age))
     }
     val baseRetain: Set[Long] =
-      newestFirst.take(keepLast).map(idOf).toSet ++
-        olderThanMs.map(cut => snaps.filter(tsOf(_) >= cut).map(idOf))
+      newestFirst.take(keepLast).toSet ++
+        olderThanMs.map(cut => log.entries.filter(_.timestampMs >= cut).map(_.id))
           .getOrElse(Nil) ++
         // branch/tag-pinned snapshots never expire while the ref lives
         liveRefs.values.map(_.snapshotId) + current
@@ -3338,13 +3042,7 @@ object IcebergTable {
     // normally — that is the point of expiration; tags need only their
     // pinned snapshot). The walk stops at the first retained ancestor,
     // bounding the extra retention to each branch's unpublished window.
-    val parentOf: Map[Long, Option[Long]] = snaps.map { s =>
-      idOf(s) -> ((s \ "parent-snapshot-id") match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => None
-      })
-    }.toMap
+    val parentOf: Map[Long, Option[Long]] = log.byId.map { case (id, e) => id -> e.parentId }
     val retainIds: Set[Long] = {
       // the walk stops only at the MAIN LINE (current + its ancestors)
       // or a snapshot another branch walk already kept — NOT at any
@@ -3388,55 +3086,36 @@ object IcebergTable {
         }
       keep
     }
-    val (retained, expired) = snaps.partition(s => retainIds.contains(idOf(s)))
+    val (retained, expired) = log.entries.partition(e => retainIds.contains(e.id))
     // aged-out refs must leave the metadata even when every snapshot
     // is retained (their removal is what LETS a later run expire)
     if (expired.isEmpty && agedOutRefs.isEmpty) return Nil
 
     // file references per snapshot group: manifest list + manifests +
     // data/delete files (all metadata-scale reads)
-    def refsOf(group: Seq[JValue]): Set[String] = group.flatMap { s =>
-      (s \ "manifest-list") match {
-        case JString(ml) =>
-          val mlPath = IcebergMeta.resolve(location, ml)
-          val manifests = IcebergMeta.readManifestList(fs, mlPath)
-          val snap = IcebergMeta.snapshot(spark, location, Some(idOf(s)))
-          Seq(mlPath) ++
-            manifests.map(m => IcebergMeta.resolve(location, m._1)) ++
-            snap.files.map(_.path) ++ snap.deleteFiles.map(_.path)
-        case _ => Nil
+    def refsOf(group: Seq[IceSnapEntry]): Set[String] = group.flatMap { s =>
+      IcebergMeta.manifestListOf(location, s.json).toSeq.flatMap { mlPath =>
+        val manifests = IcebergMeta.readManifestList(fs, mlPath)
+        val snap = IcebergMeta.snapshot(spark, location, Some(s.id))
+        Seq(mlPath) ++
+          manifests.map(m => IcebergMeta.resolve(location, m._1)) ++
+          snap.files.map(_.path) ++ snap.deleteFiles.map(_.path)
       }
     }.map(DeltaTable.normPath).toSet
     val keepRefs = refsOf(retained)
     val doomed = (refsOf(expired) -- keepRefs).toSeq.sorted
 
     // publish the trimmed metadata (version fence, like every commit)
-    val version = IcebergMeta.metadataVersionOf(metaFile.getName) + 1L
     val trimmed = setFields(j,
-      "snapshots" -> JArray(retained),
+      "snapshots" -> JArray(retained.map(_.json).toList),
       "last-updated-ms" -> JLong(System.currentTimeMillis()))
     // aged-out refs (RETAIN window passed) leave the metadata with the
     // snapshots they pinned — rewrite refs wholesale (merge can't remove)
-    val newMeta =
+    publishMetadata(fs, location, nextVersion(metaFile),
       if (agedOutRefs.isEmpty) trimmed
-      else JObject((trimmed match {
-        case JObject(fields) => fields.filterNot(_._1 == "refs")
-        case _ => Nil
-      }) ++ (renderRefs(liveRefs) match {
-        case JObject(f) if liveRefs.nonEmpty => f
-        case _ => Nil
-      }))
-    val metaDir = IcebergMeta.metadataDir(location)
-    val target = new Path(metaDir, f"v$version%05d.metadata.json")
-    val os = CommitFence.create(fs, target)
-    try os.write(JsonMethods.pretty(JsonMethods.render(newMeta))
-      .getBytes(StandardCharsets.UTF_8))
-    finally os.close()
-    val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
+      else withRefs(trimmed, liveRefs))
 
-    if (deleteFiles) doomed.foreach(p => fs.delete(new Path(p), false))
+    if (deleteFiles) FsSweep.deleteFiles(spark, fs, doomed.map(new Path(_)))
     doomed
   }
 
@@ -3445,7 +3124,8 @@ object IcebergTable {
    * delete files under the table's `data/` and `metadata/` trees that
    * NO snapshot in the current metadata references — crash leftovers
    * from fence-losing writers, interrupted jobs, files dropped in by
-   * hand — plus stale `.graft-stage-*` staging dirs. Distinct from
+   * hand — plus crashed writers' stale `.graft-*` staging dirs
+   * ([[FsSweep.sweep]]). Distinct from
    * [[expireSnapshots]], which trims HISTORY: orphans were never part
    * of any snapshot, so no amount of expiration reaches them.
    *
@@ -3459,8 +3139,8 @@ object IcebergTable {
    * this table's own metadata may no longer list.
    *
    * Scale: the live set is manifest metadata (driver-side, O(files)
-   * strings — the cost class of snapshot replay), and the candidate
-   * walk is one recursive listing of the two table-owned trees.
+   * strings — the cost class of snapshot replay); the walk and the
+   * deletes run on [[FsSweep.sweep]]'s bounded pools.
    */
   def removeOrphanFiles(spark: SparkSession, location: String,
       olderThanMs: Option[Long] = None,
@@ -3471,8 +3151,7 @@ object IcebergTable {
       s"removeOrphanFiles on a non-Iceberg directory: $location")
     val cutoff = olderThanMs.getOrElse(
       System.currentTimeMillis() - 3L * 24 * 3600 * 1000)
-    val metaFile = IcebergMeta.currentMetadataFile(fs, location)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
+    val log = IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, location)._2)
 
     // the LIVE set: every retained snapshot's manifest list, manifests,
     // and every file those manifests mention (any entry status, both
@@ -3489,56 +3168,27 @@ object IcebergTable {
         IcebergMeta.manifestEntryPaths(fs, mp)
           .foreach(p => live += DeltaTable.normPath(p))
     }
-    ((j \ "snapshots") match {
-      case JArray(snaps) => snaps
-      case _ => Nil
-    }).foreach { s =>
-      (s \ "manifest-list") match {
-        case JString(ml) =>
-          val mlPath = IcebergMeta.resolve(location, ml)
+    log.entries.foreach { s =>
+      IcebergMeta.manifestListOf(location, s.json) match {
+        case Some(mlPath) =>
           live += DeltaTable.normPath(mlPath)
           IcebergMeta.readManifestList(fs, mlPath).foreach { case (m, _) =>
             addManifest(IcebergMeta.resolve(location, m))
           }
-        case _ => IcebergMeta.inlineManifestsOf(s).foreach(m =>
+        case None => IcebergMeta.inlineManifestsOf(s.json).foreach(m =>
           addManifest(IcebergMeta.resolve(location, m)))
       }
     }
 
-    // parallel tree walk of the two table-owned trees (FsSweep bounds
-    // the listStatus fan-out — a 100 TB table's data/ tree has
-    // thousands of partition dirs)
-    def listTree(p: Path): Seq[FileStatus] =
-      FsSweep.walk(spark, fs, p, ())((_, _) => Some(())).map(_._1)
-    def isMetaDoc(name: String): Boolean =
-      name.endsWith(".metadata.json") || name == "version-hint.text"
-
-    val candidates =
-      listTree(new Path(root, "data")) ++
-        listTree(IcebergMeta.metadataDir(location))
-          .filterNot(st => isMetaDoc(st.getPath.getName))
-    val orphans = candidates.filter(st =>
-      st.getModificationTime < cutoff &&
-        !live.contains(DeltaTable.normPath(st.getPath.toString)))
-
-    // stale staging dirs: a fence-losing writer cleans its own stage,
-    // but a CRASHED one leaves the dir behind forever
-    val staleStages = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(".graft-stage-") &&
-        st.getModificationTime < cutoff)
-
-    val doomed = (orphans.map(_.getPath.toString) ++
-      staleStages.map(_.getPath.toString)).map(DeltaTable.normPath).sorted
-    if (!dryRun) {
-      FsSweep.deleteFiles(spark, fs, orphans.map(_.getPath))
-      // prune partition dirs this sweep emptied (never pre-existing
-      // empty dirs — they may be a writer's in-flight stage)
-      FsSweep.pruneEmptiedDirs(fs, root, orphans.map(_.getPath))(n =>
-        !n.startsWith("_") && !n.startsWith("."))
-      staleStages.foreach(st => fs.delete(st.getPath, true))
-    }
-    doomed
+    // the two table-owned trees; metadata documents are never candidates
+    val rootQ = fs.makeQualified(root).toString
+    val owned = Seq("data", "metadata").map(d => s"$rootQ/$d/")
+    FsSweep.sweep(spark, fs, root, cutoff, dryRun)(FsSweep.plain)(_.filter { st =>
+      val p = fs.makeQualified(st.getPath).toString
+      val n = st.getPath.getName
+      owned.exists(p.startsWith) && !n.endsWith(".metadata.json") &&
+        n != "version-hint.text" && !live.contains(DeltaTable.normPath(p))
+    }).map(p => DeltaTable.normPath(p.toString)).sorted
   }
 
   /** A prior manifest-list record rebuilt onto THIS writer's
@@ -3650,30 +3300,15 @@ object IcebergTable {
     // resolve any retained snapshot's manifest tree. The CURRENT head
     // (main) is read from the same file: a branch-targeted commit must
     // leave it untouched.
-    val (priorSnapshots, priorCurrentId): (List[JValue], Long) =
-      if (prior.isDefined) {
-        val priorMeta = JsonMethods.parse(IcebergMeta.readString(
-          fs, IcebergMeta.currentMetadataFile(fs, location)))
-        val snaps = (priorMeta \ "snapshots") match {
-          case JArray(s) => s
-          case _ => Nil
-        }
-        val cur = (priorMeta \ "current-snapshot-id") match {
-          case JInt(n) => n.toLong
-          case JLong(n) => n
-          case _ => -1L
-        }
-        (snaps, cur)
-      } else (Nil, -1L)
+    val priorLog: IceSnapLog =
+      if (prior.isDefined)
+        IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, location)._2)
+      else IceSnapLog(Nil, -1L)
     // next id clears EVERY retained snapshot, not just the current one:
     // after a rollback the current snapshot is an ancestor and
     // current+1 would collide with a retained (undone) id
     val snapshotId = (0L +: prior.map(_.snapshotId).toSeq ++:
-      priorSnapshots.flatMap(s => (s \ "snapshot-id") match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => None
-      })).max + 1L
+      priorLog.entries.map(_.id)).max + 1L
 
     // ---------------------------------------------------- FAST APPEND
     // An append-only commit REUSES the prior snapshot's manifests
@@ -3699,7 +3334,7 @@ object IcebergTable {
       else {
         // v1 inline "manifests" snapshots return None: the full rewrite
         // below migrates them to a manifest list
-        IcebergMeta.manifestListPathOf(location, priorSnapshots,
+        IcebergMeta.manifestListPathOf(location, priorLog,
             prior.get.snapshotId).flatMap { ml =>
           val records = IcebergMeta.readManifestListRecords(fs, ml)
             .map(rebuildManifestListEntry)
@@ -3939,10 +3574,10 @@ object IcebergTable {
         })))),
       "current-snapshot-id" -> JLong(branch match {
         // a branch write moves its ref only; main stays put
-        case Some(_) => priorCurrentId
+        case Some(_) => priorLog.currentId
         case None => snapshotId
       }),
-      "snapshots" -> JArray(priorSnapshots :+ JObject(
+      "snapshots" -> JArray(priorLog.entries.map(_.json).toList :+ JObject(
         List[(String, JValue)](
           "snapshot-id" -> JLong(snapshotId),
           "timestamp-ms" -> JLong(now),
@@ -3959,27 +3594,17 @@ object IcebergTable {
     // zero-padded like the manifest names above: the hint-less fallback
     // sorts correctly even lexicographically, and numeric-parse readers
     // are unaffected
-    val metaFile = new Path(metaDir, f"v$version%05d.metadata.json")
-    // create-no-overwrite is the commit fence: two racing writers of the
-    // same version — the loser fails. Its added files, manifests and
-    // manifest list are removed so a retry starts clean and no later
-    // commit can absorb them.
-    val os = try CommitFence.create(fs, metaFile) catch {
-      case e: Throwable =>
-        (dataAdded.map(_.path) ++ deleteAdded.map(_.path))
-          .foreach(p => fs.delete(new Path(p), false))
-        dataManifest.foreach { case (p, _) => fs.delete(p, false) }
-        deleteManifest.foreach { case (p, _) => fs.delete(p, false) }
-        fs.delete(manifestList, false)
-        throw e
-    }
-    try os.write(JsonMethods.pretty(JsonMethods.render(metaWithRefs))
-      .getBytes(StandardCharsets.UTF_8))
-    finally os.close()
-    val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
-    IcebergMeta.pruneMetadataHistory(fs, location, tblProperties)
+    // the metadata create-no-overwrite is the commit fence: of two racing
+    // writers of the same version the loser fails. Its added files,
+    // manifests and manifest list are removed so a retry starts clean
+    // and no later commit can absorb them.
+    publishMetadata(fs, location, version, metaWithRefs, () => {
+      (dataAdded.map(_.path) ++ deleteAdded.map(_.path))
+        .foreach(p => fs.delete(new Path(p), false))
+      dataManifest.foreach { case (p, _) => fs.delete(p, false) }
+      deleteManifest.foreach { case (p, _) => fs.delete(p, false) }
+      fs.delete(manifestList, false)
+    })
     snapshotId
   }
 }

@@ -127,24 +127,13 @@ object LakeInspect {
     import spark.implicits._
     if (DeltaLog.isDeltaTable(spark, path))
       return Seq.empty[LakeManifestRow].toDF()
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile = IcebergMeta.currentMetadataFile(fs, path)
-    val j = JsonMethods.parse(IcebergMeta.readString(fs, metaFile))
-    val currentId: Long = (j \ "current-snapshot-id") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case _ => return Seq.empty[LakeManifestRow].toDF()
-    }
+    val log = IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, path)._2)
     // v1 snapshots with inline `manifests` have no manifest-list tier
-    // to inspect: empty result, matching the schema
-    val ml: Option[String] = (j \ "snapshots") match {
-      case JArray(snaps) =>
-        IcebergMeta.manifestListPathOf(path, snaps, currentId)
-      case _ => None
-    }
+    // to inspect (nor has a table without a snapshot): empty result,
+    // matching the schema
+    val ml = IcebergMeta.manifestListPathOf(path, log, log.currentId)
     val rows = ml.toSeq.flatMap(IcebergMeta.readManifestListRecords(fs, _))
       .map { r =>
         LakeManifestRow(

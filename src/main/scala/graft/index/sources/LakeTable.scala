@@ -90,7 +90,13 @@ object LakeMerge {
  * The format-independent steps of the row-level DML verbs
  * ([[deleteWhere]], [[update]], [[merge]]) — txn replay check,
  * matched-position scan, SET checks, merge-source validation — live in
- * [[LakeDml]], which both formats call.
+ * [[LakeDml]], which both formats call. Those of the maintenance verbs
+ * live once too: compaction planning ([[optimize]]'s `WHERE` scoping
+ * and bin-pack) in [[LakeMaint]], z-order clustering in
+ * [[graft.index.zorder.ZOrderBuild.clustered]], the orphan sweep
+ * ([[cleanup]] on Delta, [[removeOrphans]]) in [[FsSweep.sweep]], and
+ * [[history]] / [[readTimestampAsOf]] over each format's one commit
+ * timeline ([[historyOf]], [[idAsOf]]).
  */
 object LakeTable {
 
@@ -124,13 +130,47 @@ object LakeTable {
     }
 
   /** `TIMESTAMP AS OF` time travel — latest version/snapshot committed
-    * at or before `tsMillis`, each format resolved by its own clock. */
+    * at or before `tsMillis` on the clock [[history]] shows
+    * ([[idAsOf]]). */
   def readTimestampAsOf(spark: SparkSession, path: String,
       tsMillis: Long): DataFrame =
     formatOf(spark, path) match {
       case "delta" => DeltaTable.readTimestampAsOf(spark, path, tsMillis)
       case _ => IcebergTable.readTimestampAsOf(spark, path, tsMillis)
     }
+
+  /** HISTORY from a format's commit timeline (`commits`: id, timestamp
+    * millis, operation — [[DeltaTable.commits]] /
+    * [[IcebergTable.commits]]), newest first. `idColumn` keeps each
+    * format's name for its id (`version` / `snapshot_id`). */
+  private[sources] def historyOf(spark: SparkSession,
+      commits: Seq[(Long, Long, String)], idColumn: String): DataFrame = {
+    import spark.implicits._
+    commits.sortBy(-_._1).map { case (id, ts, op) =>
+      (id, new java.sql.Timestamp(ts), op)
+    }.toDF(idColumn, "timestamp", "operation")
+  }
+
+  /** The id `TIMESTAMP AS OF tsMillis` reads: the latest commit at or
+    * before it (greatest timestamp, then id), so every history row's
+    * timestamp reads back that row's id. Refuses a timestamp before the
+    * first commit. */
+  private[sources] def idAsOf(commits: Seq[(Long, Long, String)],
+      tsMillis: Long, path: String): Long = {
+    val eligible = commits.filter(_._2 <= tsMillis)
+    require(eligible.nonEmpty,
+      s"timestampAsOf $tsMillis precedes the first commit " +
+        s"(${commits.map(_._2).minOption.getOrElse("none")}) at $path")
+    eligible.maxBy(c => (c._2, c._1))._1
+  }
+
+  /** The first commit at or after `tsMillis` (the streaming
+    * `startingTimestamp` contract); past the last commit, latest + 1 —
+    * serve only future commits. */
+  private[sources] def firstIdAtOrAfter(commits: Seq[(Long, Long, String)],
+      tsMillis: Long): Long =
+    commits.filter(_._2 >= tsMillis).map(_._1).minOption
+      .getOrElse(commits.map(_._1).max + 1)
 
   /** Append / INSERT OVERWRITE, format-agnostic (the SQL INSERT path).
     * SQL INSERT semantics: the query's columns bind to the table's

@@ -297,8 +297,8 @@ final class DeltaStreamSource(spark: SparkSession, rootStr: String,
         "pass either startingVersion or startingTimestamp, not both")
       case (Some(v), _) if v.equalsIgnoreCase("latest") => initial.version + 1
       case (Some(v), _) => v.toLong
-      case (None, Some(ts)) => DeltaTable.firstVersionAtOrAfter(
-        spark, rootStr, StreamRateLimit.parseTimestamp(ts))
+      case (None, Some(ts)) => LakeTable.firstIdAtOrAfter(
+        DeltaTable.commits(spark, rootStr), StreamRateLimit.parseTimestamp(ts))
       case _ => 0L
     }
 
@@ -822,8 +822,8 @@ final class IcebergStreamSource(spark: SparkSession, location: String,
         // start is the newest snapshot strictly before it (0 = full
         // history when none is)
         val t = StreamRateLimit.parseTimestamp(ts)
-        IcebergTable.snapshotTimes(spark, location)
-          .filter(_._2 < t).sortBy(_._2).lastOption.map(_._1).getOrElse(0L)
+        IcebergTable.commits(spark, location)
+          .filter(_._2 < t).lastOption.map(_._1).getOrElse(0L)
       case _ => 0L
     }
 

@@ -31,10 +31,6 @@ object ZOrderBuild {
 
   def build(ctx: IndexBuildContext, source: DataFrame,
       d: ZOrderIndexDescriptor): IndexDescriptor = {
-    d.indexedColumns.foreach { c =>
-      val t = source.schema(c).dataType
-      require(zOrderable(t), s"z-order column '$c' has unsupported type $t")
-    }
     // optional lineage column: lets hybrid scan drop deleted files' rows
     // at query time, same machinery as covering indexes (reference shares
     // this across CI/ZCI via the common covering-index base)
@@ -52,40 +48,53 @@ object ZOrderBuild {
       d: ZOrderIndexDescriptor): IndexDescriptor =
     cluster(ctx, indexData, indexData, d)
 
-  /** The two passes: quantiles over `stats`, the clustered write of
-    * `rows` (the same rows, plus the lineage column when the index has
-    * lineage). */
+  /** The index build's two passes: [[clustered]] over `stats` and the
+    * projected `rows` (the same rows, plus the lineage column when the
+    * index has lineage), then the parquet write. */
   private def cluster(ctx: IndexBuildContext, stats: DataFrame,
       rows: DataFrame, d: ZOrderIndexDescriptor): IndexDescriptor = {
-    val nCols = d.indexedColumns.size
-    require(nCols * BitsPerColumn <= 62,
-      s"too many z-order columns (max ${62 / BitsPerColumn})")
     val projCols = (d.indexedColumns ++ d.includedColumns).map(col) ++
       (if (d.hasLineage)
         Seq(col(graft.index.covering.CoveringIndexDescriptor.LineageColumn))
       else Nil)
+    val projected = rows.select(projCols: _*)
+    clustered(stats, projected, d.indexedColumns, Nil, d.numPartitions)
+      .write.mode("overwrite").parquet(ctx.dataPath)
+    d.copy(schemaJson = projected.schema.json)
+  }
 
-    // ---- pass 1: quantile boundaries per column (one job for all cols)
+  /** `rows` clustered by the z-address of `columns` — the one z-order
+    * layout behind the index build and the lake tables' OPTIMIZE ZORDER
+    * BY / compactSort:
+    *  1. per-column quantile boundaries over `stats` (one
+    *     `approxQuantile` job for all columns);
+    *  2. a per-row z-address, `repartitionByRange(numPartitions, keys)`
+    *     and `sortWithinPartitions(keys)`, helper column dropped. `keys`
+    *     is `leadingKeys` (a partitioned table's partition columns, so
+    *     rows are z-clustered WITHIN their partition) then the address.
+    * The caller writes the result. */
+  def clustered(stats: DataFrame, rows: DataFrame, columns: Seq[String],
+      leadingKeys: Seq[String], numPartitions: Int): DataFrame = {
+    require(columns.nonEmpty, "no z-order columns")
+    require(columns.size * BitsPerColumn <= 62,
+      s"too many z-order columns (max ${62 / BitsPerColumn})")
+    columns.foreach { c =>
+      val t = stats.schema(c).dataType
+      require(zOrderable(t), s"z-order column '$c' has unsupported type $t")
+    }
     val nBuckets = 1 << BitsPerColumn
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val asDouble = stats.select(
-      d.indexedColumns.map(c => toDouble(stats, c).as(c)): _*)
-    val boundaries: Array[Array[Double]] =
-      asDouble.stat.approxQuantile(d.indexedColumns.toArray, probs, 0.001)
-
-    // ---- pass 2: z-address + range-partitioned sorted write
+    val boundaries: Array[Array[Double]] = stats
+      .select(columns.map(c => toDouble(stats, c).as(c)): _*)
+      .stat.approxQuantile(columns.toArray, probs, 0.001)
     val zUdf = udf(new ZAddressFn(boundaries, BitsPerColumn))
-    val projected = rows.select(projCols: _*)
-    val withZ = projected.withColumn(ZAddrColumn,
-      zUdf(array(d.indexedColumns.map(c => toDouble(projected, c)): _*)))
-
+    val withZ = rows.withColumn(ZAddrColumn,
+      zUdf(array(columns.map(c => toDouble(rows, c)): _*)))
+    val keys = leadingKeys.map(withZ.col) :+ col(ZAddrColumn)
     withZ
-      .repartitionByRange(d.numPartitions, col(ZAddrColumn))
-      .sortWithinPartitions(ZAddrColumn)
+      .repartitionByRange(numPartitions, keys: _*)
+      .sortWithinPartitions(keys: _*)
       .drop(ZAddrColumn)
-      .write.mode("overwrite").parquet(ctx.dataPath)
-
-    d.copy(schemaJson = projected.schema.json)
   }
 
   def zOrderable(t: DataType): Boolean = t match {
@@ -93,9 +102,12 @@ object ZOrderBuild {
     case _ => false
   }
 
+  /** A z-order column on the quantile axis. DATE goes through
+    * `unix_date` (days since epoch): a DATE → numeric cast fails analysis
+    * under ANSI, Spark 4's default. */
   private def toDouble(source: DataFrame, c: String): Column =
     source.schema(c).dataType match {
-      case DateType => col(c).cast(IntegerType).cast(DoubleType)
+      case DateType => unix_date(col(c)).cast(DoubleType)
       case TimestampType | TimestampNTZType =>
         col(c).cast(DoubleType) // seconds since epoch
       case _ => col(c).cast(DoubleType)

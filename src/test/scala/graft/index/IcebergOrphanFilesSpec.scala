@@ -30,7 +30,9 @@ class IcebergOrphanFilesSpec extends AnyFunSuite {
     new Path(loc).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Plant one foreign parquet in data/, one unreferenced avro in
-    * metadata/, and one stale staging dir; returns their paths. */
+    * metadata/, and the staging dir each Iceberg writer leaves behind
+    * when it crashes (append/DML, compactSmall, compactSort); returns
+    * their paths. */
   private def plantOrphans(loc: String): Seq[Path] = {
     val fs = fsOf(loc)
     val dataOrphan = new Path(loc, "data/crashed-writer-leftover.parquet")
@@ -43,11 +45,14 @@ class IcebergOrphanFilesSpec extends AnyFunSuite {
     val metaOrphan = new Path(loc, "metadata/manifest-99999-deadbeef.avro")
     val os = fs.create(metaOrphan)
     os.write("not a live manifest".getBytes("UTF-8")); os.close()
-    val stage = new Path(loc, ".graft-stage-crashed")
-    fs.mkdirs(stage)
-    val so = fs.create(new Path(stage, "part-0.parquet"))
-    so.write(Array[Byte](1, 2, 3)); so.close()
-    Seq(dataOrphan, metaOrphan, stage)
+    val stages = Seq("stage", "binpack", "zsort").map { kind =>
+      val stage = new Path(loc, s".graft-$kind-crashed")
+      fs.mkdirs(stage)
+      val so = fs.create(new Path(stage, "part-0.parquet"))
+      so.write(Array[Byte](1, 2, 3)); so.close()
+      stage
+    }
+    Seq(dataOrphan, metaOrphan) ++ stages
   }
 
   test("orphans are swept; every referenced file and metadata doc survives") {

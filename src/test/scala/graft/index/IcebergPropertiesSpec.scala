@@ -117,5 +117,29 @@ class IcebergPropertiesSpec extends AnyFunSuite {
     // content untouched: full read AND time travel to the first snapshot
     assert(IcebergTable.read(spark, loc).count() == 37)
     assert(IcebergTable.read(spark, loc, snapshotAsOf = Some(1L)).count() == 30)
+
+    // every metadata-publishing verb prunes, not only data commits: on
+    // a table of five snapshots (v1..v5) with pruning switched on (v6),
+    // four commits of one verb leave the current document + 2 previous
+    val verbs: Seq[(String, (String, Int) => Unit)] = Seq(
+      "rollback" -> ((l, i) => IcebergTable.rollback(spark, l, 4L - i)),
+      "addColumn" -> ((l, i) =>
+        IcebergTable.addColumn(spark, l, s"extra_$i",
+          org.apache.spark.sql.types.StringType)),
+      "expireSnapshots" -> ((l, i) =>
+        IcebergTable.expireSnapshots(spark, l, keepLast = 4 - i)))
+    verbs.foreach { case (verb, commit) =>
+      val l = tmp(s"graft-ice-props-prune-$verb-")
+      IcebergTable.create(customer.filter($"c_custkey" < 30), l)
+      (0 until 4).foreach(i => IcebergTable.append(
+        customer.filter($"c_custkey" === lit(30 + i)), l))
+      IcebergTable.setProperties(spark, l, Map(
+        "write.metadata.delete-after-commit.enabled" -> "true",
+        "write.metadata.previous-versions-max" -> "2"))
+      (0 until 4).foreach(i => commit(l, i))
+      assert(metadataDocs(l).size == 3, s"$verb: ${metadataDocs(l)}")
+      assert(metadataDocs(l).last.contains("00010"), s"$verb: ${metadataDocs(l)}")
+      assert(IcebergTable.read(spark, l).count() > 0, verb)
+    }
   }
 }

@@ -61,6 +61,67 @@ class LakeTableSpec extends AnyFunSuite {
     }
   }
 
+  test("every history row's timestamp reads back that row's id, on both formats") {
+    val delta = Files.createTempDirectory("graft-lake-clock-d-").toString
+    val ice = Files.createTempDirectory("graft-lake-clock-i-").toString
+    DeltaTable.create(customer.filter(col("c_custkey") < 50), delta)
+    IcebergTable.create(customer.filter(col("c_custkey") < 50), ice)
+    Seq(delta, ice).foreach { path =>
+      LakeTable.append(spark, path,
+        customer.filter(col("c_custkey") >= 50 && col("c_custkey") < 100))
+      LakeTable.deleteWhere(spark, path, col("c_nationkey") < 3)
+      LakeTable.append(spark, path, customer.filter(col("c_custkey") >= 100))
+    }
+    // Delta's commit clock here is the commit file's mtime (no in-commit
+    // timestamps): pin each version one second apart and an hour before
+    // its commitInfo wall-clock stamp, so a reader on another clock
+    // resolves another version
+    val fs = new org.apache.hadoop.fs.Path(delta)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val base = System.currentTimeMillis() - 3600L * 1000
+    (0L to 3L).foreach { v =>
+      fs.setTimes(new org.apache.hadoop.fs.Path(delta,
+        f"_delta_log/$v%020d.json"), base + v * 1000, -1)
+    }
+    Seq(delta, ice).foreach { path =>
+      val rows = LakeTable.history(spark, path).collect()
+      assert(rows.length == 4, s"$path: ${rows.toSeq}")
+      rows.foreach { r =>
+        val (id, ts) = (r.getLong(0), r.getTimestamp(1).getTime)
+        assert(LakeTable.readTimestampAsOf(spark, path, ts).collect().toSet ==
+          LakeTable.readAsOf(spark, path, id).collect().toSet,
+          s"$path: AS OF history's timestamp $ts does not read id $id")
+      }
+    }
+  }
+
+  test("OPTIMIZE ZORDER BY a DATE column clusters on both formats") {
+    val orders = spark.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
+      .withColumn("o_orderdate", to_date(col("o_orderdate")))
+      .repartition(4)
+    val delta = Files.createTempDirectory("graft-lake-zd-d-").toString
+    val ice = Files.createTempDirectory("graft-lake-zd-i-").toString
+    DeltaTable.create(orders, delta)
+    IcebergTable.create(orders, ice)
+    Seq(delta, ice).foreach { path =>
+      val bytes = LakeTable.inspect(spark, path, "files")
+        .agg(sum("file_size_in_bytes")).head().getLong(0)
+      // aim at four files: each must span far fewer days than the table
+      LakeTable.optimize(spark, path, targetSizeBytes = bytes / 4 + 1,
+        zorderBy = Seq("o_orderdate"))
+      val t = LakeTable.read(spark, path)
+      assert(t.count() == orders.count())
+      val spans = t.groupBy(input_file_name())
+        .agg(datediff(max("o_orderdate"), min("o_orderdate")).as("span"))
+        .collect().map(_.getInt(1))
+      val global = t.agg(datediff(max("o_orderdate"), min("o_orderdate")))
+        .head().getInt(0)
+      assert(spans.length > 1, s"$path: expected several files")
+      assert(spans.sum.toDouble / spans.length < 0.5 * global,
+        s"$path: files not clustered by date: ${spans.toSeq} of $global")
+    }
+  }
+
   test("changes at the head id is the normal no-new-changes poll: empty feed") {
     val delta = Files.createTempDirectory("graft-lake-poll-d-").toString
     val ice = Files.createTempDirectory("graft-lake-poll-i-").toString

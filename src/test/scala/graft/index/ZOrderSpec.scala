@@ -91,6 +91,34 @@ class ZOrderSpec extends AnyFunSuite {
     }
   }
 
+  test("z-order index on a DATE column (l_shipdate) builds under ANSI") {
+    // the fixture stores l_shipdate as a timestamp: index a DATE copy
+    val src = Files.createTempDirectory("graft-zo-date-src-").toString
+    lineitem.withColumn("l_shipdate", to_date(col("l_shipdate")))
+      .write.mode("overwrite").parquet(src)
+    withGraft { g =>
+      assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+      val source = spark.read.parquet(src)
+      g.createIndex(source, ZOrderIndexConfig("zo_date",
+        Seq("l_shipdate", "l_suppkey"), Seq("l_quantity")))
+      val data = spark.read.parquet(
+        g.indexManager.getIndexes().head.content.root)
+      assert(data.schema("l_shipdate").dataType ==
+        org.apache.spark.sql.types.DateType)
+      assert(data.count() == lineitem.count())
+      // clustered by the date's day number: each file spans far fewer
+      // days than the table does
+      val spans = data.groupBy(input_file_name())
+        .agg(datediff(max("l_shipdate"), min("l_shipdate")).as("span"))
+        .collect().map(_.getInt(1))
+      val globalSpan = source
+        .agg(datediff(max("l_shipdate"), min("l_shipdate"))).head().getInt(0)
+      assert(spans.length > 1, "expected multiple z-order output files")
+      assert(spans.sum.toDouble / spans.length < 0.9 * globalSpan,
+        s"files not clustered by date: spans=${spans.toSeq} global=$globalSpan")
+    }
+  }
+
   test("covering index beats z-order when filter hits head column") {
     withGraft { g =>
       g.createIndex(lineitem, ZOrderIndexConfig("zo_b",
