@@ -94,7 +94,12 @@ class Graft(spark: SparkSession) {
 
   /** Approximate nearest-neighbor search against an IVF index (see
     * [[graft.index.ivf.IvfIndexConfig]]): probes the nProbe nearest
-    * codebook cells per query and scores only those partitions.
+    * codebook cells per query and scores only those partitions. On a
+    * drifted source the appended files are scored brute-force against
+    * every query and unioned in (see `resolveDrift`); the union is
+    * partitioned on qid once, so the per-(qid, id) dedup and the top-k
+    * window share one shuffle — a drifted search shuffles no more than
+    * a clean one.
     * `queries` needs columns `qid` (long) and `qv` (float/double array).
     * Returns topK rows per query: (qid, <idColumn>, cosine, rank). */
   def annSearch(indexName: String, queries: DataFrame,
@@ -255,20 +260,24 @@ class Graft(spark: SparkSession) {
     * corpus — the nightly ingest step, composed from the suite's own
     * pieces:
     *  1. quality gate (integer-exact Gopher thresholds: ≥20 tokens, top
-    *     token ≤20%, duplicate bigrams ≤25%);
-    *  2. drop docs near-duplicating the INDEXED CORPUS (the corpus is
+    *     token ≤20%, duplicate bigrams ≤25%), each row on its own text;
+    *  2. drop rows near-duplicating the INDEXED CORPUS (the corpus is
     *     never re-signed — [[dedupBatch]] machinery, hybrid-drift aware);
     *  3. pairwise dedup WITHIN the batch (of each colliding pair the
     *     smaller id survives — pairwise greedy, not transitive closure:
     *     batches are small and re-collide against the corpus once
     *     ingested, where the closure runs at corpus scale).
     *
-    * The gate runs HERE, at call time, once: the gated `(doc_id, text)`
-    * batch is materialized with `localCheckpoint` (batches are small by
-    * contract — step 2 broadcasts them), and steps 2 and 3 and the
-    * kept-id anti-joins all read that one copy instead of re-scanning
-    * and re-gating the batch per consumer. Returns the surviving batch
-    * rows (original columns preserved); its plan scans `batch` once. */
+    * The gate and the signing run HERE, at call time, once: one
+    * map-only pass gates the batch and signs the surviving rows, and
+    * `localCheckpoint` holds `(doc_id, row hash, sig, bands)` (batches
+    * are small by contract). Steps 2 and 3 share one broadcast of that
+    * copy's band rows: the corpus is scanned once and estimated inside
+    * the broadcast join, the batch-internal leg is a broadcast self-join,
+    * and no exchange carries a signature. Returns the surviving batch
+    * rows (original columns preserved), each once — a repeated id is
+    * judged per row, by its own text; the returned plan scans `batch`
+    * once. */
   def curateBatch(indexName: String, batch: DataFrame,
       idCol: String, textCol: String,
       minEstJaccard: Double = 0.5): DataFrame = {
@@ -276,26 +285,27 @@ class Graft(spark: SparkSession) {
     val d = entry.descriptor
       .asInstanceOf[graft.index.minhash.MinHashIndexDescriptor]
     val (appendedDf, droppedFids) = resolveDrift(entry)
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{broadcast, col, xxhash64}
+    // a row's identity: its id and the hash of its text
+    val rowHash = "__graft_h"
     val std = batch.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("text"))
-    val quality = graft.queries.Pipeline
-      .qualityGate(graft.queries.Pipeline.qualityMetrics(std))
-      .select(col("doc_id"))
-    val clean = std.join(quality, "doc_id").localCheckpoint()
-    val corpusDups = graft.index.minhash.MinHashSearch.dedupAgainst(
-        spark, entry, clean, "doc_id", "text", minEstJaccard,
-        appendedDf, droppedFids)
-      .select(col("batch_id").as("doc_id")).distinct()
-    val internalDups = graft.index.minhash.MinHashSearch.selfPairs(
-        spark, d, clean, "doc_id", "text", minEstJaccard)
-      .select(col("id2").as("doc_id")).distinct()
-    val keptIds = clean.select(col("doc_id"))
-      .join(corpusDups, Seq("doc_id"), "left_anti")
-      .join(internalDups, Seq("doc_id"), "left_anti")
-    batch.join(keptIds.select(col("doc_id").as("__graft_kept_id")),
-        col(idCol).cast("long") === col("__graft_kept_id"))
-      .drop("__graft_kept_id")
+      col(textCol).as("text"), xxhash64(col(textCol)).as(rowHash))
+    val gated = graft.queries.Pipeline.qualityGate(
+      graft.queries.Pipeline.qualityMetrics(std, carry = Seq("text", rowHash)))
+    val signed = graft.index.minhash.MinHashSearch
+      .signedRows(d, gated, "doc_id", "text", "doc_id", carry = Seq(rowHash))
+      .localCheckpoint()
+    val drops = graft.index.minhash.MinHashSearch.curationDrops(spark, entry,
+      signed, rowHash, minEstJaccard, appendedDf, droppedFids)
+    // batch rows that passed the gate and are not dropped, matched on
+    // (id, text hash): semi and anti joins never multiply a row
+    def rowsIn(keys: DataFrame) = broadcast(keys.select(
+      col("doc_id").as("__graft_kept_id"), col(rowHash).as("__graft_kept_h")))
+    val matches = col(idCol).cast("long") === col("__graft_kept_id") &&
+      xxhash64(col(textCol)) === col("__graft_kept_h")
+    batch
+      .join(rowsIn(signed), matches, "left_semi")
+      .join(rowsIn(drops), matches, "left_anti")
   }
 
   /** Per-data-file min/max envelope + overlap count for one index column

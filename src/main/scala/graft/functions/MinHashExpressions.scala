@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /**
  * `minhash_signature(hs)` — the K-permutation MinHash signature of a
@@ -112,8 +112,67 @@ case class MinHashSignature(
     copy(child = newChild)
 }
 
+/**
+ * `minhash_estimate(s1, s2)` — the MinHash estimate of the Jaccard
+ * similarity of two signatures: the fraction of the `numPerm` slots in
+ * which they agree, in one pass with no intermediate array.
+ *
+ * Identical to `size(filter(zip_with(s1, s2, _ === _), b => b)) /
+ * numPerm`: slots past the shorter signature, and null slots, do not
+ * agree. The higher-order spelling is CodegenFallback, which takes any
+ * plan node holding it out of whole-stage codegen — a band join that
+ * verifies its pairs in the join condition would run interpreted.
+ */
+case class MinHashEstimate(left: Expression, right: Expression, numPerm: Int)
+  extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires two array<bigint>, got ${l.simpleString} " +
+          s"and ${r.simpleString}")
+    }
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "minhash_estimate"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    MinHashEstimate.agreeing(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData]).toDouble / numPerm
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = (double) graft.functions.MinHashEstimate.agreeing($a, $b)" +
+        s" / ${numPerm}.0;")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): MinHashEstimate =
+    copy(left = newLeft, right = newRight)
+}
+
+object MinHashEstimate {
+  /** Slots, up to the shorter signature, holding one non-null value. */
+  def agreeing(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var same = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
+        same += 1
+      i += 1
+    }
+    same
+  }
+}
+
 object MinHashFunctions {
   /** Column API for [[MinHashSignature]]. */
   def minhashSignature(hs: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
     GraftBridge.column(MinHashSignature(GraftBridge.expression(hs), a, b, p))
+
+  /** Column API for [[MinHashEstimate]]. */
+  def minhashEstimate(s1: Column, s2: Column, numPerm: Int): Column =
+    GraftBridge.column(MinHashEstimate(GraftBridge.expression(s1),
+      GraftBridge.expression(s2), numPerm))
 }

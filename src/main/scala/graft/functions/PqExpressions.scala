@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, NumericType}
 
 /**
  * Native codegen expressions for the PRODUCT-QUANTIZATION codec
@@ -21,11 +21,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
  * reference object instead of an M x K literal-array forest, which also
  * shrinks the analyzed plan the optimizer has to walk.
  *
- * Domain, deliberately narrower than the HOFs for speed (identical to
- * [[DotProduct]]'s contract): fixed-width `array<double>` vectors with no
- * null elements, codes produced by [[PqEncode]] (1-based, in [1, K]). A
- * null INPUT yields a null result (nullSafeEval); degenerate shapes
- * (short vectors, out-of-range codes) are the caller's to avoid.
+ * Domain, deliberately narrower than the HOFs for speed: fixed-width
+ * `array<double>` vectors whose type rules out null elements (a
+ * `containsNull` input fails analysis — `getDouble` on a null slot would
+ * read it as 0.0; [[PqVector]] adapts any numeric array and turns a
+ * vector holding a null element into a null vector), codes produced by
+ * [[PqEncode]] (1-based, in [1, K]). A null INPUT yields a null result
+ * (nullSafeEval); degenerate shapes (short vectors, out-of-range codes)
+ * are the caller's to avoid.
+ *
+ * The codebook is a constant argument held as a raw array, so the two
+ * codebook-carrying expressions compare and hash it by content
+ * ([[PqExpressions.cbFingerprint]]): two spellings of one codebook are
+ * equal expressions, which common-subexpression elimination and
+ * exchange reuse need.
  */
 object PqExpressions {
 
@@ -102,10 +111,24 @@ object PqExpressions {
     acc
   }
 
-  private[functions] def isDoubleArray(dt: DataType): Boolean = dt match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
+  /** Input check of the codebook-carrying expressions: `array<double>`
+    * without null elements. */
+  private[functions] def checkVector(e: Expression): TypeCheckResult = {
+    def refuse(got: String) = TypeCheckResult.TypeCheckFailure(
+      s"${e.prettyName} requires an array<double> input without null " +
+        s"elements (see PqVector), got $got")
+    e.dataType match {
+      case ArrayType(DoubleType, false) => TypeCheckResult.TypeCheckSuccess
+      case ArrayType(DoubleType, true) => refuse("one that may hold nulls")
+      case other => refuse(other.simpleString)
+    }
   }
+
+  /** Content equality of two codebooks. */
+  private[functions] def sameCodebook(a: Array[Array[Array[Double]]],
+      b: Array[Array[Array[Double]]]): Boolean =
+    (a eq b) || java.util.Arrays.deepEquals(
+      a.asInstanceOf[Array[AnyRef]], b.asInstanceOf[Array[AnyRef]])
 
   /** Stable plan rendering for a codebook argument: a raw
     * `Array[Array[Array[Double]]]` stringifies as `[[[D@<identityHash>`,
@@ -139,10 +162,17 @@ object PqExpressions {
 case class PqEncode(child: Expression, codebook: Array[Array[Array[Double]]])
   extends UnaryExpression {
 
+  @transient private lazy val fingerprint = PqExpressions.cbFingerprint(codebook)
+
+  override def equals(o: Any): Boolean = o match {
+    case e: PqEncode => child == e.child && fingerprint == e.fingerprint &&
+      PqExpressions.sameCodebook(codebook, e.codebook)
+    case _ => false
+  }
+  override def hashCode(): Int = (child, fingerprint).##
+
   override def checkInputDataTypes(): TypeCheckResult =
-    if (PqExpressions.isDoubleArray(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<double> input, got ${child.dataType.simpleString}")
+    PqExpressions.checkVector(child)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
 
@@ -155,8 +185,7 @@ case class PqEncode(child: Expression, codebook: Array[Array[Array[Double]]])
       s"${ev.value} = graft.functions.PqExpressions.encode($v, $cbRef);")
   }
 
-  override def stringArgs: Iterator[Any] =
-    Iterator(child, PqExpressions.cbFingerprint(codebook))
+  override def stringArgs: Iterator[Any] = Iterator(child, fingerprint)
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
@@ -167,10 +196,17 @@ case class PqEncode(child: Expression, codebook: Array[Array[Array[Double]]])
 case class PqQueryTable(child: Expression, codebook: Array[Array[Array[Double]]])
   extends UnaryExpression {
 
+  @transient private lazy val fingerprint = PqExpressions.cbFingerprint(codebook)
+
+  override def equals(o: Any): Boolean = o match {
+    case e: PqQueryTable => child == e.child && fingerprint == e.fingerprint &&
+      PqExpressions.sameCodebook(codebook, e.codebook)
+    case _ => false
+  }
+  override def hashCode(): Int = (child, fingerprint).##
+
   override def checkInputDataTypes(): TypeCheckResult =
-    if (PqExpressions.isDoubleArray(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<double> input, got ${child.dataType.simpleString}")
+    PqExpressions.checkVector(child)
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def prettyName: String = "graft_pq_query_table"
@@ -184,11 +220,82 @@ case class PqQueryTable(child: Expression, codebook: Array[Array[Array[Double]]]
       s"${ev.value} = graft.functions.PqExpressions.queryTable($v, $cbRef);")
   }
 
-  override def stringArgs: Iterator[Any] =
-    Iterator(child, PqExpressions.cbFingerprint(codebook))
+  override def stringArgs: Iterator[Any] = Iterator(child, fingerprint)
 
   override protected def withNewChildInternal(newChild: Expression): PqQueryTable =
     copy(child = newChild)
+}
+
+/** `pq_vector(v)` — any numeric array as the `array<double>` without null
+  * elements that [[PqEncode]] and [[PqQueryTable]] take. Replaced before
+  * execution by the cheapest adapter the input type allows: nothing for
+  * an `array<double>` that cannot hold a null, a widening cast for
+  * another such array, and otherwise a cast under [[NullFreeArray]], so
+  * a vector holding a null element becomes a null vector. */
+case class PqVector(child: Expression) extends UnaryExpression
+  with RuntimeReplaceable {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: NumericType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a numeric array, got ${other.simpleString}")
+  }
+
+  override lazy val replacement: Expression = child.dataType match {
+    case ArrayType(DoubleType, false) => child
+    case ArrayType(_, false) => Cast(child, PqVector.Type)
+    case _ => NullFreeArray(Cast(child, ArrayType(DoubleType)))
+  }
+  override def dataType: DataType = PqVector.Type
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_pq_vector"
+
+  override protected def withNewChildInternal(newChild: Expression): PqVector =
+    copy(child = newChild)
+}
+
+object PqVector {
+  val Type: ArrayType = ArrayType(DoubleType, containsNull = false)
+}
+
+/** `null_free(a)` — an `array<double>` as one whose type holds no null
+  * element: the array itself when none is null, else NULL. */
+case class NullFreeArray(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<double>, got ${other.simpleString}")
+  }
+  override def dataType: DataType = PqVector.Type
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_null_free"
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val a = input.asInstanceOf[ArrayData]
+    if (NullFreeArray.hasNull(a)) null else a
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""
+         |if (graft.functions.NullFreeArray.hasNull($a)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = $a;
+         |}
+       """.stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): NullFreeArray =
+    copy(child = newChild)
+}
+
+object NullFreeArray {
+  def hasNull(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
+    false
+  }
 }
 
 /** `pq_adc_dot(codes, qtab)` — the asymmetric-distance dot product. */

@@ -343,7 +343,8 @@ final class IndexManager(spark: SparkSession) {
         // optimize or a prior merge-mode refresh, and root alone would
         // miss the kept files
         // lazy: only the delete/rewrite branches ever read old index data
-        lazy val oldData = spark.read.parquet(latest.content.filePaths: _*)
+        lazy val oldData = IndexData.parquet(spark,
+          latest.descriptor.schemaJson, latest.content.filePaths)
         val deletedIds = deleted.map(_.id)
 
         // (descriptor, kept old index files) — merge-mode branches keep
@@ -463,7 +464,8 @@ final class IndexManager(spark: SparkSession) {
         val version = nextVersion(name)
         val dataPath = dataVersionPath(name, version)
         val ctx = IndexBuildContext(spark, dataPath.toString, tracker)
-        lazy val compactInput = spark.read.parquet(small.map(_.path): _*)
+        lazy val compactInput = IndexData.parquet(spark,
+          latest.descriptor.schemaJson, small.map(_.path))
         val newDescriptor = latest.descriptor match {
           case ci: covering.CoveringIndexDescriptor =>
             // rows re-hash to their original bucket ids (same key columns,

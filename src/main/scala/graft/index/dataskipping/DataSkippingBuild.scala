@@ -49,8 +49,10 @@ object DataSkippingBuild {
     val numFiles = ctx.tracker.all.size
     val outParts = math.max(1, numFiles / 100000)
     rows.repartition(outParts).write.mode("overwrite").parquet(ctx.dataPath)
-    val schema = ctx.spark.read.parquet(ctx.dataPath).schema
-    d.copy(schemaJson = schema.json)
+    // the schema a read of the written files reports, without reading
+    // them back
+    d.copy(schemaJson =
+      org.apache.spark.sql.classic.GraftBridge.asNullable(rows.schema).json)
   }
 
   def build(ctx: IndexBuildContext, source: DataFrame,

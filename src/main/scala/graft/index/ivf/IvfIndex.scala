@@ -385,7 +385,8 @@ object IvfBuild {
   def compactCells(ctx: IndexBuildContext,
       smallContent: graft.index.ContentMeta,
       d: IvfIndexDescriptor): Unit = {
-    val live = antiTombstone(readIndexData(ctx.spark, smallContent), d)
+    val live = antiTombstone(
+      readIndexData(ctx.spark, smallContent, d.schemaJson), d)
     live
       .repartition(col(CellColumn))
       .write.mode("overwrite")
@@ -411,9 +412,10 @@ object IvfBuild {
     * merge-mode refreshes). The `graft__cell=` partition column lives in
     * the directory layout, so each version dir needs its own `basePath`;
     * files are grouped by their enclosing `v__N` ancestor and the groups
-    * unioned. One version dir (the common case) stays a single read. */
+    * unioned. One version dir (the common case) stays a single read.
+    * Each read takes the logged `schemaJson` (see [[graft.index.IndexData]]). */
   def readIndexData(spark: SparkSession,
-      content: graft.index.ContentMeta): DataFrame = {
+      content: graft.index.ContentMeta, schemaJson: String = ""): DataFrame = {
     def versionDir(path: String): String = {
       // file lives at <root>/v__N/graft__cell=C/part-*.parquet — walk up
       // to the ancestor whose name starts with the version prefix
@@ -434,7 +436,7 @@ object IvfBuild {
         spark, "ivfdata#" + content.filePaths.mkString("|")) {
       content.filePaths.groupBy(versionDir).toSeq.sortBy(_._1)
         .map { case (base, files) =>
-          spark.read.option("basePath", base).parquet(files: _*)
+          graft.index.IndexData.parquet(spark, schemaJson, files, Some(base))
         }
         .reduce(_.unionByName(_))
     }

@@ -58,11 +58,12 @@ object IvfSearch {
 
     val dot = graft.functions.VectorFunctions.dotp _
     val bc = spark.sparkContext.broadcast(centroids)
-    val probes = queries
+    val queryRows = queries
       .select(col("qid").cast("long"), col("qv").cast("array<double>"))
       // a null query vector has no nearest cell (and would NPE in sqDist
       // before the zero-norm filter below could drop it)
       .filter(col("qv").isNotNull)
+    val probes = queryRows
       .as[(Long, Array[Double])]
       .flatMap { case (qid, v) =>
         nearestCells(bc.value, v, probe).map(c => (qid, v, c))
@@ -76,7 +77,7 @@ object IvfSearch {
     // reader invariant (IndexManager): content may span version dirs
     // after merge-mode refreshes — each dir carries its own basePath for
     // the cell partition column, so read per-dir and union
-    val base = IvfBuild.readIndexData(spark, entry.content)
+    val base = IvfBuild.readIndexData(spark, entry.content, d.schemaJson)
     // deleted source files are TOMBSTONED (no data rewrite): anti-filter
     // their rows via the lineage column (NULL-safe — see antiTombstone);
     // `optimize` compacts them away
@@ -141,15 +142,20 @@ object IvfSearch {
           .select(col("qid"), col(d.idColumn), col("cosine"))
     }
     // appended leg: no cells, so every query scores the (small) slice —
-    // each query appears once in `q1` (probes fan it out nProbe times).
+    // one row per query row in `q1` (probes fan it out nProbe times).
     // An appended file may re-contain an already-indexed id (an
     // append-rewrite the lister can't pair with a delete); without the
     // per-(qid, id) dedup below the same neighbor id could occupy two
     // of the topK slots with different cosines. The appended (fresher)
-    // row wins; the extra window exists only under drift.
+    // row wins, and the dedup also collapses a query row given twice.
+    // The union is hash-partitioned on qid once: that satisfies both the
+    // dedup window's (qid, id) clustering and the rank window's qid, so
+    // the drifted search shuffles once, like the clean one.
     val all = appended match {
       case Some(app) =>
-        val q1 = probes.select(col("qid"), col("qv"), col("qn")).distinct()
+        val q1 = queryRows
+          .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
+          .filter(col("qn") > 0.0)
         val appScored = app
           .filter(col(d.vectorColumn).isNotNull)
           .select(col(d.idColumn).cast("long").as(d.idColumn),
@@ -163,6 +169,7 @@ object IvfSearch {
           .orderBy(col("__prio").desc)
         scored.withColumn("__prio", lit(0))
           .unionByName(appScored.withColumn("__prio", lit(1)))
+          .repartition(col("qid"))
           .withColumn("__rn", row_number().over(dedup))
           .filter(col("__rn") === 1)
           .drop("__prio", "__rn")

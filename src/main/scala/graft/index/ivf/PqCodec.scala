@@ -68,17 +68,21 @@ object PqCodec {
   /** Per-vector PQ codes against an explicit codebook: for each
     * subspace, the 1-BASED first-occurrence argmin of the strict-fold
     * squared L2 distance to each codeword (1-based to match DuckDB's
-    * list_position for oracle parity). The input must be `array<double>`
-    * (cast upstream) — see [[graft.functions.PqEncode]]. */
+    * list_position for oracle parity). `v` is any numeric array; one
+    * holding a null element encodes to null (see
+    * [[graft.functions.PqVector]]). */
   def codesCol(v: Column, cb: Seq[Seq[Seq[Double]]]): Column =
     GraftBridge.column(graft.functions.PqEncode(
-      GraftBridge.expression(v.cast("array<double>")), cbArray(cb)))
+      vector(v), cbArray(cb)))
+
+  private def vector(v: Column) =
+    graft.functions.PqVector(GraftBridge.expression(v))
 
   /** Per-query ADC lookup table: dot(query sub-vector, codeword) for
     * every (subspace, codeword) — numM x K doubles, tiny. */
   def queryTableCol(qv: Column, cb: Seq[Seq[Seq[Double]]]): Column =
     GraftBridge.column(graft.functions.PqQueryTable(
-      GraftBridge.expression(qv.cast("array<double>")), cbArray(cb)))
+      vector(qv), cbArray(cb)))
 
   /** ADC dot product: sum the table entries the codes select. */
   def adcDot(codes: Column, qtab: Column): Column =

@@ -100,6 +100,13 @@ object MinHashBuild {
       (0 until d.numPerm).map(permA), (0 until d.numPerm).map(permB), HashP)
   }
 
+  /** True exactly where [[sigCol]] is non-null: a doc has a 3-token
+    * shingle, so a signature, from 3 tokens on. Rows are filtered on this
+    * BEFORE signing: a filter on the signature column is pushed below the
+    * projection that computes it and would sign every row again. */
+  def signable(text: Column): Column =
+    size(TextPrimitives.tokens(text)) >= 3
+
   /** Band-key projections from a materialized [[SigColumn]]: comma-joined
     * row minima per band (identical to the operator/oracle derivation). */
   def bandCols(d: MinHashIndexDescriptor): Seq[Column] =
@@ -117,9 +124,9 @@ object MinHashBuild {
     val withLineage =
       graft.index.covering.CoveringIndexDescriptor.attachLineage(ctx, source)
     withLineage
+      .filter(signable(col(d.textColumn)))
       .select(col(d.idColumn).cast("long").as(d.idColumn),
         sigCol(d, col(d.textColumn)).as(SigColumn), col(LineageColumn))
-      .filter(col(SigColumn).isNotNull && size(col(SigColumn)) > 0)
       .select(col(d.idColumn) +: col(SigColumn) +:
         bandCols(d) :+ col(LineageColumn): _*)
   }
@@ -143,15 +150,16 @@ object MinHashBuild {
   }
 
   /** Read index data across version dirs (plain unpartitioned parquet —
-    * a flat path-list read; no per-dir basePath dance needed). */
+    * a flat path-list read; no per-dir basePath dance needed) under the
+    * logged `schemaJson` (see [[graft.index.IndexData]]). */
   def readIndexData(spark: SparkSession,
-      content: graft.index.ContentMeta): DataFrame =
+      content: graft.index.ContentMeta, schemaJson: String = ""): DataFrame =
     // relation resolution per search; the file set is immutable for a
     // given log entry — cache the resolved logical plan per session
     // (execution still reads the parquet each time; PlanArtifacts)
     graft.index.rules.PlanArtifacts.getOrCompute[DataFrame](
         spark, "mhdata#" + content.filePaths.mkString("|")) {
-      spark.read.parquet(content.filePaths: _*)
+      graft.index.IndexData.parquet(spark, schemaJson, content.filePaths)
     }
 
   /** Drop tombstoned rows (plus any `extraFids` — query-time drift
@@ -176,7 +184,8 @@ object MinHashBuild {
     val threshold = graft.index.GraftConf.optimizeFileSizeThreshold(ctx.spark)
     val files = math.max(1,
       math.ceil(smallContent.totalSize.toDouble / threshold).toInt)
-    write(ctx, antiTombstone(readIndexData(ctx.spark, smallContent), d)
+    write(ctx, antiTombstone(
+        readIndexData(ctx.spark, smallContent, d.schemaJson), d)
       .coalesce(files))
   }
 }

@@ -25,29 +25,30 @@ object Pipeline {
     * composite curation pipeline. These are the Gopher-style repetition
     * signals a corpus pipeline gates on before training.
     *
-    * Scale shape: the array-expression metrics (counts, distinct sizes)
-    * are a pure codegen map over the scan; only the top-token share
-    * needs a (doc_id, token) aggregation, which partial-aggregates
-    * map-side and shuffles one row per distinct token per doc. The final
-    * doc-granular join co-partitions on doc_id. No UDFs, no collect. */
-  def qualityMetrics(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+    * Scale shape: one map over the scan. The counts and distinct sizes
+    * are array expressions and the top-token count is the native
+    * [[graft.functions.TopTokenCount]] hash count, so no metric needs a
+    * shuffle or a join back onto the doc row, and every input row gets
+    * the metrics of its own text (a repeated doc_id stays two rows).
+    * Rows with a null id or null text have no tokens to count and are
+    * dropped, as the oracle's join drops them. `carry` names input
+    * columns passed through beside the metrics. No UDFs, no collect. */
+  def qualityMetrics(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val base = docs
+      .filter(col("doc_id").isNotNull && col("text").isNotNull)
+      .select(col("doc_id") +: tokens(col("text")).as("toks") +:
+        carry.map(col): _*)
     val bigrams = expr(
       "transform(sequence(1, size(toks) - 1), i -> concat(toks[i-1], ' ', toks[i]))")
-    val exprMetrics = base.select(
-      col("doc_id"),
+    val metrics = Seq(
       size(col("toks")).cast(LongType).as("n_tokens"),
       size(array_distinct(col("toks"))).cast(LongType).as("n_distinct"),
       when(size(col("toks")) >= 2, size(array_distinct(bigrams)).cast(LongType))
         .otherwise(0L).as("d_bigram"),
       when(size(col("toks")) >= 2, (size(col("toks")) - 1).cast(LongType))
         .otherwise(0L).as("n_bigram"),
-      col("toks"))
-    val topTok = exprMetrics
-      .select(col("doc_id"), explode(col("toks")).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id")).agg(max(col("c")).cast(LongType).as("top_cnt"))
-    exprMetrics.drop("toks").join(topTok, "doc_id")
+      graft.functions.TokenFunctions.topTokenCount(col("toks")).as("top_cnt"))
+    base.select((col("doc_id") +: metrics) ++ carry.map(col): _*)
   }
 
   /** Row shape of [[qualityMetrics]], for the typed gate below. */

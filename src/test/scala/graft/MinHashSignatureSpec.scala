@@ -120,4 +120,42 @@ class MinHashSignatureSpec extends AnyFunSuite {
         shingles3(tokens(col("text"))).as("c"))
       .filter(not(col("f") <=> col("c"))).count() === 0L)
   }
+
+  test("minhash_estimate == the zip_with/filter slot-agreement fraction") {
+    import spark.implicits._
+    val sigs = Tables.load(spark, TestSpark.sfDir, "documents")
+      .select(col("doc_id"), shingleHashSet(col("text")).as("hs"))
+      .select(col("doc_id"), sigCol.as("s"))
+      .filter(col("s").isNotNull)
+    val pairs = sigs.as("a").join(sigs.as("b"),
+        col("a.doc_id") < col("b.doc_id") && col("b.doc_id") - col("a.doc_id") <= 3)
+      .select(col("a.s").as("s1"), col("b.s").as("s2"))
+      .unionByName(Seq((Seq(1L, 2L, 3L), Seq(1L, 5L)), (Seq(7L), Seq(7L)))
+        .toDF("s1", "s2"))
+    val hof = size(filter(zip_with(col("s1"), col("s2"), (x, y) => x === y),
+      b => b)).cast("double") / MinHashK.toDouble
+    val fast = graft.functions.MinHashFunctions
+      .minhashEstimate(col("s1"), col("s2"), MinHashK)
+    val diff = pairs.select(fast.as("f"), hof.as("h"))
+      .filter(not(col("f") <=> col("h"))).count()
+    assert(diff === 0L)
+    assert(pairs.filter(fast > 0.0).count() > 0L)
+  }
+
+  test("top_token_count == max count over exploded tokens, row by row") {
+    import spark.implicits._
+    val docs = Tables.load(spark, TestSpark.sfDir, "documents")
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .unionByName(Seq((-1L, Seq("a", "b", "a")), (-2L, Seq.empty[String]))
+        .toDF("doc_id", "toks"))
+    val top = graft.functions.TokenFunctions.topTokenCount(col("toks"))
+    val relational = docs.select(col("doc_id"), explode(col("toks")).as("t"))
+      .groupBy(col("doc_id"), col("t")).count()
+      .groupBy(col("doc_id")).agg(max(col("count")).as("rel"))
+    val cmp = docs.select(col("doc_id"), top.as("fast"))
+      .join(relational, Seq("doc_id"), "left")
+      .select(col("fast"), coalesce(col("rel"), lit(0L)).as("rel"))
+    assert(cmp.filter(not(col("fast") <=> col("rel"))).count() === 0L)
+    assert(docs.filter(col("doc_id") === -1L).select(top).head.getLong(0) == 2L)
+  }
 }

@@ -463,11 +463,19 @@ class PlanAuditSpec extends AnyFunSuite {
       "ranker picked the wider equivalent index for the one-sided join")
   }
 
-  test("text_quality: aggregations run partial + final") {
+  test("text_quality: metrics run map-side, the final sort's exchange is " +
+      "the only one") {
+    // every metric is a row-wise expression: no aggregation to split into
+    // partial + final, no join back, and nothing shuffled but the ordering
     val nodes = executed(SparkEntry.queries("text_quality")(spark, TestSpark.sfDir))
     val aggs = nodes.count(n => n.isInstanceOf[HashAggregateExec] ||
       n.isInstanceOf[ObjectHashAggregateExec])
-    assert(aggs >= 2, s"expected partial+final aggregation, found $aggs")
+    assert(aggs == 0, s"expected no aggregation, found $aggs")
+    val exchanges = nodes.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+    assert(exchanges.size == 1 && exchanges.head.isInstanceOf[
+      org.apache.spark.sql.execution.exchange.ShuffleExchangeExec],
+      s"expected the sort's range exchange alone, found $exchanges")
   }
 
   test("TPC-H: no explicit broadcast hint targets an sf-proportional relation") {

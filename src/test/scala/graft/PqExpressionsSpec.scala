@@ -84,4 +84,49 @@ class PqExpressionsSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project [graft_pq_adc_dot"),
       s"PQ Project not codegen'd in:\n$plan")
   }
+
+  test("codebook expressions compare and hash by codebook content") {
+    import org.apache.spark.sql.classic.GraftBridge
+    import graft.functions.{PqEncode, PqQueryTable}
+    def arr(c: Seq[Seq[Seq[Double]]]) = c.map(_.map(_.toArray).toArray).toArray
+    val v = GraftBridge.expression(col("v"))
+    val other = cb.updated(0, cb(0).updated(0, cb(0)(0).map(_ + 1.0)))
+    // two copies of one codebook: distinct arrays, equal content
+    assert(PqEncode(v, arr(cb)) == PqEncode(v, arr(cb)))
+    assert(PqEncode(v, arr(cb)).hashCode == PqEncode(v, arr(cb)).hashCode)
+    assert(PqEncode(v, arr(cb)) != PqEncode(v, arr(other)))
+    assert(PqQueryTable(v, arr(cb)) == PqQueryTable(v, arr(cb)))
+    assert(PqQueryTable(v, arr(cb)).hashCode == PqQueryTable(v, arr(cb)).hashCode)
+    assert(PqQueryTable(v, arr(cb)) != PqQueryTable(v, arr(other)))
+    // so two spellings of one encode over one input are one subexpression
+    val plan = emb.select(PqCodec.codesCol(col("v"), cb).as("a"),
+      PqCodec.codesCol(col("v"), cb).as("b")).queryExecution.optimizedPlan
+    val encodes = plan.expressions.flatMap(_.collect { case e: PqEncode => e })
+    assert(encodes.size == 2 && encodes(0).semanticEquals(encodes(1)))
+  }
+
+  test("codebook expressions refuse inputs that may hold null elements; " +
+      "the column API turns a null element into a null result") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.functions.{PqEncode, PqQueryTable}
+    val cbArr = cb.map(_.map(_.toArray).toArray).toArray
+    def vec(containsNull: Boolean) = Literal.create(
+      new GenericArrayData(Array.fill[Any](64)(0.5)),
+      ArrayType(DoubleType, containsNull))
+    assert(PqEncode(vec(true), cbArr).checkInputDataTypes().isFailure)
+    assert(PqQueryTable(vec(true), cbArr).checkInputDataTypes().isFailure)
+    assert(PqEncode(vec(false), cbArr).checkInputDataTypes().isSuccess)
+    assert(PqQueryTable(vec(false), cbArr).checkInputDataTypes().isSuccess)
+
+    val full = array_repeat(lit(0.5), 64)
+    val holed = transform(full, (x, i) => when(i === 3, lit(null)).otherwise(x))
+    val row = spark.range(1).select(
+      PqCodec.codesCol(holed, cb).as("c_null"),
+      PqCodec.queryTableCol(holed, cb).as("q_null"),
+      PqCodec.codesCol(full, cb).as("c")).head()
+    assert(row.isNullAt(0) && row.isNullAt(1))
+    assert(!row.isNullAt(2))
+  }
 }

@@ -595,6 +595,57 @@ class IvfIndexSpec extends AnyFunSuite {
       val cos0 = top.find(_.getLong(1) == 0L).map(_.getDouble(2))
       assert(cos0.exists(c => math.abs(c - 1.0) < 1e-9),
         s"appended rewrite of vec 0 not the served row: cosine=$cos0")
+
+      // two appended files share an id: the rewrite lands twice
+      embeddings.filter(col("vec_id") === 1L)
+        .withColumn("vec_id", lit(0L))
+        .coalesce(1).write.mode("append").parquet(src)
+      val top2 = g.annSearch("ann_rw", queries, topK = 10, nProbe = 4).collect()
+      val idCounts2 = top2.groupBy(_.getLong(1)).view.mapValues(_.length)
+      assert(idCounts2.forall(_._2 == 1),
+        s"neighbor id ranked twice with two appended rows of it: $idCounts2")
+      assert(top2.find(_.getLong(1) == 0L)
+        .exists(r => math.abs(r.getDouble(2) - 1.0) < 1e-9))
+      assert(top2.map(_.getInt(3)).sorted.toSeq == (1 to top2.length))
+    } finally {
+      spark.conf.unset(GraftConf.SystemPathKey)
+      spark.conf.unset(GraftConf.IvfStaleCheckKey)
+      rules.IndexCatalog.invalidate(spark)
+    }
+  }
+
+  test("a drifted search shuffles once") {
+    val sys = Files.createTempDirectory("graft-ivf-shape-").toString
+    val src = Files.createTempDirectory("graft-ivf-shapesrc-").toString
+    spark.conf.set(GraftConf.SystemPathKey, sys)
+    spark.conf.set(GraftConf.IvfStaleCheckKey, "strict")
+    try {
+      val g = new Graft(spark)
+      embeddings.filter(col("vec_id") < 400).repartition(2)
+        .write.mode("overwrite").parquet(src)
+      g.createIndex(spark.read.parquet(src),
+        IvfIndexConfig("ann_shape", "vec_id", "embedding", k = 4, maxIter = 2))
+      embeddings.filter(col("vec_id").between(400L, 420L))
+        .coalesce(1).write.mode("append").parquet(src)
+      val queries = embeddings.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val res = g.annSearch("ann_shape", queries, topK = 5, nProbe = 2)
+      // the initial plan: the union's qid partitioning serves both the
+      // (qid, id) dedup window and the rank window
+      def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+          : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          nodes(a.executedPlan)
+        case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+      }
+      val shuffles = nodes(res.queryExecution.executedPlan).collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+      assert(shuffles.size == 1, s"${shuffles.size} shuffles:\n" +
+        res.queryExecution.executedPlan)
+      // appended vectors are served: an appended query finds itself
+      val rows = res.collect()
+      assert(rows.exists(r => r.getLong(0) == 400L && r.getLong(1) == 400L))
     } finally {
       spark.conf.unset(GraftConf.SystemPathKey)
       spark.conf.unset(GraftConf.IvfStaleCheckKey)

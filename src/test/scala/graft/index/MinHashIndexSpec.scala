@@ -241,11 +241,19 @@ class MinHashIndexSpec extends AnyFunSuite {
     }
   }
 
+  /** Every node of a physical plan: through adaptive plans, query
+    * stages, reused exchanges and subqueries. */
   private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      p +: allNodes(a.executedPlan)
-    case other => p +: (other.children ++ other.subqueries).flatMap(allNodes)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children ++ other.subqueries
+    }
+    p +: inner.flatMap(allNodes)
   }
 
   test("deletes tombstone (no data rewrite); optimize full compacts them away") {
@@ -395,7 +403,138 @@ class MinHashIndexSpec extends AnyFunSuite {
           case r if r.getLong(0) == 1L && r.getLong(1) == 2L => r.getDouble(2) }
         assert(est12.contains(1.0),
           s"appended rewrite of doc 1 not the served row: est=$est12")
+
+        // two appended files share an id: the rewrite lands twice
+        Seq((1L, doc2Text)).toDF("doc_id", "text")
+          .coalesce(1).write.mode("append").parquet(src)
+        val again = g.nearDuplicates("mh_rewrite", minEstJaccard = 0.0)
+          .select(col("id1"), col("id2"), col("est_jaccard")).collect()
+        val keys2 = again.map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(keys2.distinct.length == keys2.length,
+          "duplicate (id1,id2) pairs with two appended rows of one id")
+        assert(again.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L &&
+          r.getDouble(2) == 1.0))
+        // a batch probe sees the appended doc 1 once, and never the
+        // superseded persisted row — even where only that row collides
+        val doc1Text = spark.read.parquet(src)
+          .filter(col("doc_id") === 1L && col("text") =!= doc2Text)
+          .select(col("text")).collect().head.getString(0)
+        val probe = Seq((77L, doc2Text), (78L, doc1Text)).toDF("new_id", "text")
+        val hits = g.dedupBatch("mh_rewrite", probe, "new_id", "text", 1.0)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(hits.distinct.length == hits.length, s"duplicate hits: $hits")
+        assert(hits.contains((77L, 1L)) && hits.contains((77L, 2L)))
+        assert(!hits.contains((78L, 1L)),
+          "the persisted row of a rewritten id was served")
       } finally spark.conf.unset(GraftConf.IvfStaleCheckKey)
+    }
+  }
+
+  test("curateBatch gates a repeated id per row and returns each surviving " +
+      "row once") {
+    withDirs { (g, src) =>
+      writeDocs(src)
+      g.createIndex(spark.read.parquet(src),
+        MinHashIndexConfig("mh_rep", "doc_id", "text"))
+      import spark.implicits._
+      val clean = (0 until 25).map(i => s"alpha$i").mkString(" ")
+      val clean2 = (0 until 25).map(i => s"beta$i").mkString(" ")
+      val junk = Seq.fill(30)("junk").mkString(" ")
+      val batch = Seq(
+        (5L, clean), (5L, clean), // the same row twice: both kept, once each
+        (6L, clean2), (6L, junk)  // one id, two texts: only the clean one
+      ).toDF("new_id", "text")
+      val got = g.curateBatch("mh_rep", batch, "new_id", "text")
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      assert(got == Seq((5L, clean), (5L, clean), (6L, clean2)), got.toString)
+    }
+  }
+
+  test("curateBatch plan: the batch is signed once and no shuffle carries a " +
+      "signature, drifted corpus included") {
+    withDirs { (g, src) =>
+      writeDocs(src)
+      g.createIndex(spark.read.parquet(src),
+        MinHashIndexConfig("mh_shape", "doc_id", "text"))
+      // drift, so the appended leg is in the plan too
+      spark.read.parquet(src).filter(col("doc_id").isin(1L, 2L))
+        .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
+        .coalesce(1).write.mode("append").parquet(src)
+      val docs = spark.read.parquet(src)
+      val batchDir = Files.createTempDirectory("graft-mh-shape-").toString
+      import spark.implicits._
+      val unseen = Seq((1L, (0 until 25).map(i => s"gamma$i").mkString(" ")))
+        .toDF("new_id", "text")
+      docs.filter(col("doc_id") <= 40L)
+        .select((col("doc_id") + 900000L).as("new_id"), col("text"))
+        .unionByName(docs.filter(col("doc_id") <= 40L)
+          .select((col("doc_id") + 800000L).as("new_id"), col("text")))
+        .unionByName(unseen)
+        .coalesce(2).write.mode("overwrite").parquet(batchDir)
+      val batch = spark.read.parquet(batchDir)
+
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+        (String, org.apache.spark.sql.execution.SparkPlan)]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          plans.add((f, qe.executedPlan))
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.conf.set(GraftConf.IvfStaleCheckKey, "strict")
+      spark.listenerManager.register(listener)
+      val kept =
+        try {
+          val rows = g.curateBatch("mh_shape", batch, "new_id", "text").collect()
+          val deadline = System.currentTimeMillis() + 20000
+          while (!plans.toArray.exists(_.asInstanceOf[(String, _)]._1 == "collect") &&
+              System.currentTimeMillis() < deadline) Thread.sleep(50)
+          rows
+        } finally {
+          spark.listenerManager.unregister(listener)
+          spark.conf.unset(GraftConf.IvfStaleCheckKey)
+        }
+      // every planted copy collides with the corpus (and the 8000xx
+      // copies with the 9000xx ones); the unseen doc survives
+      assert(kept.map(_.getAs[Long]("new_id")).toSeq == Seq(1L),
+        kept.toSeq.toString)
+
+      import scala.jdk.CollectionConverters._
+      val executed = plans.asScala.toSeq.map(_._2)
+      // the batch is read from its files or from a checkpoint of it (the
+      // only RDD scans in these plans)
+      def readsBatch(p: org.apache.spark.sql.execution.SparkPlan) =
+        allNodes(p).exists {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.exists(_.toString.contains(batchDir))
+          case _: org.apache.spark.sql.execution.RDDScanExec => true
+          case _ => false
+        }
+      val signing = executed.flatMap(allNodes).filter(n =>
+        n.expressions.exists(_.exists(
+          _.isInstanceOf[graft.functions.MinHashSignature])) && readsBatch(n))
+      assert(signing.size == 1,
+        s"minhash_signature evaluated over the batch ${signing.size} times")
+      val exchanges = executed.flatMap(allNodes).collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      assert(exchanges.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]),
+        "the drifted corpus leg should shuffle its (small) hits once")
+      exchanges.foreach { e =>
+        assert(!e.output.exists(_.name == MinHashBuild.SigColumn),
+          s"an exchange outputs ${MinHashBuild.SigColumn}: $e")
+        // the broadcast of the batch's band rows carries the batch's
+        // signatures by design; no shuffle carries any
+        if (e.isInstanceOf[
+            org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
+          assert(!e.output.exists(_.dataType ==
+            org.apache.spark.sql.types.ArrayType(
+              org.apache.spark.sql.types.LongType, false)),
+            s"a shuffle carries a signature: $e")
+      }
     }
   }
 }
