@@ -334,6 +334,18 @@ final class IndexManager(spark: SparkSession) {
         IndexState.Refreshing, IndexState.Active) { latest =>
       val delta = sourceDelta(latest)
       val SourceDelta(tracker, source, currentRels, appended, deleted) = delta
+      // a lake snapshot with live row-level deletes drops rows its files
+      // still hold: no file-level delta describes that
+      if (!delta.isEmpty &&
+          SourceRelation.collectLeaves(source).exists(_.liveDeletes)) {
+        throw new UnsupportedOperationException(
+          s"incremental refresh of '$name': the source lake table " +
+            s"${currentRels.flatMap(_.rootPaths).mkString(", ")} carries " +
+            "live row-level deletes (deletion vectors or delete files), " +
+            "which an index cannot fold in incrementally. Run " +
+            "LakeTable.compact on the table first, or " +
+            s"refreshIndex(\"$name\", \"full\").")
+      }
       if (delta.isEmpty) clearUpdate(latest)
       else Some { () =>
         val version = nextVersion(name)

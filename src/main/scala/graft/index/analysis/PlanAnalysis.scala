@@ -271,15 +271,19 @@ object PlanAnalysis {
     leaves.foreach { leaf =>
       val schemaOk = e.descriptor.referencedColumns.forall(c =>
         graft.index.NestedColumns.resolvableIn(leaf.plan.output, c, resolver))
-      // merge-on-read plans: AddMetadataColumns materializes `_metadata`
-      // into the relation output when the delete anti-join consumes it —
+      // a lake leaf with live deletes never has candidates
+      // (IndexCandidates.collect); AddMetadataColumns materializes
+      // `_metadata` into the relation output when the plan consumes it —
       // the exact condition under which every coverage check refuses
-      // (MetadataGuardSpec pins the refusal; this names the reason)
-      if (leaf.plan.output.exists(_.name == "_metadata")) {
-        // a schema-level mismatch report would mislead here — the real
-        // blocker is the MOR anti-join, not column resolution
+      // (MetadataGuardSpec pins the refusal). A schema-level mismatch
+      // report would mislead for either: name the real blockers.
+      val blockers =
+        (if (leaf.liveDeletes) Seq(LiveLakeDeletes()) else Nil) ++
+          (if (leaf.plan.output.exists(_.name == "_metadata"))
+            Seq(MergeOnReadMetadata()) else Nil)
+      if (blockers.nonEmpty) {
         schemaMatchedSomewhere = true
-        reasons += MergeOnReadMetadata()
+        reasons ++= blockers
       } else if (schemaOk) {
         schemaMatchedSomewhere = true
         candidates.get(leaf.plan).flatMap(_.find(_.entry.name == e.name)) match {

@@ -33,11 +33,17 @@ object Reasons {
       extends Reason("ANOTHER_INDEX_APPLIED") {
     def detail = s"another candidate index is applied: $appliedIndex"
   }
+  final case class LiveLakeDeletes()
+      extends Reason("LIVE_LAKE_DELETES") {
+    def detail = "the lake snapshot applies row-level deletes in its scan " +
+      "(Delta deletion vectors / Iceberg delete files); an index over its " +
+      "files would resurrect deleted rows. LakeTable.compact materializes " +
+      "the deletes"
+  }
   final case class MergeOnReadMetadata()
       extends Reason("MERGE_ON_READ_METADATA") {
-    def detail = "plan consumes _metadata columns (merge-on-read delete " +
-      "anti-join: Iceberg v2 / Delta deletion vectors); substituting the " +
-      "scan would perturb (file_path, row_index) and resurrect deleted rows"
+    def detail = "plan consumes _metadata columns; substituting the scan " +
+      "would perturb (file_path, row_index)"
   }
   final case class Outscored()
       extends Reason("OUTSCORED") {

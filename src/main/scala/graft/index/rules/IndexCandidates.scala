@@ -86,7 +86,9 @@ object IndexCandidates {
    * filter) and the captured source either matches the leaf's current
    * file set exactly, or overlaps within the hybrid-scan thresholds
    * (appended ≤ 30% of current bytes, deleted ≤ 20% of indexed bytes —
-   * reference: IndexConstants.scala:42-52).
+   * reference: IndexConstants.scala:42-52). A lake leaf with live
+   * row-level deletes has no candidate: its scan drops rows its files
+   * still hold, so any index over those files would resurrect them.
    */
   /** Test-visible invocation counter: collect() walks the source file
     * listing, so diagnostics paths (whyNot) are pinned to exactly ONE
@@ -103,7 +105,7 @@ object IndexCandidates {
     val maxAppendedRatio = GraftConf.hybridMaxAppendedRatio(spark)
     val maxDeletedRatio = GraftConf.hybridMaxDeletedRatio(spark)
 
-    sourceLeaves(spark, plan).flatMap { leaf =>
+    sourceLeaves(spark, plan).filterNot(_.liveDeletes).flatMap { leaf =>
       lazy val current = currentFiles(leaf)
       lazy val currentKeys = current.map(key).toSet
       lazy val currentBytes = current.map(_.size).sum

@@ -206,6 +206,14 @@ object DeltaDeletionVectors {
     data
   }
 
+  /** The bytes of a whole DV file. */
+  def readFile(fs: FileSystem, p: Path): Array[Byte] = {
+    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    val in = fs.open(p)
+    try in.readFully(0, buf) finally in.close()
+    buf
+  }
+
   /** Positions deleted by a descriptor: inline DVs decode directly,
     * file-backed ones from the already-read file bytes. */
   def positionsOf(d: DvDescriptor, fileBytes: Option[Array[Byte]]): Array[Long] =

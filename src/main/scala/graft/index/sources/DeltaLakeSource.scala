@@ -47,11 +47,15 @@ final class DeltaLakeSource extends SourceProvider {
         override def schemaJson: String = rel.schema.json
         override def format: String = "delta"
         override def options: Map[String, String] = rel.options
+        // deletion-vector files list beside the data files: a delete
+        // shows up as drift, as an appended file
         override def listFiles(): Seq[(String, Long, Long)] =
           rel.location.listFiles(Nil, Nil).flatMap(_.files).map(s =>
-            (s.getPath.toString, s.getLen, s.getModificationTime))
+            (s.getPath.toString, s.getLen, s.getModificationTime)) ++
+            LakeDeletes.listSources(rel.options)
         override def signature(files: Seq[FileMeta]): String =
           versionSignature(version, rootPaths)
+        override def liveDeletes: Boolean = LakeDeletes.live(rel.options)
       })
     case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] &&
         l.relation.asInstanceOf[HadoopFsRelation].location.getClass.getName

@@ -108,8 +108,8 @@ object DeltaLog {
 
   /** Reader features this replay genuinely implements. `timestampNtz`
     * is type-level only (Spark's parquet reader handles TIMESTAMP_NTZ
-    * natively); `deletionVectors` is merge-on-read via the
-    * (`_metadata.file_path`, `row_index`) anti-join in
+    * natively); `deletionVectors` is merge-on-read via the in-scan
+    * (`_metadata.file_path`, `row_index`) filter of
     * [[DeltaTable.read]]; `columnMapping` resolves scans by
     * physicalName ([[DeltaColumnMapping]]); `v2Checkpoint` replays
     * UUID-named checkpoints and their `_sidecars/` add-files (the
@@ -909,10 +909,19 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     * `basePath` (hive-style layout, which [[create]] and the delta
     * writers both produce). Historic reads work because Delta never
     * rewrites data files in place — an overwritten version's files stay
-    * on disk until VACUUM. */
+    * on disk until VACUUM.
+    *
+    * DELETION-VECTOR merge-on-read happens inside the scan: one
+    * `NOT row_deleted(_metadata.file_path, _metadata.row_index)` filter
+    * ([[LakeDeletes]]) carries each DV-bearing file's descriptor, and
+    * each task decodes the DVs of the files it reads — file-backed ones
+    * straight from the DV file, inline ones from the descriptor. The
+    * read stays one source leaf with one scan stage; nothing is decoded
+    * on the driver and no join or broadcast exchange is planned. */
   def read(spark: SparkSession, root: String,
       versionAsOf: Option[Long] = None,
       withRowIds: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, regexp_replace}
     val s = DeltaLog.snapshot(spark, root, versionAsOf)
     if (withRowIds) {
       require(s.configuration
@@ -938,10 +947,16 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     // skipping below stays consistent)
     val cmMode = DeltaColumnMapping.mode(s.configuration)
     val readSchema = physicalSchemaOf(s)
-    val raw = maybeBasePath(spark, root, spark.read
+    val dvs = LakeDeletes.deletionVectors(s.files, new Path(root))
+    val reader = spark.read
       .schema(readSchema)
       .option(RootOption, root)
-      .option(VersionOption, s.version.toString), s.files.map(_.path))
+      .option(VersionOption, s.version.toString)
+    val raw = maybeBasePath(spark, root,
+      if (dvs.isEmpty) reader
+      else reader.option(LakeDeletes.SourcesOption,
+        LakeDeletes.sourcesValue(LakeDeletes.sourceFiles(dvs))),
+      s.files.map(_.path))
       .parquet(s.files.map(_.path): _*)
     // log-level FILE SKIPPING: filtered scans list only the files whose
     // `add.stats` ranges can match the pushed-down predicates — at
@@ -950,88 +965,35 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val statsByPath: Map[String, FileStats] = s.files.flatMap(f =>
       f.stats.flatMap(DeltaStats.parse(_, readSchema))
         .map(fs => normPath(f.path) -> fs)).toMap
-    val data = StatsPruning.wrap(raw, statsByPath)
-    val withDv = s.files.filter(_.dv.exists(_.cardinality > 0L))
-    // row ids ride the same (file, position) identity the DV path uses:
-    // `_row_id = baseRowId + row_index`, attached via a broadcast join
-    // on the O(files) (path → baseRowId) map — never a shuffle of the
-    // data side
-    def attachRowIds(df: DataFrame, pathCol: org.apache.spark.sql.Column,
-        idxCol: org.apache.spark.sql.Column): DataFrame = {
-      if (!withRowIds) return df
-      import org.apache.spark.sql.functions.{broadcast, col}
+    val pruned = StatsPruning.wrap(raw, statsByPath)
+    val data =
+      if (dvs.isEmpty) pruned
+      else pruned.filter(!LakeDeletes.rowDeleted(spark, dvs))
+    // row ids ride the (file, position) identity: `_row_id = baseRowId +
+    // row_index`, attached via a broadcast join on the O(files)
+    // (path → baseRowId) map — never a shuffle of the data side
+    val withIds = if (!withRowIds) data else {
       val fileIds = spark.createDataFrame(s.files.map(f =>
           (normPath(f.path), f.baseRowId.get,
             f.defaultRowCommitVersion.getOrElse(-1L))))
         .toDF("__rt_path", "__rt_base", "__rt_dcv")
-      df.withColumn("__rt_p", pathCol).withColumn("__rt_idx", idxCol)
+      data
+        .withColumn("__rt_p",
+          regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
+        .withColumn("__rt_idx", col("_metadata.row_index"))
         .join(broadcast(fileIds), col("__rt_p") === col("__rt_path"), "left")
         .withColumn("_row_id", col("__rt_base") + col("__rt_idx"))
         .withColumn("_row_commit_version", col("__rt_dcv"))
         .drop("__rt_p", "__rt_idx", "__rt_path", "__rt_base", "__rt_dcv")
     }
-    val afterDv = if (withDv.isEmpty) {
-      import org.apache.spark.sql.functions.{col, regexp_replace}
-      attachRowIds(data,
-        regexp_replace(col("_metadata.file_path"), "^file:/+", "/"),
-        col("_metadata.row_index"))
-    } else {
-      // DELETION-VECTOR merge-on-read: drop (file, position) pairs named
-      // by the DVs with an anti-join on (`_metadata.file_path`,
-      // `_metadata.row_index`) — the mirror of the Iceberg v2
-      // positional-delete path (IcebergTable.read). The build side is
-      // the decoded DV positions (small relative to data by
-      // construction — DVs accumulate until compaction), so Spark's
-      // size-based planning broadcasts it; the data side never shuffles.
-      // DV files are decoded ON EXECUTORS via the binaryFile source
-      // (one task per DV file), so a large delete never bottlenecks the
-      // driver; inline DVs are spec-bounded tiny and decode locally.
-      import spark.implicits._
-      import org.apache.spark.sql.functions.{col, regexp_replace}
-      val rootPath = new Path(root)
-      val (inline, fileBacked) = withDv.partition(_.dv.get.storageType == "i")
-      val byDvFile: Map[String, Seq[(String, DvDescriptor)]] = fileBacked
-        .map(f => (f.dv.get.absolutePath(rootPath).get.toString,
-          (normPath(f.path), f.dv.get)))
-        .groupBy(_._1).map { case (k, v) => normPath(k) -> v.map(_._2) }
-      val fromFiles: org.apache.spark.sql.Dataset[(String, Long)] =
-        if (byDvFile.isEmpty) spark.emptyDataset[(String, Long)]
-        else spark.read.format("binaryFile")
-          .load(byDvFile.keys.toSeq: _*)
-          .select(col("path"), col("content")).as[(String, Array[Byte])]
-          .flatMap { case (p, bytes) =>
-            byDvFile(normPath(p)).iterator.flatMap { case (dataPath, d) =>
-              DeltaDeletionVectors.positionsOf(d, Some(bytes)).iterator
-                .map(pos => (dataPath, pos))
-            }
-          }
-      val fromInline = spark.createDataset(inline.flatMap(f =>
-        DeltaDeletionVectors.positionsOf(f.dv.get, None)
-          .map(pos => (normPath(f.path), pos))))
-      val dels = fromFiles.union(fromInline)
-        .toDF("__del_path", "__del_pos")
-      def norm(c: org.apache.spark.sql.Column) =
-        regexp_replace(c, "^file:/+", "/")
-      val withPos = data
-        .withColumn("__path", norm(col("_metadata.file_path")))
-        .withColumn("__pos", col("_metadata.row_index"))
-      val survived = withPos.join(dels,
-        withPos("__path") === dels("__del_path") &&
-          withPos("__pos") === dels("__del_pos"), "left_anti")
-      // row ids attach AFTER the anti-join (the surviving rows only),
-      // reusing the already-normalized (__path, __pos) identity
-      attachRowIds(survived, col("__path"), col("__pos"))
-        .drop("__path", "__pos")
-    }
-    if (cmMode == "none") afterDv
-    else DeltaColumnMapping.toLogical(afterDv, s.schema,
+    if (cmMode == "none") withIds
+    else DeltaColumnMapping.toLogical(withIds, s.schema,
       keep = if (withRowIds) Seq("_row_id", "_row_commit_version") else Nil)
   }
 
-  /** Scheme-normalize a path string the way the read-side columns are
-    * normalized (`_metadata.file_path` and binaryFile's `path` are
-    * `file:`-qualified; log paths are usually bare). Serializable-pure:
-    * used inside executor closures. */
+  /** Scheme-normalize a path string: `_metadata.file_path` is
+    * `file:`-qualified, log paths are usually bare, and the delete
+    * writers store the bare form. Serializable-pure: used on executors. */
   private[sources] def normPath(p: String): String =
     p.replaceFirst("^file:/+", "/")
 
@@ -1223,34 +1185,13 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           val removed = spark.read.schema(physSchema)
             .option("basePath", rootStr)
             .parquet(a.removesDc.map(resolve): _*)
-          val priorDv = DeltaLog.snapshot(spark, rootStr, Some(v - 1)).files
-            .filter(f => a.removesDc.map(resolve).map(normPath)
-              .contains(normPath(f.path)))
-            .filter(_.dv.exists(_.cardinality > 0L))
-          val alive = if (priorDv.isEmpty) removed
-          else {
-            import spark.implicits._
-            import org.apache.spark.sql.functions.regexp_replace
-            val dels = spark.createDataset(priorDv.flatMap { f =>
-              val bytes = f.dv.flatMap(_.absolutePath(root)).map { p =>
-                val len = fs.getFileStatus(p).getLen.toInt
-                val buf = new Array[Byte](len)
-                val in = fs.open(p)
-                try in.readFully(0, buf) finally in.close()
-                buf
-              }
-              DeltaDeletionVectors.positionsOf(f.dv.get, bytes)
-                .map(pos => (normPath(f.path), pos))
-            }).toDF("__del_path", "__del_pos")
-            val withPos = removed
-              .withColumn("__path",
-                regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
-              .withColumn("__pos", col("_metadata.row_index"))
-            withPos.join(dels,
-              withPos("__path") === dels("__del_path") &&
-                withPos("__pos") === dels("__del_pos"), "left_anti")
-              .drop("__path", "__pos")
-          }
+          val removedPaths = a.removesDc.map(resolve).map(normPath).toSet
+          val priorDv = LakeDeletes.deletionVectors(
+            DeltaLog.snapshot(spark, rootStr, Some(v - 1)).files
+              .filter(f => removedPaths.contains(normPath(f.path))), root)
+          val alive =
+            if (priorDv.isEmpty) removed
+            else removed.filter(!LakeDeletes.rowDeleted(spark, priorDv))
           Some(stamp(alive.withColumn("_change_type", lit("delete")), v, a.ts))
         } else {
           throw new UnsupportedDeltaProtocolException(
@@ -1462,13 +1403,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           val fs = tableRoot.getFileSystem(confW.value)
           val dvCache = mutable.Map.empty[String, Array[Byte]]
           def fileBytes(p: Path): Array[Byte] =
-            dvCache.getOrElseUpdate(p.toString, {
-              val len = fs.getFileStatus(p).getLen.toInt
-              val buf = new Array[Byte](len)
-              val in = fs.open(p)
-              try in.readFully(0, buf) finally in.close()
-              buf
-            })
+            dvCache.getOrElseUpdate(p.toString, DeltaDeletionVectors.readFile(fs, p))
           val merged = items.toSeq.map { case (p, bytes, card) =>
             existingB.value.get(p) match {
               case Some(old) =>
@@ -1720,7 +1655,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
             "assigns identity values automatically")
       }
     }
-    val (src, dels, ups) =
+    val LakeDml.MergeSource(src, dels, ups, srcBounds) =
       LakeDml.mergeSource(rootStr, source, keys, deleteCondition, prior.schema)
     val cmMode = DeltaColumnMapping.mode(prior.configuration)
     val physParts = physPartitionColumns(prior)
@@ -1731,12 +1666,11 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     // DYNAMIC FILE PRUNING: only files whose log stats admit a key in
     // the source's [min, max] range can hold matched rows — a narrow
     // merge against a 100 TB table scans O(affected files), not the
-    // table (the same move production MERGE engines make). One tiny
-    // agg over the source pays for it; the same bounds later restrict
-    // the CDF classification scans.
-    val keyBounds =
-      if (prior.files.isEmpty) None
-      else MergePruning.bounds(src, prior.schema, keys, cmMode)
+    // table (the same move production MERGE engines make). The source's
+    // duplicate-key check measures the bounds in the same aggregate;
+    // they later restrict the CDF classification scans too. A
+    // column-mapped table's stats key physically: no pruning.
+    val keyBounds = if (cmMode != "none") None else srcBounds
     val candidates =
       if (prior.files.isEmpty) Nil
       else MergePruning.candidates(prior.files, prior.schema, keyBounds)

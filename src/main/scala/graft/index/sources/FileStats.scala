@@ -262,23 +262,24 @@ object StatsPruning {
  */
 private[graft] object MergePruning {
 
-  /** Per-key [min, max] of the source's key columns — the merge's
-    * pruning evidence. None when any key's bound is null (empty or
-    * all-null-key source) or the table is column-mapped (its stats key
-    * physically; the parse would keep-all anyway). One small agg. */
-  def bounds(source: DataFrame, schema: StructType, keys: Seq[String],
-      cmMode: String = "none"): Option[Seq[(String, Any, Any)]] = {
-    if (cmMode != "none") return None
-    import org.apache.spark.sql.functions.{col, max, min}
-    val aggs = keys.flatMap(k =>
-      Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k")))
-    val row = source.select(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*).head()
+  /** ONE aggregate over a merge source's key columns: the most rows any
+    * key value carries (more than one makes the merge ambiguous) and
+    * each key's [min, max] — the merge's pruning evidence, None when any
+    * key's bound is null (an empty or all-null-key source). */
+  def keyStats(source: DataFrame,
+      keys: Seq[String]): (Long, Option[Seq[(String, Any, Any)]]) = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val row = source.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__graft_rows"))
+      .agg(max(col("__graft_rows")),
+        keys.flatMap(k => Seq(min(col(k)), max(col(k)))): _*)
+      .head()
     val perKey = keys.zipWithIndex.map { case (k, i) =>
-      val (mn, mx) = (row.get(2 * i), row.get(2 * i + 1))
-      if (mn == null || mx == null) None else Some((k, mn, mx))
+      (k, row.get(1 + 2 * i), row.get(2 + 2 * i))
     }
-    if (perKey.exists(_.isEmpty)) None else Some(perKey.flatten)
+    (if (row.isNullAt(0)) 0L else row.getLong(0),
+      if (perKey.exists(b => b._2 == null || b._3 == null)) None
+      else Some(perKey))
   }
 
   /** Target files that may hold a row matching some source key. Log

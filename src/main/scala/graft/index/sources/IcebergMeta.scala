@@ -64,8 +64,8 @@ final case class IcebergSnapshot(
     snapshotId: Long,
     schema: StructType,
     files: Seq[DeltaFileMeta], // (path, size, mtime=0): iceberg files are immutable
-    // v2 merge-on-read: delete files that must be anti-joined away from
-    // `files` at read time
+    // v2 merge-on-read: delete files whose rows the read drops from
+    // `files`
     deleteFiles: Seq[IceDeleteFile] = Nil,
     // per-data-file sequence numbers (path → seq), for the equality-
     // delete ordering rule; legacy manifests without the field read as 0
@@ -860,39 +860,36 @@ object IcebergTable {
     * `versionAsOf`: the pinned snapshot's manifest tree alone decides
     * the file set, so later appends/overwrites are invisible).
     *
-    * v2 MERGE-ON-READ: when the snapshot carries positional-delete
-    * files, deleted rows are filtered out with an anti-join of
-    * (`_metadata.file_path`, `_metadata.row_index`) against the delete
-    * rows — the exact (file, position) semantics of the spec. The
-    * anti-join build side is the delete rows (tiny relative to data by
-    * construction — deletes accumulate until compaction), so Spark's
-    * size-based planning broadcasts it; no shuffle of the data side. */
+    * v2 MERGE-ON-READ: positional-delete files apply inside the data
+    * scan, as one `NOT row_deleted(_metadata.file_path,
+    * _metadata.row_index)` filter ([[LakeDeletes]]) that carries, per
+    * data file, the delete files the sequence rule lets name it; each
+    * task reads the (`file_path`, `pos`) rows of those files for the
+    * data files it scans. Equality deletes stay a key anti-join (their
+    * rows are the build side, broadcast by size), restricted by the
+    * sequence rule through the row's `file_sequence(_metadata.file_path)`
+    * — a per-file lookup in the scan, never a join. */
   def read(spark: SparkSession, location: String,
       snapshotAsOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_replace}
+    import org.apache.spark.sql.functions.col
     val s = IcebergMeta.snapshot(spark, location, snapshotAsOf)
     if (s.files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    // ID-BASED column resolution when the table guarantees field ids in
-    // every data file (`graft.field-ids`): renamed columns resolve to
-    // the files' original spellings, added columns read as null from
-    // older files, dropped-then-readded names don't resurrect old data.
-    // Tables without the guarantee keep plain name resolution.
-    val useIds = s.properties.get("graft.field-ids").contains("true")
-    val readSchema =
-      if (!useIds) s.schema
-      else {
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        IcebergMeta.icebergSchemaToSparkWithIds(
-          JsonMethods.parse(s.schemaJsonStr))
-      }
-    // a zero-copy clone's files live under the SOURCE root — basePath
-    // (ancestor-of-all-inputs) only when everything is under this table
-    val raw = DeltaTable.maybeBasePath(spark, s"$location/data", spark.read
+    val readSchema = scanSchema(spark, s)
+    val posDeletes = s.deleteFiles.filter(_.content == 1)
+    val eqDeletes = s.deleteFiles.filter(_.content == 2)
+    val reader = spark.read
       .schema(readSchema)
       .option(LocationOption, location)
-      .option(SnapshotOption, s.snapshotId.toString), s.files.map(_.path))
+      .option(SnapshotOption, s.snapshotId.toString)
+    // a zero-copy clone's files live under the SOURCE root — basePath
+    // (ancestor-of-all-inputs) only when everything is under this table
+    val raw = DeltaTable.maybeBasePath(spark, s"$location/data",
+      if (s.deleteFiles.isEmpty) reader
+      else reader.option(LakeDeletes.SourcesOption,
+        LakeDeletes.sourcesValue(posDeletes.map(_.path))),
+      s.files.map(_.path))
       .parquet(s.files.map(_.path): _*)
     // manifest-bounds FILE SKIPPING: list only the files whose
     // lower/upper bounds admit the pushed-down predicates (sound for
@@ -907,6 +904,29 @@ object IcebergTable {
     val data = IceTransformPruning.wrap(
       StatsPruning.wrap(raw, statsByPath),
       s.partitionFields, s.partitionValues, s.schema)
+    val positional = LakeDeletes.positional(s, posDeletes)
+    var cur =
+      if (positional.isEmpty) data
+      else data.filter(!LakeDeletes.rowDeleted(spark, positional))
+
+    if (eqDeletes.nonEmpty) {
+      // EQUALITY deletes (content=2): anti-join on the columns named by
+      // equality_ids, restricted by the spec's SEQUENCE rule — a delete
+      // applies only to rows from data files committed strictly before
+      // it (seq(data) < seq(delete)), so later re-inserts of the same
+      // key survive. Each delete row carries its file's seq so one
+      // anti-join per distinct equality-column-set handles every delete
+      // generation at once.
+      cur = cur.withColumn("__seq", LakeDeletes.fileSequence(spark,
+        s.files.map(f => f.path -> s.dataSeq.getOrElse(f.path, 0L)).toMap))
+      equalityDeletes(spark, s, eqDeletes).foreach { case (cols, delRows) =>
+        // null-safe equality: the spec matches null keys to null values
+        val cond = cols.map(c => cur(c) <=> delRows(s"__del_$c"))
+          .reduce(_ && _) && cur("__seq") < delRows("__del_seq")
+        cur = cur.join(delRows, cond, "left_anti")
+      }
+      cur = cur.drop("__seq")
+    }
     // a transform's DERIVED hive directory (e.g. `ts_day=…`) surfaces
     // as an extra inferred column next to the explicit schema — it is
     // spec bookkeeping, not a table column: strip it from the output
@@ -915,70 +935,50 @@ object IcebergTable {
     // identity ones included, after the data columns)
     val derivedDirs: Seq[String] = s.partitionFields
       .filter(_.kind != TIdentity).map(_.name)
-    def stripDerived(d: DataFrame): DataFrame =
-      if (derivedDirs.isEmpty) d
-      else d.drop(derivedDirs: _*)
-        .select(readSchema.fieldNames.map(col(_)).toSeq: _*)
-    val posDeletes = s.deleteFiles.filter(_.content == 1)
-    val eqDeletes = s.deleteFiles.filter(_.content == 2)
-    if (posDeletes.isEmpty && eqDeletes.isEmpty) return stripDerived(data)
+    if (derivedDirs.isEmpty) cur
+    else cur.drop(derivedDirs: _*)
+      .select(readSchema.fieldNames.map(col(_)).toSeq: _*)
+  }
 
-    // scheme-normalize both sides: manifests/delete rows may carry
-    // `file:`-qualified or bare paths depending on the writer
-    def norm(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^file:/+", "/")
-    var cur = data.withColumn("__path", norm(col("_metadata.file_path")))
-
-    if (posDeletes.nonEmpty) {
-      val dels = spark.read.parquet(posDeletes.map(_.path): _*)
-        .select(norm(col("file_path")).as("__del_path"),
-          col("pos").cast("long").as("__del_pos"))
-      cur = cur.withColumn("__pos", col("_metadata.row_index"))
-      cur = cur.join(dels,
-        cur("__path") === dels("__del_path") &&
-          cur("__pos") === dels("__del_pos"), "left_anti")
-        .drop("__pos")
-    }
-
-    if (eqDeletes.nonEmpty) {
-      // EQUALITY deletes (content=2): anti-join on the columns named by
-      // equality_ids, restricted by the spec's SEQUENCE rule — a delete
-      // applies only to rows from data files committed strictly before
-      // it (seq(data) < seq(delete)), so later re-inserts of the same
-      // key survive. The per-row sequence rides a broadcast-joined
-      // (path → seq) map (one row per data FILE — metadata-scale); each
-      // delete row carries its file's seq so one anti-join per distinct
-      // equality-column-set handles every delete generation at once.
-      import org.apache.spark.sql.functions.{broadcast, lit}
-      val seqDf = spark.createDataFrame(
-        s.files.map(f => (DeltaTable.normPath(f.path),
-          s.dataSeq.getOrElse(f.path, 0L)))).toDF("__seq_path", "__seq")
-      cur = cur.join(broadcast(seqDf), cur("__path") === seqDf("__seq_path"), "left")
-        .drop("__seq_path")
-      eqDeletes.groupBy(_.equalityIds.sorted).foreach { case (ids, group) =>
+  /** The equality deletes among `deletes`, one frame per distinct
+    * equality-column set: its columns (resolved against `s`), and the
+    * delete rows — the keys as `__del_<col>`, and the file's `__del_seq`.
+    * Delete files resolve by field id too (an equality delete written
+    * before a rename still matches after it); the explicit schema spares
+    * a footer-inference job per file. */
+  private def equalityDeletes(spark: SparkSession, s: IcebergSnapshot,
+      deletes: Seq[IceDeleteFile]): Seq[(Seq[String], DataFrame)] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val readSchema = scanSchema(spark, s)
+    deletes.filter(_.content == 2).groupBy(_.equalityIds.sorted).toSeq.map {
+      case (ids, group) =>
         val cols = ids.map(id => s.fieldIdToName.getOrElse(id,
           throw new IllegalArgumentException(
             s"equality delete names field id $id, which is not a " +
               s"top-level column of the schema at ${s.location} — nested " +
               "or dropped columns are not supported by the jarless reader")))
-        val delRows = group.map { d =>
-          // delete files resolve by field id too: an equality delete
-          // written before a rename still matches after it
-          val reader = if (!useIds) spark.read
-            else spark.read.schema(StructType(cols.map(c => readSchema(c))))
-          reader.parquet(d.path)
+        val delSchema = StructType(cols.map(c => readSchema(c)))
+        cols -> group.map { d =>
+          spark.read.schema(delSchema).parquet(d.path)
             .select(cols.map(c => col(c).as(s"__del_$c")): _*)
             .withColumn("__del_seq", lit(d.seq))
         }.reduce(_ unionByName _)
-        // null-safe equality: the spec matches null keys to null values
-        val cond = cols.map(c => cur(c) <=> delRows(s"__del_$c"))
-          .reduce(_ && _) && cur("__seq") < delRows("__del_seq")
-        cur = cur.join(delRows, cond, "left_anti")
-      }
-      cur = cur.drop("__seq")
     }
-    stripDerived(cur.drop("__path"))
   }
+
+  /** The schema a scan of `s`'s data files reads with: ID-BASED column
+    * resolution when the table guarantees field ids in every data file
+    * (`graft.field-ids`) — renamed columns resolve to the files' original
+    * spellings, added columns read as null from older files,
+    * dropped-then-readded names don't resurrect old data. Tables without
+    * the guarantee keep plain name resolution. */
+  private[sources] def scanSchema(spark: SparkSession,
+      s: IcebergSnapshot): StructType =
+    if (!s.properties.get("graft.field-ids").contains("true")) s.schema
+    else {
+      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+      IcebergMeta.icebergSchemaToSparkWithIds(JsonMethods.parse(s.schemaJsonStr))
+    }
 
   /** INCREMENTAL APPEND scan — the rows committed by every `append`
     * snapshot in `(fromSnapshotId, toSnapshotId]` (from exclusive, to
@@ -1049,14 +1049,7 @@ object IcebergTable {
     // read with the TO-snapshot schema (id-resolved when the table
     // guarantees field ids, so renames/adds resolve across the range)
     val toSnap = IcebergMeta.snapshot(spark, location, Some(to))
-    val useIds = toSnap.properties.get("graft.field-ids").contains("true")
-    val readSchema =
-      if (!useIds) toSnap.schema
-      else {
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        IcebergMeta.icebergSchemaToSparkWithIds(
-          JsonMethods.parse(toSnap.schemaJsonStr))
-      }
+    val readSchema = scanSchema(spark, toSnap)
     val parts = slices.toSeq.map { sl =>
       DeltaTable.maybeBasePath(spark, s"$location/data",
         spark.read.schema(readSchema), sl.paths)
@@ -1145,9 +1138,10 @@ object IcebergTable {
   /** INCREMENTAL CHANGELOG scan — [[incrementalAppends]] upgraded to a
     * FULL change feed: `append` snapshots contribute inserts, `delete`
     * snapshots contribute the rows their newly-added POSITIONAL delete
-    * files removed (the inverse of the merge-on-read anti-join: a
-    * semi-join of the parent snapshot's rows against the new
-    * (`file_path`, `pos`) pairs), `replace` snapshots are transparent
+    * files removed (the inverse of the merge-on-read filter: the parent
+    * snapshot's rows that `row_deleted` over the new delete files keeps
+    * and over the parent's own delete files drops), `replace`
+    * snapshots are transparent
     * — the Iceberg twin of `DeltaTable.changes`. Equality-delete
     * snapshots refuse loudly (their victims depend on the sequence
     * rule against the parent state; read full snapshots instead), as
@@ -1155,7 +1149,7 @@ object IcebergTable {
     * `_commit_snapshot_id`, `_commit_timestamp`. */
   def incrementalChanges(spark: SparkSession, location: String,
       fromSnapshotId: Long, toSnapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, regexp_replace}
+    import org.apache.spark.sql.functions.{col, lit}
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
     val (metaFile, j) = IcebergMeta.currentMetadata(fs, location)
     val log = IcebergMeta.snapshotLog(j)
@@ -1176,16 +1170,12 @@ object IcebergTable {
 
     var prevFiles: Set[String] = Set.empty
     var prevDeletes: Set[String] = Set.empty
-    var prevSnapFiles: Seq[DeltaFileMeta] = Nil
-    var prevDeleteMetas: Seq[IceDeleteFile] = Nil
-    var prevSid: Option[Long] = None
+    var prev: Option[IcebergSnapshot] = None
     if (fromSnapshotId != 0L) {
       val base = IcebergMeta.snapshot(spark, location, Some(fromSnapshotId))
       prevFiles = base.files.map(f => DeltaTable.normPath(f.path)).toSet
       prevDeletes = base.deleteFiles.map(d => DeltaTable.normPath(d.path)).toSet
-      prevSnapFiles = base.files
-      prevDeleteMetas = base.deleteFiles
-      prevSid = Some(fromSnapshotId)
+      prev = Some(base)
     }
     val parts = mutable.Buffer.empty[DataFrame]
     ordered.foreach { sid =>
@@ -1219,36 +1209,20 @@ object IcebergTable {
             prevDeletes.contains(DeltaTable.normPath(d.path)))
           val posNew = newDeletes.filter(_.content == 1)
           val eqNew = newDeletes.filter(_.content == 2)
-          if (posNew.nonEmpty) {
-            // inverse of the MOR anti-join: keep exactly the named rows
-            val dels = spark.read.parquet(posNew.map(_.path): _*)
-              .select(regexp_replace(col("file_path"), "^file:/+", "/")
-                .as("__del_path"),
-                col("pos").cast("long").as("__del_pos"))
-            var parent = DeltaTable.maybeBasePath(spark,
-              s"$location/data", spark.read.schema(toSnap.schema),
-              prevSnapFiles.map(_.path))
-              .parquet(prevSnapFiles.map(_.path): _*)
-              .withColumn("__path",
-                regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
-              .withColumn("__pos", col("_metadata.row_index"))
-            // positions the PARENT state had already deleted are not
-            // victims again, even if a non-conforming writer re-names
-            // them in a later delete file
-            val priorPos = prevDeleteMetas.filter(_.content == 1)
-            if (priorPos.nonEmpty) {
-              val prior = spark.read.parquet(priorPos.map(_.path): _*)
-                .select(regexp_replace(col("file_path"), "^file:/+", "/")
-                  .as("__old_path"),
-                  col("pos").cast("long").as("__old_pos"))
-              parent = parent.join(prior,
-                parent("__path") === prior("__old_path") &&
-                  parent("__pos") === prior("__old_pos"), "left_anti")
-            }
-            val victims = parent.join(dels,
-              parent("__path") === dels("__del_path") &&
-                parent("__pos") === dels("__del_pos"), "left_semi")
-              .drop("__path", "__pos")
+          if (posNew.nonEmpty) prev.foreach { parent =>
+            // inverse of the MOR filter: keep exactly the named rows —
+            // minus positions the PARENT state had already deleted, which
+            // are not victims again even if a non-conforming writer
+            // re-names them in a later delete file
+            val named = LakeDeletes.rowDeleted(spark,
+              LakeDeletes.positional(parent, posNew))
+            val prior = LakeDeletes.positional(parent, parent.deleteFiles)
+            val parentPaths = parent.files.map(_.path)
+            val victims = DeltaTable.maybeBasePath(spark,
+              s"$location/data", spark.read.schema(toSnap.schema), parentPaths)
+              .parquet(parentPaths: _*)
+              .filter(if (prior.isEmpty) named
+                else named && !LakeDeletes.rowDeleted(spark, prior))
             parts += stamp(victims, "delete", sid, tsMs)
           }
           if (eqNew.nonEmpty) {
@@ -1258,18 +1232,10 @@ object IcebergTable {
             // deletes killed; the spec's sequence rule holds because
             // every parent file's seq <= parent snapshot id < the new
             // delete's seq (this writer commits delete seq = prior+1).
-            val parentSid = prevSid.orElse(log.parentOf(sid))
+            val parentSid = prev.map(_.snapshotId).orElse(log.parentOf(sid))
             parentSid.foreach { p =>
               val parentLive = read(spark, location, Some(p))
-              eqNew.groupBy(_.equalityIds.sorted).foreach { case (eids, group) =>
-                val cols = eids.map(id => toSnap.fieldIdToName.getOrElse(id,
-                  throw new IllegalArgumentException(
-                    s"equality delete names field id $id, which is not a " +
-                      s"top-level column of the schema at $location")))
-                val delRows = group.map { d =>
-                  spark.read.parquet(d.path)
-                    .select(cols.map(c => col(c).as(s"__del_$c")): _*)
-                }.reduce(_ unionByName _)
+              equalityDeletes(spark, toSnap, eqNew).foreach { case (cols, delRows) =>
                 val cond = cols.map(c => parentLive(c) <=> delRows(s"__del_$c"))
                   .reduce(_ && _)
                 parts += stamp(
@@ -1295,9 +1261,7 @@ object IcebergTable {
       }
       prevFiles = s.files.map(f => DeltaTable.normPath(f.path)).toSet
       prevDeletes = s.deleteFiles.map(d => DeltaTable.normPath(d.path)).toSet
-      prevSnapFiles = s.files
-      prevDeleteMetas = s.deleteFiles
-      prevSid = Some(sid)
+      prev = Some(s)
     }
     parts.reduceOption(_.union(_)).getOrElse {
       val empty = StructType(toSnap.schema.fields ++ Seq(
@@ -2200,7 +2164,7 @@ object IcebergTable {
     * (rows of `file_path`,`pos` per the spec) for every current row
     * matching `predicate` and commit a snapshot whose manifest list
     * carries it (content=1). Data files are untouched — that is the
-    * point of merge-on-read; [[read]] anti-joins the deletes back out.
+    * point of merge-on-read; [[read]] filters the deletes out in the scan.
     * The position rows are computed and written DISTRIBUTED (metadata
     * columns + a filtered write), never collected to the driver. A
     * predicate matching no row (an empty table included) commits
@@ -2374,7 +2338,7 @@ object IcebergTable {
     // (appId, version) idempotence inside the retry loop (see the
     // Delta twin): a replayed twin transaction no-ops, never re-applies
     if (LakeDml.replayed(prior.transactions, txn)) return prior.snapshotId
-    val (src, _, ups) =
+    val LakeDml.MergeSource(src, _, ups, _) =
       LakeDml.mergeSource(location, source, keys, deleteCondition, prior.schema)
 
     // ---- upsert data files (same staged write as append, honoring the

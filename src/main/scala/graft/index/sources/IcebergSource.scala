@@ -70,7 +70,11 @@ final class IcebergSource extends SourceProvider {
           rel.location.listFiles(Nil, Nil).flatMap(_.files).map(s =>
             // immutable data files: (path, size) is a complete identity,
             // constant mtime keeps drift detection exact across snapshots
-            (s.getPath.toString, s.getLen, 0L))
+            (s.getPath.toString, s.getLen, 0L)) ++
+            // positional-delete files list beside them: a delete shows up
+            // as drift, as an appended file
+            LakeDeletes.listSources(rel.options)
+        override def liveDeletes: Boolean = LakeDeletes.live(rel.options)
         override def signature(files: Seq[FileMeta]): String = {
           val md = java.security.MessageDigest.getInstance("MD5")
           md.update(s"iceberg|$snapshotId|${rootPaths.sorted.mkString(",")}"

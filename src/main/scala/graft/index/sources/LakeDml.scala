@@ -85,18 +85,23 @@ private[sources] object LakeDml {
     updated
   }
 
+  /** A validated merge source: every source row, the delete markers and
+    * the upserts, each projected to the table columns in table order,
+    * and the source keys' [min, max] (see [[MergePruning.keyStats]]). */
+  final case class MergeSource(src: DataFrame, dels: DataFrame,
+      ups: DataFrame, keyBounds: Option[Seq[(String, Any, Any)]])
+
   /** Validate a merge source against the table and split it. `keys`
     * must be table columns; a pre-flagged source (the streaming
     * CDC-apply sink's shape) may carry [[LakeMerge.DeleteMarker]]
     * instead of a `deleteCondition`, never both; the remaining columns
     * must be exactly the table's, with the table's types; duplicate
     * keys refuse (the "multiple source rows matched" ambiguity: one
-    * target row would be replaced twice). Returns `(src, dels, ups)`:
-    * every source row, the delete markers and the upserts, each
-    * projected to the table columns in table order. */
+    * target row would be replaced twice). The duplicate check and the
+    * key bounds are one aggregate over the source. */
   def mergeSource(root: String, source: DataFrame, keys: Seq[String],
       deleteCondition: Option[Column],
-      schema: StructType): (DataFrame, DataFrame, DataFrame) = {
+      schema: StructType): MergeSource = {
     require(keys.nonEmpty, s"merge into $root: no key columns given")
     val tableCols = schema.fieldNames.toSeq
     keys.foreach(k => require(tableCols.contains(k),
@@ -121,17 +126,17 @@ private[sources] object LakeDml {
           s"${sf.dataType.simpleString} in the source but the table " +
           s"declares ${tf.dataType.simpleString}; cast it first")
     }
-    val dupes = src.groupBy(keys.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupes == 0L,
+    val (maxRowsPerKey, keyBounds) = MergePruning.keyStats(src, keys)
+    require(maxRowsPerKey <= 1L,
       s"merge into $root: source has duplicate values of " +
         s"(${keys.mkString(", ")}); deduplicate the source first")
     // flag against `source` (the marker column, if any, lives there),
     // then project down to the table columns
     val flagged = source.withColumn("__graft_is_delete",
       delCond.map(c => coalesce(c, lit(false))).getOrElse(lit(false)))
-    (src,
+    MergeSource(src,
       flagged.filter(col("__graft_is_delete")).select(tableCols.map(col): _*),
-      flagged.filter(!col("__graft_is_delete")).select(tableCols.map(col): _*))
+      flagged.filter(!col("__graft_is_delete")).select(tableCols.map(col): _*),
+      keyBounds)
   }
 }

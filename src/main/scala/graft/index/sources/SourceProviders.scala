@@ -35,6 +35,10 @@ trait SourceLeaf {
   def listFiles(): Seq[(String, Long, Long)]
   /** Fingerprint of the captured state; default = file-stat digest. */
   def signature(files: Seq[FileMeta]): String = Signatures.ofFiles(files)
+  /** Does the leaf apply row-level deletes inside its scan (a lake
+    * snapshot with deletion vectors or delete files)? Its files then
+    * hold rows the read drops, so no index may serve it. */
+  def liveDeletes: Boolean = false
 }
 
 trait SourceProvider {

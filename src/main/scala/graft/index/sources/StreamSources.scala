@@ -119,7 +119,7 @@ final class DeltaStreamProvider extends StreamSourceProvider
 /**
  * Batch-read `BaseRelation` wrapping an already-optimized lake
  * DataFrame: the relation's scan IS the inner plan (stats skipping,
- * hidden-partition pruning, MOR anti-joins all intact). Pushed filters
+ * hidden-partition pruning, merge-on-read deletes all intact). Pushed filters
  * re-apply to the inner frame — that is what lets log-level FILE
  * SKIPPING see them; Spark still re-evaluates every filter above
  * (`unhandledFilters` = all), so partial translation is always sound.

@@ -625,8 +625,9 @@ object IndexAccel {
   /** Delta DELETION-VECTOR merge-on-read: the fixture table takes a
     * row-level DELETE (`DeltaTable.deleteWhere` — DV file + re-added
     * `add` actions, protocol (3,7)+deletionVectors), so a matching
-    * aggregate proves the DV decode and the (`_metadata.file_path`,
-    * `row_index`) anti-join drop exactly the deleted rows. The oracle
+    * aggregate proves the DV decode and the in-scan
+    * (`_metadata.file_path`, `row_index`) filter drop exactly the
+    * deleted rows. The oracle
     * sees only supplier parquet and re-applies the delete predicate. */
   def idxDeltaDvFilter(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.index.sources.DeltaTable
@@ -1000,7 +1001,7 @@ object IndexAccel {
 
   /** Iceberg v2 MERGE-ON-READ: the fixture table takes a positional
     * row-level DELETE (`deleteWhere`), so a matching aggregate proves
-    * the delete manifest walk and the (file, position) anti-join
+    * the delete manifest walk and the in-scan (file, position) filter
     * resurrect nothing and drop nothing. The oracle sees only customer
     * parquet and re-applies the delete predicate. */
   def idxIcebergV2Filter(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1030,7 +1031,7 @@ object IndexAccel {
     * fixture takes a positional DELETE (`deleteWhere`) and then an
     * equality DELETE (`deleteWhereEquality` on `c_custkey`, content=2 +
     * equality_ids + sequence numbers), so a matching aggregate proves
-    * both anti-joins (position and key, sequence-gated) stack. The
+    * the position filter and the sequence-gated key anti-join stack. The
     * oracle re-applies both predicates on plain customer parquet. */
   def idxIcebergEqFilter(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.index.sources.{IcebergMeta, IcebergTable}
@@ -1063,7 +1064,7 @@ object IndexAccel {
     * rewrites), then a row-level DV delete against the NEW name, and the
     * query aggregates under the new name. The oracle sees only the base
     * parquet under the ORIGINAL name — matching results prove the
-    * physical→logical resolution, the mapped-table DV anti-join, and the
+    * physical→logical resolution, the mapped-table DV filter, and the
     * renamed filter's pushdown all agree with plain-column semantics. */
   def idxDeltaCmFilter(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.index.sources.DeltaTable

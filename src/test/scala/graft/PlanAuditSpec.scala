@@ -273,26 +273,38 @@ class PlanAuditSpec extends AnyFunSuite {
         scans.map(_.relation.location.rootPaths.mkString(",")).mkString("\n"))
   }
 
-  test("MOR queries: delete anti-joins broadcast, data side never shuffles") {
+  test("MOR queries: positional deletes filter in the scan, data never shuffles") {
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import graft.index.sources.RowDeleted
     // the property that matters at 100 TB: applying row-level deletes
     // (Delta DVs, Iceberg positional + equality) must never shuffle the
-    // DATA side — deletes are the broadcast build side, full stop
-    Seq("idx_delta_dv_filter", "idx_iceberg_eq_filter").foreach { q =>
-      val nodes = planned(SparkEntry.queries(q)(spark, TestSpark.sfDir))
-      val antis = nodes.collect {
-        case j: BroadcastHashJoinExec if j.joinType.sql == "LEFT ANTI" => j }
-      assert(antis.nonEmpty, s"$q: no broadcast anti-join in plan")
-      antis.foreach { j =>
-        val streamed = j.buildSide match {
-          case BuildRight => j.left
-          case BuildLeft => j.right
-        }
-        assert(!allNodes(streamed).exists(_.isInstanceOf[ShuffleExchangeExec]),
-          s"$q: data side of the MOR anti-join shuffled:\n$j")
+    // DATA side. Positional deletes are a filter on the data scan itself
+    // (no join, no broadcast); equality deletes are the broadcast build
+    // side of one key anti-join
+    val dv = planned(SparkEntry.queries("idx_delta_dv_filter")(spark, TestSpark.sfDir))
+    val mor = dv.collect { case f: FilterExec
+      if f.condition.find(_.isInstanceOf[RowDeleted]).isDefined => f }
+    assert(mor.nonEmpty, "idx_delta_dv_filter: no row_deleted filter in plan")
+    assert(!dv.exists(n => n.isInstanceOf[BaseJoinExec] ||
+      n.isInstanceOf[BroadcastExchangeExec]),
+      "idx_delta_dv_filter: a join or broadcast applies the deletes")
+    mor.foreach(f => assert(!allNodes(f).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"idx_delta_dv_filter: data side of the delete filter shuffled:\n$f"))
+    val eq = planned(SparkEntry.queries("idx_iceberg_eq_filter")(spark, TestSpark.sfDir))
+    val antis = eq.collect {
+      case j: BroadcastHashJoinExec if j.joinType.sql == "LEFT ANTI" => j }
+    assert(antis.size == 1 && eq.count(_.isInstanceOf[BaseJoinExec]) == 1,
+      "idx_iceberg_eq_filter: expected exactly one broadcast key anti-join")
+    antis.foreach { j =>
+      val streamed = j.buildSide match {
+        case BuildRight => j.left
+        case BuildLeft => j.right
       }
+      assert(!allNodes(streamed).exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"idx_iceberg_eq_filter: data side of the MOR anti-join shuffled:\n$j")
     }
   }
 

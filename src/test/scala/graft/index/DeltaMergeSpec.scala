@@ -187,7 +187,7 @@ class DeltaMergeSpec extends AnyFunSuite {
     val narrow = customer.filter($"c_custkey" <= lo + 80)
       .withColumn("c_acctbal", $"c_acctbal" + 5)
     val cands = MergePruning.candidates(prior.files, prior.schema,
-      MergePruning.bounds(narrow, prior.schema, Seq("c_custkey")))
+      MergePruning.keyStats(narrow, Seq("c_custkey"))._2)
     assert(cands.size < prior.files.size,
       s"expected pruning, got ${cands.size}/${prior.files.size}")
     assert(cands.nonEmpty)
@@ -218,8 +218,8 @@ class DeltaMergeSpec extends AnyFunSuite {
     val src = customer.filter($"c_mktsegment" === "BUILDING" &&
       $"c_custkey" < 50)
     val cands = MergePruning.candidates(prior.files, prior.schema,
-      MergePruning.bounds(src, prior.schema,
-        Seq("c_mktsegment", "c_custkey")))
+      MergePruning.keyStats(src,
+        Seq("c_mktsegment", "c_custkey"))._2)
     assert(cands.nonEmpty && cands.size < prior.files.size,
       s"expected partition pruning, got ${cands.size}/${prior.files.size}")
     assert(cands.forall(_.path.contains("c_mktsegment=BUILDING")))
@@ -302,7 +302,7 @@ class DeltaMergeSpec extends AnyFunSuite {
     // empty source → null bounds → keep everything
     val empty = customer.filter(lit(false))
     assert(MergePruning.candidates(prior.files, prior.schema,
-      MergePruning.bounds(empty, prior.schema, Seq("c_custkey")))
+      MergePruning.keyStats(empty, Seq("c_custkey"))._2)
       .size == prior.files.size)
 
     // stats stripped → keep everything
@@ -310,13 +310,13 @@ class DeltaMergeSpec extends AnyFunSuite {
     val lo = customer.select(min($"c_custkey")).as[Long].head()
     val narrow = customer.filter($"c_custkey" <= lo + 10)
     assert(MergePruning.candidates(statless, prior.schema,
-      MergePruning.bounds(narrow, prior.schema, Seq("c_custkey")))
+      MergePruning.keyStats(narrow, Seq("c_custkey"))._2)
       .size == statless.size)
 
     // two-key conjunction still prunes (both ranges must overlap)
     val cands2 = MergePruning.candidates(prior.files, prior.schema,
-      MergePruning.bounds(narrow, prior.schema,
-        Seq("c_custkey", "c_nationkey")))
+      MergePruning.keyStats(narrow,
+        Seq("c_custkey", "c_nationkey"))._2)
     assert(cands2.size < prior.files.size)
   }
 }
