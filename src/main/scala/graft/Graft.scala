@@ -37,8 +37,10 @@ class Graft(spark: SparkSession) {
   /** Rebuild index data against current source files.
     * Modes (reference: index/IndexConstants.scala:108-110):
     *  - "full": complete rebuild from the source;
-    *  - "incremental": fold appended files in, drop deleted rows via
-    *    lineage — reads only old index data + appended files;
+    *  - "incremental": fold appended files in and deleted files out, by
+    *    the kind's rule — covering and data-skipping merge, or rewrite
+    *    under deletes; IVF and MinHash merge and tombstone; z-order
+    *    rebuilds from the source;
     *  - "quick": metadata-only — record the appended/deleted file delta
     *    in the log so query-time hybrid scan keeps applying it and the
     *    staleness thresholds re-baseline from this point.

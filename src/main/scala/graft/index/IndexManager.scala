@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -46,36 +46,30 @@ final class IndexManager(spark: SparkSession) {
   private def dataVersionPath(name: String, v: Int): Path =
     new Path(indexRoot(name), s"v__$v")
 
-  /** Is `p` (or any ancestor strictly below `root`) hidden — i.e. a
-    * marker/sidecar like `_SUCCESS` or `_graft_codebook/part-...`? */
-  private def isHiddenUnder(p: Path, root: Path): Boolean = {
-    var cur = p
-    while (cur != null && cur.toUri.getPath != root.toUri.getPath) {
-      val n = cur.getName
-      if (n.startsWith("_") || n.startsWith(".")) return true
-      cur = cur.getParent
-    }
-    false
-  }
-
-  /** Recursively list data files under a version dir, skipping hidden
-    * files AND files under hidden dirs (e.g. the IVF codebook sidecar —
-    * its part files must never enter content or they'd be unioned into
-    * the index data read). */
-  private def listDataFiles(dir: Path, tracker: FileIdTracker): Seq[FileMeta] = {
+  /** Recursively list the data files under a version dir, skipping
+    * hidden files AND files under hidden dirs (`_SUCCESS`, the IVF
+    * codebook sidecar — its part files must never enter content, or
+    * they'd be unioned into the index data read, nor be reaped by vacuum
+    * as stale data). */
+  private def dataFiles(dir: Path): Seq[FileStatus] = {
     val f = fs(dir)
     if (!f.exists(dir)) return Nil
+    def hidden(p: Path): Boolean =
+      p != null && p.toUri.getPath != dir.toUri.getPath &&
+        (p.getName.startsWith("_") || p.getName.startsWith(".") ||
+          hidden(p.getParent))
     val it = f.listFiles(dir, /*recursive=*/ true)
-    val buf = Seq.newBuilder[FileMeta]
+    val buf = Seq.newBuilder[FileStatus]
     while (it.hasNext) {
       val s = it.next()
-      if (!isHiddenUnder(s.getPath, dir)) {
-        val id = tracker.addOrGet(s.getPath.toString, s.getLen, s.getModificationTime)
-        buf += FileMeta(s.getPath.toString, s.getLen, s.getModificationTime, id)
-      }
+      if (!hidden(s.getPath)) buf += s
     }
     buf.result()
   }
+
+  private def listDataFiles(dir: Path, tracker: FileIdTracker): Seq[FileMeta] =
+    dataFiles(dir).map(s => FileMeta(s,
+      tracker.addOrGet(s.getPath.toString, s.getLen, s.getModificationTime)))
 
   // ------------------------------------------------------------- create
 
@@ -93,21 +87,16 @@ final class IndexManager(spark: SparkSession) {
       val relations = SourceRelation.captureAll(df, tracker)
       val descriptor = config.toDescriptor(df)
 
-      val version = nextVersion(name)
-      val dataPath = dataVersionPath(name, version)
       val creating = IndexLogEntry(name, descriptor,
-        ContentMeta(dataPath.toString, Nil), relations,
-        IndexState.Creating, baseId + 1, System.currentTimeMillis())
+        ContentMeta(dataVersionPath(name, nextVersion(name)).toString, Nil),
+        relations, IndexState.Creating, baseId + 1, System.currentTimeMillis())
       require(log.writeLog(baseId + 1, creating),
         s"Concurrent modification of index '$name' (log id ${baseId + 1})")
 
-      val ctx = IndexBuildContext(spark, dataPath.toString, tracker)
-      val built = descriptor.build(ctx, df)
-      val content = ContentMeta(dataPath.toString, listDataFiles(dataPath, tracker))
-      val active = creating.copy(descriptor = built, content = content,
-        state = IndexState.Active, id = baseId + 2,
-        timestamp = System.currentTimeMillis(),
-        properties = Map("dataVersion" -> version.toString))
+      val active = newVersion(creating, tracker)(ctx =>
+          (descriptor.build(ctx, df), Nil))
+        .copy(state = IndexState.Active, id = baseId + 2,
+          timestamp = System.currentTimeMillis())
       require(log.writeLog(baseId + 2, active),
         s"Concurrent modification of index '$name' (log id ${baseId + 2})")
       rules.IndexCatalog.invalidate(spark)
@@ -123,6 +112,19 @@ final class IndexManager(spark: SparkSession) {
     val existing = f.listStatus(root).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("v__")).map(_.stripPrefix("v__").toInt)
     if (existing.isEmpty) 0 else existing.max + 1
+  }
+
+  /** A new data version of `latest`: `write` writes into a fresh `v__N`
+    * dir and returns the new descriptor and the old index files content
+    * keeps beside the files written. */
+  private def newVersion(latest: IndexLogEntry, tracker: FileIdTracker)(
+      write: IndexBuildContext => (IndexDescriptor, Seq[FileMeta])): IndexLogEntry = {
+    val version = nextVersion(latest.name)
+    val dataPath = dataVersionPath(latest.name, version)
+    val (descriptor, kept) = write(IndexBuildContext(spark, dataPath.toString, tracker))
+    latest.copy(descriptor = descriptor,
+      content = ContentMeta(dataPath.toString, kept ++ listDataFiles(dataPath, tracker)),
+      properties = latest.properties + ("dataVersion" -> version.toString))
   }
 
   // -------------------------------------------------- state transitions
@@ -221,30 +223,12 @@ final class IndexManager(spark: SparkSession) {
       // file not in content, then any v__ dir with no data files left.
       val referencedFiles = latest.content.filePaths.toSet
       val currentRoot = new Path(latest.content.root).getName
-      // a live codebook sidecar can outlive its version dir's data files
-      // (frozen codebook + later compaction moved all data elsewhere):
-      // its host dir must never be reaped while the descriptor points at it
-      val protectedDirs: Set[String] = latest.descriptor match {
-        case iv: graft.index.ivf.IvfIndexDescriptor =>
-          iv.centroidsPath.map(p => new Path(p).getParent.getName).toSet
-        case _ => Set.empty
-      }
+      val protectedDirs = latest.descriptor.protectedDirs
       val f = fs(root)
-      // hidden-dir descendants (codebook sidecar parts) are NOT data
-      // files: treating them as stale would delete a live codebook
-      def dataFiles(dir: Path): Seq[Path] = {
-        val it = f.listFiles(dir, /*recursive=*/ true)
-        val buf = Seq.newBuilder[Path]
-        while (it.hasNext) {
-          val s = it.next()
-          if (!isHiddenUnder(s.getPath, dir)) buf += s.getPath
-        }
-        buf.result()
-      }
       f.listStatus(root).toSeq
         .filter(_.getPath.getName.startsWith("v__"))
         .foreach { dir =>
-          val (kept, stale) = dataFiles(dir.getPath)
+          val (kept, stale) = dataFiles(dir.getPath).map(_.getPath)
             .partition(p => referencedFiles.contains(p.toString))
           stale.foreach(p => f.delete(p, false))
           if (kept.isEmpty && dir.getPath.getName != currentRoot &&
@@ -264,14 +248,8 @@ final class IndexManager(spark: SparkSession) {
       latest.sourceFiles.foreach(tracker.addKnown)
       val source = readSource(latest)
       val relations = SourceRelation.captureAll(source, tracker)
-      val version = nextVersion(name)
-      val dataPath = dataVersionPath(name, version)
-      val ctx = IndexBuildContext(spark, dataPath.toString, tracker)
-      val built = latest.descriptor.build(ctx, source)
-      latest.copy(descriptor = built,
-        content = ContentMeta(dataPath.toString, listDataFiles(dataPath, tracker)),
-        relations = relations, update = None,
-        properties = latest.properties + ("dataVersion" -> version.toString))
+      newVersion(latest, tracker)(ctx => (latest.descriptor.build(ctx, source), Nil))
+        .copy(relations = relations, update = None)
     }
     emit(RefreshActionEvent(app, fin, s"Index '$name' refreshed (full)."))
   }
@@ -310,25 +288,21 @@ final class IndexManager(spark: SparkSession) {
 
   /** Incremental refresh: fold appended files into the index and drop
     * rows from deleted files — without touching unchanged source data
-    * (reference: actions/RefreshIncrementalAction.scala:52-128,
-    * index/covering/CoveringIndexTrait.scala:57-106,
-    * index/dataskipping/DataSkippingIndex.scala:79-110).
-    *
-    * Cost shape at scale — this is the maintenance path that must stay
-    * O(appended), not O(index):
-    *  - append-only drift (the steady-state case) runs in MERGE mode:
-    *    only the appended-files index slice is written to the new version
-    *    dir and the old index data files are kept in content verbatim —
-    *    reads appended source only, writes O(appended). Covering rows
-    *    re-hash to the same bucket ids (same keys, same numBuckets), so
-    *    kept and new files of one bucket coexist under the claimed
-    *    HashPartitioning; small-file accumulation is `optimize`'s job.
-    *  - deletes (compaction churn) fall back to filter-and-rewrite via
-    *    lineage — the reference makes the same Merge-vs-rewrite split
-    *    (CoveringIndexTrait.scala:58-77 Merge mode vs Delete mode).
-    *
-    * An empty delta on an entry with no recorded update writes no log
-    * entry. */
+    * (reference: actions/RefreshIncrementalAction.scala:52-128). This
+    * action diffs the source listing and writes the log; each kind's
+    * [[IndexDescriptor.refreshIncremental]] writes the data:
+    *  - covering and data-skipping MERGE on append-only drift (only the
+    *    appended slice is written; old files stay in content verbatim)
+    *    and rewrite under deletes (old rows of surviving files + appended
+    *    rows — the reference's Merge-vs-Delete mode split,
+    *    CoveringIndexTrait.scala:58-77);
+    *  - IVF and MinHash merge the appended slice and tombstone deleted
+    *    files, reading no old index data;
+    *  - z-order rebuilds from the current source (clustering is global).
+    * Lake sources with live row-level deletes, and deletes a kind cannot
+    * drop ([[IndexDescriptor.canHandleDeletedFiles]]), are refused before
+    * anything is written. An empty delta on an entry with no recorded
+    * update writes no log entry. */
   def refreshIncremental(name: String): Unit = {
     val (fin, changed) = transitionIf(name, Set(IndexState.Active),
         IndexState.Refreshing, IndexState.Active) { latest =>
@@ -346,96 +320,23 @@ final class IndexManager(spark: SparkSession) {
             "LakeTable.compact on the table first, or " +
             s"refreshIndex(\"$name\", \"full\").")
       }
+      require(deleted.isEmpty || latest.descriptor.canHandleDeletedFiles,
+        s"incremental refresh of '$name' with deleted source files " +
+          "requires lineage (spark.graft.index.lineage.enabled=true at create)")
       if (delta.isEmpty) clearUpdate(latest)
       else Some { () =>
-        val version = nextVersion(name)
-        val dataPath = dataVersionPath(name, version)
-        val ctx = IndexBuildContext(spark, dataPath.toString, tracker)
         // explicit file list: content may span version dirs after a quick
         // optimize or a prior merge-mode refresh, and root alone would
         // miss the kept files
-        // lazy: only the delete/rewrite branches ever read old index data
-        lazy val oldData = IndexData.parquet(spark,
-          latest.descriptor.schemaJson, latest.content.filePaths)
-        val deletedIds = deleted.map(_.id)
-
-        // (descriptor, kept old index files) — merge-mode branches keep
-        // the old files in content; rewrite branches keep none
-        val (newDescriptor, keptFiles) = latest.descriptor match {
-          case ci: covering.CoveringIndexDescriptor if deleted.isEmpty =>
-            // MERGE mode: index only the appended slice; old files untouched
-            val appendedDf = readFiles(latest, appended.map(_.path))
-            covering.CoveringIndexDescriptor.writeBucketed(
-              spark, covering.CoveringIndexDescriptor.project(ctx, appendedDf, ci),
-              ctx.dataPath, ci.numBuckets, ci.indexedColumns)
-            (ci, latest.content.files)
-          case ci: covering.CoveringIndexDescriptor =>
-            require(ci.hasLineage,
-              s"incremental refresh of '$name' with deleted source files " +
-                "requires lineage (spark.graft.index.lineage.enabled=true at create)")
-            val keep = oldData.filter(!org.apache.spark.sql.functions
-              .col(covering.CoveringIndexDescriptor.LineageColumn)
-              .isin(deletedIds: _*))
-            val cols = ci.allIndexColumns.map(org.apache.spark.sql.functions.col)
-            val merged =
-              if (appended.isEmpty) keep.select(cols: _*)
-              else {
-                val appendedDf = readFiles(latest, appended.map(_.path))
-                keep.select(cols: _*).unionByName(
-                  covering.CoveringIndexDescriptor.project(ctx, appendedDf, ci)
-                    .select(cols: _*))
-              }
-            covering.CoveringIndexDescriptor.writeBucketed(
-              spark, merged, ctx.dataPath, ci.numBuckets, ci.indexedColumns)
-            (ci, Nil)
-          case ds: dataskipping.DataSkippingIndexDescriptor if deleted.isEmpty =>
-            // MERGE mode: sketch rows are per-source-file, so the appended
-            // files' rows are simply additional rows in a new file
-            (dataskipping.DataSkippingBuild.write(ctx,
-              dataskipping.DataSkippingBuild.sketchRows(
-                ctx, readFiles(latest, appended.map(_.path)), ds), ds),
-              latest.content.files)
-          case ds: dataskipping.DataSkippingIndexDescriptor =>
-            val fileIdCol = org.apache.spark.sql.functions
-              .col(dataskipping.Sketches.FileIdColumn)
-            val keep = oldData.filter(!fileIdCol.isin(deletedIds: _*))
-            val merged =
-              if (appended.isEmpty) keep
-              else keep.unionByName(dataskipping.DataSkippingBuild
-                .sketchRows(ctx, readFiles(latest, appended.map(_.path)), ds))
-            (dataskipping.DataSkippingBuild.write(ctx, merged, ds), Nil)
-          case iv: graft.index.ivf.IvfIndexDescriptor =>
-            // MERGE mode both ways: appended files are assigned with the
-            // FROZEN codebook (no retrain — codebook drift is gradual and
-            // a full refresh re-trains) and only their cell files are
-            // written; deleted files become TOMBSTONES (their lineage ids
-            // anti-filtered at search time) — no index data is read or
-            // rewritten for a delete. `optimize` compacts tombstones away.
-            val merged =
-              if (appended.isEmpty) iv
-              else graft.index.ivf.IvfBuild.appendIncremental(
-                ctx, readFiles(latest, appended.map(_.path)), iv)
-            (merged.copy(
-              tombstones = (merged.tombstones ++ deletedIds).distinct),
-              latest.content.files)
-          case mh: graft.index.minhash.MinHashIndexDescriptor =>
-            // MERGE mode both ways, same contract as IVF: appended docs
-            // are signed and written as new files only; deleted files
-            // become lineage tombstones — no index data read or rewritten
-            if (appended.nonEmpty)
-              graft.index.minhash.MinHashBuild.appendIncremental(
-                ctx, readFiles(latest, appended.map(_.path)), mh)
-            (mh.copy(tombstones = (mh.tombstones ++ deletedIds).distinct),
-              latest.content.files)
-          case other =>
-            // z-order clustering is global: incremental == full rebuild
-            (other.build(ctx, source), Nil)
-        }
-        latest.copy(descriptor = newDescriptor,
-          content = ContentMeta(ctx.dataPath,
-            keptFiles ++ listDataFiles(dataPath, tracker)),
-          relations = currentRels, update = None,
-          properties = latest.properties + ("dataVersion" -> version.toString))
+        val in = new RefreshInput(
+          if (appended.isEmpty) None
+          else Some(readFiles(latest, appended.map(_.path))),
+          deleted.map(_.id),
+          IndexData.parquet(spark, latest.descriptor.schemaJson,
+            latest.content.filePaths),
+          source, latest.content.files)
+        newVersion(latest, tracker)(latest.descriptor.refreshIncremental(_, in))
+          .copy(relations = currentRels, update = None)
       }
     }
     emit(RefreshIncrementalActionEvent(app, fin,
@@ -462,98 +363,36 @@ final class IndexManager(spark: SparkSession) {
     *    re-cluster (global clustering — a qualifying quick group
     *    re-clusters the whole index too).
     *
-    * When nothing qualifies, no log entry is written; the event still
+    * Each kind's [[IndexDescriptor.quickCompaction]] picks the files and
+    * its [[IndexDescriptor.compact]] rewrites them. When nothing
+    * qualifies, no log entry is written; the event still
     * fires and says there was nothing to compact. */
   def optimize(name: String, mode: String = "quick"): Unit = {
     require(mode == "quick" || mode == "full", s"Unknown optimize mode '$mode'")
     val (fin, changed) = transitionIf(name, Set(IndexState.Active),
         IndexState.Optimizing, IndexState.Active) { latest =>
-      val (small, kept) = compactionSet(latest, mode)
+      val files = latest.content.files
+      val rewrite =
+        if (mode == "full") files.toSet
+        else {
+          val threshold = GraftConf.optimizeFileSizeThreshold(spark)
+          latest.descriptor.quickCompaction(files, files.filter(_.size < threshold))
+        }
+      val (small, kept) = files.partition(rewrite.contains)
       if (small.isEmpty) None
       else Some { () =>
         val tracker = new FileIdTracker
         latest.sourceFiles.foreach(tracker.addKnown)
-        val version = nextVersion(name)
-        val dataPath = dataVersionPath(name, version)
-        val ctx = IndexBuildContext(spark, dataPath.toString, tracker)
-        lazy val compactInput = IndexData.parquet(spark,
-          latest.descriptor.schemaJson, small.map(_.path))
-        val newDescriptor = latest.descriptor match {
-          case ci: covering.CoveringIndexDescriptor =>
-            // rows re-hash to their original bucket ids (same key columns,
-            // same numBuckets), so compacted files merge per bucket and
-            // coexist with untouched files of the same bucket
-            covering.CoveringIndexDescriptor.writeBucketed(
-              spark, compactInput, ctx.dataPath, ci.numBuckets, ci.indexedColumns)
-            ci
-          case ds: dataskipping.DataSkippingIndexDescriptor =>
-            dataskipping.DataSkippingBuild.write(ctx, compactInput, ds)
-          case iv: graft.index.ivf.IvfIndexDescriptor =>
-            // cells are independent: small cell files (merge-refresh
-            // accumulation) compact per cell with the CODEBOOK UNTOUCHED —
-            // no retrain, cost O(small files). Tombstoned rows are
-            // physically dropped from the rewritten slice; the tombstone
-            // list clears only when NOTHING was kept (kept files may
-            // still hold dead rows the search filter must keep masking).
-            // Retraining belongs to refreshIndex("full").
-            graft.index.ivf.IvfBuild.compactCells(
-              ctx, ContentMeta(latest.content.root, small), iv)
-            if (kept.isEmpty) iv.copy(tombstones = Nil) else iv
-          case mh: graft.index.minhash.MinHashIndexDescriptor =>
-            // signature rows are independent: plain small-file rewrite,
-            // tombstoned rows dropped from the rewritten slice; the list
-            // clears only when nothing was kept (same contract as IVF)
-            graft.index.minhash.MinHashBuild.compact(
-              ctx, ContentMeta(latest.content.root, small), mh)
-            if (kept.isEmpty) mh.copy(tombstones = Nil) else mh
-          case zo: zorder.ZOrderIndexDescriptor =>
-            // re-cluster the index's OWN rows, lineage included: the
-            // source may have drifted or lost files since the logged
-            // snapshot, and folding drift in here would leave relations
-            // stale (hybrid scan would then union appended rows twice)
-            zorder.ZOrderBuild.recluster(ctx, compactInput, zo)
+        newVersion(latest, tracker) { ctx =>
+          (latest.descriptor.compact(ctx, ContentMeta(latest.content.root, small),
+            IndexData.parquet(spark, latest.descriptor.schemaJson, small.map(_.path)),
+            keptAny = kept.nonEmpty), kept)
         }
-        latest.copy(descriptor = newDescriptor,
-          content = ContentMeta(ctx.dataPath,
-            kept ++ listDataFiles(dataPath, tracker)),
-          properties = latest.properties + ("dataVersion" -> version.toString))
       }
     }
     emit(OptimizeActionEvent(app, fin,
       if (changed) s"Index '$name' optimized ($mode)."
       else s"Index '$name' optimized ($mode): nothing to compact."))
-  }
-
-  /** Split the index files into (files to rewrite, files kept in place)
-    * by the group rule of [[optimize]]. */
-  private def compactionSet(entry: IndexLogEntry, mode: String)
-      : (Seq[FileMeta], Seq[FileMeta]) = {
-    val files = entry.content.files
-    if (mode == "full") return (files, Nil)
-    val threshold = GraftConf.optimizeFileSizeThreshold(spark)
-    val small = files.filter(_.size < threshold)
-    val rewrite: Set[FileMeta] = entry.descriptor match {
-      case iv: graft.index.ivf.IvfIndexDescriptor if iv.tombstones.nonEmpty =>
-        small.toSet
-      case mh: graft.index.minhash.MinHashIndexDescriptor
-          if mh.tombstones.nonEmpty =>
-        small.toSet
-      case _: zorder.ZOrderIndexDescriptor =>
-        // global clustering: a qualifying group re-clusters every file —
-        // mixing kept files with a re-clustered slice would break it
-        if (small.size >= 2) files.toSet else Set.empty
-      case d =>
-        val groupOf: FileMeta => String = d match {
-          case _: covering.CoveringIndexDescriptor => f =>
-            org.apache.spark.sql.execution.datasources.BucketingUtils
-              .getBucketId(new Path(f.path).getName).fold("")(_.toString)
-          case _: graft.index.ivf.IvfIndexDescriptor => f =>
-            new Path(f.path).getParent.getName // graft__cell=<c>
-          case _ => _ => ""
-        }
-        small.groupBy(groupOf).values.filter(_.size >= 2).flatten.toSet
-    }
-    files.partition(rewrite.contains)
   }
 
   /** Diff CURRENT source files against the logged snapshot:
@@ -589,12 +428,13 @@ final class IndexManager(spark: SparkSession) {
     if (r.format == "iceberg" &&
         graft.index.sources.IcebergMeta.isIcebergTable(spark, r.rootPaths.head))
       return graft.index.sources.IcebergTable.read(spark, r.rootPaths.head)
-    spark.read
-      .schema(DataType.fromJson(r.schemaJson).asInstanceOf[StructType])
-      .format(r.format)
-      .options(r.options.filter { case (k, _) => k.toLowerCase != "path" })
-      .load(r.rootPaths: _*)
+    reader(r).format(r.format).load(r.rootPaths: _*)
   }
+
+  /** A reader of a logged relation: its schema and options. */
+  private def reader(r: RelationMeta) = spark.read
+    .schema(DataType.fromJson(r.schemaJson).asInstanceOf[StructType])
+    .options(r.options.filter { case (k, _) => k.toLowerCase != "path" })
 
   /** Read a specific subset of a logged relation's files.
     *
@@ -613,15 +453,10 @@ final class IndexManager(spark: SparkSession) {
       case "delta" | "iceberg" => "parquet"
       case f => f
     }
-    def readGroup(base: String, files: Seq[String]): DataFrame =
-      spark.read
-        .schema(DataType.fromJson(r.schemaJson).asInstanceOf[StructType])
-        .format(readFormat)
-        .options(r.options.filter { case (k, _) => k.toLowerCase != "path" } +
-          ("basePath" -> base))
-        .load(files: _*)
     SourcePaths.groupByRoot(r.rootPaths, paths)
-      .map { case (base, files) => readGroup(base, files) }
+      .map { case (base, files) =>
+        reader(r).format(readFormat).option("basePath", base).load(files: _*)
+      }
       .reduce(_.unionByName(_))
   }
 

@@ -1,9 +1,12 @@
 package graft.index.covering
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuildContext, IndexConfig, IndexDescriptor}
+import graft.index.{ContentMeta, FileMeta, IndexBuildContext, IndexConfig,
+  IndexDescriptor, RefreshInput}
 
 /**
  * Covering index: a vertical slice of the source, bucketed AND sorted by
@@ -52,6 +55,33 @@ final case class CoveringIndexDescriptor(
     CoveringIndexDescriptor.writeBucketed(
       ctx.spark, projected, ctx.dataPath, numBuckets, indexedColumns)
     copy(schemaJson = projected.schema.json)
+  }
+
+  override def canHandleDeletedFiles: Boolean = hasLineage
+
+  /** Merge or rewrite: appended rows re-hash to the same bucket ids (same
+    * keys, same numBuckets), so kept and new files of one bucket coexist
+    * under the claimed HashPartitioning. */
+  override def refreshIncremental(ctx: IndexBuildContext,
+      in: RefreshInput): (IndexDescriptor, Seq[FileMeta]) =
+    in.mergeOrRewrite(CoveringIndexDescriptor.LineageColumn)(
+        CoveringIndexDescriptor.project(ctx, _, this)) { rows =>
+      CoveringIndexDescriptor.writeBucketed(ctx.spark,
+        rows.select(allIndexColumns.map(col): _*), ctx.dataPath, numBuckets,
+        indexedColumns)
+      this
+    }
+
+  override def compactionGroup(file: FileMeta): String =
+    BucketingUtils.getBucketId(new Path(file.path).getName).fold("")(_.toString)
+
+  /** Rows re-hash to their original bucket ids, so compacted files merge
+    * per bucket and coexist with untouched files of the same bucket. */
+  override def compact(ctx: IndexBuildContext, files: ContentMeta,
+      data: => DataFrame, keptAny: Boolean): IndexDescriptor = {
+    CoveringIndexDescriptor.writeBucketed(
+      ctx.spark, data, ctx.dataPath, numBuckets, indexedColumns)
+    this
   }
 }
 

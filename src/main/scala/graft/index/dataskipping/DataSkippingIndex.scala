@@ -2,12 +2,12 @@ package graft.index.dataskipping
 
 import org.apache.spark.sql.DataFrame
 
-import graft.index.{IndexBuildContext, IndexDescriptor}
+import graft.index.{ContentMeta, FileMeta, IndexBuildContext, IndexDescriptor,
+  RefreshInput}
 
 /**
  * Data-skipping index descriptor: one row per source file with per-file
  * sketch values (reference: index/dataskipping/DataSkippingIndex.scala:44-128).
- * Placeholder — build lands with the data-skipping milestone.
  */
 final case class DataSkippingIndexDescriptor(
     sketches: Seq[SketchSpec],
@@ -22,6 +22,18 @@ final case class DataSkippingIndexDescriptor(
 
   override def build(ctx: IndexBuildContext, source: DataFrame): IndexDescriptor =
     DataSkippingBuild.build(ctx, source, this)
+
+  /** Merge or rewrite: sketch rows are per source file, so the appended
+    * files' rows are simply more rows in a new file. */
+  override def refreshIncremental(ctx: IndexBuildContext,
+      in: RefreshInput): (IndexDescriptor, Seq[FileMeta]) =
+    in.mergeOrRewrite(Sketches.FileIdColumn)(
+      DataSkippingBuild.sketchRows(ctx, _, this))(
+      DataSkippingBuild.write(ctx, _, this))
+
+  override def compact(ctx: IndexBuildContext, files: ContentMeta,
+      data: => DataFrame, keptAny: Boolean): IndexDescriptor =
+    DataSkippingBuild.write(ctx, data, this)
 }
 
 /** Serializable sketch definition: kind ∈ {minmax, bloom}. */

@@ -3,7 +3,8 @@ package graft.index.ivf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuildContext, IndexConfig, IndexDescriptor}
+import graft.index.{ContentMeta, FileMeta, IndexBuildContext, IndexConfig,
+  IndexDescriptor, TombstoneIndex, TombstoneReads}
 
 /**
  * IVF (inverted-file) similarity index: a first-class index kind for
@@ -39,7 +40,8 @@ import graft.index.{IndexBuildContext, IndexConfig, IndexDescriptor}
  *  - deleted files → TOMBSTONES (their file ids recorded in the
  *    descriptor; search anti-filters on the lineage column) — O(listing),
  *    no data touched;
- *  - optimize / full refresh → retrain + rewrite, clearing tombstones.
+ *  - optimize → per-cell compaction, codebook untouched, tombstoned rows
+ *    dropped; full refresh → retrain + rewrite, clearing tombstones.
  */
 final case class IvfIndexDescriptor(
     idColumn: String,
@@ -52,7 +54,7 @@ final case class IvfIndexDescriptor(
     tombstones: Seq[Long] = Nil,
     pqM: Option[Int] = None,
     pqIter: Int = 0,
-    pqCodebook: Seq[Seq[Seq[Double]]] = Nil) extends IndexDescriptor {
+    pqCodebook: Seq[Seq[Seq[Double]]] = Nil) extends TombstoneIndex {
 
   override def kind: String = "IvfIndex"
   override def kindAbbr: String = "IVF"
@@ -63,6 +65,37 @@ final case class IvfIndexDescriptor(
 
   override def build(ctx: IndexBuildContext, source: DataFrame): IndexDescriptor =
     IvfBuild.build(ctx, source, this)
+
+  override def withTombstones(ids: Seq[Long]): IvfIndexDescriptor =
+    copy(tombstones = ids)
+
+  /** Appended vectors are assigned with the FROZEN codebook (no retrain —
+    * codebook drift is gradual and a full refresh re-trains) and only
+    * their cell files are written. */
+  override protected def writeAppended(ctx: IndexBuildContext,
+      appended: DataFrame): Unit = {
+    val centroids = IvfBuild.centroidsOf(ctx.spark, this)
+    require(centroids.nonEmpty, "incremental refresh needs a trained codebook")
+    IvfBuild.writeAssigned(ctx,
+      IvfBuild.srcWithLineage(ctx, appended, this), centroids, this)
+  }
+
+  /** Cells are independent: small cell files compact per cell with the
+    * codebook untouched, never reading the kept files; retraining belongs
+    * to refreshIndex("full"). */
+  override protected def rewrite(ctx: IndexBuildContext,
+      files: ContentMeta): Unit =
+    IvfBuild.writeCells(ctx, IvfBuild.antiTombstone(
+      IvfBuild.readIndexData(ctx.spark, files, schemaJson), this))
+
+  override def compactionGroup(file: FileMeta): String =
+    new org.apache.hadoop.fs.Path(file.path).getParent.getName // graft__cell=<c>
+
+  /** A live codebook sidecar can outlive its version dir's data files
+    * (frozen codebook + later compaction moved all data elsewhere): its
+    * host dir must never be reaped while the descriptor points at it. */
+  override def protectedDirs: Set[String] =
+    centroidsPath.map(p => new org.apache.hadoop.fs.Path(p).getParent.getName).toSet
 }
 
 /** User-facing config: `IvfIndexConfig("ann", "vec_id", "embedding", k=16)`.
@@ -97,7 +130,7 @@ final case class IvfIndexConfig(
   }
 }
 
-object IvfBuild {
+object IvfBuild extends TombstoneReads {
 
   // no leading underscore: partitionBy dirs named `_x=N` would be hidden
   // from Spark's file listing (hiddenFileFilter) and the data unreadable
@@ -109,11 +142,6 @@ object IvfBuild {
     * out of the ranking scan entirely. */
   val CodesColumn = "graft__pq_codes"
   val NormColumn = "graft__norm"
-
-  /** Same lineage column as covering indexes: maps each index row to its
-    * source file id, so file-level deletes tombstone instead of rebuild. */
-  val LineageColumn: String =
-    graft.index.covering.CoveringIndexDescriptor.LineageColumn
 
   /** Codebook sidecar dir name — underscore-prefixed so data listings and
     * parquet reads of the version dir never see it. */
@@ -171,7 +199,7 @@ object IvfBuild {
     }
 
   /** Source rows as (id, vector, source-file id), vectorless rows dropped. */
-  private def srcWithLineage(ctx: IndexBuildContext, source: DataFrame,
+  private[ivf] def srcWithLineage(ctx: IndexBuildContext, source: DataFrame,
       d: IvfIndexDescriptor) = {
     val spark = ctx.spark
     import spark.implicits._
@@ -184,7 +212,7 @@ object IvfBuild {
       .as[(Long, Array[Double], Long)]
   }
 
-  private def writeAssigned(ctx: IndexBuildContext,
+  private[ivf] def writeAssigned(ctx: IndexBuildContext,
       src: org.apache.spark.sql.Dataset[(Long, Array[Double], Long)],
       centroids: Array[Array[Double]], d: IvfIndexDescriptor): DataFrame = {
     val spark = ctx.spark
@@ -210,14 +238,17 @@ object IvfBuild {
             sqrt(dot(col(d.vectorColumn), col(d.vectorColumn))))
       case None => assigned
     }
-    withPq
-      .repartition(col(CellColumn))
-      .write.mode("overwrite")
-      .partitionBy(CellColumn)
-      .parquet(ctx.dataPath)
+    writeCells(ctx, withPq)
     bc.destroy()
     withPq
   }
+
+  /** Write cell-assigned rows under ctx.dataPath, one dir per cell. */
+  private[ivf] def writeCells(ctx: IndexBuildContext, rows: DataFrame): Unit =
+    rows.repartition(col(CellColumn))
+      .write.mode("overwrite")
+      .partitionBy(CellColumn)
+      .parquet(ctx.dataPath)
 
   /** Persist the codebook inline or as a sidecar, clearing tombstones —
     * every caller of this has just (re)written the full corpus. */
@@ -358,54 +389,6 @@ object IvfBuild {
 
     val assigned = writeAssigned(ctx, src, centroids, d)
     finishDescriptor(ctx, centroids, assigned.schema.json, d)
-  }
-
-  /** Appended-only slice of an incremental refresh in MERGE mode: new
-    * vectors are assigned with the EXISTING codebook (no retrain) and
-    * ONLY their cell files are written to the new version dir — old cell
-    * files stay in place untouched, so the refresh reads and writes
-    * O(appended), never O(index). Readers union the version dirs via
-    * [[readIndexData]]; small-file accumulation is `optimize`'s job. */
-  def appendIncremental(
-      ctx: IndexBuildContext,
-      appendedSource: DataFrame,
-      d: IvfIndexDescriptor): IvfIndexDescriptor = {
-    val centroids = centroidsOf(ctx.spark, d)
-    require(centroids.nonEmpty, "incremental refresh needs a trained codebook")
-    writeAssigned(ctx, srcWithLineage(ctx, appendedSource, d), centroids, d)
-    d
-  }
-
-  /** Per-cell compaction for `optimize`: merge the given (small) cell
-    * files into one file wave per cell in the new version dir, codebook
-    * untouched — cells are independent, so this never retrains and never
-    * reads the kept large files. Tombstoned rows are physically dropped
-    * from the rewritten slice (they are dead either way; the caller keeps
-    * the tombstone list while any un-rewritten file remains). */
-  def compactCells(ctx: IndexBuildContext,
-      smallContent: graft.index.ContentMeta,
-      d: IvfIndexDescriptor): Unit = {
-    val live = antiTombstone(
-      readIndexData(ctx.spark, smallContent, d.schemaJson), d)
-    live
-      .repartition(col(CellColumn))
-      .write.mode("overwrite")
-      .partitionBy(CellColumn)
-      .parquet(ctx.dataPath)
-  }
-
-  /** Drop tombstoned rows (plus any `extraFids` — query-time drift
-    * deletes use the same semantics). NULL-safe: under `!isin` alone,
-    * SQL three-valued logic silently drops any NULL-lineage row, and
-    * index data written before lineage existed has no such column at
-    * all — both must be RETAINED (a row we cannot attribute to a
-    * deleted file is live until a rewrite proves otherwise). */
-  def antiTombstone(df: DataFrame, d: IvfIndexDescriptor,
-      extraFids: Seq[Long] = Nil): DataFrame = {
-    val dead = (d.tombstones ++ extraFids).distinct
-    if (dead.isEmpty || !df.columns.contains(LineageColumn)) df
-    else df.filter(col(LineageColumn).isNull ||
-      !col(LineageColumn).isin(dead: _*))
   }
 
   /** Read IVF index data whose content spans version dirs (after

@@ -3,7 +3,8 @@ package graft.index.minhash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuildContext, IndexConfig, IndexDescriptor}
+import graft.index.{ContentMeta, IndexBuildContext, IndexConfig, IndexDescriptor,
+  TombstoneIndex, TombstoneReads}
 import graft.queries.TextPrimitives
 
 /**
@@ -40,7 +41,7 @@ final case class MinHashIndexDescriptor(
     numPerm: Int,
     bands: Int,
     schemaJson: String,
-    tombstones: Seq[Long] = Nil) extends IndexDescriptor {
+    tombstones: Seq[Long] = Nil) extends TombstoneIndex {
 
   override def kind: String = "MinHashIndex"
   override def kindAbbr: String = "MH"
@@ -53,6 +54,25 @@ final case class MinHashIndexDescriptor(
 
   override def build(ctx: IndexBuildContext, source: DataFrame): IndexDescriptor =
     MinHashBuild.build(ctx, source, this)
+
+  override def withTombstones(ids: Seq[Long]): MinHashIndexDescriptor =
+    copy(tombstones = ids)
+
+  /** Sign only the appended docs and write them as new files. */
+  override protected def writeAppended(ctx: IndexBuildContext,
+      appended: DataFrame): Unit =
+    MinHashBuild.write(ctx, MinHashBuild.indexRows(ctx, appended, this))
+
+  /** Plain rewrite (rows are independent) into ⌈bytes / size threshold⌉
+    * files. Left to the scan split, every small file would be its own
+    * partition (the open cost) and come out as its own file again. */
+  override protected def rewrite(ctx: IndexBuildContext,
+      files: ContentMeta): Unit = {
+    val threshold = graft.index.GraftConf.optimizeFileSizeThreshold(ctx.spark)
+    MinHashBuild.write(ctx, MinHashBuild.antiTombstone(
+        MinHashBuild.readIndexData(ctx.spark, files, schemaJson), this)
+      .coalesce(math.max(1, math.ceil(files.totalSize.toDouble / threshold).toInt)))
+  }
 }
 
 /** User-facing config: `MinHashIndexConfig("dedup", "doc_id", "text")`.
@@ -79,15 +99,10 @@ final case class MinHashIndexConfig(
   }
 }
 
-object MinHashBuild {
+object MinHashBuild extends TombstoneReads {
 
   val SigColumn = "graft__sig"
   def bandColumn(b: Int): String = s"graft__band$b"
-
-  /** Same lineage column as the other kinds: maps each index row to its
-    * source file id so deletes tombstone instead of rebuild. */
-  val LineageColumn: String =
-    graft.index.covering.CoveringIndexDescriptor.LineageColumn
 
   /** MinHash signature over a text column — the SAME primitives as the
     * `dedup_minhash_lsh` operator (fused shingle-hash + k-slot signature
@@ -141,14 +156,6 @@ object MinHashBuild {
     d.copy(schemaJson = rows.schema.json, tombstones = Nil)
   }
 
-  /** MERGE-mode appended slice: sign ONLY the appended docs and write
-    * them as new files — old index files are never read or rewritten. */
-  def appendIncremental(ctx: IndexBuildContext, appendedSource: DataFrame,
-      d: MinHashIndexDescriptor): MinHashIndexDescriptor = {
-    write(ctx, indexRows(ctx, appendedSource, d))
-    d
-  }
-
   /** Read index data across version dirs (plain unpartitioned parquet —
     * a flat path-list read; no per-dir basePath dance needed) under the
     * logged `schemaJson` (see [[graft.index.IndexData]]). */
@@ -161,31 +168,4 @@ object MinHashBuild {
         spark, "mhdata#" + content.filePaths.mkString("|")) {
       graft.index.IndexData.parquet(spark, schemaJson, content.filePaths)
     }
-
-  /** Drop tombstoned rows (plus any `extraFids` — query-time drift
-    * deletes use the same semantics), NULL-safe (same contract as IVF:
-    * rows we cannot attribute to a deleted file stay live until a
-    * rewrite proves otherwise). */
-  def antiTombstone(df: DataFrame, d: MinHashIndexDescriptor,
-      extraFids: Seq[Long] = Nil): DataFrame = {
-    val dead = (d.tombstones ++ extraFids).distinct
-    if (dead.isEmpty || !df.columns.contains(LineageColumn)) df
-    else df.filter(col(LineageColumn).isNull ||
-      !col(LineageColumn).isin(dead: _*))
-  }
-
-  /** Compact the given small files for `optimize`: plain rewrite of the
-    * slice (rows are independent), tombstoned rows physically dropped,
-    * into ⌈slice bytes / size threshold⌉ files. Left to the scan split,
-    * every small file would be its own partition (the open cost) and
-    * come out as its own file again. */
-  def compact(ctx: IndexBuildContext, smallContent: graft.index.ContentMeta,
-      d: MinHashIndexDescriptor): Unit = {
-    val threshold = graft.index.GraftConf.optimizeFileSizeThreshold(ctx.spark)
-    val files = math.max(1,
-      math.ceil(smallContent.totalSize.toDouble / threshold).toInt)
-    write(ctx, antiTombstone(
-        readIndexData(ctx.spark, smallContent, d.schemaJson), d)
-      .coalesce(files))
-  }
 }

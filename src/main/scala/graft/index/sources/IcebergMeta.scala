@@ -214,6 +214,12 @@ private[sources] final case class IceSnapLog(entries: Seq[IceSnapEntry],
     }
     Right((chain.reverse.toSeq, cursor.isDefined))
   }
+
+  /** The current lineage: `currentId` and its retained ancestors, walked
+    * back until the root or an expired id. */
+  def currentLineage: Seq[Long] =
+    Iterator.iterate(Option(currentId))(_.flatMap(parentOf))
+      .takeWhile(_.exists(contains)).flatten.toSeq
 }
 
 object IcebergMeta {
@@ -2656,14 +2662,17 @@ object IcebergTable {
         else None)
   }
 
-  /** The snapshot TIMELINE, oldest first: every retained snapshot's
+  /** The snapshot TIMELINE, oldest first: every retained snapshot's (or,
+    * with `currentLineage`, only those of the current lineage)
     * (id, `timestamp-ms`, summary operation) from the current metadata
     * document — the Iceberg sibling of [[DeltaTable.commits]]. */
-  private[sources] def commits(spark: SparkSession,
-      location: String): Seq[(Long, Long, String)] = {
+  private[sources] def commits(spark: SparkSession, location: String,
+      currentLineage: Boolean = false): Seq[(Long, Long, String)] = {
     val fs = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
-    IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, location)._2)
-      .entries.map(e => (e.id, e.timestampMs, e.operation.orNull))
+    val log = IcebergMeta.snapshotLog(IcebergMeta.currentMetadata(fs, location)._2)
+    val kept = if (currentLineage) log.currentLineage.toSet else log.byId.keySet
+    log.entries.filter(e => kept(e.id))
+      .map(e => (e.id, e.timestampMs, e.operation.orNull))
       .sortBy(c => (c._2, c._1))
   }
 
@@ -2673,14 +2682,16 @@ object IcebergTable {
   def history(spark: SparkSession, location: String): DataFrame =
     LakeTable.historyOf(spark, commits(spark, location), "snapshot_id")
 
-  /** `TIMESTAMP AS OF` time travel: read the LATEST snapshot whose
-    * `timestamp-ms` is at or before `tsMillis` (the Iceberg spec's
-    * snapshot-log resolution rule). Fails loudly when the timestamp
-    * precedes the first snapshot. */
+  /** `TIMESTAMP AS OF` time travel: read the LATEST snapshot of the
+    * current lineage whose `timestamp-ms` is at or before `tsMillis` (the
+    * Iceberg spec's snapshot-log resolution rule): a snapshot undone by a
+    * rollback was never current after it, so it is not a candidate.
+    * Fails loudly when the timestamp precedes the lineage's first
+    * retained snapshot. */
   def readTimestampAsOf(spark: SparkSession, location: String,
       tsMillis: Long): DataFrame =
-    read(spark, location, snapshotAsOf = Some(
-      LakeTable.idAsOf(commits(spark, location), tsMillis, location)))
+    read(spark, location, snapshotAsOf = Some(LakeTable.idAsOf(
+      commits(spark, location, currentLineage = true), tsMillis, location)))
 
   /** ROLLBACK to a retained ANCESTOR snapshot — the undo operation,
     * metadata-only: `current-snapshot-id` is repointed at the target

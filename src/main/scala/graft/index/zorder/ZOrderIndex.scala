@@ -2,12 +2,12 @@ package graft.index.zorder
 
 import org.apache.spark.sql.DataFrame
 
-import graft.index.{IndexBuildContext, IndexDescriptor}
+import graft.index.{ContentMeta, FileMeta, IndexBuildContext, IndexDescriptor,
+  RefreshInput}
 
 /**
  * Z-order covering index descriptor (reference:
- * index/zordercovering/ZOrderCoveringIndex.scala:32-189). Placeholder —
- * build lands with the z-order milestone.
+ * index/zordercovering/ZOrderCoveringIndex.scala:32-189).
  */
 final case class ZOrderIndexDescriptor(
     indexedColumns: Seq[String],
@@ -24,6 +24,26 @@ final case class ZOrderIndexDescriptor(
 
   override def build(ctx: IndexBuildContext, source: DataFrame): IndexDescriptor =
     ZOrderBuild.build(ctx, source, this)
+
+  /** Clustering is global: an incremental refresh rebuilds from the
+    * current source. */
+  override def refreshIncremental(ctx: IndexBuildContext,
+      in: RefreshInput): (IndexDescriptor, Seq[FileMeta]) =
+    (build(ctx, in.source), Nil)
+
+  /** A qualifying group re-clusters every file: mixing kept files with a
+    * re-clustered slice would break the clustering. */
+  override def quickCompaction(files: Seq[FileMeta],
+      small: Seq[FileMeta]): Set[FileMeta] =
+    if (small.size >= 2) files.toSet else Set.empty
+
+  /** Re-cluster the index's OWN rows, lineage included: the source may
+    * have drifted or lost files since the logged snapshot, and folding
+    * drift in here would leave relations stale (hybrid scan would then
+    * union appended rows twice). */
+  override def compact(ctx: IndexBuildContext, files: ContentMeta,
+      data: => DataFrame, keptAny: Boolean): IndexDescriptor =
+    ZOrderBuild.recluster(ctx, data, this)
 }
 
 /** User-facing config (reference:

@@ -152,6 +152,38 @@ class MergeRefreshSpec extends AnyFunSuite {
     }
   }
 
+  test("covering without lineage: incremental refresh over deletes refuses " +
+      "before writing anything") {
+    withDirs { (g, src) =>
+      spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet")
+        .limit(1000).repartition(4).write.mode("overwrite").parquet(src)
+      g.createIndex(spark.read.parquet(src),
+        CoveringIndexConfig("mr_nolin", Seq("l_orderkey"), Seq("l_quantity")))
+      val log = g.indexManager.logManager("mr_nolin")
+      val root = g.indexManager.indexRoot("mr_nolin")
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      def versionDirs = fs.listStatus(root).map(_.getPath.getName)
+        .filter(_.startsWith("v__")).toSet
+      val (idBefore, dirsBefore) = (log.getLatestId, versionDirs)
+
+      val srcDir = new org.apache.hadoop.fs.Path(src)
+      fs.delete(fs.listStatus(srcDir).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).head, false)
+      val e = intercept[IllegalArgumentException] {
+        g.refreshIndex("mr_nolin", "incremental")
+      }
+      assert(e.getMessage.contains("requires lineage"))
+      assert(log.getLatestId == idBefore, "the refused refresh wrote a log entry")
+      assert(versionDirs == dirsBefore, "the refused refresh made a version dir")
+      assert(log.getLatestStableLog.get.state == IndexState.Active)
+      // a full refresh still recovers the index
+      g.refreshIndex("mr_nolin", "full")
+      assert(spark.read.parquet(
+        g.indexManager.getIndexes().head.content.filePaths: _*).count() ==
+        spark.read.parquet(src).count())
+    }
+  }
+
   test("data-skipping: append-only refresh adds sketch rows, keeps old files") {
     withDirs { (g, src) =>
       spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet")

@@ -121,4 +121,29 @@ class RestoreRollbackSpec extends AnyFunSuite {
       IcebergTable.rollback(spark, loc, 99L)
     }
   }
+
+  test("iceberg TIMESTAMP AS OF after a rollback resolves on the current " +
+      "lineage") {
+    val loc = Files.createTempDirectory("graft-rollback-asof-").toString
+    val a = customer.filter(col("c_custkey") < 50)
+    IcebergTable.create(a, loc)                                   // 1 = A
+    Thread.sleep(5)
+    IcebergTable.append(customer.filter(col("c_custkey") >= 100), loc) // 2 = B
+    Thread.sleep(5)
+    IcebergTable.rollback(spark, loc, 1L)
+    Thread.sleep(5)
+    val c = customer.filter(col("c_custkey").between(50, 59))
+    IcebergTable.append(c, loc)                                   // 3 = C
+    val ts = IcebergTable.history(spark, loc).collect()
+      .map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toMap
+    assert(ts(2L) < ts(3L), s"commit times not ordered: $ts")
+    // between B and C: B was undone, so the table's state then was A
+    val asOf = IcebergTable.readTimestampAsOf(spark, loc, ts(2L))
+    assert(asOf.count() == a.count())
+    // C and A still resolve as before
+    assert(IcebergTable.readTimestampAsOf(spark, loc, ts(3L)).count() ==
+      a.count() + c.count())
+    assert(IcebergTable.readTimestampAsOf(spark, loc, ts(1L)).count() ==
+      a.count())
+  }
 }

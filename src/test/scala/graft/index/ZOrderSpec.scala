@@ -220,4 +220,40 @@ class ZOrderSpec extends AnyFunSuite {
       assert(actual == expected && expected.nonEmpty)
     }
   }
+
+  test("z-order incremental refresh over an appended and a deleted file " +
+      "rebuilds into the new version dir") {
+    withGraft { g =>
+      val src = Files.createTempDirectory("graft-zo-inc-").toString
+      lineitem.limit(2000).repartition(4)
+        .write.mode("overwrite").parquet(src)
+      g.createIndex(spark.read.parquet(src),
+        graft.index.zorder.ZOrderIndexConfig("zo_inc",
+          Seq("l_partkey", "l_suppkey"), Seq("l_quantity")))
+
+      val dir = new org.apache.hadoop.fs.Path(src)
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      val victim = fs.listStatus(dir).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).head
+      lineitem.limit(150).select(spark.read.parquet(src).columns.map(col): _*)
+        .coalesce(1).write.mode("append").parquet(src)
+      fs.delete(victim, false)
+      g.refreshIndex("zo_inc", "incremental")
+
+      val e = g.indexManager.getIndexes().head
+      assert(new org.apache.hadoop.fs.Path(e.content.root).getName == "v__1")
+      assert(e.content.files.nonEmpty &&
+        e.content.filePaths.forall(_.contains(e.content.root + "/")),
+        s"content outside the new version dir: ${e.content.filePaths}")
+      def q = spark.read.parquet(src)
+        .filter(col("l_suppkey") <= 5L)
+        .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
+      assert(usesIndex(q, "zo_inc"))
+      spark.conf.set(GraftConf.ApplyEnabledKey, "false")
+      val expected = q.collect().groupBy(identity).view.mapValues(_.length).toMap
+      spark.conf.set(GraftConf.ApplyEnabledKey, "true")
+      val actual = q.collect().groupBy(identity).view.mapValues(_.length).toMap
+      assert(actual == expected && expected.nonEmpty)
+    }
+  }
 }
