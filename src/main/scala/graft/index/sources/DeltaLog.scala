@@ -144,6 +144,18 @@ object DeltaLog {
       CommitRe.pattern.matcher(s.getPath.getName).matches())
   }
 
+  /** The newest commit version, from one listing of the log (no
+    * replay). */
+  private[sources] def latestVersion(spark: SparkSession, rootStr: String): Long = {
+    val dir = logDir(new Path(rootStr))
+    val fs = fsOf(spark, dir)
+    require(fs.exists(dir), s"not a Delta table (no _delta_log): $rootStr")
+    fs.listStatus(dir).iterator.map(_.getPath.getName)
+      .collect { case CommitRe(v) => v.toLong }.maxOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"Delta log at $rootStr has no commit files"))
+  }
+
   /** Replay the log to the latest version — or, with `versionAsOf`, to a
     * historic one (time travel): checkpoint (if any, at or before the
     * target) + the JSON commits after it, in version order. */
@@ -1078,8 +1090,10 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     * is not reconstructible and fails loudly, as does a version whose
     * data changed while CDF was not enabled.
     *
-    * Scale: the per-version action walk is driver-side metadata (the
-    * same cost as snapshot replay); the change rows themselves stream
+    * Scale: the walk reads only the range's commit JSONs (CDF enablement
+    * at its start comes from the snapshot before it, replayed from the
+    * checkpoint — so a range after a log cleanup still reads), driver-
+    * side metadata; the change rows themselves stream
     * straight from the listed parquet — no shuffle, predicate pushdown
     * intact through the final union. */
   def changes(spark: SparkSession, rootStr: String, startVersion: Long,
@@ -1106,14 +1120,17 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val logicalSchema = endSnap.schema
     val physSchema = physicalSchemaOf(endSnap)
     val cdcReadSchema = StructType(
-      physSchema.fields :+ StructField("_change_type", StringType))
+      physSchema.fields :+ StructField(ChangeStamps.ChangeType, StringType))
 
-    // one pass over the commit JSONs from 0 (cheap driver-side metadata):
-    // tracks table configuration so per-version CDF enablement is exact
+    // the range's own commit JSONs, with CDF enablement tracked from
+    // the configuration at startVersion - 1 (a replay from its
+    // checkpoint), so a poll never walks the log before its range
     final case class VActs(ts: Long, cdc: Seq[String],
         addsDc: Seq[String], removesDc: Seq[String], cdfOn: Boolean)
-    var cfg = Map.empty[String, String]
-    val perVersion: Seq[(Long, VActs)] = (0L to end).map { v =>
+    var cfg =
+      if (startVersion == 0) Map.empty[String, String]
+      else DeltaLog.snapshot(spark, rootStr, Some(startVersion - 1)).configuration
+    val perVersion: Seq[(Long, VActs)] = (startVersion to end).map { v =>
       val st = commits.getOrElse(v, throw new IllegalStateException(
         s"Delta log at $rootStr is missing commit version $v"))
       var ts = st.getModificationTime
@@ -1151,17 +1168,12 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         cdfEnabled(cfg))
     }
 
-    def resolve(raw: String): String = {
-      val decoded = java.net.URLDecoder.decode(raw, "UTF-8")
-      val p = new Path(decoded)
-      if (p.isAbsolute) decoded else new Path(root, decoded).toString
-    }
-    def stamp(df: DataFrame, v: Long, ts: Long): DataFrame = df
-      .withColumn("_commit_version", lit(v))
-      .withColumn("_commit_timestamp", lit(new java.sql.Timestamp(ts)))
+    def resolve(raw: String): String = DeltaLog.resolvePath(root, raw)
+    def stamp(df: DataFrame, changeType: org.apache.spark.sql.Column,
+        v: Long, ts: Long): DataFrame =
+      ChangeStamps.stamp(df, changeType, ChangeStamps.DeltaId, v, ts)
 
     val parts: Seq[DataFrame] = perVersion
-      .filter { case (v, _) => v >= startVersion }
       .flatMap { case (v, a) =>
         val hasData = a.cdc.nonEmpty || a.addsDc.nonEmpty || a.removesDc.nonEmpty
         if (!hasData) None
@@ -1173,12 +1185,12 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         } else if (a.cdc.nonEmpty) {
           Some(stamp(spark.read.schema(cdcReadSchema)
             .option("basePath", new Path(root, "_change_data").toString)
-            .parquet(a.cdc.map(resolve): _*), v, a.ts))
+            .parquet(a.cdc.map(resolve): _*), col(ChangeStamps.ChangeType),
+            v, a.ts))
         } else if (a.removesDc.isEmpty) {
           Some(stamp(spark.read.schema(physSchema)
             .option("basePath", rootStr)
-            .parquet(a.addsDc.map(resolve): _*)
-            .withColumn("_change_type", lit("insert")), v, a.ts))
+            .parquet(a.addsDc.map(resolve): _*), lit("insert"), v, a.ts))
         } else if (a.addsDc.isEmpty) {
           // deletes of whole files: rows come off the removed files,
           // minus positions their DVs (at v-1) had already deleted
@@ -1192,7 +1204,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           val alive =
             if (priorDv.isEmpty) removed
             else removed.filter(!LakeDeletes.rowDeleted(spark, priorDv))
-          Some(stamp(alive.withColumn("_change_type", lit("delete")), v, a.ts))
+          Some(stamp(alive, lit("delete"), v, a.ts))
         } else {
           throw new UnsupportedDeltaProtocolException(
             s"version $v at $rootStr both adds and removes data without " +
@@ -1201,21 +1213,14 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         }
       }
 
-    val ordered: Seq[String] = physSchema.fieldNames.toSeq ++
-      Seq("_change_type", "_commit_version", "_commit_timestamp")
+    val stamps = ChangeStamps.columns(ChangeStamps.DeltaId)
+    val ordered: Seq[String] = physSchema.fieldNames.toSeq ++ stamps
     val unioned = parts
       .map(df => df.select(ordered.map(col): _*))
       .reduceOption(_.union(_))
-      .getOrElse {
-        val empty = StructType(cdcReadSchema.fields ++ Seq(
-          StructField("_commit_version", LongType),
-          StructField("_commit_timestamp", TimestampType)))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
-      }
+      .getOrElse(ChangeStamps.empty(spark, physSchema, ChangeStamps.DeltaId))
     if (cmMode == "none") unioned
-    else DeltaColumnMapping.toLogical(unioned, logicalSchema,
-      keep = Seq("_change_type", "_commit_version", "_commit_timestamp"))
+    else DeltaColumnMapping.toLogical(unioned, logicalSchema, keep = stamps)
   }
 
   /** Version 0 commit: write `df` as parquet under `root` (optionally

@@ -1057,21 +1057,13 @@ object IcebergTable {
     val toSnap = IcebergMeta.snapshot(spark, location, Some(to))
     val readSchema = scanSchema(spark, toSnap)
     val parts = slices.toSeq.map { sl =>
-      DeltaTable.maybeBasePath(spark, s"$location/data",
+      ChangeStamps.stamp(DeltaTable.maybeBasePath(spark, s"$location/data",
         spark.read.schema(readSchema), sl.paths)
-        .parquet(sl.paths: _*)
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_snapshot_id", lit(sl.id))
-        .withColumn("_commit_timestamp", lit(new java.sql.Timestamp(sl.tsMs)))
+        .parquet(sl.paths: _*), lit("insert"), ChangeStamps.IcebergId,
+        sl.id, sl.tsMs)
     }
-    parts.reduceOption(_.union(_)).getOrElse {
-      val empty = StructType(toSnap.schema.fields ++ Seq(
-        StructField("_change_type", StringType),
-        StructField("_commit_snapshot_id", LongType),
-        StructField("_commit_timestamp", TimestampType)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
-    }
+    parts.reduceOption(_.union(_)).getOrElse(
+      ChangeStamps.empty(spark, toSnap.schema, ChangeStamps.IcebergId))
   }
 
   /** The lineage `(from, to]` oldest first, refusing a range an
@@ -1167,12 +1159,11 @@ object IcebergTable {
     val ordered = lineageOrRefuse(log, location, fromSnapshotId, to)
 
     val toSnap = IcebergMeta.snapshot(spark, location, Some(to))
-    val stamps = Seq("_change_type", "_commit_snapshot_id", "_commit_timestamp")
-    def stamp(df: DataFrame, tpe: String, sid: Long, tsMs: Long): DataFrame = df
-      .withColumn("_change_type", lit(tpe))
-      .withColumn("_commit_snapshot_id", lit(sid))
-      .withColumn("_commit_timestamp", lit(new java.sql.Timestamp(tsMs)))
-      .select((toSnap.schema.fieldNames.toSeq ++ stamps).map(col): _*)
+    val stamped = toSnap.schema.fieldNames.toSeq ++
+      ChangeStamps.columns(ChangeStamps.IcebergId)
+    def stamp(df: DataFrame, tpe: String, sid: Long, tsMs: Long): DataFrame =
+      ChangeStamps.stamp(df, lit(tpe), ChangeStamps.IcebergId, sid, tsMs)
+        .select(stamped.map(col): _*)
 
     var prevFiles: Set[String] = Set.empty
     var prevDeletes: Set[String] = Set.empty
@@ -1269,14 +1260,8 @@ object IcebergTable {
       prevDeletes = s.deleteFiles.map(d => DeltaTable.normPath(d.path)).toSet
       prev = Some(s)
     }
-    parts.reduceOption(_.union(_)).getOrElse {
-      val empty = StructType(toSnap.schema.fields ++ Seq(
-        StructField("_change_type", StringType),
-        StructField("_commit_snapshot_id", LongType),
-        StructField("_commit_timestamp", TimestampType)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
-    }
+    parts.reduceOption(_.union(_)).getOrElse(
+      ChangeStamps.empty(spark, toSnap.schema, ChangeStamps.IcebergId))
   }
 
   // ------------------------------------------------ schema evolution
@@ -1655,14 +1640,44 @@ object IcebergTable {
       partitionColumns: Seq[String] = Nil,
       // WAP: target a branch — main (current-snapshot-id) stays put
       // until [[fastForward]] publishes the audited head
-      branch: Option[String] = None): Long =
+      branch: Option[String] = None,
+      mergeSchema: Boolean = false): Long =
     // concurrent ingest: a loser of the metadata-version fence has
     // cleaned its staged files — re-run against the winner's snapshot
     CommitRetry() {
-      commit(df, location, firstVersion = false, txn = txn,
+      commit(if (mergeSchema) evolvedFor(df, location) else df, location,
+        firstVersion = false, txn = txn,
         partitionColumns = partitionColumns,
         branch = branch.filterNot(_ == "main"))
     }
+
+  /** `mergeSchema`: ADDITIVE schema evolution for an append (Delta's
+    * option of the same name). Columns `df` adds get real field ids in
+    * ONE schema commit ([[addColumns]]; old files read them as null),
+    * conflicting types refuse, and `df` is aligned to the evolved table
+    * order, missing table columns filled with nulls. The partition spec
+    * stays fixed at create. */
+  private def evolvedFor(df: DataFrame, location: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val spark = df.sparkSession
+    val table = IcebergMeta.snapshot(spark, location).schema
+    val byName = table.fields.map(f => f.name -> f.dataType).toMap
+    df.schema.fields.foreach { f =>
+      byName.get(f.name).foreach(dt => require(dt == f.dataType,
+        s"append mergeSchema at $location: column '${f.name}' is " +
+          s"${f.dataType.simpleString} in the data but ${dt.simpleString} " +
+          "in the table; conflicting types never merge"))
+    }
+    val added = df.schema.fields.filterNot(f => byName.contains(f.name))
+    if (added.nonEmpty)
+      addColumns(spark, location, added.map(f => Seq(f.name) -> f.dataType).toSeq)
+    val evolved =
+      if (added.isEmpty) table else IcebergMeta.snapshot(spark, location).schema
+    df.select(evolved.fields.toSeq.map { f =>
+      if (df.columns.contains(f.name)) col(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
+  }
 
   /** Latest committed txn version per appId (from table properties). */
   def transactions(spark: SparkSession, location: String): Map[String, Long] =

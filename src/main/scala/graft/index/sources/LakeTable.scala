@@ -74,6 +74,41 @@ object LakeMerge {
   val DeleteMarker = "__graft_delete"
 }
 
+/** The change-feed stamps both formats append to each change row:
+  * `_change_type`, the commit-id column (`_commit_version` on Delta,
+  * `_commit_snapshot_id` on Iceberg — which clock keys the feed) and
+  * `_commit_timestamp`. */
+private[sources] object ChangeStamps {
+  import org.apache.spark.sql.functions.lit
+  import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+
+  val ChangeType = "_change_type"
+  val DeltaId = "_commit_version"
+  val IcebergId = "_commit_snapshot_id"
+  val Timestamp = "_commit_timestamp"
+
+  def columns(idColumn: String): Seq[String] =
+    Seq(ChangeType, idColumn, Timestamp)
+
+  def schema(base: StructType, idColumn: String): StructType =
+    StructType(base.fields ++ Seq(StructField(ChangeType, StringType),
+      StructField(idColumn, LongType), StructField(Timestamp, TimestampType)))
+
+  /** An empty, well-typed feed over the `base` data columns. */
+  def empty(spark: SparkSession, base: StructType,
+      idColumn: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      schema(base, idColumn))
+
+  /** `df`'s rows as changes of type `changeType` made by commit `id` at
+    * `tsMs`. */
+  def stamp(df: DataFrame, changeType: Column, idColumn: String, id: Long,
+      tsMs: Long): DataFrame = df
+    .withColumn(ChangeType, changeType)
+    .withColumn(idColumn, lit(id))
+    .withColumn(Timestamp, lit(new java.sql.Timestamp(tsMs)))
+}
+
 /**
  * Format-dispatching facade over the two jarless lakehouse sources: one
  * entry point that detects whether a path is a DELTA or ICEBERG table
@@ -96,7 +131,10 @@ object LakeMerge {
  * [[graft.index.zorder.ZOrderBuild.clustered]], the orphan sweep
  * ([[cleanup]] on Delta, [[removeOrphans]]) in [[FsSweep.sweep]], and
  * [[history]] / [[readTimestampAsOf]] over each format's one commit
- * timeline ([[historyOf]], [[idAsOf]]).
+ * timeline ([[historyOf]], [[idAsOf]]). Both change feeds stamp their
+ * rows through [[ChangeStamps]], and the streaming connector
+ * ([[LakeStreamSource]], [[LakeStreamSink]], the batch reader/writer)
+ * is written once over a per-format [[LakeFeed]].
  */
 object LakeTable {
 
@@ -296,16 +334,9 @@ object LakeTable {
         // the normal no-new-changes poll (fromId == head) must return an
         // empty feed, not trip the range check
         val snap = DeltaLog.snapshot(spark, path)
-        if (fromId >= snap.version) {
-          import org.apache.spark.sql.types._
-          val base = snap.schema
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(base.fields ++ Seq(
-              StructField("_change_type", StringType),
-              StructField("_commit_version", LongType),
-              StructField("_commit_timestamp", TimestampType))))
-        } else DeltaTable.changes(spark, path, fromId + 1)
+        if (fromId >= snap.version)
+          ChangeStamps.empty(spark, snap.schema, ChangeStamps.DeltaId)
+        else DeltaTable.changes(spark, path, fromId + 1)
       case _ => IcebergTable.incrementalChanges(spark, path, fromId)
     }
 

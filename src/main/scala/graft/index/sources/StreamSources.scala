@@ -1,5 +1,7 @@
 package graft.index.sources
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow, Offset => OffsetV2}
@@ -13,109 +15,120 @@ import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.index.rules.PlanArtifacts
+import graft.streaming.SparkStreamingInternals
+
 /**
- * STRUCTURED STREAMING SOURCES over the jarless lakehouse logs — the
- * "stream the table" integration every modern Delta/Iceberg deployment
- * leans on: `spark.readStream.format("graft-delta").load(path)` (and
- * `graft-iceberg`), micro-batching exactly the rows each new commit
- * appended, with offsets = commit version / snapshot id, so a restart
- * resumes from the checkpoint without re-serving a single row.
+ * THE LAKE STREAMING CONNECTOR over the jarless Delta and Iceberg logs:
+ * `spark.readStream.format("graft-delta").load(path)` (and
+ * `graft-iceberg`) micro-batches exactly the rows each new commit
+ * appended, with offsets = the last served commit version / snapshot id,
+ * so a restart resumes from the checkpoint without re-serving a row;
+ * `df.writeStream.format(...)` is the exactly-once sink, and
+ * `spark.read` / `df.write` the batch reader and writer.
  *
- * Both sources implement the v1 `Source` API — `getBatch(start, end]`
+ * One connector serves both formats: [[LakeStreamProvider]],
+ * [[LakeStreamSource]] and [[LakeStreamSink]] hold the offsets, the
+ * admission-control and AvailableNow protocol, `skipChangeCommits`,
+ * `readChangeFeed`, the save modes and the recreated-table check once,
+ * and ask a per-format [[LakeFeed]] ([[DeltaFeed]], [[IcebergFeed]])
+ * only for what the log format decides — the shape of Hyperspace's
+ * source-provider SPI, whose core stays format-blind.
+ *
+ * The source implements the v1 `Source` API — `getBatch(start, end]`
  * returns the appended rows as a streaming frame — the same API the
  * real Delta connector uses for its streaming source. Row-deleting
  * commits cannot be represented in an append stream: they fail loudly
  * by default, or are skipped with `skipChangeCommits=true` (the Delta
- * option of the same name).
+ * option of the same name); `readChangeFeed=true` serves the change
+ * feed instead, deletes included.
  *
  * Scale: offset arithmetic and commit parsing are driver-side metadata;
  * each micro-batch plans a plain parquet scan of just the new files —
  * partition-parallel, pushdown intact, no state beyond the checkpoint.
  */
-final class DeltaStreamProvider extends StreamSourceProvider
-    with StreamSinkProvider with RelationProvider
+abstract class LakeStreamProvider(override val shortName: String,
+    feedOf: (SparkSession, String, Map[String, String]) => LakeFeed)
+    extends StreamSourceProvider with StreamSinkProvider with RelationProvider
     with CreatableRelationProvider with DataSourceRegister {
-  override def shortName: String = "graft-delta"
 
-  /** BATCH write — `df.write.format("graft-delta").mode(m).save(path)`.
-    * Partition columns ride the `partitionBy` OPTION (comma-separated;
-    * the writer's own partitionBy() is a file-source feature the v1
+  private def feed(sqlContext: SQLContext,
+      parameters: Map[String, String]): LakeFeed =
+    feedOf(sqlContext.sparkSession,
+      parameters.getOrElse("path", throw new IllegalArgumentException(
+        s"$shortName needs .load(<table path>)")),
+      parameters)
+
+  /** BATCH write — `df.write.format(shortName).mode(m).save(path)`.
+    * Partition columns ride the `partitionBy` OPTION (comma-separated,
+    * Iceberg transforms like `"bucket(16, id), days(ts)"` whole; the
+    * writer's own partitionBy() is a file-source feature the v1
     * provider API does not deliver here). */
   override def createRelation(sqlContext: SQLContext, mode: BatchSaveMode,
       parameters: Map[String, String], data: DataFrame): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val path = pathOf(parameters)
-    val parts = LakeBatchWrite.partitionsOf(parameters)
-    val exists = DeltaLog.isDeltaTable(spark, path)
+    val f = feed(sqlContext, parameters)
+    val parts = parameters.get("partitionBy").toSeq
+      .flatMap(LakeFeed.splitTransforms)
+    val exists = f.exists
+    // batch WAP: `.option("branch", b)` appends to a branch; main stays
+    // put until fastForward publishes
+    f.branch.foreach { b =>
+      require(mode == BatchSaveMode.Append,
+        s"the branch option targets audit APPENDS; ${mode.name} to " +
+          s"branch '$b' is not a write-audit-publish shape")
+      require(exists, s"branch write at ${f.path} needs an existing " +
+        s"${f.kind} table (create it first, then write to the branch)")
+    }
     mode match {
-      case BatchSaveMode.Overwrite =>
-        DeltaTable.create(data, path, parts)
+      case BatchSaveMode.Overwrite => f.overwrite(data, parts)
       case BatchSaveMode.Append =>
-        if (exists) DeltaTable.append(data, path, parts)
-        else DeltaTable.create(data, path, parts)
+        if (exists) f.append(data, parts, None, mergeSchema = false)
+        else f.create(data, parts, None)
       case BatchSaveMode.ErrorIfExists =>
         if (exists) throw new IllegalArgumentException(
-          s"$path is already a Delta table (SaveMode.ErrorIfExists)")
-        else DeltaTable.create(data, path, parts)
+          s"${f.path} is already a ${f.kind} table (SaveMode.ErrorIfExists)")
+        else f.create(data, parts, None)
       case BatchSaveMode.Ignore =>
-        if (!exists) DeltaTable.create(data, path, parts)
+        if (!exists) f.create(data, parts, None)
     }
     createRelation(sqlContext, parameters - "partitionBy")
   }
 
-  /** BATCH read — the standard reader syntax
-    * (`spark.read.format("graft-delta").load(path)`), with
-    * `versionAsOf` / `timestampAsOf` time travel. Delegates to
-    * [[DeltaTable.read]], so stats skipping and DV merge-on-read apply
-    * unchanged; pushed filters re-apply inside for file pruning. */
+  /** BATCH read — `spark.read.format(shortName).load(path)` with each
+    * format's time-travel options ([[LakeFeed.read]]): stats skipping,
+    * hidden-partition pruning and merge-on-read apply unchanged; pushed
+    * filters re-apply inside for file pruning. */
   override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val path = pathOf(parameters)
-    val df = (parameters.get("versionAsOf"), parameters.get("timestampAsOf")) match {
-      case (Some(_), Some(_)) => throw new IllegalArgumentException(
-        "pass either versionAsOf or timestampAsOf, not both")
-      case (Some(v), _) => DeltaTable.read(spark, path, versionAsOf = Some(v.toLong))
-      case (_, Some(ts)) => DeltaTable.readTimestampAsOf(spark, path,
-        StreamRateLimit.parseTimestamp(ts))
-      case _ => DeltaTable.read(spark, path)
-    }
-    new LakeBatchRelation(sqlContext, df)
-  }
+      parameters: Map[String, String]): BaseRelation =
+    new LakeBatchRelation(sqlContext, feed(sqlContext, parameters).read())
 
   override def createSink(sqlContext: SQLContext,
       parameters: Map[String, String], partitionColumns: Seq[String],
       outputMode: OutputMode): Sink = {
     require(outputMode == OutputMode.Append(),
-      s"graft-delta sink supports Append output mode only, got $outputMode")
-    new LakeStreamSink(sqlContext.sparkSession, pathOf(parameters),
-      partitionColumns, parameters, iceberg = false)
+      s"$shortName sink supports Append output mode only, got $outputMode")
+    new LakeStreamSink(feed(sqlContext, parameters), partitionColumns)
   }
-
-  private def pathOf(parameters: Map[String, String]): String =
-    parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft-delta stream needs .load(<table path>)"))
-
-  private def cdcMode(parameters: Map[String, String]): Boolean =
-    parameters.get("readChangeFeed").exists(_.equalsIgnoreCase("true"))
 
   override def sourceSchema(sqlContext: SQLContext,
       schema: Option[StructType], providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    val base = DeltaLog.snapshot(sqlContext.sparkSession, pathOf(parameters)).schema
-    (shortName,
-      if (!cdcMode(parameters)) base
-      else DeltaStreamSource.cdcSchema(base))
-  }
+      parameters: Map[String, String]): (String, StructType) =
+    (shortName, LakeStreamSource.schemaOf(feed(sqlContext, parameters)))
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): Source =
-    new DeltaStreamSource(sqlContext.sparkSession, pathOf(parameters),
-      parameters, metadataPath)
+    new LakeStreamSource(feed(sqlContext, parameters))
 }
 
-/** Rate-limit plumbing shared by both lakehouse stream sources. */
+/** `graft-delta`: offsets are commit versions. */
+final class DeltaStreamProvider
+    extends LakeStreamProvider("graft-delta", new DeltaFeed(_, _, _))
+
+/** `graft-iceberg`: offsets are snapshot ids. */
+final class IcebergStreamProvider
+    extends LakeStreamProvider("graft-iceberg", new IcebergFeed(_, _, _))
+
 /**
  * Batch-read `BaseRelation` wrapping an already-optimized lake
  * DataFrame: the relation's scan IS the inner plan (stats skipping,
@@ -170,15 +183,6 @@ private[sources] final class LakeBatchRelation(
     projected.queryExecution.toRdd
       .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
   }
-}
-
-private[sources] object LakeBatchWrite {
-  /** The batch writers' `partitionBy` OPTION: a comma list split
-    * outside parentheses, so the Iceberg transform syntax
-    * (`"bucket(16, id), days(ts)"`) passes through whole. */
-  def partitionsOf(parameters: Map[String, String]): Seq[String] =
-    parameters.get("partitionBy").toSeq
-      .flatMap(_.split(",(?![^(]*\\))")).map(_.trim).filter(_.nonEmpty)
 }
 
 private[sources] object StreamRateLimit {
@@ -251,56 +255,380 @@ private[sources] object StreamRateLimit {
   }
 }
 
-
-object DeltaStreamSource {
-  /** Change-feed schema: the data columns + the CDF stamps. */
-  def cdcSchema(base: StructType): StructType = StructType(base.fields ++ Seq(
-    org.apache.spark.sql.types.StructField("_change_type",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("_commit_version",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("_commit_timestamp",
-      org.apache.spark.sql.types.TimestampType)))
+/** Where a fresh stream starts: the `startingVersion` /
+  * `startingSnapshotId` and `startingTimestamp` options. */
+sealed trait StreamStart
+object StreamStart {
+  /** No starting option: the whole history. */
+  case object Earliest extends StreamStart
+  /** `latest`: only commits after the stream starts. */
+  case object Latest extends StreamStart
+  /** A commit id: serve it and everything after. */
+  final case class AtId(id: Long) extends StreamStart
+  /** Serve commits made at or after this epoch-millis time. */
+  final case class AtTime(ms: Long) extends StreamStart
 }
 
-final class DeltaStreamSource(spark: SparkSession, rootStr: String,
-    options: Map[String, String], metadataPath: String = "")
+/**
+ * What the lake connector asks of one table format, bound to one table
+ * path and the reader/writer options. Offsets are commit ids on the
+ * format's own clock (Delta versions, Iceberg snapshot ids; both grow
+ * with every commit), and a range `(from, to]` is exclusive of `from`.
+ */
+abstract class LakeFeed(val spark: SparkSession, val path: String,
+    val options: Map[String, String]) {
+
+  /** The format's name in messages ("Delta", "Iceberg"). */
+  def kind: String
+  /** The change feed's commit-id column. */
+  def idColumn: String
+  /** The option naming the first commit a fresh stream serves. */
+  def startingIdOption: String
+  /** The named ref writes target and the source follows (None = the
+    * table's main line). */
+  def branch: Option[String]
+
+  def exists: Boolean
+  /** The table's (data-column) schema, as the stream serves it. */
+  def schema: StructType
+  /** The exactly-once watermarks: the last committed batch per appId. */
+  def transactions: Map[String, Long]
+  def create(data: DataFrame, partitions: Seq[String],
+      txn: Option[(String, Long)]): Unit
+  def append(data: DataFrame, partitions: Seq[String],
+      txn: Option[(String, Long)], mergeSchema: Boolean): Unit
+  def overwrite(data: DataFrame, partitions: Seq[String]): Unit
+  def merge(source: DataFrame, keys: Seq[String],
+      txn: Option[(String, Long)]): Unit
+  /** Batch read, honoring the format's time-travel options. */
+  def read(): DataFrame
+  /** Checks the sink-only options and returns the partition columns a
+    * first micro-batch creates the table with. */
+  def sinkPartitions(partitionBy: Seq[String]): Seq[String]
+
+  /** The followed head: the newest commit id, or -1 for a ref not
+    * created yet. */
+  def headId(): Long
+  /** The exclusive start of a fresh stream. */
+  def startAfter(start: StreamStart): Long
+  /** Admission load of each commit in `(from, to]`, oldest first:
+    * (id, files, bytes); `cdc` counts the files a change-feed batch
+    * reads. */
+  def loads(from: Long, to: Long, cdc: Boolean): Seq[(Long, Long, Long)]
+  /** The rows appended in `(from, to]`; a commit that deletes or
+    * rewrites rows refuses when `strict`, else is skipped. */
+  def appends(from: Long, to: Long, strict: Boolean): DataFrame
+  /** The change feed of `(from, to]`, stamped ([[ChangeStamps]]). */
+  def changes(from: Long, to: Long): DataFrame
+  /** An identity of the table state that serves `to` — any commit that
+    * could change what `(from, to]` reads changes it — or None when it
+    * cannot be read. */
+  def stateId(to: Long): Option[String]
+
+  private[sources] def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  protected def fileIdentity(p: Path): Option[String] =
+    scala.util.Try {
+      val st = p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p)
+      s"${st.getPath}#${st.getModificationTime}#${st.getLen}"
+    }.toOption
+}
+
+object LakeFeed {
+  /** A comma list split outside parentheses, so the Iceberg transform
+    * syntax (`"bucket(16, id), days(ts)"`) stays whole. */
+  private[sources] def splitTransforms(s: String): Seq[String] =
+    s.split(",(?![^(]*\\))").map(_.trim).filter(_.nonEmpty).toSeq
+}
+
+/** The Delta feed: commit versions, each commit JSON parsed once per
+  * stream for both its admission load and its appended files. */
+final class DeltaFeed(spark: SparkSession, path: String,
+    options: Map[String, String])
+    extends LakeFeed(spark, path, options) {
+
+  private val root = new Path(path)
+  private def commitFile(v: Long) = new Path(DeltaLog.logDir(root), f"$v%020d.json")
+  def kind: String = "Delta"
+  def idColumn: String = ChangeStamps.DeltaId
+  def startingIdOption: String = "startingVersion"
+  def branch: Option[String] = None
+
+  def exists: Boolean = DeltaLog.isDeltaTable(spark, path)
+  /** The stream serves plain-named tables only. */
+  lazy val schema: StructType = {
+    val s = DeltaLog.snapshot(spark, path)
+    if (DeltaColumnMapping.mode(s.configuration) != "none")
+      throw new UnsupportedDeltaProtocolException(
+        s"Delta table at $path uses column mapping; the graft-delta " +
+          "stream source serves plain-named tables only. Stream with the " +
+          "delta-spark connector instead.")
+    s.schema
+  }
+  def transactions: Map[String, Long] =
+    DeltaLog.snapshot(spark, path).transactions
+  def create(data: DataFrame, partitions: Seq[String],
+      txn: Option[(String, Long)]): Unit =
+    DeltaTable.create(data, path, partitions, txn = txn)
+  def append(data: DataFrame, partitions: Seq[String],
+      txn: Option[(String, Long)], mergeSchema: Boolean): Unit =
+    DeltaTable.append(data, path, partitions, txn, mergeSchema)
+  def overwrite(data: DataFrame, partitions: Seq[String]): Unit =
+    DeltaTable.create(data, path, partitions)
+  def merge(source: DataFrame, keys: Seq[String],
+      txn: Option[(String, Long)]): Unit =
+    DeltaTable.merge(spark, path, source, keys, txn = txn)
+
+  def read(): DataFrame =
+    (options.get("versionAsOf"), options.get("timestampAsOf")) match {
+      case (Some(_), Some(_)) => throw new IllegalArgumentException(
+        "pass either versionAsOf or timestampAsOf, not both")
+      case (Some(v), _) => DeltaTable.read(spark, path, versionAsOf = Some(v.toLong))
+      case (_, Some(ts)) => DeltaTable.readTimestampAsOf(spark, path,
+        StreamRateLimit.parseTimestamp(ts))
+      case _ => DeltaTable.read(spark, path)
+    }
+
+  def sinkPartitions(partitionBy: Seq[String]): Seq[String] = {
+    require(!options.contains("partitionSpec"),
+      "partitionSpec (Iceberg partition transforms) is not supported " +
+        "by the graft-delta sink; use partitionBy for hive columns")
+    require(!options.contains("branch"),
+      "the branch option (write-audit-publish) needs the graft-iceberg " +
+        "sink; Delta has no snapshot refs")
+    partitionBy
+  }
+
+  def headId(): Long = DeltaLog.latestVersion(spark, path)
+
+  def startAfter(start: StreamStart): Long = start match {
+    case StreamStart.Earliest => -1L
+    case StreamStart.Latest => headId()
+    case StreamStart.AtId(v) => v - 1
+    case StreamStart.AtTime(ms) =>
+      LakeTable.firstIdAtOrAfter(DeltaTable.commits(spark, path), ms) - 1
+  }
+
+  import DeltaFeed.Commit
+
+  /** Parsed commits of this stream. Commits are immutable, so entries
+    * never invalidate; versions at or before a served offset drop. */
+  private val parsed = mutable.Map.empty[Long, Commit]
+
+  private def commit(v: Long): Commit = parsed.getOrElseUpdate(v, {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    var files, bytes, cdcFiles, cdcBytes = 0L
+    val adds = mutable.Buffer.empty[String]
+    var rewrites = false
+    DeltaLog.readLines(fs, commitFile(v)).foreach { line =>
+      val j = JsonMethods.parse(line)
+      def size(kind: String): Long = (j \ kind \ "size") match {
+        case JInt(n) => n.toLong
+        case JLong(n) => n
+        case _ => 0L
+      }
+      def dataChange(kind: String): Boolean = (j \ kind \ "dataChange") match {
+        case JBool(b) => b
+        case _ => true
+      }
+      (j \ "add" \ "path") match {
+        case JString(p) =>
+          files += 1; bytes += size("add")
+          if (dataChange("add")) (j \ "add" \ "deletionVector") match {
+            case JObject(_) => rewrites = true
+            case _ => adds += DeltaLog.resolvePath(root, p)
+          }
+        case _ =>
+      }
+      (j \ "cdc" \ "path") match {
+        case JString(_) => cdcFiles += 1; cdcBytes += size("cdc")
+        case _ =>
+      }
+      (j \ "remove" \ "path") match {
+        case JString(_) if dataChange("remove") => rewrites = true
+        case _ =>
+      }
+    }
+    Commit(files, bytes, cdcFiles, cdcBytes,
+      if (rewrites) None else Some(adds.toSeq))
+  })
+
+  def loads(from: Long, to: Long, cdc: Boolean): Seq[(Long, Long, Long)] = {
+    parsed --= parsed.keys.filter(_ <= from).toSeq
+    // a change-feed batch reads cdc files instead of (some) adds: count
+    // both so the weight tracks what the batch scans
+    (from + 1 to to).map { v =>
+      val c = commit(v)
+      if (cdc) (v, c.files + c.cdcFiles, c.bytes + c.cdcBytes)
+      else (v, c.files, c.bytes)
+    }
+  }
+
+  def appends(from: Long, to: Long, strict: Boolean): DataFrame = {
+    val files = (from + 1 to to).flatMap { v =>
+      commit(v).appended match {
+        case Some(paths) => paths
+        case None if !strict => Nil
+        case None => throw new UnsupportedDeltaProtocolException(
+          s"version $v at $path deletes or rewrites rows; an append " +
+            "stream cannot represent it. Pass skipChangeCommits=true to " +
+            "skip such commits, or consume DeltaTable.changes instead.")
+      }
+    }
+    if (files.isEmpty) emptyFrame(schema)
+    else spark.read.schema(schema).option("basePath", path).parquet(files: _*)
+  }
+
+  def changes(from: Long, to: Long): DataFrame =
+    DeltaTable.changes(spark, path, from + 1, Some(to))
+
+  /** The commit JSON of `to`: versions are immutable once written, and
+    * a recreated table writes it anew. */
+  def stateId(to: Long): Option[String] = fileIdentity(commitFile(to))
+}
+
+private object DeltaFeed {
+  /** What one commit adds: its add (and cdc) files and bytes, and the
+    * data files it appends — None when it deletes or rewrites rows. */
+  final case class Commit(files: Long, bytes: Long, cdcFiles: Long,
+      cdcBytes: Long, appended: Option[Seq[String]])
+}
+
+/** The Iceberg feed: snapshot ids along the followed ref's lineage. */
+final class IcebergFeed(spark: SparkSession, path: String,
+    options: Map[String, String])
+    extends LakeFeed(spark, path, options) {
+
+  def kind: String = "Iceberg"
+  def idColumn: String = ChangeStamps.IcebergId
+  def startingIdOption: String = "startingSnapshotId"
+  /** WRITE-AUDIT-PUBLISH: writes land on a named branch while main
+    * serves the last published snapshot, and the audit side streams the
+    * branch. A ref not created yet reads as an empty table until the
+    * first branch write lands. */
+  val branch: Option[String] = options.get("branch").filterNot(_ == "main")
+
+  def exists: Boolean = IcebergMeta.isIcebergTable(spark, path)
+  private lazy val opened = IcebergMeta.snapshot(spark, path)
+  lazy val schema: StructType = opened.schema
+  def transactions: Map[String, Long] = IcebergTable.transactions(spark, path)
+  def create(data: DataFrame, partitions: Seq[String],
+      txn: Option[(String, Long)]): Unit =
+    IcebergTable.create(data, path, txn, partitions)
+  def append(data: DataFrame, partitions: Seq[String],
+      txn: Option[(String, Long)], mergeSchema: Boolean): Unit =
+    IcebergTable.append(data, path, txn, partitions, branch, mergeSchema)
+  def overwrite(data: DataFrame, partitions: Seq[String]): Unit =
+    IcebergTable.overwrite(data, path, partitionColumns = partitions)
+  def merge(source: DataFrame, keys: Seq[String],
+      txn: Option[(String, Long)]): Unit =
+    IcebergTable.merge(spark, path, source, keys, txn = txn)
+
+  def read(): DataFrame = IcebergTable.read(spark, path,
+    snapshotAsOf = options.get("snapshotAsOf").map(_.toLong))
+
+  /** `partitionBy(...)` carries identity columns (the engine validates
+    * them against the schema before the sink sees them); the
+    * `partitionSpec` OPTION carries the full transform syntax. */
+  def sinkPartitions(partitionBy: Seq[String]): Seq[String] =
+    options.get("partitionSpec") match {
+      case Some(spec) =>
+        require(partitionBy.isEmpty,
+          "pass EITHER partitionBy(...) or the partitionSpec option, not both")
+        LakeFeed.splitTransforms(spec)
+      case None => partitionBy
+    }
+
+  /** Main's current snapshot, or the branch ref's. */
+  def headId(): Long = {
+    val s = IcebergMeta.snapshot(spark, path)
+    branch.fold(s.snapshotId)(b => s.refs.get(b).map(_.snapshotId).getOrElse(-1L))
+  }
+
+  def startAfter(start: StreamStart): Long = start match {
+    case StreamStart.Earliest => 0L
+    // the FOLLOWED head: under a branch, the ref's snapshot (pinning
+    // main would replay the branch's unpublished commits); a ref not
+    // created yet starts at main's head, where it will be created
+    case StreamStart.Latest =>
+      val h = headId()
+      if (h >= 0) h else opened.snapshotId
+    case StreamStart.AtId(id) => id
+    // the newest snapshot strictly before the time (0 when none is)
+    case StreamStart.AtTime(ms) =>
+      IcebergTable.commits(spark, path)
+        .filter(_._2 < ms).lastOption.map(_._1).getOrElse(0L)
+  }
+
+  /** Per-snapshot admission loads measured so far. */
+  private val loadMemo = mutable.Map.empty[Long, (Long, Long)]
+
+  def loads(from: Long, to: Long, cdc: Boolean): Seq[(Long, Long, Long)] = {
+    loadMemo --= loadMemo.keys.filter(_ <= from).toSeq
+    IcebergTable.lineageLoad(spark, path, from, to, loadMemo)
+  }
+
+  def appends(from: Long, to: Long, strict: Boolean): DataFrame =
+    IcebergTable.incrementalAppends(spark, path, from, Some(to), strict)
+
+  def changes(from: Long, to: Long): DataFrame =
+    IcebergTable.incrementalChanges(spark, path, from, Some(to))
+
+  /** The current metadata document: every commit writes a new one, so
+    * a drop-and-recreate that reuses small snapshot ids misses too. */
+  def stateId(to: Long): Option[String] =
+    scala.util.Try {
+      val loc = new Path(path)
+      IcebergMeta.currentMetadataFile(
+        loc.getFileSystem(spark.sessionState.newHadoopConf()), path)
+    }.toOption.flatMap(fileIdentity)
+}
+
+object LakeStreamSource {
+  private[sources] def flag(options: Map[String, String], name: String): Boolean =
+    options.get(name).exists(_.equalsIgnoreCase("true"))
+
+  /** The stream's schema: the table's, plus the change-feed stamps
+    * under `readChangeFeed=true`. */
+  def schemaOf(feed: LakeFeed): StructType =
+    if (flag(feed.options, "readChangeFeed"))
+      ChangeStamps.schema(feed.schema, feed.idColumn)
+    else feed.schema
+}
+
+/**
+ * The v1 streaming source over a [[LakeFeed]]. An offset is the last
+ * served commit id; a batch `(start, end]` is that range's appended
+ * rows, or its change feed under `readChangeFeed=true` (the streaming
+ * twin of `LakeTable.changes`, which needs no delete refusal because
+ * deletes are first-class rows in the feed).
+ */
+final class LakeStreamSource(feed: LakeFeed)
     extends Source with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
+  import feed.{options, path, spark}
 
-  private val root = new Path(rootStr)
-  private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-  private val initial = DeltaLog.snapshot(spark, rootStr)
-  if (DeltaColumnMapping.mode(initial.configuration) != "none") {
-    throw new UnsupportedDeltaProtocolException(
-      s"Delta table at $rootStr uses column mapping; the graft-delta " +
-        "stream source serves plain-named tables only. Stream with the " +
-        "delta-spark connector instead.")
-  }
-  /** CDC mode: serve the CHANGE DATA FEED (inserts AND deletes, with
-    * the CDF stamps) instead of an appends-only row stream — the
-    * streaming twin of `DeltaTable.changes`, and the mode that needs no
-    * delete refusal because deletes are first-class rows in the feed. */
-  private val cdc =
-    options.get("readChangeFeed").exists(_.equalsIgnoreCase("true"))
-  override val schema: StructType =
-    if (cdc) DeltaStreamSource.cdcSchema(initial.schema) else initial.schema
+  private val cdc = LakeStreamSource.flag(options, "readChangeFeed")
+  private val skipChanges = LakeStreamSource.flag(options, "skipChangeCommits")
+  override val schema: StructType = LakeStreamSource.schemaOf(feed)
 
-  private val skipChanges =
-    options.get("skipChangeCommits").exists(_.equalsIgnoreCase("true"))
-  /** First version served: 0 (full history), a number, "latest" (only
-    * commits after stream start), or — via `startingTimestamp` — the
-    * first version committed at or after a wall-clock time. */
-  private val startingVersion: Long =
-    (options.get("startingVersion"), options.get("startingTimestamp")) match {
+  /** The exclusive start of a fresh stream. It gates only the FIRST
+    * batch — on restart the checkpointed offset is authoritative
+    * (re-resolving "latest" would silently skip commits that arrived
+    * between runs). */
+  private val startAfter: Long = feed.startAfter(
+    (options.get(feed.startingIdOption), options.get("startingTimestamp")) match {
       case (Some(_), Some(_)) => throw new IllegalArgumentException(
-        "pass either startingVersion or startingTimestamp, not both")
-      case (Some(v), _) if v.equalsIgnoreCase("latest") => initial.version + 1
-      case (Some(v), _) => v.toLong
-      case (None, Some(ts)) => LakeTable.firstIdAtOrAfter(
-        DeltaTable.commits(spark, rootStr), StreamRateLimit.parseTimestamp(ts))
-      case _ => 0L
-    }
+        s"pass either ${feed.startingIdOption} or startingTimestamp, not both")
+      case (Some(v), _) if v.equalsIgnoreCase("latest") => StreamStart.Latest
+      case (Some(v), _) => StreamStart.AtId(v.toLong)
+      case (None, Some(ts)) =>
+        StreamStart.AtTime(StreamRateLimit.parseTimestamp(ts))
+      case _ => StreamStart.Earliest
+    })
 
   // RATE LIMITING (delta-spark's options of the same names): cap how
   // far each micro-batch's offset advances, commit-granular, so a
@@ -319,300 +647,106 @@ final class DeltaStreamSource(spark: SparkSession, rootStr: String,
   private val rateLimited = maxFiles.isDefined || maxBytes.isDefined
   maxFiles.foreach(m => require(m > 0,
     s"maxFilesPerTrigger must be positive, got $m"))
-  /** Trigger.AvailableNow: versions committed AFTER query start are out
-    * of scope — the drain finishes at this pinned head. */
+  /** Trigger.AvailableNow: commits made AFTER query start are out of
+    * scope — the drain finishes at this pinned head. */
   private var availableNowCap: Option[Long] = None
-
-  /** (files, bytes) a commit adds — admission metadata, one log-JSON
-    * parse per version (driver-side, metadata-scale). Memoized: with a
-    * deep backlog paced N commits per trigger, every trigger re-walks
-    * the remaining range — the memo keeps that walk O(backlog) total
-    * instead of O(backlog²) parses. Commits are immutable, so entries
-    * never invalidate. */
-  private val commitLoadMemo = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-  private def commitLoad(v: Long): (Long, Long) =
-    commitLoadMemo.getOrElseUpdate(v, commitLoadUncached(v))
-  private def commitLoadUncached(v: Long): (Long, Long) = {
-    val p = new Path(DeltaLog.logDir(root), f"$v%020d.json")
-    var files = 0L
-    var bytes = 0L
-    // CDC batches read cdc files instead of (some) adds — count both
-    // action kinds in cdc mode so the admission weight tracks what the
-    // batch will actually scan
-    val kinds = if (cdc) Seq("add", "cdc") else Seq("add")
-    DeltaLog.readLines(fs, p).foreach { line =>
-      val j = JsonMethods.parse(line)
-      kinds.foreach { kind =>
-        (j \ kind \ "path") match {
-          case JString(_) =>
-            files += 1
-            (j \ kind \ "size") match {
-              case JInt(n) => bytes += n.toLong
-              case JLong(n) => bytes += n
-              case _ =>
-            }
-          case _ =>
-        }
-      }
-    }
-    (files, bytes)
-  }
 
   override def getOffset: Option[Offset] =
     throw new UnsupportedOperationException(
       "getOffset is unused: this source implements " +
         "SupportsAdmissionControl (latestOffset)")
 
-  /** The offset BEFORE any data this stream should serve: batches start
-    * at `startingVersion`. */
-  override def initialOffset(): OffsetV2 = LongOffset(startingVersion - 1)
+  override def initialOffset(): OffsetV2 = LongOffset(startAfter)
 
   override def getDefaultReadLimit: ReadLimit =
     StreamRateLimit.toReadLimit(maxFiles, maxBytes)
 
-  override def reportLatestOffset(): OffsetV2 =
-    LongOffset(DeltaLog.snapshot(spark, rootStr).version)
+  override def reportLatestOffset(): OffsetV2 = {
+    val head = feed.headId()
+    LongOffset(if (head < 0) startAfter else head)
+  }
 
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(DeltaLog.snapshot(spark, rootStr).version)
+  override def prepareForTriggerAvailableNow(): Unit = {
+    val head = feed.headId()
+    if (head >= 0) availableNowCap = Some(head)
+  }
 
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val head0 = DeltaLog.snapshot(spark, rootStr).version
-    val head = availableNowCap.fold(head0)(math.min(head0, _))
+    val head0 = feed.headId()
     // the engine passes the previous end offset — or NULL on a fresh
     // stream's first trigger (v1 sources never see initialOffset)
-    val from = Option(start).map(_.json.toLong + 1).getOrElse(startingVersion)
-    if (!rateLimited || from > head) return LongOffset(math.max(head, from - 1))
-    val stats = (from to head).map { v =>
-      val (f, b) = commitLoad(v)
-      (v, f, b)
-    }
-    LongOffset(StreamRateLimit.admit(stats, maxFiles, maxBytes).getOrElse(head))
+    val from = Option(start).map(_.json.toLong).getOrElse(startAfter)
+    if (start != null) requireNotPastHead(from, head0)
+    if (head0 < 0) return LongOffset(from) // no ref yet: no new data
+    val head = availableNowCap.fold(head0)(math.min(head0, _))
+    if (from >= head || !rateLimited) return LongOffset(math.max(head, from))
+    LongOffset(StreamRateLimit.admit(feed.loads(from, head, cdc),
+      maxFiles, maxBytes).getOrElse(head))
   }
 
-  private def versionOf(o: Offset): Long = o.json.toLong
-
-  /** Paths appended by version `v` — None when the commit deletes or
-    * rewrites rows (not representable in an append stream). */
-  private def appendedPaths(v: Long): Option[Seq[String]] = {
-    val p = new Path(DeltaLog.logDir(root), f"$v%020d.json")
-    val adds = scala.collection.mutable.Buffer.empty[String]
-    var removesData = false
-    var addsDv = false
-    DeltaLog.readLines(fs, p).foreach { line =>
-      val j = JsonMethods.parse(line)
-      def dataChange(kind: String): Boolean = (j \ kind \ "dataChange") match {
-        case JBool(b) => b
-        case _ => true
-      }
-      (j \ "add" \ "path") match {
-        case JString(path) if dataChange("add") =>
-          (j \ "add" \ "deletionVector") match {
-            case JObject(_) => addsDv = true
-            case _ => adds += path
-          }
-        case _ =>
-      }
-      (j \ "remove" \ "path") match {
-        case JString(_) if dataChange("remove") => removesData = true
-        case _ =>
-      }
-    }
-    if (removesData || addsDv) None else Some(adds.toSeq)
-  }
+  /** A checkpointed id AHEAD of the table's head (and of the stream's
+    * own start, which may wait for a future commit) is not a replay:
+    * ids grow with every commit, so it means the table was dropped and
+    * recreated (ids restarted below the checkpoint). Surface the
+    * divergence instead of yielding empty batches forever. */
+  private def requireNotPastHead(id: Long, head: Long): Unit =
+    if (id > math.max(head, startAfter))
+      throw new IllegalStateException(
+        s"${feed.kind} stream at $path: checkpointed offset $id is beyond " +
+          s"the table's current head ($head) — the table appears to have " +
+          "been dropped and recreated; restart the stream from a fresh " +
+          "checkpoint")
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    // startingVersion gates only the FIRST batch — on restart the
-    // checkpointed offset is authoritative (re-resolving "latest" here
-    // would silently skip commits that arrived between runs)
-    val from = start.map(versionOf(_) + 1).getOrElse(startingVersion)
-    val endV = versionOf(end)
-    if (cdc) {
-      val batch =
-        if (from > endV)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else DeltaTable.changes(spark, rootStr, from, Some(endV))
-          .select(schema.fieldNames.map(col(_)).toIndexedSeq: _*)
-      return graft.streaming.SparkStreamingInternals.streamingDataFrame(
-        spark, batch.queryExecution.toRdd, schema)
-    }
-    val files = (from to endV).flatMap { v =>
-      appendedPaths(v) match {
-        case Some(paths) => paths.map { raw =>
-          val decoded = java.net.URLDecoder.decode(raw, "UTF-8")
-          val p = new Path(decoded)
-          if (p.isAbsolute) decoded else new Path(root, decoded).toString
-        }
-        case None if skipChanges => Nil
-        case None => throw new UnsupportedDeltaProtocolException(
-          s"version $v at $rootStr deletes or rewrites rows; an append " +
-            "stream cannot represent it. Pass skipChangeCommits=true to " +
-            "skip such commits, or consume DeltaTable.changes instead.")
-      }
-    }
+    val from = start.map(_.json.toLong).getOrElse(startAfter)
+    val to = end.json.toLong
+    requireNotPastHead(to, feed.headId())
+    // `from >= to` (not just ==): a RESTART replays batch 0 with
+    // start=None, and a drifting starting option ("latest" after the
+    // head advanced) can resolve PAST the checkpointed end — the replay
+    // must reproduce the original empty batch
     val batch =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      if (from >= to) feed.emptyFrame(schema)
       else {
-        // the resolved batch frame is an immutable logical plan over an
-        // immutable file set (commit jsons never change once written) —
-        // cache the RESOLUTION per session, content-addressed on the
-        // exact file list; execution still scans parquet every batch.
-        // Every fresh-checkpoint gate run re-resolved the same files
-        // (~0.2 s relation resolution per batch); same contract as
-        // Tables.load / PlanArtifacts index-data caching.
-        graft.index.rules.PlanArtifacts.getOrCompute[DataFrame](spark,
-          s"deltastream#$rootStr#" + graft.index.rules.PlanArtifacts
-            .contentKey(files :+ schema.catalogString)) {
-          spark.read.schema(schema).option("basePath", rootStr)
-            .parquet(files: _*)
+        def resolve: DataFrame =
+          (if (cdc) feed.changes(from, to)
+           else feed.appends(from, to, strict = !skipChanges))
             .select(schema.fieldNames.map(col(_)).toIndexedSeq: _*)
+        // the batch over immutable commits is a fixed logical plan:
+        // cache its RESOLUTION per session (a re-planned batch skips the
+        // log walk and the relation resolution), keyed on the range plus
+        // the table state's identity; execution still scans every batch
+        feed.stateId(to) match {
+          case Some(state) =>
+            PlanArtifacts.getOrCompute[DataFrame](spark,
+              s"lakestream#$path#" + PlanArtifacts.contentKey(Seq(
+                from.toString, to.toString, cdc.toString,
+                skipChanges.toString, state, schema.catalogString)))(resolve)
+          case None => resolve
         }
       }
-    graft.streaming.SparkStreamingInternals.streamingDataFrame(
+    SparkStreamingInternals.streamingDataFrame(
       spark, batch.queryExecution.toRdd, schema)
   }
 
   override def stop(): Unit = ()
 }
 
-/** Iceberg sibling: offsets are snapshot ids, batches come from the
-  * incremental append scan's lineage walk ([[IcebergTable.incrementalAppends]]). */
-final class IcebergStreamProvider extends StreamSourceProvider
-    with StreamSinkProvider with RelationProvider
-    with CreatableRelationProvider with DataSourceRegister {
-  override def shortName: String = "graft-iceberg"
-
-  /** BATCH write — `df.write.format("graft-iceberg").mode(m).save(p)`;
-    * the `partitionBy` option accepts the full transform syntax
-    * (`"bucket(16, id), days(ts)"`). */
-  override def createRelation(sqlContext: SQLContext, mode: BatchSaveMode,
-      parameters: Map[String, String], data: DataFrame): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val path = pathOf(parameters)
-    val parts = LakeBatchWrite.partitionsOf(parameters)
-    val exists = IcebergMeta.isIcebergTable(spark, path)
-    // batch WAP: `.option("branch", b)` appends to a branch; main
-    // stays put until fastForward publishes (the streaming sink's
-    // branch option, on the batch path)
-    val branch = parameters.get("branch").filterNot(_ == "main")
-    require(branch.isEmpty || mode == BatchSaveMode.Append,
-      s"the branch option targets audit APPENDS; ${mode.name} to a " +
-        "branch is not a write-audit-publish shape")
-    require(branch.isEmpty || exists,
-      s"branch write at $path needs an existing Iceberg table " +
-        "(create it first, then write to the branch)")
-    mode match {
-      case BatchSaveMode.Overwrite =>
-        IcebergTable.overwrite(data, path, partitionColumns = parts)
-      case BatchSaveMode.Append =>
-        if (exists) IcebergTable.append(data, path,
-          partitionColumns = parts, branch = branch)
-        else IcebergTable.create(data, path, partitionColumns = parts)
-      case BatchSaveMode.ErrorIfExists =>
-        if (exists) throw new IllegalArgumentException(
-          s"$path is already an Iceberg table (SaveMode.ErrorIfExists)")
-        else IcebergTable.create(data, path, partitionColumns = parts)
-      case BatchSaveMode.Ignore =>
-        if (!exists) IcebergTable.create(data, path, partitionColumns = parts)
-    }
-    createRelation(sqlContext, parameters - "partitionBy")
-  }
-
-  /** BATCH read (`spark.read.format("graft-iceberg").load(path)`) with
-    * `snapshotAsOf` time travel — delegates to [[IcebergTable.read]]
-    * (manifest-bounds skipping, hidden-partition pruning, MOR). */
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val path = pathOf(parameters)
-    val df = IcebergTable.read(spark, path,
-      snapshotAsOf = parameters.get("snapshotAsOf").map(_.toLong))
-    new LakeBatchRelation(sqlContext, df)
-  }
-
-  override def createSink(sqlContext: SQLContext,
-      parameters: Map[String, String], partitionColumns: Seq[String],
-      outputMode: OutputMode): Sink = {
-    require(outputMode == OutputMode.Append(),
-      s"graft-iceberg sink supports Append output mode only, got $outputMode")
-    new LakeStreamSink(sqlContext.sparkSession, pathOf(parameters),
-      partitionColumns, parameters, iceberg = true)
-  }
-
-  private def pathOf(parameters: Map[String, String]): String =
-    parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft-iceberg stream needs .load(<table location>)"))
-
-  override def sourceSchema(sqlContext: SQLContext,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    val base =
-      IcebergMeta.snapshot(sqlContext.sparkSession, pathOf(parameters)).schema
-    (shortName,
-      if (!parameters.get("readChangeFeed").exists(_.equalsIgnoreCase("true")))
-        base
-      else StructType(base.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_commit_snapshot_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("_commit_timestamp",
-          org.apache.spark.sql.types.TimestampType))))
-  }
-
-  override def createSource(sqlContext: SQLContext, metadataPath: String,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String]): Source =
-    new IcebergStreamSource(sqlContext.sparkSession, pathOf(parameters),
-      parameters, metadataPath)
-}
-
 /**
- * EXACTLY-ONCE streaming SINK into a Delta or Iceberg table: each
- * micro-batch commits as an append stamped with a per-query
- * (appId, batchId) transaction watermark — Delta's `txn` action /
- * an Iceberg `graft.txn.<appId>` table property — and a replayed batch
- * (failure between sink commit and checkpoint advance) is recognized by
+ * EXACTLY-ONCE streaming SINK into a lake table: each micro-batch
+ * commits as an append stamped with a per-query (appId, batchId)
+ * transaction watermark — Delta's `txn` action / an Iceberg
+ * `graft.txn.<appId>` table property — and a replayed batch (failure
+ * between sink commit and checkpoint advance) is recognized by
  * `batchId <= committed watermark` and skipped, never double-applied.
  * This is the mechanism real Delta streaming writes use for their
  * idempotence guarantee. First batch creates the table.
  */
-final class LakeStreamSink(spark: SparkSession, rootStr: String,
-    partitionByColumns: Seq[String], options: Map[String, String],
-    iceberg: Boolean) extends Sink {
+final class LakeStreamSink(feed: LakeFeed, partitionBy: Seq[String])
+    extends Sink {
+  import feed.{options, path, spark}
 
-  // `partitionBy(...)` carries identity columns (the engine validates
-  // them against the schema before the sink sees them — transform
-  // specs can't pass through it); the `partitionSpec` OPTION carries
-  // the full Iceberg transform syntax ("bucket(16, id), days(ts)").
-  // Iceberg-only: Delta has no partition transforms.
-  private val partitionColumns: Seq[String] =
-    options.get("partitionSpec") match {
-      case Some(spec) =>
-        require(iceberg,
-          "partitionSpec (Iceberg partition transforms) is not supported " +
-            "by the graft-delta sink; use partitionBy for hive columns")
-        require(partitionByColumns.isEmpty,
-          "pass EITHER partitionBy(...) or the partitionSpec option, not both")
-        // split on commas OUTSIDE parentheses: "bucket(16, id), days(ts)"
-        // is two fields, the comma inside bucket(…) is an argument
-        spec.split(",(?![^(]*\\))").map(_.trim).filter(_.nonEmpty).toSeq
-      case None => partitionByColumns
-    }
-
-  /** WRITE-AUDIT-PUBLISH ingest: commits land on a NAMED BRANCH (the
-    * ref auto-creates at main's head on the first branch write) while
-    * main keeps serving the last published snapshot; `fastForward`
-    * publishes after audit. Iceberg-only — Delta has no refs. The txn
-    * watermark is a TABLE property, so replay detection (and therefore
-    * exactly-once) survives the branch's later publication. */
-  private val branch: Option[String] = options.get("branch")
-  require(branch.isEmpty || iceberg,
-    "the branch option (write-audit-publish) needs the graft-iceberg " +
-      "sink; Delta has no snapshot refs")
+  private val partitionColumns = feed.sinkPartitions(partitionBy)
 
   // an EXPLICIT txnAppId outranks the auto queryId (delta-spark's
   // precedence): a user pinning txnAppId keeps idempotence across a
@@ -626,73 +760,32 @@ final class LakeStreamSink(spark: SparkSession, rootStr: String,
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val app = appId
-    val exists =
-      if (iceberg) IcebergMeta.isIcebergTable(spark, rootStr)
-      else DeltaLog.isDeltaTable(spark, rootStr)
-    if (exists) {
-      val committed =
-        if (iceberg) IcebergTable.transactions(spark, rootStr).get(app)
-        else DeltaLog.snapshot(spark, rootStr).transactions.get(app)
-      if (committed.exists(_ >= batchId)) return // replayed batch: skip
-    }
+    val exists = feed.exists
+    // the watermark is a TABLE-level record, so replay detection (and
+    // therefore exactly-once) survives a branch's later publication
+    if (exists && feed.transactions.get(app).exists(_ >= batchId)) return
     // re-anchor the engine's incremental frame as a plain batch frame
     // (ForeachBatchSink's move: the already-planned InternalRow RDD,
     // wrapped non-streaming, pushes through the ordinary writers)
-    val batch = graft.streaming.SparkStreamingInternals.batchDataFrame(
+    val batch = SparkStreamingInternals.batchDataFrame(
       spark, data.queryExecution.toRdd, data.schema)
     val txn = Some(app -> batchId)
     if (options.getOrElse("mode", "append").equalsIgnoreCase("merge")) {
-      require(branch.isEmpty, "mode=merge cannot target a branch: the " +
+      require(feed.branch.isEmpty, "mode=merge cannot target a branch: the " +
         "merge reads main's live state, which a branch write must not " +
         "depend on; stream appends to the branch and merge after publish")
       applyMergeBatch(batch, txn, exists)
-      return
-    }
-    if (branch.isDefined && !exists)
-      throw new IllegalArgumentException(
-        s"branch write at $rootStr needs an existing Iceberg table " +
-          "(create it first, then stream to the branch)")
-    // an evolving source stream widens the table additively when the
-    // user opts in (Delta's sink option of the same name); without it
-    // the append-time schema enforcement refuses loudly
-    val merge = options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))
-    if (iceberg) {
-      // partitionBy declares the identity spec on first-batch create;
-      // later batches must name the table's spec (enforced in append)
-      if (!exists) IcebergTable.create(batch, rootStr, txn, partitionColumns)
-      else if (!merge) IcebergTable.append(batch, rootStr, txn,
-        partitionColumns, branch = branch)
-      else {
-        // ADDITIVE schema evolution mid-stream: new batch columns get
-        // real field ids minted through the metadata operation
-        // (addColumn — old files read them as null), conflicting types
-        // refuse, and the batch is aligned to the evolved table order
-        // (missing table columns fill with nulls, Delta mergeSchema's
-        // contract). The spec is fixed at create either way.
-        import org.apache.spark.sql.functions.{col, lit}
-        val table = IcebergMeta.snapshot(spark, rootStr).schema
-        val tByName = table.fields.map(f => f.name -> f.dataType).toMap
-        batch.schema.fields.foreach { f =>
-          tByName.get(f.name).foreach(dt => require(dt == f.dataType,
-            s"graft-iceberg sink mergeSchema at $rootStr: column " +
-              s"'${f.name}' is ${f.dataType.simpleString} in the stream " +
-              s"but ${dt.simpleString} in the table; conflicting types " +
-              "never merge"))
-        }
-        batch.schema.fields.filterNot(f => tByName.contains(f.name))
-          .foreach(f => IcebergTable.addColumn(spark, rootStr, f.name, f.dataType))
-        val evolved = IcebergMeta.snapshot(spark, rootStr).schema
-        val aligned = batch.select(evolved.fields.toSeq.map { f =>
-          if (batch.columns.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }: _*)
-        IcebergTable.append(aligned, rootStr, txn, partitionColumns,
-          branch = branch)
-      }
+    } else if (exists) {
+      // an evolving source stream widens the table additively when the
+      // user opts in (Delta's sink option of the same name); without it
+      // the append-time schema enforcement refuses loudly
+      feed.append(batch, partitionColumns, txn,
+        mergeSchema = LakeStreamSource.flag(options, "mergeSchema"))
     } else {
-      if (exists) DeltaTable.append(batch, rootStr, partitionColumns, txn,
-        mergeSchema = merge)
-      else DeltaTable.create(batch, rootStr, partitionColumns, txn = txn)
+      require(feed.branch.isEmpty, s"branch write at $path needs an " +
+        s"existing ${feed.kind} table (create it first, then stream to " +
+        "the branch)")
+      feed.create(batch, partitionColumns, txn)
     }
   }
 
@@ -722,21 +815,20 @@ final class LakeStreamSink(spark: SparkSession, rootStr: String,
    */
   private def applyMergeBatch(batch: DataFrame,
       txn: Option[(String, Long)], exists: Boolean): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, row_number, when}
+    import org.apache.spark.sql.functions.{coalesce, expr, lit, row_number, when}
+    import ChangeStamps.{ChangeType, DeltaId, IcebergId}
     val keys = options.get("mergeKeys")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException(
-        s"sink mode=merge at $rootStr needs " +
+        s"sink mode=merge at $path needs " +
           "mergeKeys=<comma-separated key columns>"))
     var df = batch
-    val hasCdf = df.columns.contains("_change_type")
-    if (hasCdf) df = df.filter(col("_change_type") =!= "update_preimage")
-    val verCol = Seq("_commit_version", "_commit_snapshot_id")
-      .find(df.columns.contains)
-    verCol.foreach { v =>
+    val hasCdf = df.columns.contains(ChangeType)
+    if (hasCdf) df = df.filter(col(ChangeType) =!= "update_preimage")
+    Seq(DeltaId, IcebergId).find(df.columns.contains).foreach { v =>
       val tieBreak =
-        if (hasCdf) when(col("_change_type") === "delete", 1).otherwise(0)
+        if (hasCdf) when(col(ChangeType) === "delete", 1).otherwise(0)
         else lit(0)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keys.map(col): _*)
@@ -745,200 +837,17 @@ final class LakeStreamSink(spark: SparkSession, rootStr: String,
         .filter(col("__graft_rn") === 1).drop("__graft_rn")
     }
     val delExpr =
-      if (hasCdf) col("_change_type") === "delete"
+      if (hasCdf) col(ChangeType) === "delete"
       else options.get("deleteWhen").map(expr).getOrElse(lit(false))
     df = df.withColumn(LakeMerge.DeleteMarker, coalesce(delExpr, lit(false)))
-      .drop("_change_type", "_commit_version", "_commit_snapshot_id",
-        "_commit_timestamp")
+      .drop(ChangeStamps.columns(DeltaId) :+ IcebergId: _*)
     if (!exists) {
       // first batch CREATES the target from the surviving upserts
       // (markers against a non-existent table are no-ops)
-      val inserts = df.filter(!col(LakeMerge.DeleteMarker))
-        .drop(LakeMerge.DeleteMarker)
-      if (iceberg) IcebergTable.create(inserts, rootStr, txn, partitionColumns)
-      else DeltaTable.create(inserts, rootStr, partitionColumns, txn = txn)
-    } else if (iceberg) {
-      IcebergTable.merge(spark, rootStr, df, keys, txn = txn)
-    } else {
-      DeltaTable.merge(spark, rootStr, df, keys, txn = txn)
-    }
+      feed.create(df.filter(!col(LakeMerge.DeleteMarker))
+        .drop(LakeMerge.DeleteMarker), partitionColumns, txn)
+    } else feed.merge(df, keys, txn)
   }
 
-  override def toString: String =
-    s"LakeStreamSink[${if (iceberg) "iceberg" else "delta"}]($rootStr)"
-}
-
-final class IcebergStreamSource(spark: SparkSession, location: String,
-    options: Map[String, String], metadataPath: String = "")
-    extends Source with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
-
-  private val initial = IcebergMeta.snapshot(spark, location)
-  /** CDC mode: serve the full changelog (inserts AND positional-delete
-    * victims, stamped) via [[IcebergTable.incrementalChanges]] — the
-    * Iceberg twin of the Delta source's `readChangeFeed`. */
-  private val cdc =
-    options.get("readChangeFeed").exists(_.equalsIgnoreCase("true"))
-  override val schema: StructType =
-    if (cdc) StructType(initial.schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("_commit_snapshot_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("_commit_timestamp",
-        org.apache.spark.sql.types.TimestampType)))
-    else initial.schema
-
-  private val skipChanges =
-    options.get("skipChangeCommits").exists(_.equalsIgnoreCase("true"))
-  /** Follow a NAMED REF instead of main: the audit side of
-    * write-audit-publish streams the branch while main serves the last
-    * published snapshot. A ref not created yet reads as an empty table
-    * until the first branch write lands. */
-  private val branch: Option[String] = options.get("branch")
-  /** The head this stream follows — main's current-snapshot-id, or the
-    * named ref's pinned snapshot. */
-  private def headId(): Long = {
-    val s = IcebergMeta.snapshot(spark, location)
-    branch match {
-      case None => s.snapshotId
-      case Some(b) => s.refs.get(b).map(_.snapshotId).getOrElse(-1L)
-    }
-  }
-  private val startingSnapshot: Long =
-    (options.get("startingSnapshotId"), options.get("startingTimestamp")) match {
-      case (Some(_), Some(_)) => throw new IllegalArgumentException(
-        "pass either startingSnapshotId or startingTimestamp, not both")
-      // "latest" means the FOLLOWED head — under a branch option that
-      // is the ref's pinned snapshot, not main's (pinning main would
-      // replay the branch's existing unpublished commits the user
-      // explicitly asked to skip). A ref that doesn't exist yet starts
-      // at main's head: the branch will be created there.
-      case (Some(v), _) if v.equalsIgnoreCase("latest") =>
-        val h = headId(); if (h >= 0) h else initial.snapshotId
-      case (Some(v), _) => v.toLong
-      case (None, Some(ts)) =>
-        // serve snapshots committed at or after `ts`: the EXCLUSIVE
-        // start is the newest snapshot strictly before it (0 = full
-        // history when none is)
-        val t = StreamRateLimit.parseTimestamp(ts)
-        IcebergTable.commits(spark, location)
-          .filter(_._2 < t).lastOption.map(_._1).getOrElse(0L)
-      case _ => 0L
-    }
-
-  // RATE LIMITING, snapshot-granular, through the engine's
-  // ADMISSION-CONTROL protocol (see the Delta source): the engine
-  // supplies the authoritative start offset per trigger, and
-  // Trigger.AvailableNow drains to the head pinned at query start in
-  // bounded batches.
-  private val maxFiles: Option[Long] =
-    options.get("maxFilesPerTrigger").map(_.toLong)
-  private val maxBytes: Option[Long] =
-    options.get("maxBytesPerTrigger").map(StreamRateLimit.parseBytes)
-  private val rateLimited = maxFiles.isDefined || maxBytes.isDefined
-  maxFiles.foreach(m => require(m > 0,
-    s"maxFilesPerTrigger must be positive, got $m"))
-  /** Per-snapshot admission loads measured so far (see lineageLoad). */
-  private val loadMemo =
-    scala.collection.mutable.Map.empty[Long, (Long, Long)]
-  private var availableNowCap: Option[Long] = None
-
-  override def getOffset: Option[Offset] =
-    throw new UnsupportedOperationException(
-      "getOffset is unused: this source implements " +
-        "SupportsAdmissionControl (latestOffset)")
-
-  override def initialOffset(): OffsetV2 = LongOffset(startingSnapshot)
-
-  override def getDefaultReadLimit: ReadLimit =
-    StreamRateLimit.toReadLimit(maxFiles, maxBytes)
-
-  override def reportLatestOffset(): OffsetV2 = {
-    val cur = headId()
-    LongOffset(if (cur < 0) startingSnapshot else cur)
-  }
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val cur = headId()
-    if (cur >= 0) availableNowCap = Some(cur)
-  }
-
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val cur0 = headId()
-    // previous end offset, or NULL on a fresh stream's first trigger
-    val from = Option(start).map(_.json.toLong).getOrElse(startingSnapshot)
-    // a checkpointed start past the head = dropped-and-recreated table
-    if (start != null) requireOnLineage(from, cur0, "checkpointed offset")
-    if (cur0 < 0) return LongOffset(from) // empty table: echo = no new data
-    // the AvailableNow pin is an ID on the lineage, not a number line:
-    // serve toward it, not past it
-    val cur = availableNowCap.getOrElse(cur0)
-    if (from == cur || !rateLimited) return LongOffset(cur)
-    val stats = IcebergTable.lineageLoad(spark, location, from, cur, loadMemo)
-    LongOffset(StreamRateLimit.admit(stats, maxFiles, maxBytes).getOrElse(cur))
-  }
-
-  /** A checkpointed id AHEAD of the table's whole lineage is not a
-    * replay: ids are monotone, so id > head means the table was
-    * dropped and recreated (ids restarted below the checkpoint).
-    * Surface the divergence like the Delta source's id-mismatch error
-    * instead of yielding empty batches forever (or an opaque lineage
-    * walk failure). */
-  private def requireOnLineage(id: Long, head: Long, what: String): Unit = {
-    if (id > 0 && id > head)
-      throw new IllegalStateException(
-        s"graft-iceberg stream at $location: $what $id is beyond the " +
-          s"table's current head ($head) — the table appears to have " +
-          "been dropped and recreated; restart the stream from a " +
-          "fresh checkpoint")
-  }
-
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val from = start.map(_.json.toLong).getOrElse(startingSnapshot)
-    val endId = end.json.toLong
-    requireOnLineage(endId, headId(), "checkpointed offset")
-    val batch =
-      // `from >= endId` (not just ==): a RESTART replays batch 0 with
-      // start=None, and a drifting starting option ("latest" after the
-      // head advanced) can resolve PAST the checkpointed end — the
-      // replay must reproduce the original empty batch (snapshot ids
-      // are monotone, so an end at-or-before the start holds no rows
-      // this stream hasn't already accounted for)
-      if (from >= endId)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else {
-        // snapshot immutability makes (from, endId]'s batch frame a
-        // fixed logical plan — cache the manifest walk + relation
-        // resolution per session. The key rides the CURRENT metadata
-        // document's identity: any commit (or a drop-and-recreate, which
-        // could reuse small sequential snapshot ids) writes a new
-        // metadata json, so staleness is a structural miss, never a
-        // stale hit; execution still scans the data files every batch.
-        val metaId =
-          try {
-            val loc = new Path(location)
-            val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-            val st = fs.getFileStatus(
-              IcebergMeta.currentMetadataFile(fs, location))
-            s"${st.getPath}#${st.getModificationTime}#${st.getLen}"
-          } catch { case scala.util.control.NonFatal(_) => s"nometa#${System.nanoTime()}" }
-        graft.index.rules.PlanArtifacts.getOrCompute[DataFrame](spark,
-          s"icestream#$location#$from#$endId#$cdc#$skipChanges#" +
-            graft.index.rules.PlanArtifacts.contentKey(
-              Seq(metaId, schema.catalogString))) {
-          if (cdc)
-            IcebergTable.incrementalChanges(spark, location, from, Some(endId))
-              .select(schema.fieldNames.map(col(_)).toIndexedSeq: _*)
-          else IcebergTable.incrementalAppends(spark, location, from,
-              Some(endId), strict = !skipChanges)
-            .select(schema.fieldNames.map(col(_)).toIndexedSeq: _*)
-        }
-      }
-    graft.streaming.SparkStreamingInternals.streamingDataFrame(
-      spark, batch.queryExecution.toRdd, schema)
-  }
-
-  override def stop(): Unit = ()
+  override def toString: String = s"LakeStreamSink[${feed.kind}]($path)"
 }

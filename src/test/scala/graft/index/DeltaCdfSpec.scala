@@ -210,4 +210,41 @@ class DeltaCdfSpec extends AnyFunSuite {
         Seq("_change_type", "_commit_version", "_commit_timestamp"))
     }
   }
+
+  test("changes() after checkpoint-time log cleanup reads only its range; " +
+      "a change-feed stream starts there") {
+    val root = Files.createTempDirectory("graft-cdf-cleaned-").toString
+    DeltaTable.create(customer.filter(col("c_custkey") <= 50), root,
+      configuration = CdfOn +
+        ("delta.logRetentionDuration" -> "interval 0 seconds"))       // v0
+    DeltaTable.append(customer.filter(col("c_custkey") > 50 &&
+      col("c_custkey") <= 100), root)                                 // v1
+    val ckpt = DeltaTable.checkpoint(spark, root)
+    // the cleanup removed the commits before the checkpoint
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new Path(root, f"_delta_log/${0L}%020d.json")))
+    val late = customer.filter(col("c_custkey") > 100)
+    DeltaTable.append(late, root)                                     // ckpt+1
+    DeltaTable.deleteWhere(spark, root, col("c_nationkey") < 5)       // ckpt+2
+    val nDel = customer.filter(col("c_nationkey") < 5).count()
+
+    val want = Map((ckpt + 1, "insert") -> late.count(),
+      (ckpt + 2, "delete") -> nDel)
+    assert(changeTypes(root, from = ckpt + 1) == want)
+
+    val out = Files.createTempDirectory("graft-cdf-cleaned-out-").toString
+    val q = spark.readStream.format("graft-delta")
+      .option("readChangeFeed", "true")
+      .option("startingVersion", (ckpt + 1).toString).load(root)
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-cdf-cleaned-ck-").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val streamed = spark.read.parquet(out)
+      .groupBy("_commit_version", "_change_type").count().collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(streamed == want)
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.index.sources.{DeltaLog, DeltaTable, IcebergTable, LakeStreamSink}
+import graft.index.sources.{DeltaFeed, DeltaLog, DeltaTable, IcebergFeed, IcebergTable, LakeStreamSink, LakeStreamSource}
 
 /**
  * Exactly-once streaming sinks into the jarless lakehouse tables: the
@@ -60,8 +60,8 @@ class LakeStreamSinkSpec extends AnyFunSuite {
 
   test("replayed micro-batch is recognized by the watermark and skipped") {
     val dst = Files.createTempDirectory("graft-dsink-replay-").toString + "/t"
-    val sink = new LakeStreamSink(spark, dst, Nil,
-      Map("txnAppId" -> "replay-test"), iceberg = false)
+    val sink = new LakeStreamSink(new DeltaFeed(spark, dst,
+      Map("txnAppId" -> "replay-test")), Nil)
     val half = customer.filter(col("c_custkey") < 75)
     sink.addBatch(0, half)
     sink.addBatch(0, half) // replay: between-commit-and-checkpoint failure
@@ -76,8 +76,8 @@ class LakeStreamSinkSpec extends AnyFunSuite {
 
   test("graft-iceberg sink: exactly-once via table-property watermark") {
     val dst = Files.createTempDirectory("graft-isink-").toString + "/t"
-    val sink = new LakeStreamSink(spark, dst, Nil,
-      Map("txnAppId" -> "ice-test"), iceberg = true)
+    val sink = new LakeStreamSink(new IcebergFeed(spark, dst,
+      Map("txnAppId" -> "ice-test")), Nil)
     val half = customer.filter(col("c_custkey") < 75)
     sink.addBatch(0, half)
     sink.addBatch(0, half)
@@ -92,8 +92,8 @@ class LakeStreamSinkSpec extends AnyFunSuite {
       "metadata stays O(batch), and rewriteManifests folds the ingest " +
       "history back to one manifest") {
     val dst = Files.createTempDirectory("graft-isink-fast-").toString + "/t"
-    val sink = new LakeStreamSink(spark, dst, Nil,
-      Map("txnAppId" -> "ice-fast"), iceberg = true)
+    val sink = new LakeStreamSink(new IcebergFeed(spark, dst,
+      Map("txnAppId" -> "ice-fast")), Nil)
     (0 until 5).foreach(b =>
       sink.addBatch(b, customer.filter(col("c_custkey") % 5 === b)))
     // one manifest per micro-batch, none rewritten: a 100 TB ingest's
@@ -313,10 +313,10 @@ class LakeStreamSinkSpec extends AnyFunSuite {
 
   test("graft-iceberg sink mergeSchema=true evolves the table " +
       "additively mid-stream; conflicting types refuse") {
-    import graft.index.sources.{IcebergMeta, LakeStreamSink}
+    import graft.index.sources.IcebergMeta
     val dst = Files.createTempDirectory("graft-isink-evo-").toString + "/t"
-    val sink = new LakeStreamSink(spark, dst, Nil,
-      Map("txnAppId" -> "evo-test", "mergeSchema" -> "true"), iceberg = true)
+    val sink = new LakeStreamSink(new IcebergFeed(spark, dst,
+      Map("txnAppId" -> "evo-test", "mergeSchema" -> "true")), Nil)
     sink.addBatch(0, customer.filter(col("c_custkey") < 50))
     // the stream widens: a new column appears mid-stream
     sink.addBatch(1, customer.filter(col("c_custkey") >= 50)
@@ -330,9 +330,33 @@ class LakeStreamSinkSpec extends AnyFunSuite {
       customer.count() - 50)
     // the column has a REAL field id in the table metadata
     assert(IcebergMeta.snapshot(spark, dst).schema.fieldNames.contains("tier"))
+    // two new columns in one batch evolve the schema in ONE commit:
+    // every schema commit publishes the next current-schema-id
+    def schemaVersions(): BigInt = {
+      val meta = new java.io.File(dst, "metadata").listFiles()
+        .filter(_.getName.endsWith(".metadata.json"))
+        .maxBy(_.getName.filter(_.isDigit).toLong)
+      val json = org.json4s.jackson.JsonMethods.parse(
+        new String(Files.readAllBytes(meta.toPath), "UTF-8"))
+      (json \ "current-schema-id") match {
+        case org.json4s.JInt(id) => id
+        case other => fail(s"no current-schema-id in ${meta.getName}: $other")
+      }
+    }
+    val before = schemaVersions()
+    sink.addBatch(2, customer.limit(3)
+      .withColumn("tier", lit(7))
+      .withColumn("region", lit("north"))
+      .withColumn("score", lit(1.5)))
+    assert(schemaVersions() == before + 1,
+      s"two new columns should add one schema version, got ${schemaVersions() - before}")
+    val wide = IcebergTable.read(spark, dst)
+    assert(wide.count() == customer.count() + 3)
+    assert(wide.filter(col("region") === "north" && col("score") === 1.5)
+      .count() == 3)
     // a conflicting type never merges
     val e = intercept[IllegalArgumentException] {
-      sink.addBatch(2, customer.limit(1)
+      sink.addBatch(3, customer.limit(1)
         .withColumn("tier", lit("not-an-int")))
     }
     assert(e.getMessage.contains("conflicting"))
@@ -341,9 +365,9 @@ class LakeStreamSinkSpec extends AnyFunSuite {
   test("mode=merge: a replayed upsert batch is skipped by the txn " +
       "watermark (no new version, no double-apply)") {
     val dstT = Files.createTempDirectory("graft-mrgrpl-").toString + "/t"
-    val sink = new LakeStreamSink(spark, dstT, Nil,
+    val sink = new LakeStreamSink(new DeltaFeed(spark, dstT,
       Map("txnAppId" -> "merge-replay", "mode" -> "merge",
-        "mergeKeys" -> "c_custkey"), iceberg = false)
+        "mergeKeys" -> "c_custkey")), Nil)
     sink.addBatch(0, customer.filter(col("c_custkey") <= 50))
     sink.addBatch(1, customer.filter(col("c_custkey") <= 50)
       .withColumn("c_acctbal", col("c_acctbal") + 100))
@@ -365,8 +389,8 @@ class LakeStreamSinkSpec extends AnyFunSuite {
     val base = customer.filter(col("c_custkey") <= 50)
     IcebergTable.create(base, dst)                                  // snap 1
 
-    val sink = new LakeStreamSink(spark, dst, Nil,
-      Map("txnAppId" -> "wap-ingest", "branch" -> "audit"), iceberg = true)
+    val sink = new LakeStreamSink(new IcebergFeed(spark, dst,
+      Map("txnAppId" -> "wap-ingest", "branch" -> "audit")), Nil)
     sink.addBatch(0, customer.filter(
       col("c_custkey") > 50 && col("c_custkey") <= 100))            // snap 2
     sink.addBatch(1, customer.filter(col("c_custkey") > 100))       // snap 3
@@ -377,11 +401,10 @@ class LakeStreamSinkSpec extends AnyFunSuite {
     assert(IcebergTable.readRef(spark, dst, "audit").count() ==
       customer.count())
     // AUDIT side: a stream source following the ref sees the branch head
-    val srcHead = new graft.index.sources.IcebergStreamSource(
-      spark, dst, Map("branch" -> "audit"), "")
+    val srcHead = new LakeStreamSource(
+      new IcebergFeed(spark, dst, Map("branch" -> "audit")))
     assert(srcHead.reportLatestOffset().json.toLong == 3L)
-    val srcMain = new graft.index.sources.IcebergStreamSource(
-      spark, dst, Map.empty, "")
+    val srcMain = new LakeStreamSource(new IcebergFeed(spark, dst, Map.empty))
     assert(srcMain.reportLatestOffset().json.toLong == 1L)
 
     // replayed batch: the TABLE-level watermark catches it even though
@@ -399,15 +422,15 @@ class LakeStreamSinkSpec extends AnyFunSuite {
 
     // misuse refuses loudly
     val e1 = intercept[IllegalArgumentException] {
-      new LakeStreamSink(spark,
+      new LakeStreamSink(new IcebergFeed(spark,
         Files.createTempDirectory("graft-isink-wap2-").toString + "/t",
-        Nil, Map("txnAppId" -> "x", "branch" -> "b"), iceberg = true)
+        Map("txnAppId" -> "x", "branch" -> "b")), Nil)
         .addBatch(0, base)
     }
     assert(e1.getMessage.contains("existing Iceberg table"))
     val e2 = intercept[IllegalArgumentException] {
-      new LakeStreamSink(spark, dst, Nil,
-        Map("txnAppId" -> "x", "branch" -> "b"), iceberg = false)
+      new LakeStreamSink(new DeltaFeed(spark, dst,
+        Map("txnAppId" -> "x", "branch" -> "b")), Nil)
     }
     assert(e2.getMessage.contains("graft-iceberg"))
   }

@@ -2,25 +2,60 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.index.sources.{DeltaTable, IcebergTable}
+import graft.index.sources.{DeltaFeed, DeltaTable, IcebergFeed, IcebergTable, LakeFeed, LakeStreamSource}
 
 /**
  * Structured Streaming over the jarless lakehouse logs: the
  * `graft-delta` / `graft-iceberg` v1 sources serve each commit's
  * appended rows as micro-batches, resume from the checkpoint without
  * re-serving, refuse row-deleting commits loudly (or skip them with
- * `skipChangeCommits=true`), and honor `startingVersion=latest`.
+ * `skipChangeCommits=true`), and honor `startingVersion=latest`. The
+ * behaviour both formats share is driven over both ([[lakes]]).
  */
 class LakeStreamSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def customer =
     spark.read.parquet(s"${TestSpark.sfDir}/customer.parquet")
+
+  /** One lake format as the shared cases drive it. `create`'s flag
+    * asks for a table that records its change feed. */
+  private case class Lake(format: String, startingId: String,
+      idColumn: String, refusal: String,
+      create: (DataFrame, String, Boolean) => Unit,
+      append: (DataFrame, String) => Unit,
+      delete: (String, Column) => Unit,
+      feed: (SparkSession, String, Map[String, String]) => LakeFeed)
+
+  private lazy val lakes = Seq(
+    Lake("graft-delta", "startingVersion", "_commit_version",
+      "append stream cannot represent",
+      (df, p, cdf) => DeltaTable.create(df, p, configuration =
+        if (cdf) Map("delta.enableChangeDataFeed" -> "true") else Map.empty),
+      (df, p) => DeltaTable.append(df, p),
+      (p, c) => DeltaTable.deleteWhere(spark, p, c),
+      new DeltaFeed(_, _, _)),
+    Lake("graft-iceberg", "startingSnapshotId", "_commit_snapshot_id",
+      "appends-only",
+      (df, p, _) => IcebergTable.create(df, p),
+      (df, p) => IcebergTable.append(df, p),
+      (p, c) => IcebergTable.deleteWhere(spark, p, c),
+      new IcebergFeed(_, _, _)))
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** Every message along a failure's cause chain. */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
 
   /** Drain the stream into a parquet sink with AvailableNow; returns the
     * sink's current row count. */
@@ -62,42 +97,48 @@ class LakeStreamSourceSpec extends AnyFunSuite {
   }
 
   test("graft-delta: row-deleting commits refuse; skipChangeCommits skips") {
-    val root = Files.createTempDirectory("graft-dstream-del-").toString
-    val out = Files.createTempDirectory("graft-dstream-del-out-").toString
-    val ckpt = Files.createTempDirectory("graft-dstream-del-ck-").toString
-    DeltaTable.create(customer.filter(col("c_custkey") < 100), root)
-    assert(drain("graft-delta", root, out, ckpt) == 100)
+    lakes.foreach { lake =>
+      val root = tmp("graft-stream-del-")
+      val out = tmp("graft-stream-del-out-")
+      val ckpt = tmp("graft-stream-del-ck-")
+      lake.create(customer.filter(col("c_custkey") < 100), root, false)
+      assert(drain(lake.format, root, out, ckpt) == 100)
 
-    DeltaTable.deleteWhere(spark, root, col("c_custkey") < 10)
-    val late = customer.filter(col("c_custkey") >= 100)
-    DeltaTable.append(late, root)
+      lake.delete(root, col("c_custkey") < 10)
+      val late = customer.filter(col("c_custkey") >= 100)
+      lake.append(late, root)
 
-    val e = intercept[StreamingQueryException] {
-      drain("graft-delta", root, out, ckpt)
+      val e = intercept[StreamingQueryException] {
+        drain(lake.format, root, out, ckpt)
+      }
+      assert(msgs(e).exists(_.contains(lake.refusal)),
+        s"${lake.format}: expected the strict refusal, got ${msgs(e).mkString(" | ")}")
+
+      // with the skip option the delete commit is passed over, appends flow
+      val n = drain(lake.format, root, tmp("graft-stream-del-out2-"),
+        tmp("graft-stream-del-ck2-"), Map("skipChangeCommits" -> "true"))
+      assert(n == 100 + late.count(), lake.format)
     }
-    assert(e.getMessage.contains("append stream cannot represent") ||
-      Option(e.getCause).exists(_.getMessage.contains("append stream cannot represent")))
-
-    // with the skip option the delete commit is passed over, appends flow
-    val out2 = Files.createTempDirectory("graft-dstream-del-out2-").toString
-    val ckpt2 = Files.createTempDirectory("graft-dstream-del-ck2-").toString
-    val n = drain("graft-delta", root, out2, ckpt2,
-      Map("skipChangeCommits" -> "true"))
-    assert(n == 100 + late.count())
   }
 
   test("graft-delta: startingVersion=latest serves only post-start commits") {
-    val root = Files.createTempDirectory("graft-dstream-late-").toString
-    val out = Files.createTempDirectory("graft-dstream-late-out-").toString
-    val ckpt = Files.createTempDirectory("graft-dstream-late-ck-").toString
-    DeltaTable.create(customer.filter(col("c_custkey") < 100), root)
-    // stream created AFTER v0: drains nothing yet
-    assert(drain("graft-delta", root, out, ckpt,
-      Map("startingVersion" -> "latest")) == 0L)
-    val late = customer.filter(col("c_custkey") >= 100)
-    DeltaTable.append(late, root)
-    assert(drain("graft-delta", root, out, ckpt,
-      Map("startingVersion" -> "latest")) == late.count())
+    lakes.foreach { lake =>
+      val root = tmp("graft-stream-late-")
+      val out = tmp("graft-stream-late-out-")
+      val ckpt = tmp("graft-stream-late-ck-")
+      val latest = Map(lake.startingId -> "latest")
+      lake.create(customer.filter(col("c_custkey") < 100), root, false)
+      // stream created AFTER the first commit: drains nothing yet
+      assert(drain(lake.format, root, out, ckpt, latest) == 0L, lake.format)
+      val late = customer.filter(col("c_custkey") >= 100)
+      lake.append(late, root)
+      assert(drain(lake.format, root, out, ckpt, latest) == late.count(),
+        lake.format)
+      // a start beyond the head waits for it instead of failing
+      assert(drain(lake.format, root, tmp("graft-stream-ahead-out-"),
+        tmp("graft-stream-ahead-ck-"), Map(lake.startingId -> "100")) == 0L,
+        lake.format)
+    }
   }
 
   test("graft-iceberg: startingSnapshotId=latest under a BRANCH pins " +
@@ -122,28 +163,29 @@ class LakeStreamSourceSpec extends AnyFunSuite {
   }
 
   test("graft-delta readChangeFeed: deletes stream as first-class change rows") {
-    val root = Files.createTempDirectory("graft-dstream-cdc-").toString
-    val out = Files.createTempDirectory("graft-dstream-cdc-out-").toString
-    val ckpt = Files.createTempDirectory("graft-dstream-cdc-ck-").toString
-    DeltaTable.create(customer, root,
-      configuration = Map("delta.enableChangeDataFeed" -> "true"))
-    val opts = Map("readChangeFeed" -> "true")
-    assert(drain("graft-delta", root, out, ckpt, opts) == customer.count())
+    lakes.foreach { lake =>
+      val root = tmp("graft-stream-cdc-")
+      val out = tmp("graft-stream-cdc-out-")
+      val ckpt = tmp("graft-stream-cdc-ck-")
+      lake.create(customer, root, true)
+      val opts = Map("readChangeFeed" -> "true")
+      assert(drain(lake.format, root, out, ckpt, opts) == customer.count())
 
-    DeltaTable.deleteWhere(spark, root, col("c_nationkey") < 5)
-    val nDel = customer.filter(col("c_nationkey") < 5).count()
-    // no refusal in CDC mode: the delete arrives as change rows
-    assert(drain("graft-delta", root, out, ckpt, opts) ==
-      customer.count() + nDel)
-    val byType = spark.read.parquet(out)
-      .groupBy("_change_type").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byType("insert") == customer.count())
-    assert(byType("delete") == nDel)
-    // stamps ride along
-    assert(spark.read.parquet(out)
-      .filter(col("_commit_timestamp").isNull ||
-        col("_commit_version").isNull).count() == 0)
+      lake.delete(root, col("c_nationkey") < 5)
+      val nDel = customer.filter(col("c_nationkey") < 5).count()
+      // no refusal in CDC mode: the delete arrives as change rows
+      assert(drain(lake.format, root, out, ckpt, opts) ==
+        customer.count() + nDel, lake.format)
+      val byType = spark.read.parquet(out)
+        .groupBy("_change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(byType("insert") == customer.count(), lake.format)
+      assert(byType("delete") == nDel, lake.format)
+      // stamps ride along
+      assert(spark.read.parquet(out)
+        .filter(col("_commit_timestamp").isNull ||
+          col(lake.idColumn).isNull).count() == 0, lake.format)
+    }
   }
 
   test("graft-iceberg: snapshot-id offsets, resume, strict delete refusal") {
@@ -173,30 +215,31 @@ class LakeStreamSourceSpec extends AnyFunSuite {
 
   test("graft-iceberg: a dropped-and-recreated table fails the checkpoint " +
       "instead of yielding empty batches forever") {
-    val loc = Files.createTempDirectory("graft-istream-reset-").toString
-    val out = Files.createTempDirectory("graft-istream-reset-out-").toString
-    val ckpt = Files.createTempDirectory("graft-istream-reset-ck-").toString
-    IcebergTable.create(customer.filter(col("c_custkey") < 50), loc)
-    IcebergTable.append(customer.filter(col("c_custkey") >= 50 &&
-      col("c_custkey") < 100), loc)
-    IcebergTable.append(customer.filter(col("c_custkey") >= 100 &&
-      col("c_custkey") < 150), loc)
-    drain("graft-iceberg", loc, out, ckpt) // checkpoint now at snapshot 3
+    lakes.foreach { lake =>
+      val loc = tmp("graft-stream-reset-")
+      val out = tmp("graft-stream-reset-out-")
+      val ckpt = tmp("graft-stream-reset-ck-")
+      lake.create(customer.filter(col("c_custkey") < 50), loc, false)
+      lake.append(customer.filter(col("c_custkey") >= 50 &&
+        col("c_custkey") < 100), loc)
+      lake.append(customer.filter(col("c_custkey") >= 100 &&
+        col("c_custkey") < 150), loc)
+      drain(lake.format, loc, out, ckpt) // checkpoint now at the third commit
 
-    // drop + recreate: snapshot ids restart below the checkpointed end
-    def rmrf(p: java.io.File): Unit = {
-      Option(p.listFiles).foreach(_.foreach(rmrf)); p.delete()
-    }
-    rmrf(new java.io.File(loc))
-    IcebergTable.create(customer.filter(col("c_custkey") < 20), loc)
+      // drop + recreate: commit ids restart below the checkpointed end
+      def rmrf(p: java.io.File): Unit = {
+        Option(p.listFiles).foreach(_.foreach(rmrf)); p.delete()
+      }
+      rmrf(new java.io.File(loc))
+      lake.create(customer.filter(col("c_custkey") < 20), loc, false)
 
-    val e = intercept[StreamingQueryException] {
-      drain("graft-iceberg", loc, out, ckpt)
+      val e = intercept[StreamingQueryException] {
+        drain(lake.format, loc, out, ckpt)
+      }
+      assert(msgs(e).exists(_.contains("dropped and recreated")),
+        s"${lake.format}: expected the recreation divergence error, got: " +
+          msgs(e).mkString(" | "))
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("dropped and recreated")),
-      s"expected the recreation divergence error, got: ${msgs(e).mkString(" | ")}")
   }
 
   /** Completed micro-batches recorded in the checkpoint's offset log. */
@@ -206,32 +249,59 @@ class LakeStreamSourceSpec extends AnyFunSuite {
 
   test("graft-delta: maxFilesPerTrigger — Trigger.AvailableNow DRAINS " +
       "the whole backlog in bounded per-commit batches") {
-    val root = Files.createTempDirectory("graft-dstream-rate-").toString
-    val out = Files.createTempDirectory("graft-dstream-rate-out-").toString
-    val ckpt = Files.createTempDirectory("graft-dstream-rate-ck-").toString
-    // 3 commits × 2 files each — the backlog a restart would face
-    val c0 = customer.filter(col("c_custkey") < 50)
-    val c1 = customer.filter(col("c_custkey") >= 50 && col("c_custkey") < 100)
-    val c2 = customer.filter(col("c_custkey") >= 100)
-    DeltaTable.create(c0.repartition(2), root)
-    DeltaTable.append(c1.repartition(2), root)
-    DeltaTable.append(c2.repartition(2), root)
+    lakes.foreach { lake =>
+      val root = tmp("graft-stream-rate-")
+      val out = tmp("graft-stream-rate-out-")
+      val ckpt = tmp("graft-stream-rate-ck-")
+      // 3 commits × 2 files each — the backlog a restart would face
+      val c0 = customer.filter(col("c_custkey") < 50)
+      val c1 = customer.filter(col("c_custkey") >= 50 && col("c_custkey") < 100)
+      val c2 = customer.filter(col("c_custkey") >= 100)
+      lake.create(c0.repartition(2), root, false)
+      lake.append(c1.repartition(2), root)
+      lake.append(c2.repartition(2), root)
 
-    // ONE AvailableNow run drains everything — the admission-control
-    // protocol paces it as one micro-batch per commit under the cap
-    val opts = Map("maxFilesPerTrigger" -> "2")
-    assert(drain("graft-delta", root, out, ckpt, opts) == customer.count())
-    assert(batchCount(ckpt) == 3,
-      s"expected 3 capped batches, got ${batchCount(ckpt)}")
-    // drained: a further capped run serves nothing new
-    assert(drain("graft-delta", root, out, ckpt, opts) == customer.count())
-    // RESUME MID-BACKLOG: new commits drain from the checkpointed
-    // offset in capped batches, never re-serving
-    DeltaTable.append(customer.limit(30).repartition(2), root)
-    DeltaTable.append(customer.limit(20).repartition(2), root)
-    assert(drain("graft-delta", root, out, ckpt, opts) ==
-      customer.count() + 50)
-    assert(spark.read.parquet(out).count() == customer.count() + 50)
+      // ONE AvailableNow run drains everything — the admission-control
+      // protocol paces it as one micro-batch per commit under the cap
+      val opts = Map("maxFilesPerTrigger" -> "2")
+      assert(drain(lake.format, root, out, ckpt, opts) == customer.count())
+      assert(batchCount(ckpt) == 3,
+        s"${lake.format}: expected 3 capped batches, got ${batchCount(ckpt)}")
+      // drained: a further capped run serves nothing new
+      assert(drain(lake.format, root, out, ckpt, opts) == customer.count())
+      // RESUME MID-BACKLOG: new commits drain from the checkpointed
+      // offset in capped batches, never re-serving
+      lake.append(customer.limit(30).repartition(2), root)
+      lake.append(customer.limit(20).repartition(2), root)
+      assert(drain(lake.format, root, out, ckpt, opts) ==
+        customer.count() + 50, lake.format)
+      assert(spark.read.parquet(out).count() == customer.count() + 50)
+      assert(batchCount(ckpt) == 5, lake.format)
+    }
+  }
+
+  test("getBatch: a repeated range resolves once per session, for both " +
+      "formats and both modes") {
+    /** The resolved rows a batch frame wraps (its one LogicalRDD). */
+    def rddOf(batch: DataFrame) = batch.queryExecution.logical
+      .collectFirst { case r: LogicalRDD => r.rdd }.get
+    for (lake <- lakes; cdc <- Seq(false, true)) {
+      val root = tmp("graft-stream-cache-")
+      lake.create(customer.filter(col("c_custkey") < 100), root, true)
+      lake.append(customer.filter(col("c_custkey") >= 100), root)
+      val opts = if (cdc) Map("readChangeFeed" -> "true") else Map.empty[String, String]
+      val source = new LakeStreamSource(lake.feed(spark, root, opts))
+      val end = LongOffset(source.reportLatestOffset().json.toLong)
+      val first = rddOf(source.getBatch(None, end))
+      // a second source on the same table and session: same resolution
+      val again = new LakeStreamSource(lake.feed(spark, root, opts))
+      assert(rddOf(again.getBatch(None, end)).id == first.id,
+        s"${lake.format} cdc=$cdc: the repeated range was resolved again")
+      // a different range is its own batch
+      val second = LongOffset(end.offset - 1)
+      assert(rddOf(source.getBatch(Some(second), end)).id != first.id,
+        s"${lake.format} cdc=$cdc")
+    }
   }
 
   test("graft-delta: a wider files cap admits multiple commits per batch; " +
