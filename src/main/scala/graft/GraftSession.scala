@@ -57,11 +57,10 @@ object GraftSession {
       // anyway, so 0 also aligns local plan shapes with at-scale
       // behavior. Measured: full-suite composite −10%, qds family up to
       // 2× (OPTIMIZATION_r18.md §3). Static core conf — must be set
-      // before the context exists; override via GRAFT_BYPASS_THRESH.
+      // before the context exists.
       // (`spark.shuffle.file.transferTo=false` was A/B-measured 2× WORSE
       // — it swaps the mmap for a buffered copy but keeps all the files.)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESH", "0"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
     if (master != null) b.master(master) else b
   }
 

@@ -1,13 +1,14 @@
 package graft.index.analysis
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import scala.util.control.NonFatal
 
-import graft.index.{GraftConf, IndexLogEntry, IndexState, IndexManager}
-import graft.index.covering.CoveringIndexDescriptor
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+import graft.index.{IndexLogEntry, IndexState, IndexManager}
 import graft.index.dataskipping.DataSkippingIndexDescriptor
-import graft.index.rules.{CandidateMatch, IndexCandidates, IndexCatalog}
+import graft.index.rules.{CandidateMatch, IndexCandidates, ScoreBasedOptimizer, Verdict, Verdicts}
+import graft.index.sources.SourceLeaf
 import graft.index.zorder.ZOrderIndexDescriptor
 
 /**
@@ -17,6 +18,7 @@ import graft.index.zorder.ZOrderIndexDescriptor
  * CandidateIndexAnalyzer.scala:29-346, FilterReason.scala:33-158.
  */
 object PlanAnalysis {
+  import Reasons._
 
   /** Names of graft indexes applied in the plan (every substituted scan
     * carries the index name in its marker option). */
@@ -199,7 +201,9 @@ object PlanAnalysis {
       sep, line(header), sep) ++ rows.map(line) :+ sep).mkString("", "\n", "\n")
   }
 
-  /** Per-index reasons why each ACTIVE index was / was not applied. */
+  /** Per-index reasons why each ACTIVE index was / was not applied: the
+    * verdicts the rules wrote when replaying ApplyGraft's candidate
+    * collection and optimizer on the pre-rewrite plan. */
   def whyNot(spark: SparkSession, df: DataFrame,
       indexName: Option[String] = None): String = {
     val manager = new IndexManager(spark)
@@ -221,15 +225,33 @@ object PlanAnalysis {
       spark.sessionState.executePlan(df.queryExecution.logical).optimizedPlan
     }
     val leaves = IndexCandidates.sourceLeaves(spark, plan)
-    val candidates = IndexCandidates.collect(spark, plan, all)
+    val verdicts = new Verdicts
+    val candidates =
+      IndexCandidates.collect(spark, plan +: plan.subqueriesAll, all, Some(verdicts))
+    val collected = verdicts.log.size
+    // ApplyGraft's fail-safe: a rewrite that throws leaves the plan as
+    // it is, and the verdicts written before the failure stand
+    if (candidates.nonEmpty) try {
+      ScoreBasedOptimizer.optimize(spark, plan, candidates, Some(verdicts))
+    } catch { case NonFatal(_) => () }
+    val (fromCollect, fromRules) = verdicts.log.toSeq.splitAt(collected)
     val resolver = spark.sessionState.conf.resolver
 
     val sb = new StringBuilder
     report.foreach { e =>
       sb.append(s"Index '${e.name}' [${e.descriptor.kindAbbr}]: ")
       if (applied.contains(e.name)) sb.append("APPLIED\n")
-      else sb.append(notAppliedReasons(spark, e, leaves, candidates, resolver,
-        plan, applied).mkString("; ")).append('\n')
+      else {
+        def mine(vs: Seq[Verdict]) = vs.filter(_.index == e.name)
+        sb.append(notAppliedReasons(e, leaves.nonEmpty, mine(fromCollect),
+          candidates.values.exists(_.exists(_.entry.name == e.name)),
+          mine(fromRules), applied.toSeq.sorted match {
+            case Seq() => Seq(Outscored())
+            case names => names.map(winner =>
+              interestingOrderTie(e, winner, leaves, candidates, plan, resolver)
+                .getOrElse(AnotherIndexApplied(winner)))
+          }).mkString("; ")).append('\n')
+      }
     }
     // plan-level operator-order decisions (not per-index): a semi gate
     // HoistSemiGate deliberately left in place reads as "why didn't the
@@ -243,20 +265,20 @@ object PlanAnalysis {
     sb.toString
   }
 
-  import Reasons._
-  import graft.index.sources.SourceLeaf
-
   /** Typed reason list, most specific first (reference:
     * plananalysis/CandidateIndexAnalyzer.scala:29-346 +
-    * FilterReason.scala:33-158 — same code strings, re-derived). */
-  private[graft] def notAppliedReasons(
-      spark: SparkSession,
+    * FilterReason.scala:33-158 — same code strings): `collected` are
+    * IndexCandidates.collect's verdicts for `e`, `judged` the rules'. A
+    * schema mismatch is reported only when no leaf matched; an index a
+    * rule found eligible lost on ranking (`fallback`); an index no rule's
+    * shape reached gets its kind's shape reason. */
+  private def notAppliedReasons(
       e: IndexLogEntry,
-      leaves: Seq[SourceLeaf],
-      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      resolver: org.apache.spark.sql.catalyst.analysis.Resolver,
-      plan: LogicalPlan,
-      applied: Set[String]): Seq[Reason] = {
+      hasSource: Boolean,
+      collected: Seq[Verdict],
+      isCandidate: Boolean,
+      judged: Seq[Verdict],
+      fallback: => Seq[Reason]): Seq[Reason] = {
     e.descriptor match {
       case _: graft.index.ivf.IvfIndexDescriptor =>
         return Seq(ApiServed("IVF", "Graft.annSearch"))
@@ -264,47 +286,29 @@ object PlanAnalysis {
         return Seq(ApiServed("MinHash", "Graft.nearDuplicates / dedupBatch"))
       case _ => ()
     }
-    if (leaves.isEmpty) return Seq(NoFileBasedSource())
-
-    val reasons = scala.collection.mutable.ArrayBuffer.empty[Reason]
-    var schemaMatchedSomewhere = false
-    leaves.foreach { leaf =>
-      val schemaOk = e.descriptor.referencedColumns.forall(c =>
-        graft.index.NestedColumns.resolvableIn(leaf.plan.output, c, resolver))
-      // a lake leaf with live deletes never has candidates
-      // (IndexCandidates.collect); AddMetadataColumns materializes
-      // `_metadata` into the relation output when the plan consumes it —
-      // the exact condition under which every coverage check refuses
-      // (MetadataGuardSpec pins the refusal). A schema-level mismatch
-      // report would mislead for either: name the real blockers.
-      val blockers =
-        (if (leaf.liveDeletes) Seq(LiveLakeDeletes()) else Nil) ++
-          (if (leaf.plan.output.exists(_.name == "_metadata"))
-            Seq(MergeOnReadMetadata()) else Nil)
-      if (blockers.nonEmpty) {
-        schemaMatchedSomewhere = true
-        reasons ++= blockers
-      } else if (schemaOk) {
-        schemaMatchedSomewhere = true
-        candidates.get(leaf.plan).flatMap(_.find(_.entry.name == e.name)) match {
-          case None => reasons ++= driftReasons(spark, e, leaf)
-          case Some(cm) => reasons ++= shapeReasons(spark, plan, leaf.plan,
-            cm, candidates, resolver)
-        }
-      }
-    }
-    if (!schemaMatchedSomewhere)
-      reasons += ColSchemaMismatch(
-        leaves.flatMap(_.plan.output.map(_.name)).distinct,
-        e.descriptor.referencedColumns)
-    if (reasons.isEmpty)
-      reasons ++= (applied.toSeq.sorted match {
-        case Seq() => Seq(Outscored())
-        case names => names.map(winner =>
-          interestingOrderTie(e, winner, leaves, candidates, plan, resolver)
-            .getOrElse(AnotherIndexApplied(winner)))
+    if (!hasSource) return Seq(NoFileBasedSource())
+    val refusals = collected.flatMap(_.refusal)
+    val mismatches = refusals.collect { case m: ColSchemaMismatch => m }
+    val drops = refusals.filterNot(_.isInstanceOf[ColSchemaMismatch])
+    val schema =
+      if (drops.nonEmpty || isCandidate || mismatches.isEmpty) Nil
+      else Seq(ColSchemaMismatch(mismatches.flatMap(_.sourceColumns).distinct,
+        e.descriptor.referencedColumns))
+    val ruled =
+      if (judged.exists(_.refusal.isEmpty)) fallback
+      else judged.flatMap(_.refusal)
+    // rules list a required column set in their own order
+    (schema ++ drops ++ ruled).distinctBy {
+      case MissingRequiredCol(required, indexCols) => (required.toSet, indexCols)
+      case r => r
+    } match {
+      case Seq() => Seq(e.descriptor match {
+        case _: ZOrderIndexDescriptor => NoFilter("z-order file pruning")
+        case _: DataSkippingIndexDescriptor => NoFilter("data skipping")
+        case _ => NoFilterOrJoin()
       })
-    reasons.distinct.toSeq
+      case reasons => reasons
+    }
   }
 
   /** When a covering index lost to a same-relation winner bucketed on
@@ -353,304 +357,10 @@ object PlanAnalysis {
     def dfs(p: LogicalPlan, acc: Map[String, Int]): Option[Map[String, Int]] =
       if (p.fastEquals(leaf)) Some(acc)
       else {
-        val next = graft.index.rules.ScoreBasedOptimizer.derives(p)
+        val next = ScoreBasedOptimizer.derives(p)
           .foldLeft(acc)((m, n) => m.updated(n, m.getOrElse(n, 0) + 1))
         p.children.view.flatMap(c => dfs(c, next)).headOption
       }
     dfs(plan, Map.empty).getOrElse(Map.empty)
-  }
-
-  /** Why the file sets kept this index out of the candidate list: the
-    * same appended/deleted math as IndexCandidates.collect, reported by
-    * which bound broke. */
-  private def driftReasons(spark: SparkSession, e: IndexLogEntry,
-      leaf: SourceLeaf): Seq[Reason] = {
-    def key(f: graft.index.FileMeta) = (f.path, f.size, f.modifiedTime)
-    val current = IndexCandidates.currentFiles(leaf)
-    val currentKeys = current.map(key).toSet
-    val logged = e.relations.head.files
-    val loggedKeys = logged.map(key).toSet
-    val appended = current.filterNot(f => loggedKeys.contains(key(f)))
-    val deleted = logged.filterNot(f => currentKeys.contains(key(f)))
-    if (appended.isEmpty && deleted.isEmpty) return Nil // not a drift problem
-    val loggedBytes = math.max(1L, logged.map(_.size).sum)
-    val currentBytes = math.max(1L, current.map(_.size).sum)
-    if (deleted.map(_.size).sum == loggedBytes && logged.nonEmpty)
-      return Seq(NoCommonFiles())
-    if (!GraftConf.hybridScanEnabled(spark)) return Seq(SourceDataChanged())
-    val appendedRatio = appended.map(_.size).sum.toDouble / currentBytes
-    val deletedRatio = deleted.map(_.size).sum.toDouble / loggedBytes
-    val maxApp = GraftConf.hybridMaxAppendedRatio(spark)
-    val maxDel = GraftConf.hybridMaxDeletedRatio(spark)
-    Seq(
-      if (appendedRatio > maxApp) Some(TooMuchAppended(appendedRatio, maxApp)) else None,
-      if (deletedRatio > maxDel) Some(TooMuchDeleted(deletedRatio, maxDel)) else None
-    ).flatten match {
-      case Nil => Seq(SourceDataChanged()) // quick-refresh blessing math differed
-      case rs => rs
-    }
-  }
-
-  /** Filter/Project shapes over `leaf`, each counted once: a
-    * Project(Filter(leaf)) subtree must not ALSO report as its inner
-    * bare Filter — the projection is what defines the needed columns. */
-  private def filterShapes(plan: LogicalPlan, leaf: LogicalPlan)
-      : Seq[(Option[Project], Filter)] = {
-    val projected = plan.collect {
-      case p @ Project(_, f @ Filter(_, r)) if r.fastEquals(leaf) =>
-        (Option(p), f)
-    }
-    val inner = projected.map(_._2)
-    val bare = plan.collect {
-      case f @ Filter(_, r) if r.fastEquals(leaf) && !inner.exists(_ eq f) =>
-        (Option.empty[Project], f)
-    }
-    projected ++ bare
-  }
-
-  private def shapeReasons(
-      spark: SparkSession,
-      plan: LogicalPlan,
-      leaf: LogicalPlan,
-      m: CandidateMatch,
-      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      resolver: org.apache.spark.sql.catalyst.analysis.Resolver): Seq[Reason] = {
-    val filters = filterShapes(plan, leaf)
-    val joins = plan.collect { case j: Join => j }
-    // EXISTS/IN predicates are joins-to-be (ExistsIndexRule): analyze
-    // each probe as the semi/anti/existence join it will become
-    val probes = plan.collect {
-      case f: Filter =>
-        graft.index.rules.ExistsIndexRule.probePairs(f.condition, f.child)
-          .map(pp => (f, pp))
-    }.flatten
-    m.entry.descriptor match {
-      case d: CoveringIndexDescriptor =>
-        if (filters.isEmpty && joins.isEmpty && probes.isEmpty)
-          Seq(NoFilterOrJoin())
-        else {
-          val fr = filters.flatMap { case (projectOpt, f) =>
-            if (!f.condition.deterministic)
-              Seq(IneligibleFilterCondition(f.condition.sql))
-            else {
-              val filterNames = f.condition.references.toSeq.map(_.name).distinct
-              val neededNames = (projectOpt.getOrElse(f).references ++
-                projectOpt.getOrElse(f).outputSet).toSeq.map(_.name).distinct
-              val head = d.indexedColumns.head
-              Seq(
-                if (!filterNames.exists(resolver(_, head)))
-                  Some(NoFirstIndexedColCond(head, filterNames))
-                else None,
-                if (!d.covers(neededNames))
-                  Some(MissingRequiredCol(neededNames, d.referencedColumns))
-                else None,
-                if (m.deleted.nonEmpty && !d.hasLineage)
-                  Some(NoDeleteSupport())
-                else None).flatten
-            }
-          }
-          val jrs = joins.map(joinReasons(spark, _, leaf, m, d, candidates, resolver))
-          // an involved join with ZERO blocking reasons means this index
-          // COULD have served — the real explanation is then the
-          // fallback (another index applied / interesting-order tie),
-          // not the other routes' noise
-          if (jrs.exists(_.contains(Nil))) Nil
-          else {
-            val jr = jrs.flatten.flatten
-            val er = probes.flatMap { case (f, (_, innerPlan, pairs)) =>
-              existsReasons(spark, f, innerPlan, pairs, leaf, d,
-                candidates, resolver)
-            }
-            fr ++ jr ++ er
-          }
-        }
-      case d: ZOrderIndexDescriptor =>
-        if (!m.isExact) Seq(ZOrderRequiresExactMatch())
-        else if (filters.isEmpty) Seq(NoFilter("z-order file pruning"))
-        else {
-          val fr = filters.flatMap { case (projectOpt, f) =>
-            val filterNames = f.condition.references.toSeq.map(_.name).distinct
-            val neededNames = (projectOpt.getOrElse(f).references ++
-              projectOpt.getOrElse(f).outputSet).toSeq.map(_.name).distinct
-            Seq(
-              if (!d.indexedColumns.exists(c => filterNames.exists(resolver(_, c))))
-                Some(NoFirstIndexedColCond(d.indexedColumns.mkString("|"), filterNames))
-              else None,
-              if (!d.covers(neededNames))
-                Some(MissingRequiredCol(neededNames, d.referencedColumns))
-              else None).flatten
-          }
-          if (fr.isEmpty) Seq(Outscored()) else fr
-        }
-      case _: DataSkippingIndexDescriptor =>
-        if (filters.isEmpty) Seq(NoFilter("data skipping"))
-        else Seq(PredicateNotTranslatable())
-    }
-  }
-
-  // ------------------------------------------------------ join analysis
-
-  /** The single candidate leaf under a linear Project/Filter chain —
-    * mirrors JoinIndexRule.linearRelation. */
-  private def linearLeaf(plan: LogicalPlan,
-      candidates: Map[LogicalPlan, Seq[CandidateMatch]]): Option[LogicalPlan] =
-    plan match {
-      case r if r.children.isEmpty =>
-        if (candidates.contains(r)) Some(r) else None
-      case p: Project => linearLeaf(p.child, candidates)
-      case f: Filter => linearLeaf(f.child, candidates)
-      case _ => None
-    }
-
-  private def equiPairs(j: Join): Either[String,
-      Seq[(org.apache.spark.sql.catalyst.expressions.AttributeReference,
-           org.apache.spark.sql.catalyst.expressions.AttributeReference)]] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    j.condition match {
-      case None => Left("no join condition")
-      case Some(c) =>
-        // non-equi conjuncts are residuals (they stay on the Join); the
-        // rewrite needs at least one equi pair to bucket on
-        val pairs = conjuncts(c).flatMap {
-          case EqualTo(a: AttributeReference, b: AttributeReference) =>
-            Some(if (j.left.outputSet.contains(a)) (a, b) else (b, a))
-          case _ => None
-        }
-        if (pairs.isEmpty)
-          Left(s"no equi conjunct to bucket on in: ${c.sql}")
-        else Right(pairs)
-    }
-  }
-
-  /** EXISTS/IN-probe reasons, mirroring [[joinReasons]] for the join the
-    * probe becomes after RewriteSubquery: `leaf` is either the OUTER
-    * relation (the filter's child) or the PROBE's inner relation; the
-    * paired side needs its own key-compatible covering index. */
-  private def existsReasons(
-      spark: SparkSession,
-      f: Filter,
-      innerPlan: LogicalPlan,
-      pairs: Seq[(org.apache.spark.sql.catalyst.expressions.AttributeReference,
-                  org.apache.spark.sql.catalyst.expressions.AttributeReference)],
-      leaf: LogicalPlan,
-      d: CoveringIndexDescriptor,
-      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      resolver: org.apache.spark.sql.catalyst.analysis.Resolver): Seq[Reason] = {
-    val outerLeaf = linearLeaf(f.child, candidates)
-    val innerLeaf = linearLeaf(innerPlan, candidates)
-    val mySide =
-      if (outerLeaf.exists(_.fastEquals(leaf))) "outer"
-      else if (innerLeaf.exists(_.fastEquals(leaf))) "probe"
-      else return Nil
-    val myKeys = (if (mySide == "outer") pairs.map(_._1) else pairs.map(_._2))
-      .map(_.name).distinct
-    val keyReasons: Seq[Reason] =
-      if (!myKeys.forall(k => d.indexedColumns.exists(resolver(_, k))) ||
-          d.indexedColumns.size != myKeys.size) {
-        if (myKeys.forall(k => d.indexedColumns.exists(resolver(_, k))))
-          Seq(NotAllJoinColIndexed(mySide, myKeys, d.indexedColumns))
-        else Seq(MissingIndexedCol(mySide, myKeys, d.indexedColumns))
-      } else Nil
-    val otherSide = if (mySide == "outer") "probe" else "outer"
-    val otherLeaf = if (mySide == "outer") innerLeaf else outerLeaf
-    val otherKeys = (if (mySide == "outer") pairs.map(_._2) else pairs.map(_._1))
-      .map(_.name).distinct
-    val otherCovering = otherLeaf.toSeq
-      .flatMap(l => candidates.getOrElse(l, Nil))
-      .map(_.entry.descriptor)
-      .collect { case cd: CoveringIndexDescriptor => cd }
-    val pairReasons: Seq[Reason] =
-      if (otherLeaf.isEmpty || otherCovering.isEmpty)
-        Seq(NoAvailJoinIndexPair(otherSide))
-      else if (!otherCovering.exists(cd =>
-          cd.indexedColumns.size == otherKeys.size &&
-            otherKeys.forall(k => cd.indexedColumns.exists(resolver(_, k)))))
-        Seq(NoCompatibleJoinIndexPair())
-      else Nil
-    keyReasons ++ pairReasons
-  }
-
-  /** Join-specific reasons for why `d` (an index over `leaf`, one side of
-    * `j`) did not produce a join rewrite — reference granularity:
-    * JoinIndexRule eligibility checks surfaced one by one. */
-  /** None = this join doesn't involve the indexed relation;
-    * Some(Nil) = the index is VIABLE for this join (any non-application
-    * is a ranking outcome, not a shape defect); Some(reasons) = blocked.
-    * Key checks are SUBSET-AWARE, mirroring the rules: an index bucketed
-    * on a strict subset of the keys still co-locates the join
-    * (keyMappingFor), unless the session conf forbids it. */
-  private def joinReasons(
-      spark: SparkSession,
-      j: Join,
-      leaf: LogicalPlan,
-      m: CandidateMatch,
-      d: CoveringIndexDescriptor,
-      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      resolver: org.apache.spark.sql.catalyst.analysis.Resolver): Option[Seq[Reason]] = {
-    import graft.index.rules.JoinIndexRule.keyMappingFor
-    val allowSubset = graft.index.rules.JoinIndexRule.subsetKeysAllowed(spark)
-    val lLeaf = linearLeaf(j.left, candidates)
-    val rLeaf = linearLeaf(j.right, candidates)
-    val mySide =
-      if (lLeaf.exists(_.fastEquals(leaf))) "left"
-      else if (rLeaf.exists(_.fastEquals(leaf))) "right"
-      else return None // this join doesn't involve the indexed relation
-    if (!graft.index.rules.JoinIndexRule.rewritableJoinType(j.joinType))
-      return Some(Seq(NotEligibleJoin(s"join type is ${j.joinType}; the " +
-        "rewrite covers Inner/LeftSemi/LeftAnti/LeftOuter/RightOuter/" +
-        "FullOuter")))
-    val pairs = equiPairs(j) match {
-      case Left(why) => return Some(Seq(NotEligibleJoin(why)))
-      case Right(ps) => ps
-    }
-    val myKeyAttrs =
-      (if (mySide == "left") pairs.map(_._1) else pairs.map(_._2)).distinct
-    val myKeys = myKeyAttrs.map(_.name)
-    // bucketed on this side's keys — or an admissible subset of them
-    val keyReasons: Seq[Reason] =
-      if (keyMappingFor(d.indexedColumns, myKeyAttrs, resolver,
-          allowSubset).isDefined) Nil
-      else if (myKeys.forall(k => d.indexedColumns.exists(resolver(_, k))))
-        Seq(NotAllJoinColIndexed(mySide, myKeys, d.indexedColumns))
-      else Seq(MissingIndexedCol(mySide, myKeys, d.indexedColumns))
-    // and it must COVER every column the side needs from the relation
-    val mySubtree = if (mySide == "left") j.left else j.right
-    val myNeeded =
-      graft.index.rules.JoinIndexRule.neededColumns(mySubtree, leaf)
-    val coverReasons: Seq[Reason] =
-      if (graft.index.rules.Coverage.covers(
-          d.referencedColumns, myNeeded, resolver)) Nil
-      else Seq(MissingRequiredCol(myNeeded, d.referencedColumns))
-    // the other side needs its own eligible covering index
-    val otherSide = if (mySide == "left") "right" else "left"
-    val otherLeaf = if (mySide == "left") rLeaf else lLeaf
-    val otherKeyAttrs =
-      (if (mySide == "left") pairs.map(_._2) else pairs.map(_._1)).distinct
-    val otherCovering = otherLeaf.toSeq
-      .flatMap(l => candidates.getOrElse(l, Nil))
-      .map(_.entry.descriptor)
-      .collect { case cd: CoveringIndexDescriptor => cd }
-    val pairReasons: Seq[Reason] =
-      if (otherLeaf.isEmpty || otherCovering.isEmpty)
-        Seq(NoAvailJoinIndexPair(otherSide))
-      else if (!otherCovering.exists(cd =>
-          keyMappingFor(cd.indexedColumns, otherKeyAttrs, resolver,
-            allowSubset).isDefined))
-        Seq(NoCompatibleJoinIndexPair())
-      else Nil
-    // delete drift blocks the join rules unless lineage allows hybrid —
-    // mirror their coveringEligible gate so a drift-blocked index is not
-    // reported as a mere ranking loss
-    val driftOk = m.isExact || m.deleted.isEmpty || d.hasLineage
-    // a missing PAIR only blocks the two-sided rule —
-    // JoinOneSideIndexRule serves a key-compatible covering index alone
-    // (the other side re-shuffles to match), so keys + coverage = viable
-    if (keyReasons.isEmpty && coverReasons.isEmpty && driftOk) Some(Nil)
-    else Some(keyReasons ++ coverReasons ++
-      (if (driftOk) Nil else Seq(NoDeleteSupport())) ++ pairReasons)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Att
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
+import graft.index.analysis.Reasons.MissingRequiredCol
 import graft.index.covering.CoveringIndexDescriptor
 
 /**
@@ -27,7 +28,8 @@ object AggIndexRule extends GraftIndexRule {
       spark: SparkSession,
       plan: LogicalPlan,
       candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      recurse: LogicalPlan => (LogicalPlan, Int)): Option[(LogicalPlan, Int)] = {
+      recurse: LogicalPlan => (LogicalPlan, Int),
+      verdicts: Option[Verdicts]): Option[(LogicalPlan, Int)] = {
     val agg = plan match {
       case a: Aggregate => a
       case _ => return None
@@ -72,14 +74,20 @@ object AggIndexRule extends GraftIndexRule {
       (agg.references ++ childReferences(agg.child))
         .filter(rel.outputSet.contains).toSeq.map(_.name).distinct
 
+    // an index this aggregate cannot key (stale, or bucketed off the
+    // grouping keys) is not judged here: the shape is not its own
     val applicable = candidates(rel).filter { m =>
       m.isExact && (m.entry.descriptor match {
         case d: CoveringIndexDescriptor =>
           // bucket columns ⊆ (traced) grouping keys ⇒ partitioning
           // satisfies the aggregation's required distribution
           d.indexedColumns.forall(ic =>
-            groupNames.exists(g => resolver(g, ic))) &&
-            Coverage.covers(d.referencedColumns, needed, resolver)
+            groupNames.exists(g => resolver(g, ic))) && {
+            val covered = Coverage.covers(d.referencedColumns, needed, resolver)
+            verdicts.foreach(_.judge(m.entry,
+              Option.when(!covered)(MissingRequiredCol(needed, d.referencedColumns))))
+            covered
+          }
         case _ => false
       })
     }

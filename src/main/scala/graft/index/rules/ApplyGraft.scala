@@ -30,9 +30,7 @@ class ApplyGraft(spark: SparkSession) extends Rule[LogicalPlan] with Logging {
       // visits — collect their relations too so ExistsIndexRule can pair
       // them (subqueriesAll covers nesting)
       val candidates = RuleTimer.timed("ApplyGraft.candidates") {
-        (plan +: plan.subqueriesAll)
-          .map(p => IndexCandidates.collect(spark, p, indexes))
-          .reduce(_ ++ _)
+        IndexCandidates.collect(spark, plan +: plan.subqueriesAll, indexes)
       }
       if (candidates.isEmpty) return plan
       val result = RuleTimer.timed("ApplyGraft.optimize") {

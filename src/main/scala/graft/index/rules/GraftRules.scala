@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Logi
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.index.IndexLogEntry
+import graft.index.analysis.Reasons._
 import graft.index.covering.CoveringIndexDescriptor
 
 /**
@@ -20,13 +21,19 @@ import graft.index.covering.CoveringIndexDescriptor
  * rewritten subtree plus a score. The optimizer recurses top-down with
  * memoization and keeps the highest-scoring rewrite; the implicit no-op
  * (recurse into children, sum scores) guarantees full traversal.
+ *
+ * A rule is the only place that decides whether an index applies: with
+ * `verdicts` it also writes, for each candidate of its kind whose shape it
+ * reached, the checks that dropped it or that it passed (`whyNot` reads
+ * them).
  */
 trait GraftIndexRule {
   def apply(
       spark: SparkSession,
       plan: LogicalPlan,
       candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      recurse: LogicalPlan => (LogicalPlan, Int)): Option[(LogicalPlan, Int)]
+      recurse: LogicalPlan => (LogicalPlan, Int),
+      verdicts: Option[Verdicts]): Option[(LogicalPlan, Int)]
 }
 
 object RuleScores {
@@ -58,7 +65,8 @@ object FilterIndexRule extends GraftIndexRule {
       spark: SparkSession,
       plan: LogicalPlan,
       candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      recurse: LogicalPlan => (LogicalPlan, Int)): Option[(LogicalPlan, Int)] = {
+      recurse: LogicalPlan => (LogicalPlan, Int),
+      verdicts: Option[Verdicts]): Option[(LogicalPlan, Int)] = {
     val (projectOpt, filter) = plan match {
       case p @ Project(_, f: Filter) => (Some(p), f)
       case f: Filter => (None, f)
@@ -70,7 +78,12 @@ object FilterIndexRule extends GraftIndexRule {
       case r if r.children.isEmpty && candidates.contains(r) => r
       case _ => return None
     }
-    if (!filter.condition.deterministic) return None
+    val log = verdicts.flatMap(_.forFilter(filter, projectOpt.isDefined))
+    if (!filter.condition.deterministic) {
+      log.foreach(_.refuse(JoinIndexRule.covering(candidates, rel),
+        IneligibleFilterCondition(filter.condition.sql)))
+      return None
+    }
 
     // leaf accesses: bare attributes AND struct-field chains — a nested
     // access like n.k contributes the dotted logical name "n.k", which a
@@ -96,16 +109,22 @@ object FilterIndexRule extends GraftIndexRule {
     val applicable = candidates(rel).filter { m =>
       m.entry.descriptor match {
         case d: CoveringIndexDescriptor =>
-          filterNames.exists(n => resolver(n, d.indexedColumns.head) ||
-            resolver(rootOf(n), d.indexedColumns.head)) &&
-            neededNames.forall(n =>
-              Coverage.covers(d.referencedColumns, Seq(n), resolver) ||
-                Coverage.covers(d.referencedColumns, Seq(rootOf(n)), resolver)) &&
-            // hybrid legs re-read the source and COMPUTE flattened
-            // columns from the struct paths (ScanSubstitution.appendedLeg),
-            // so nested indexes hybrid-scan like flat ones; partitioned
-            // sources recover partition values via basePath
-            (m.isExact || m.deleted.isEmpty || d.hasLineage)
+          val head = d.indexedColumns.head
+          lazy val headed = filterNames.exists(n =>
+            resolver(n, head) || resolver(rootOf(n), head))
+          lazy val covered = neededNames.forall(n =>
+            Coverage.covers(d.referencedColumns, Seq(n), resolver) ||
+              Coverage.covers(d.referencedColumns, Seq(rootOf(n)), resolver))
+          // hybrid legs re-read the source and COMPUTE flattened
+          // columns from the struct paths (ScanSubstitution.appendedLeg),
+          // so nested indexes hybrid-scan like flat ones; partitioned
+          // sources recover partition values via basePath
+          lazy val deletesOk = JoinIndexRule.deletesOk(m, d)
+          log.foreach(_.judge(m.entry,
+            Option.when(!headed)(NoFirstIndexedColCond(head, filterNames)),
+            Option.when(!covered)(MissingRequiredCol(neededNames, d.referencedColumns)),
+            Option.when(!deletesOk)(NoDeleteSupport())))
+          headed && covered && deletesOk
         case _ => false
       }
     }
@@ -168,6 +187,10 @@ object FilterIndexRule extends GraftIndexRule {
  * sort-merge join (reference: index/covering/JoinIndexRule.scala:47-720).
  * Exact signature matches only (the reference gates join hybrid scan the
  * same way by default).
+ *
+ * Each side's own checks (keys, coverage, deletes) are judged by
+ * [[JoinOneSideIndexRule]], which serves one side alone; this rule's
+ * verdicts are about the pair.
  */
 object JoinIndexRule extends GraftIndexRule {
 
@@ -175,27 +198,25 @@ object JoinIndexRule extends GraftIndexRule {
       spark: SparkSession,
       plan: LogicalPlan,
       candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      recurse: LogicalPlan => (LogicalPlan, Int)): Option[(LogicalPlan, Int)] = {
-    val join = plan match {
-      case j @ Join(_, _, jt, Some(_), hint)
-          if rewritableJoinType(jt) && hint == JoinHint.NONE => j
-      case _ => return None
-    }
-    val lRel = linearRelation(join.left, candidates).getOrElse(return None)
-    val rRel = linearRelation(join.right, candidates).getOrElse(return None)
-
-    val pairs = equiJoinPairs(join.condition.get, join.left.outputSet,
-      join.right.outputSet).getOrElse(return None)
-    if (pairs.isEmpty || !isOneToOne(pairs)) return None
+      recurse: LogicalPlan => (LogicalPlan, Int),
+      verdicts: Option[Verdicts]): Option[(LogicalPlan, Int)] = {
+    val (join, pairs) =
+      eligibleJoin(spark, plan, candidates, verdicts).getOrElse(return None)
+    val (lRel, rRel) =
+      (linearRelation(join.left, candidates), linearRelation(join.right, candidates)) match {
+        case (Some(l), Some(r)) => (l, r)
+        case (l, r) =>
+          verdicts.foreach { v =>
+            l.foreach(rel => v.refuse(covering(candidates, rel), NoAvailJoinIndexPair("right")))
+            r.foreach(rel => v.refuse(covering(candidates, rel), NoAvailJoinIndexPair("left")))
+          }
+          return None
+      }
 
     val lNeeded = neededColumns(join.left, lRel)
     val rNeeded = neededColumns(join.right, rRel)
 
     val resolver = spark.sessionState.conf.resolver
-    // The whole rewrite presumes bucketed scans produce HashPartitioning.
-    if (!spark.sessionState.conf
-        .getConfString("spark.sql.sources.bucketing.enabled", "true").toBoolean)
-      return None
     // A hybrid side zip-unions the index scan with a repartitioned
     // appended slice (BucketUnionExec requires equal partition counts).
     // With autoBucketedScan on, Spark may silently read the index leg
@@ -215,10 +236,10 @@ object JoinIndexRule extends GraftIndexRule {
     // eligible via BucketUnion.
     // aliased keys (a self-join's `l_orderkey AS m1_ord`) match the
     // index through their traced relation column
-    val lKeys = pairs.map(p =>
-      traceToRel(join.left, lRel, p._1).getOrElse(return None))
-    val rKeysTraced = pairs.map(p =>
-      traceToRel(join.right, rRel, p._2).getOrElse(return None))
+    val lKeys = traceKeys(join.left, lRel, pairs.map(_._1), candidates, verdicts)
+      .getOrElse(return None)
+    val rKeysTraced = traceKeys(join.right, rRel, pairs.map(_._2), candidates, verdicts)
+      .getOrElse(return None)
     val allowSubset = subsetKeysAllowed(spark)
     val pairsFound = for {
       lm <- coveringEligible(candidates(lRel), lRel)
@@ -234,6 +255,19 @@ object JoinIndexRule extends GraftIndexRule {
         // that holds per side independently, so only the conf gate applies
         (hybridSafe || (lm._1.isExact && rm._1.isExact))
     } yield (lm, rm)
+    verdicts.foreach { v =>
+      val paired = pairsFound.flatMap { case (l, r) => Seq(l._1, r._1) }
+        .map(_.entry.name).toSet
+      def judgeSide(rel: LogicalPlan, other: LogicalPlan, otherSide: String): Unit =
+        covering(candidates, rel).foreach { m =>
+          if (paired(m.entry.name)) v.eligible(m.entry)
+          else v.refuse(m.entry,
+            if (covering(candidates, other).isEmpty) NoAvailJoinIndexPair(otherSide)
+            else NoCompatibleJoinIndexPair())
+        }
+      judgeSide(lRel, rRel, "right")
+      judgeSide(rRel, lRel, "left")
+    }
     // rank (reference: JoinIndexRanker.scala:52-90): exact pairs first,
     // full-key pairs before subset-key (finer clustering distributes
     // better), same bucket count (zero-shuffle join) before mismatched,
@@ -294,18 +328,115 @@ object JoinIndexRule extends GraftIndexRule {
       case _ => None
     }
 
+  private[rules] def coveringOf(
+      matches: Seq[CandidateMatch]): Seq[(CandidateMatch, CoveringIndexDescriptor)] =
+    matches.flatMap(m => m.entry.descriptor match {
+      case d: CoveringIndexDescriptor => Some((m, d))
+      case _ => None
+    })
+
+  private[rules] def covering(
+      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
+      rel: LogicalPlan): Seq[CandidateMatch] =
+    coveringOf(candidates.getOrElse(rel, Nil)).map(_._1)
+
+  /** A stale covering candidate serves only if no source file was
+    * deleted, or its lineage column filters the deleted files' rows. */
+  private[rules] def deletesOk(m: CandidateMatch, d: CoveringIndexDescriptor): Boolean =
+    m.isExact || m.deleted.isEmpty || d.hasLineage
+
   private[rules] def coveringEligible(
       matches: Seq[CandidateMatch],
       rel: LogicalPlan): Seq[(CandidateMatch, CoveringIndexDescriptor)] =
-    matches.collect {
-      // hybrid appended legs compute flattened columns from the source's
-      // struct paths (ScanSubstitution.appendedLeg), so nested indexes
-      // are hybrid-eligible like flat ones
-      case m if m.entry.descriptor.isInstanceOf[CoveringIndexDescriptor] &&
-          (m.isExact || m.deleted.isEmpty ||
-            m.entry.descriptor.asInstanceOf[CoveringIndexDescriptor].hasLineage) =>
-        (m, m.entry.descriptor.asInstanceOf[CoveringIndexDescriptor])
+    // hybrid appended legs compute flattened columns from the source's
+    // struct paths (ScanSubstitution.appendedLeg), so nested indexes
+    // are hybrid-eligible like flat ones
+    coveringOf(matches).filter { case (m, d) => deletesOk(m, d) }
+
+  /** The equi-join both join rules rewrite, with its key pairs; None for
+    * any other join, written as NOT_ELIGIBLE_JOIN for the covering
+    * candidates under either side. */
+  private[rules] def eligibleJoin(
+      spark: SparkSession,
+      plan: LogicalPlan,
+      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
+      verdicts: Option[Verdicts])
+      : Option[(Join, Seq[(AttributeReference, AttributeReference)])] = {
+    val join = plan match {
+      case j: Join => j
+      case _ => return None
     }
+    def refuse(why: String): Option[Nothing] = {
+      verdicts.foreach(v => Seq(join.left, join.right)
+        .flatMap(linearRelation(_, candidates))
+        .foreach(rel => v.refuse(covering(candidates, rel), NotEligibleJoin(why))))
+      None
+    }
+    if (!rewritableJoinType(join.joinType))
+      return refuse(s"join type is ${join.joinType}; the rewrite covers " +
+        "Inner/LeftSemi/LeftAnti/LeftOuter/RightOuter/FullOuter")
+    if (join.hint != JoinHint.NONE) return refuse(s"join hint ${join.hint}")
+    val cond = join.condition.getOrElse(return refuse("no join condition"))
+    // The whole rewrite presumes bucketed scans produce HashPartitioning.
+    if (!spark.sessionState.conf
+        .getConfString("spark.sql.sources.bucketing.enabled", "true").toBoolean)
+      return refuse("spark.sql.sources.bucketing.enabled is false")
+    val pairs = equiJoinPairs(cond, join.left.outputSet, join.right.outputSet)
+      .getOrElse(Nil)
+    if (pairs.isEmpty) return refuse(s"no equi conjunct to bucket on in: ${cond.sql}")
+    if (!isOneToOne(pairs))
+      return refuse(s"equi keys do not pair one-to-one in: ${cond.sql}")
+    Some((join, pairs))
+  }
+
+  /** `keys` traced to columns of `rel` (see [[traceToRel]]); None, written
+    * as NOT_ELIGIBLE_JOIN for `rel`'s covering candidates, when one is
+    * computed above the scan. */
+  private[rules] def traceKeys(
+      side: LogicalPlan,
+      rel: LogicalPlan,
+      keys: Seq[AttributeReference],
+      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
+      verdicts: Option[Verdicts]): Option[Seq[AttributeReference]] = {
+    val traced = keys.map(k => k -> traceToRel(side, rel, k))
+    traced.collectFirst { case (k, None) => k } match {
+      case Some(k) =>
+        verdicts.foreach(_.refuse(covering(candidates, rel),
+          NotEligibleJoin(s"join key ${k.name} is computed above the relation")))
+        None
+      case None => Some(traced.flatMap(_._2))
+    }
+  }
+
+  /** Whether a covering candidate can serve the bucketed leg on `side`:
+    * its buckets key the leg (`keyedBy`, on join keys `keys`), it covers
+    * the `needed` columns, it filters deleted files' rows, and a stale
+    * one may hybrid-scan (its BucketUnion needs autoBucketedScan off:
+    * `hybridSafe`). Each failed check is written to `verdicts`. */
+  private[rules] def servesLeg(
+      m: CandidateMatch,
+      d: CoveringIndexDescriptor,
+      side: String,
+      keys: Seq[String],
+      keyedBy: => Boolean,
+      needed: Seq[String],
+      hybridSafe: Boolean,
+      resolver: Resolver,
+      verdicts: Option[Verdicts]): Boolean = {
+    val deletes = deletesOk(m, d)
+    lazy val covered = Coverage.covers(d.referencedColumns, needed, resolver)
+    lazy val keyed = keyedBy
+    lazy val hybridOk = hybridSafe || m.isExact
+    verdicts.foreach(_.judge(m.entry,
+      Option.when(!keyed)(
+        if (keys.forall(k => d.indexedColumns.exists(resolver(_, k))))
+          NotAllJoinColIndexed(side, keys, d.indexedColumns)
+        else MissingIndexedCol(side, keys, d.indexedColumns)),
+      Option.when(!covered)(MissingRequiredCol(needed, d.referencedColumns)),
+      Option.when(!deletes)(NoDeleteSupport()),
+      Option.when(!hybridOk)(SourceDataChanged())))
+    deletes && covered && keyed && hybridOk
+  }
 
   /** Columns the subtree needs FROM ITS RELATION: every relation
     * attribute it references or passes through, intersected by exprId
@@ -487,8 +618,8 @@ object JoinIndexRule extends GraftIndexRule {
  * bucketed side saves its own exchange).
  */
 object ExistsIndexRule extends GraftIndexRule {
-  import JoinIndexRule.{coveringEligible, isOneToOne, linearRelation,
-    neededColumns, permutationFor, substitute, traceToRel}
+  import JoinIndexRule.{covering, coveringOf, isOneToOne, linearRelation,
+    neededColumns, permutationFor, servesLeg, substitute, traceToRel}
   import org.apache.spark.sql.catalyst.expressions.{Exists, InSubquery, ListQuery}
 
   /** (subquery exprId, inner plan, pairs as (outerAttr, innerAttr)). */
@@ -544,7 +675,8 @@ object ExistsIndexRule extends GraftIndexRule {
       spark: SparkSession,
       plan: LogicalPlan,
       candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      recurse: LogicalPlan => (LogicalPlan, Int)): Option[(LogicalPlan, Int)] = {
+      recurse: LogicalPlan => (LogicalPlan, Int),
+      verdicts: Option[Verdicts]): Option[(LogicalPlan, Int)] = {
     val f = plan match {
       case f: Filter => f
       case _ => return None
@@ -553,9 +685,13 @@ object ExistsIndexRule extends GraftIndexRule {
     val probes = probePairs(f.condition, f.child)
     if (probes.isEmpty) return None
     val resolver = spark.sessionState.conf.resolver
+    def refuseOuter(why: String): Unit =
+      verdicts.foreach(_.refuse(covering(candidates, rel), NotEligibleJoin(why)))
     if (!spark.sessionState.conf
-        .getConfString("spark.sql.sources.bucketing.enabled", "true").toBoolean)
+        .getConfString("spark.sql.sources.bucketing.enabled", "true").toBoolean) {
+      refuseOuter("spark.sql.sources.bucketing.enabled is false")
       return None
+    }
     val hybridSafe = !spark.sessionState.conf
       .getConfString("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
       .toBoolean
@@ -574,14 +710,15 @@ object ExistsIndexRule extends GraftIndexRule {
         else None
       }
     }
+    if (outerKeysOpt.isEmpty)
+      refuseOuter("the probes do not key the outer relation on one set of its columns")
     val outerNeeded = neededColumns(f, rel)
     val outerBest = outerKeysOpt.flatMap { outerKeys =>
-      (for {
-        om <- coveringEligible(candidates(rel), rel)
-        if Coverage.covers(om._2.referencedColumns, outerNeeded, resolver)
-        if permutationFor(om._2.indexedColumns, outerKeys, resolver).isDefined
-        if hybridSafe || om._1.isExact
-      } yield om).sortBy { case (m, d) =>
+      coveringOf(candidates(rel)).filter { case (m, d) =>
+        servesLeg(m, d, "outer", outerKeys.map(_.name),
+          permutationFor(d.indexedColumns, outerKeys, resolver).isDefined,
+          outerNeeded, hybridSafe, resolver, verdicts)
+      }.sortBy { case (m, d) =>
         // coherence/demand tie-breaks mirror the other leg rules: an
         // outer probe layout an ancestor pairing can ride beats an
         // equivalent stranger (see ScoreBasedOptimizer)
@@ -603,7 +740,11 @@ object ExistsIndexRule extends GraftIndexRule {
           (traceToRel(f.child, rel, p._1),
             traceToRel(innerPlan, innerRel, p._2))
         }.collect { case (Some(o), Some(i)) => (o, i) })
-        if tracedPairs.size == pairs.size && isOneToOne(tracedPairs)
+        if (tracedPairs.size == pairs.size && isOneToOne(tracedPairs)) || {
+          verdicts.foreach(_.refuse(covering(candidates, innerRel),
+            NotEligibleJoin("probe keys are computed or do not pair one-to-one")))
+          false
+        }
         innerNeeded = neededColumns(innerPlan, innerRel)
         // when the outer index is claimed, order this probe's inner keys
         // by matching each outer indexed column to ITS pair's inner key;
@@ -615,20 +756,16 @@ object ExistsIndexRule extends GraftIndexRule {
             if (byOuter.forall(_.isDefined)) Some(byOuter.flatten) else None
           case None => Some(tracedPairs.map(_._2))
         }
-        im <- (for {
-          im <- coveringEligible(candidates(innerRel), innerRel)
-          if Coverage.covers(im._2.referencedColumns, innerNeeded, resolver) &&
-            (hybridSafe || im._1.isExact) &&
-            (outerBest match {
+        im <- coveringOf(candidates(innerRel)).filter { case (m, d) =>
+          servesLeg(m, d, "probe", ordered.map(_.name), outerBest match {
               case Some(_) =>
-                im._2.indexedColumns.size == ordered.size &&
-                  im._2.indexedColumns.zip(ordered.map(_.name))
+                d.indexedColumns.size == ordered.size &&
+                  d.indexedColumns.zip(ordered.map(_.name))
                     .forall { case (a, b) => resolver(a, b) }
               case None =>
-                permutationFor(im._2.indexedColumns, ordered, resolver)
-                  .isDefined
-            })
-        } yield im).sortBy { case (m, d) =>
+                permutationFor(d.indexedColumns, ordered, resolver).isDefined
+            }, innerNeeded, hybridSafe, resolver, verdicts)
+        }.sortBy { case (m, d) =>
           (!m.isExact, -d.numBuckets,
             -ScoreBasedOptimizer.coherence(d.indexedColumns, resolver),
             -ScoreBasedOptimizer.demand(d.indexedColumns, resolver),
@@ -687,37 +824,28 @@ object JoinOneSideIndexRule extends GraftIndexRule {
       spark: SparkSession,
       plan: LogicalPlan,
       candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      recurse: LogicalPlan => (LogicalPlan, Int)): Option[(LogicalPlan, Int)] = {
-    val join = plan match {
-      case j @ Join(_, _, jt, Some(_), hint)
-          if rewritableJoinType(jt) && hint == JoinHint.NONE => j
-      case _ => return None
-    }
-    if (!spark.sessionState.conf
-        .getConfString("spark.sql.sources.bucketing.enabled", "true").toBoolean)
-      return None
+      recurse: LogicalPlan => (LogicalPlan, Int),
+      verdicts: Option[Verdicts]): Option[(LogicalPlan, Int)] = {
+    val (join, pairs) =
+      eligibleJoin(spark, plan, candidates, verdicts).getOrElse(return None)
     val hybridSafe = !spark.sessionState.conf
       .getConfString("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
       .toBoolean
-    val pairs = equiJoinPairs(join.condition.get, join.left.outputSet,
-      join.right.outputSet).getOrElse(return None)
-    if (pairs.isEmpty || !isOneToOne(pairs)) return None
     val resolver = spark.sessionState.conf.resolver
 
     def oneSide(isLeft: Boolean): Option[(LogicalPlan, Int)] = {
       val subtree = if (isLeft) join.left else join.right
       val other = if (isLeft) join.right else join.left
       val rel = linearRelation(subtree, candidates).getOrElse(return None)
-      val keys = (if (isLeft) pairs.map(_._1) else pairs.map(_._2)).distinct
-        .map(k => traceToRel(subtree, rel, k).getOrElse(return None))
+      val keys = traceKeys(subtree, rel,
+        (if (isLeft) pairs.map(_._1) else pairs.map(_._2)).distinct,
+        candidates, verdicts).getOrElse(return None)
       val needed = neededColumns(subtree, rel)
       val allowSubset = subsetKeysAllowed(spark)
-      val eligible = coveringEligible(candidates(rel), rel).filter {
-        case (m, d) =>
-          Coverage.covers(d.referencedColumns, needed, resolver) &&
-            keyMappingFor(d.indexedColumns, keys, resolver,
-              allowSubset).isDefined &&
-            (hybridSafe || m.isExact)
+      val eligible = coveringOf(candidates(rel)).filter { case (m, d) =>
+        servesLeg(m, d, if (isLeft) "left" else "right", keys.map(_.name),
+          keyMappingFor(d.indexedColumns, keys, resolver, allowSubset).isDefined,
+          needed, hybridSafe, resolver, verdicts)
       }
       val sessionBuckets = graft.index.GraftConf.numBuckets(spark)
       val best = eligible.sortBy { case (m, d) =>
@@ -987,7 +1115,8 @@ object ScoreBasedOptimizer {
   def optimize(
       spark: SparkSession,
       plan: LogicalPlan,
-      candidates: Map[LogicalPlan, Seq[CandidateMatch]]): LogicalPlan = {
+      candidates: Map[LogicalPlan, Seq[CandidateMatch]],
+      verdicts: Option[Verdicts] = None): LogicalPlan = {
     val memo = mutable.HashMap
       .empty[(LogicalPlan, Map[String, Int], Map[String, Int]),
         (LogicalPlan, Int)]
@@ -1022,7 +1151,7 @@ object ScoreBasedOptimizer {
         }
         val applied = rules.flatMap(r =>
           RuleTimer.timed("SBO.rule." + ruleName(r)) {
-            r.apply(spark, p, candidates, recurse)
+            r.apply(spark, p, candidates, recurse, verdicts)
           }.map { case (pl, s) =>
             (pl, s, Some(r))
           })

@@ -96,7 +96,8 @@ class HoistSemiGate(spark: SparkSession)
     * final optimized plan best-effort only).
     *
     * A caller that already holds the active-index list and a candidate
-    * map for THIS plan (whyNot collects both anyway) threads them in,
+    * map for THIS plan and its subquery plans (whyNot collects both
+    * anyway) threads them in,
     * and the dry-run re-lists neither the catalog nor the source files
     * — the candidate map is keyed by the plan's own relation leaves, so
     * per-subtree probing is a leaf lookup. */
@@ -134,21 +135,10 @@ class HoistSemiGate(spark: SparkSession)
     // match-less leaves, so absent keys contribute nothing, exactly
     // like a fresh collect) short-circuits the listing entirely.
     val memo = mutable.Map.empty[LogicalPlan, Seq[CandidateMatch]]
-    def fresh(p: LogicalPlan): Seq[CandidateMatch] =
-      IndexCandidates.collect(spark, p, indexes).values.flatten.toSeq
     def cands(p: LogicalPlan): Seq[CandidateMatch] =
       memo.getOrElseUpdate(p, knownCandidates match {
-        case Some(byLeaf) =>
-          val leaves = p.collectLeaves()
-          val hits = leaves.flatMap(byLeaf.get).flatten
-          // an all-miss subtree whose leaves include a relation may sit
-          // INSIDE a subquery the caller's map (collected over the main
-          // plan only) never saw — fall back to a real collect there
-          // rather than silently reporting the gate ineligible
-          if (hits.nonEmpty || !leaves.exists(_.isInstanceOf[LogicalRelation]))
-            hits
-          else fresh(p)
-        case None => fresh(p)
+        case Some(byLeaf) => p.collectLeaves().flatMap(byLeaf.get).flatten
+        case None => IndexCandidates.collect(spark, Seq(p), indexes).values.flatten.toSeq
       })
     // subqueries too: RewritePredicateSubquery lowers IN/EXISTS into
     // the main plan, but a gate INSIDE a remaining subquery plan

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-import graft.index.IndexLogEntry
+import graft.index.analysis.Reasons._
 import graft.index.zorder.ZOrderIndexDescriptor
 
 /**
@@ -21,7 +21,8 @@ object ZOrderFilterIndexRule extends GraftIndexRule {
       spark: SparkSession,
       plan: LogicalPlan,
       candidates: Map[LogicalPlan, Seq[CandidateMatch]],
-      recurse: LogicalPlan => (LogicalPlan, Int)): Option[(LogicalPlan, Int)] = {
+      recurse: LogicalPlan => (LogicalPlan, Int),
+      verdicts: Option[Verdicts]): Option[(LogicalPlan, Int)] = {
     val (projectOpt, filter) = plan match {
       case p @ Project(_, f: Filter) => (Some(p), f)
       case f: Filter => (None, f)
@@ -31,7 +32,16 @@ object ZOrderFilterIndexRule extends GraftIndexRule {
       case r if r.children.isEmpty && candidates.contains(r) => r
       case _ => return None
     }
-    if (!filter.condition.deterministic) return None
+    val log = verdicts.flatMap(_.forFilter(filter, projectOpt.isDefined))
+    val zorder = candidates(rel).collect {
+      case m if m.entry.descriptor.isInstanceOf[ZOrderIndexDescriptor] =>
+        (m, m.entry.descriptor.asInstanceOf[ZOrderIndexDescriptor])
+    }
+    if (!filter.condition.deterministic) {
+      log.foreach(_.refuse(zorder.map(_._1),
+        IneligibleFilterCondition(filter.condition.sql)))
+      return None
+    }
 
     val needed: AttributeSet =
       projectOpt.map(p => p.references ++ filter.references)
@@ -40,19 +50,22 @@ object ZOrderFilterIndexRule extends GraftIndexRule {
     val filterNames = filter.condition.references.toSeq.map(_.name)
     val resolver = spark.sessionState.conf.resolver
 
-    val applicable = candidates(rel).filter { m =>
+    val applicable = zorder.filter { case (m, d) =>
       // appended-only staleness rides hybrid scan (the union leg reads the
       // new files un-clustered — correct, just unclustered for those
       // rows); deletes additionally need the lineage column in the index
       // data (built when spark.graft.index.lineage.enabled was set)
-      m.entry.descriptor match {
-        case d: ZOrderIndexDescriptor =>
-          (m.isExact || m.deleted.isEmpty || d.hasLineage) &&
-            d.indexedColumns.exists(ic => filterNames.exists(resolver(_, ic))) &&
-            Coverage.covers(d.referencedColumns, neededNames, resolver)
-        case _ => false
-      }
-    }
+      val deletesOk = m.isExact || m.deleted.isEmpty || d.hasLineage
+      lazy val filtered =
+        d.indexedColumns.exists(ic => filterNames.exists(resolver(_, ic)))
+      lazy val covered = Coverage.covers(d.referencedColumns, neededNames, resolver)
+      log.foreach(_.judge(m.entry,
+        Option.when(!filtered)(
+          NoFirstIndexedColCond(d.indexedColumns.mkString("|"), filterNames)),
+        Option.when(!covered)(MissingRequiredCol(neededNames, d.referencedColumns)),
+        Option.when(!deletesOk)(NoDeleteSupport())))
+      deletesOk && filtered && covered
+    }.map(_._1)
     if (applicable.isEmpty) return None
 
     // exact first, then fewest indexed columns: tighter clustering per

@@ -476,8 +476,6 @@ object Dedup {
       converged = s == prevSum // labels only decrease: equal sum = fixpoint
       prevSum = s
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(s"[cc] round $rounds sum=$s @${System.nanoTime() / 1000000}ms")
     }
     require(converged, s"component propagation did not converge in $maxRounds rounds")
     edges.unpersist()

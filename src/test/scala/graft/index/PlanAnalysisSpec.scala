@@ -360,6 +360,30 @@ class PlanAnalysisSpec extends AnyFunSuite {
     }
   }
 
+  test("TOO_MUCH_APPENDED after a quick refresh reports the ratio the " +
+      "candidate check compared: only bytes appended since the refresh") {
+    withGraft { g =>
+      val src = copyOf(lineitem.limit(400))
+      g.createIndex(spark.read.parquet(src),
+        CoveringIndexConfig("pa_qr", Seq("l_orderkey"), Seq("l_quantity")))
+      val dir = new org.apache.hadoop.fs.Path(src)
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      def parts = fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-"))
+      lineitem.limit(800).coalesce(1).write.mode("append").parquet(src)
+      g.refreshIndex("pa_qr", "quick")
+      val blessed = parts.map(_.getPath).toSet
+      lineitem.limit(800).coalesce(1).write.mode("append").parquet(src)
+      val current = parts
+      val ratio = current.filterNot(f => blessed(f.getPath)).map(_.getLen).sum
+        .toDouble / current.map(_.getLen).sum
+      val q = spark.read.parquet(src).filter(col("l_orderkey") === 1L)
+        .select(col("l_orderkey"), col("l_quantity"))
+      val out = reasonFor(g, q, "pa_qr")
+      assert(out.contains("TOO_MUCH_APPENDED") &&
+        out.contains(f"appendedRatio=[$ratio%.2f]"), s"ratio $ratio: $out")
+    }
+  }
+
   test("TOO_MUCH_DELETED: drift beyond the hybrid delete ratio") {
     withGraft { g =>
       val src = copyOf(lineitem.limit(1000), parts = 8)
