@@ -157,13 +157,11 @@ class Graft(spark: SparkSession) {
   /** Staleness resolution for the directly-served index kinds (IVF,
     * MinHash): unlike covering reads — which honor drift via hybrid
     * scan — these serve results straight from index data, so silently
-    * serving stale results would be a correctness trap. Check modes via
-    * `spark.graft.index.ivf.staleCheck`: `cached` (default; only a CLEAN
-    * listing verdict is cached per (index, log id) for cacheTtlMs — once
-    * drift is seen every call re-lists, so appended files arriving inside
-    * the TTL are picked up immediately and a compacted-away appended file
-    * is never served from a pinned path), `strict` (relist every call),
-    * `off` (serve as-is, no listing).
+    * serving stale results would be a correctness trap. Under
+    * `spark.graft.index.ivf.staleCheck` = `strict` (default) every call
+    * lists the source against the entry's logged files, so a file
+    * appended a moment ago is served by the very next call; `off` serves
+    * the indexed snapshot as-is, without a listing.
     *
     * When drift IS found and `spark.graft.index.serve.hybridDrift` is on
     * (default), the caller receives a HYBRID answer instead of an error:
@@ -173,49 +171,19 @@ class Graft(spark: SparkSession) {
     * (a drifted-past-recognition index needs a real refresh). */
   private def resolveDrift(entry: graft.index.IndexLogEntry)
       : (Option[DataFrame], Seq[Long]) = {
-    val staleMode = graft.index.GraftConf.ivfStaleCheck(spark)
-    if (staleMode == "off") return (None, Nil)
+    if (graft.index.GraftConf.ivfStaleCheckOff(spark)) return (None, Nil)
     val name = entry.name
-    def serve(appendedPaths: Seq[String], droppedFids: Seq[Long])
-        : (Option[DataFrame], Seq[Long]) =
-      (if (appendedPaths.nonEmpty)
-         Some(manager.readFiles(entry, appendedPaths))
-       else None,
-        droppedFids)
-    def requireHybridOn(nApp: Int, nDel: Int): Unit =
-      if (!graft.index.GraftConf.serveHybridDrift(spark))
-        throw new IllegalArgumentException(
-          s"Index '$name' is stale (hybrid drift serving disabled): source " +
-            s"has $nApp appended and $nDel deleted files since the last " +
-            "refresh; run refreshIndex(name, \"incremental\")")
-    val cacheKey = (graft.index.GraftConf.systemPath(spark), name, entry.id)
-    val ttlNs = graft.index.GraftConf.cacheTtlMs(spark) * 1000000L
-    val now = System.nanoTime()
-    // only CLEAN verdicts are cached: a drifted verdict pins concrete
-    // appended paths, which go stale within the TTL (compaction removes
-    // them → read failure; later appends stay invisible). Drift is the
-    // transient state — paying a re-list per query until someone
-    // refreshes is the safe trade.
-    val cachedClean = staleMode == "cached" &&
-      (Option(Graft.driftVerdicts.get(cacheKey)) match {
-        case Some((t, paths, fids)) =>
-          now - t < ttlNs && paths.isEmpty && fids.isEmpty
-        case None => false
-      })
-    if (cachedClean) return (None, Nil)
     // a quick-refresh delta recorded in entry.update needs no special
     // handling: the live listing below re-derives it against the logged
     // source files, so it flows through the same hybrid/error paths
     val (appended, deleted) = manager.sourceDrift(entry)
-    if (appended.isEmpty && deleted.isEmpty) {
-      Graft.driftVerdicts.put(cacheKey, (now, Nil, Nil))
-      return (None, Nil)
-    }
+    if (appended.isEmpty && deleted.isEmpty) return (None, Nil)
     def stale(reason: String): Nothing = throw new IllegalArgumentException(
       s"Index '$name' is stale ($reason): source has ${appended.size} appended" +
         s" and ${deleted.size} deleted files since the last refresh;" +
         " run refreshIndex(name, \"incremental\")")
-    requireHybridOn(appended.size, deleted.size)
+    if (!graft.index.GraftConf.serveHybridDrift(spark))
+      stale("hybrid drift serving disabled")
     val totalBytes = math.max(entry.sourceFiles.map(_.size).sum, 1L)
     val appendedRatio = appended.map(_.size).sum.toDouble / totalBytes
     val deletedRatio = deleted.map(_.size).sum.toDouble / totalBytes
@@ -223,8 +191,10 @@ class Graft(spark: SparkSession) {
         deletedRatio > graft.index.GraftConf.hybridMaxDeletedRatio(spark))
       stale(f"drift beyond hybrid bounds: appended $appendedRatio%.2f," +
         f" deleted $deletedRatio%.2f of source bytes")
-    // drifted verdicts are deliberately NOT cached (see above)
-    serve(appended.map(_.path), deleted.map(_.id))
+    (if (appended.nonEmpty)
+       Some(manager.readFiles(entry, appended.map(_.path)))
+     else None,
+      deleted.map(_.id))
   }
 
   private def minHashEntry(indexName: String): graft.index.IndexLogEntry =
@@ -326,16 +296,6 @@ class Graft(spark: SparkSession) {
 }
 
 object Graft {
-  /** Source-drift listing results: (systemPath, indexName, logId) →
-    * (nanos of the listing, appended file paths, deleted file ids).
-    * Only clean verdicts (empty seqs) are ever served from this cache —
-    * a drifted listing is recomputed per call so its file paths can't go
-    * stale (see resolveDrift). Bounded by the number of live API-served
-    * indexes; entries for superseded log ids are never consulted again. */
-  private[graft] val driftVerdicts =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, String, Long), (Long, Seq[String], Seq[Long])]()
-
   /** SparkSession convenience syntax. */
   implicit class GraftSparkSessionOps(val spark: SparkSession) extends AnyVal {
     def enableGraft(): SparkSession = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.index.rules.PlanArtifacts
+
 /**
  * Access to the TPC-H-ish test tables (see TESTDATA.md). Every table is a
  * single parquet dataset under `<sfDir>/<name>.parquet`.
@@ -23,51 +25,18 @@ object Tables {
     s"$dir/$name.parquet"
   }
 
-  /** Per-session resolved-relation cache. `spark.read.parquet` pays a
-    * footer schema read + file listing + relation resolution on EVERY
-    * call (~40-60 ms here) — per-query per-pass, that was ~40% of a
-    * whole bench pass (guide §1/§6: amortize listing/metadata, exactly
-    * what a catalog table does on a real cluster). The cached DataFrame
-    * is an immutable logical plan; executing it re-reads the parquet
-    * every time, so no data/results are cached. Staleness: keyed on the
-    * source's (mtime, length) — a rewritten fixture misses and
-    * re-resolves (the stat is one local fs call, ~µs). Sessions are
-    * weak keys so stopped test sessions unpin their plans. */
-  private val relCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (Long, Long, DataFrame)]]()
-
-  private def cacheFor(spark: SparkSession) = relCache.synchronized {
-    var m = relCache.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, DataFrame)]()
-      relCache.put(spark, m)
-    }
-    m
-  }
-
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val p = path(sfDir, name)
-    val stamp =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val st = hp.getFileSystem(spark.sessionState.newHadoopConf())
-          .getFileStatus(hp)
-        Some((st.getModificationTime, st.getLen))
-      } catch { case _: Exception => None } // missing path: let the read throw
-    stamp match {
-      case None => loadFresh(spark, sfDir, name)
-      case Some((mt, len)) =>
-        val m = cacheFor(spark)
-        val hit = m.get(p)
-        if (hit != null && hit._1 == mt && hit._2 == len) hit._3
-        else {
-          val df = loadFresh(spark, sfDir, name)
-          m.put(p, (mt, len, df))
-          df
-        }
-    }
-  }
+  /** The resolved relation, cached per session in [[PlanArtifacts]]:
+    * `spark.read.parquet` pays a footer schema read + file listing +
+    * relation resolution on EVERY call (~40-60 ms here) — per-query
+    * per-pass, that was ~40% of a whole bench pass (amortize listing and
+    * metadata, exactly what a catalog table does on a real cluster). The
+    * cached DataFrame is an immutable logical plan; executing it re-reads
+    * the parquet every time, so no data/results are cached. Keyed on the
+    * signature of the dataset's leaf files: a rewritten part file or a
+    * rewritten fixture re-resolves. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    PlanArtifacts.overFiles(spark, "table", path(sfDir, name))(
+      loadFresh(spark, sfDir, name))
 
   private def loadFresh(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = spark.read.parquet(path(sfDir, name))
@@ -158,34 +127,14 @@ object EventTs {
         "expected TIMESTAMP(NANOS)-as-long, TIMESTAMP, or TIMESTAMP_NTZ")
   }
 
-  /** Variant depends only on the file bytes, so cache per (path, mtime,
-    * length) — every streaming query probed the footer again on each
-    * construction (a full relation resolution, ~40-60 ms). */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Variant)]()
-
-  /** Probe the on-disk variant via a footer-only batch schema read. */
+  /** Probe the on-disk variant via a footer-only batch schema read.
+    * The variant depends only on the file bytes, so it is cached per
+    * session on the signature of the dataset's leaf files — every
+    * streaming query probed the footer again on each construction (a
+    * full relation resolution, ~40-60 ms). */
   def probe(spark: SparkSession, sfDir: String): Variant = {
     val p = Tables.path(sfDir, "events")
-    val stamp =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val st = hp.getFileSystem(spark.sessionState.newHadoopConf())
-          .getFileStatus(hp)
-        Some((st.getModificationTime, st.getLen))
-      } catch { case _: Exception => None }
-    def fresh(): Variant =
-      of(spark.read.parquet(p).schema("ts").dataType)
-    stamp match {
-      case None => fresh()
-      case Some((mt, len)) =>
-        val hit = probeCache.get(p)
-        if (hit != null && hit._1 == mt && hit._2 == len) hit._3
-        else {
-          val v = fresh()
-          probeCache.put(p, (mt, len, v))
-          v
-        }
-    }
+    PlanArtifacts.overFiles(spark, "eventts", p)(
+      of(spark.read.parquet(p).schema("ts").dataType))
   }
 }

@@ -24,18 +24,28 @@ object GraftConf {
   def applyEnabled(spark: SparkSession): Boolean =
     spark.conf.getOption(ApplyEnabledKey).forall(_.toBoolean)
 
-  /** Metadata-log cache TTL; in-JVM mutations invalidate eagerly. */
+  /** How long [[graft.index.rules.IndexCatalog]] serves its listing of
+    * active index log entries before re-reading the logs, so entries
+    * written by other processes become visible; in-JVM mutations
+    * invalidate eagerly. No other cache reads it: derived state in
+    * [[graft.index.rules.PlanArtifacts]] is keyed on log ids and file
+    * signatures instead of a clock. */
   def cacheTtlMs(spark: SparkSession): Long =
     spark.conf.getOption(CacheTtlKey).map(_.toLong).getOrElse(10000L)
 
-  /** IVF staleness guard on annSearch: `strict` relists the source every
-    * call, `cached` (default) reuses a clean verdict for cacheTtlMs,
-    * `off` skips the listing entirely (for hot search paths where the
-    * caller owns refresh discipline). */
+  /** Staleness guard of the directly-served kinds (IVF annSearch,
+    * MinHash nearDuplicates/dedupBatch/curateBatch): `strict` (default)
+    * lists the source on every call, `off` skips the listing entirely
+    * (for hot search paths where the caller owns refresh discipline). */
   val IvfStaleCheckKey = "spark.graft.index.ivf.staleCheck"
 
-  def ivfStaleCheck(spark: SparkSession): String =
-    spark.conf.getOption(IvfStaleCheckKey).getOrElse("cached").toLowerCase
+  def ivfStaleCheckOff(spark: SparkSession): Boolean =
+    spark.conf.getOption(IvfStaleCheckKey).map(_.toLowerCase) match {
+      case None | Some("strict") => false
+      case Some("off") => true
+      case Some(other) => throw new IllegalArgumentException(
+        s"$IvfStaleCheckKey must be strict or off, got '$other'")
+    }
 
   /** IVFADC shortlist size = topK x this multiplier: the ADC pass keeps
     * that many candidates per query for the exact rerank. Larger = more

@@ -322,19 +322,12 @@ abstract class LakeFeed(val spark: SparkSession, val path: String,
   def changes(from: Long, to: Long): DataFrame
   /** An identity of the table state that serves `to` — any commit that
     * could change what `(from, to]` reads changes it — or None when it
-    * cannot be read. */
+    * cannot be read: the file signature of one log file. */
   def stateId(to: Long): Option[String]
 
   private[sources] def emptyFrame(schema: StructType): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  protected def fileIdentity(p: Path): Option[String] =
-    scala.util.Try {
-      val st = p.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(p)
-      s"${st.getPath}#${st.getModificationTime}#${st.getLen}"
-    }.toOption
 }
 
 object LakeFeed {
@@ -487,7 +480,8 @@ final class DeltaFeed(spark: SparkSession, path: String,
 
   /** The commit JSON of `to`: versions are immutable once written, and
     * a recreated table writes it anew. */
-  def stateId(to: Long): Option[String] = fileIdentity(commitFile(to))
+  def stateId(to: Long): Option[String] =
+    PlanArtifacts.leafSignature(spark, commitFile(to).toString)
 }
 
 private object DeltaFeed {
@@ -584,7 +578,7 @@ final class IcebergFeed(spark: SparkSession, path: String,
       val loc = new Path(path)
       IcebergMeta.currentMetadataFile(
         loc.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    }.toOption.flatMap(fileIdentity)
+    }.toOption.flatMap(f => PlanArtifacts.leafSignature(spark, f.toString))
 }
 
 object LakeStreamSource {

@@ -28,18 +28,11 @@ object StreamingQueries {
 
   /** Streaming state costs scale with the shuffle partition count (a
     * state store per partition, checkpointed per micro-batch); the gate
-    * corpus is small, so every harness query pins a low count for its
-    * fresh checkpoint and restores the session conf once the stream
-    * drains (micro-batches plan asynchronously after start()). State
-    * partitioning is fixed at first run per checkpoint — this is a
-    * per-checkpoint sizing decision; production sizes it to the rate. */
-  private def withGateStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      body
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+    * corpus is small, so every harness query runs its fresh checkpoint at
+    * a low count. State partitioning is fixed at first run per checkpoint
+    * — this is a per-checkpoint sizing decision; production sizes it to
+    * the rate. */
+  private val GatePartitions = "spark.sql.shuffle.partitions" -> "4"
 
   /** AvailableNow runs one extra NO-DATA micro-batch after the data drains
     * whenever the watermark moved. Its only effects are state eviction and
@@ -51,19 +44,9 @@ object StreamingQueries {
     * invocation for a batch that cannot change the result (the query
     * terminates right after, discarding the state the batch would have
     * evicted). Result equality stays pinned by the oracle gate at every
-    * SF. Same conf-pin pattern as [[withGateStatePartitions]]: micro-
-    * batches plan asynchronously after start(), so hold until drained. */
-  private def withoutNoDataBatch[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "false")
-      body
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    * SF. */
+  private val NoNoDataBatch =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
   /** Checkpoint scratch for the gate queries: each invocation runs a
     * FRESH checkpoint (results must be computed from the inputs every
@@ -92,13 +75,31 @@ object StreamingQueries {
         .foreach(f => java.nio.file.Files.deleteIfExists(f))
     } catch { case scala.util.control.NonFatal(_) => () }
 
+  private val pinLock = new Object
+
   /** Run `mk`'s streaming query to completion on a scratch checkpoint,
-    * deleting the checkpoint afterwards. */
-  private def drain(spark: SparkSession)(
+    * deleting the checkpoint afterwards. `pins` hold on the session only
+    * across `start()`: the query's `StreamExecution` clones the session
+    * when it is constructed and plans every micro-batch against that
+    * clone, so the caller's session has its own values back before the
+    * first batch runs. Pin, start and restore run under one lock, so
+    * harness queries started from several threads never see or restore
+    * each other's pins. */
+  private[graft] def drain(spark: SparkSession, pins: Map[String, String])(
       mk: String => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val ckpt = scratchCheckpointDir()
-    try mk(ckpt.toString).awaitTermination()
-    finally deleteRecursively(ckpt)
+    try {
+      val query = pinLock.synchronized {
+        val prev = pins.keys.map(k => k -> spark.conf.getOption(k))
+        pins.foreach { case (k, v) => spark.conf.set(k, v) }
+        try mk(ckpt.toString)
+        finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
+      query.awaitTermination()
+    } finally deleteRecursively(ckpt)
   }
 
   /**
@@ -138,16 +139,14 @@ object StreamingQueries {
     val name = "stream_win_" + UUID.randomUUID().toString.replace("-", "")
     // complete mode rewrites the whole output every batch — a no-data
     // batch recomputes the identical table, so skipping it is a pure cut
-    withGateStatePartitions(spark)(withoutNoDataBatch(spark) {
-      drain(spark) { ckpt =>
-        StreamingOps.windowedEventCounts(events)
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-    })
+    drain(spark, Map(GatePartitions, NoNoDataBatch)) { ckpt =>
+      StreamingOps.windowedEventCounts(events)
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("complete")
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
 
     // materialize off the memory sink, then drop it — repeated runs in
     // one session would otherwise each leak a full result table
@@ -213,16 +212,14 @@ object StreamingQueries {
 
     val name = "stream_sess_" + UUID.randomUUID().toString.replace("-", "")
     // sessions NEED the no-data batch: the event-time timeouts fire there
-    withGateStatePartitions(spark) {
-      drain(spark) { ckpt =>
-        StreamingOps.sessionize(events, gapMs = gapMs)
-          .toDF()
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
+    drain(spark, Map(GatePartitions)) { ckpt =>
+      StreamingOps.sessionize(events, gapMs = gapMs)
+        .toDF()
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
 
     val result = spark.table(name)
@@ -239,23 +236,21 @@ object StreamingQueries {
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
   }
 
-  /** Sentinel cache for [[qStreamSessions]]: the sentinel's timestamp
-    * depends only on the events file's max ts (+ fixed slack), and its
-    * one-row parquet dir is immutable once written — re-deriving both per
-    * invocation cost an aggregate job plus a write job per pass. Keyed
-    * like [[graft.EventTs.probe]] on the file's (mtime, length); a
-    * rewritten fixture misses and re-derives. Dirs are per-JVM temp
-    * scratch, deleted at exit. */
-  private val sentinelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long, Option[Long], String)]()
-
+  /** The max event time and the sentinel's one-row parquet dir for
+    * [[qStreamSessions]]. The sentinel's timestamp depends only on the
+    * max ts of the files the events glob matches (+ fixed slack), and the
+    * dir is immutable once written — re-deriving both per invocation cost
+    * an aggregate job plus a write job per pass — so both are cached per
+    * session on the signature of those files: a rewritten part file or a
+    * new file the glob matches re-derives. Dirs are per-JVM temp scratch,
+    * deleted at exit. */
   private def sentinelProbe(
       spark: SparkSession, sfDir: String,
       rawSchema: StructType, variant: graft.EventTs.Variant)
       : (Option[Long], String) = {
-    val p = Tables.path(sfDir, "events")
-    def fresh(): (Option[Long], String) = {
-      val maxRow = variant.micros(spark.read.schema(rawSchema).parquet(p + "*"))
+    val glob = Tables.path(sfDir, "events") + "*"
+    graft.index.rules.PlanArtifacts.overFiles(spark, "sentinel", glob) {
+      val maxRow = variant.micros(spark.read.schema(rawSchema).parquet(glob))
         .agg(max(unix_micros(col("ts")))).head()
       if (maxRow.isNullAt(0)) (None, "")
       else {
@@ -272,24 +267,6 @@ object StreamingQueries {
           .write.mode("overwrite").parquet(dir.toString)
         (Some(maxRow.getLong(0)), dir.toString)
       }
-    }
-    val stamp =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val st = hp.getFileSystem(spark.sessionState.newHadoopConf())
-          .getFileStatus(hp)
-        Some((st.getModificationTime, st.getLen))
-      } catch { case _: Exception => None }
-    stamp match {
-      case None => fresh()
-      case Some((mt, len)) =>
-        val hit = sentinelCache.get(p)
-        if (hit != null && hit._1 == mt && hit._2 == len) (hit._3, hit._4)
-        else {
-          val v = fresh()
-          sentinelCache.put(p, (mt, len, v._1, v._2))
-          v
-        }
     }
   }
 
@@ -357,15 +334,13 @@ object StreamingQueries {
       .dropDuplicates("digest")
 
     val name = "stream_dedup_" + UUID.randomUUID().toString.replace("-", "")
-    withGateStatePartitions(spark) {
-      drain(spark) { ckpt =>
-        deduped
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
+    drain(spark, Map(GatePartitions)) { ckpt =>
+      deduped
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
 
     val result = spark.table(name).orderBy(col("digest"))
@@ -406,16 +381,14 @@ object StreamingQueries {
     // dropDuplicatesWithinWatermark emits the first-seen row in the data
     // batch itself; the no-data batch only evicts state the terminating
     // query discards anyway — skip it
-    withGateStatePartitions(spark)(withoutNoDataBatch(spark) {
-      drain(spark) { ckpt =>
-        deduped
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-    })
+    drain(spark, Map(GatePartitions, NoNoDataBatch)) { ckpt =>
+      deduped
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
 
     val result = spark.table(name).orderBy(col("user_id"), col("event_type"))
     val rows = result.collect()
@@ -454,14 +427,12 @@ object StreamingQueries {
           .as("sum_value"))
 
     val name = "stream_enrich_" + UUID.randomUUID().toString.replace("-", "")
-    withGateStatePartitions(spark) {
-      drain(spark) { ckpt =>
-        agg.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
+    drain(spark, Map(GatePartitions)) { ckpt =>
+      agg.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("complete")
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
 
     val result = spark.table(name)
@@ -505,29 +476,17 @@ object StreamingQueries {
 
     val name = "stream_join_" + UUID.randomUUID().toString.replace("-", "")
     // stream-stream join state costs scale with the partition count (two
-    // state stores per partition, four puts/gets per row); the gate corpus
-    // is small, so pin a low state partition count for THIS query's fresh
-    // checkpoint. State partitioning is fixed at first run per checkpoint,
-    // so this is a per-checkpoint sizing decision, not a global conf — a
-    // production deployment sizes it to rate × (maxLag + delay) instead.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      // stream-stream INNER join: matches emit inside the data batch (the
-      // watermark only governs state eviction/late drops); the no-data
-      // batch plans + commits a full cycle that emits nothing — skip it
-      withoutNoDataBatch(spark) {
-        drain(spark) { ckpt =>
-          joined.writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-        }
-      }
-      // micro-batches plan asynchronously after start(): keep the conf
-      // pinned until the query drains so every batch sees it
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    // state stores per partition, four puts/gets per row); a production
+    // deployment sizes it to rate × (maxLag + delay). An INNER join's
+    // matches emit inside the data batch (the watermark only governs state
+    // eviction/late drops), so the no-data batch would emit nothing
+    drain(spark, Map(GatePartitions, NoNoDataBatch)) { ckpt =>
+      joined.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
 
     val result = spark.table(name)
       .select(col("user_id"),

@@ -526,7 +526,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(IvfBuild.antiTombstone(legacy, d).count() == 2)
   }
 
-  test("staleCheck modes: cached verdict serves, strict relists, off skips") {
+  test("staleCheck modes: strict relists, off skips") {
     // source in a writable temp dir so we can drift it after indexing
     val srcDir = Files.createTempDirectory("graft-ivf-src-").toString
     embeddings.limit(200).write.mode("overwrite").parquet(srcDir)
@@ -536,14 +536,10 @@ class IvfIndexSpec extends AnyFunSuite {
       val queries = embeddings.limit(2)
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv"))
-      // clean search caches a clean-drift verdict (default mode = cached)
       assert(g.annSearch("ann_stale", queries, topK = 2, nProbe = 4)
         .count() == 4)
       // drift the source: append new files
       embeddings.limit(10).write.mode("append").parquet(srcDir)
-      // cached: verdict still fresh (TTL 10s) — search serves without relist
-      assert(g.annSearch("ann_stale", queries, topK = 2, nProbe = 4)
-        .count() == 4)
       // strict + hybrid (default): relists, folds the appended slice in,
       // still serves full results
       spark.conf.set(GraftConf.IvfStaleCheckKey, "strict")
@@ -564,6 +560,37 @@ class IvfIndexSpec extends AnyFunSuite {
         spark.conf.unset(GraftConf.IvfStaleCheckKey)
         spark.conf.unset(GraftConf.ServeHybridDriftKey)
       }
+    }
+  }
+
+  test("default staleCheck: a file appended right after a clean search " +
+      "is served by the next search") {
+    val sys = Files.createTempDirectory("graft-ivf-dflt-").toString
+    val src = Files.createTempDirectory("graft-ivf-dfltsrc-").toString
+    spark.conf.set(GraftConf.SystemPathKey, sys)
+    // the catalog TTL no longer governs the drift check: even an hour-long
+    // TTL must not hide the appended file
+    spark.conf.set(GraftConf.CacheTtlKey, "3600000")
+    try {
+      val g = new Graft(spark)
+      embeddings.filter(col("vec_id") < 400).repartition(2)
+        .write.mode("overwrite").parquet(src)
+      g.createIndex(spark.read.parquet(src),
+        IvfIndexConfig("ann_dflt", "vec_id", "embedding", k = 4, maxIter = 2))
+      val queries = embeddings.filter(col("vec_id") === 400L)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      def neighbors(): Set[Long] =
+        g.annSearch("ann_dflt", queries, topK = 5, nProbe = 4)
+          .collect().map(_.getLong(1)).toSet
+      assert(!neighbors().contains(400L))
+      embeddings.filter(col("vec_id").between(400L, 420L))
+        .coalesce(1).write.mode("append").parquet(src)
+      assert(neighbors().contains(400L),
+        "the appended vector was not served by the next search")
+    } finally {
+      spark.conf.unset(GraftConf.SystemPathKey)
+      spark.conf.unset(GraftConf.CacheTtlKey)
+      rules.IndexCatalog.invalidate(spark)
     }
   }
 

@@ -326,29 +326,45 @@ class MinHashIndexSpec extends AnyFunSuite {
           .collect().map(_.getLong(1)).toSet
         assert(hits.contains(500001L), "batch dedup missed the appended doc")
 
-        // cached mode: the drifted LISTING RESULT is cached, so repeated
-        // hybrid serves hit the cache and still return the appended docs
-        spark.conf.set(GraftConf.IvfStaleCheckKey, "cached")
+        // repeated hybrid serves list again and still return the
+        // appended docs
         (1 to 2).foreach { _ =>
           val again = g.nearDuplicates("mh_stale", minEstJaccard = 1.0)
             .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
           assert(again.contains((1L, 500001L)))
         }
-        spark.conf.set(GraftConf.IvfStaleCheckKey, "strict")
 
         spark.conf.set(GraftConf.ServeHybridDriftKey, "false")
         val ex = intercept[IllegalArgumentException](
           g.nearDuplicates("mh_stale", 0.5).collect())
         assert(ex.getMessage.contains("stale"))
-        // hybrid-off must also refuse on a CACHED drift verdict
-        spark.conf.set(GraftConf.IvfStaleCheckKey, "cached")
-        val ex2 = intercept[IllegalArgumentException](
-          g.nearDuplicates("mh_stale", 0.5).collect())
-        assert(ex2.getMessage.contains("stale"))
       } finally {
         spark.conf.unset(GraftConf.IvfStaleCheckKey)
         spark.conf.unset(GraftConf.ServeHybridDriftKey)
       }
+    }
+  }
+
+  test("default staleCheck: a file appended right after a clean search " +
+      "is served by the next nearDuplicates") {
+    withDirs { (g, src) =>
+      writeDocs(src)
+      g.createIndex(spark.read.parquet(src),
+        MinHashIndexConfig("mh_dflt", "doc_id", "text"))
+      // the catalog TTL no longer governs the drift check: even an
+      // hour-long TTL must not hide the appended file
+      spark.conf.set(GraftConf.CacheTtlKey, "3600000")
+      try {
+        def pairs(): Set[(Long, Long)] =
+          g.nearDuplicates("mh_dflt", minEstJaccard = 1.0)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(!pairs().contains((1L, 500001L)))
+        spark.read.parquet(src).filter(col("doc_id") === 1L)
+          .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
+          .coalesce(1).write.mode("append").parquet(src)
+        assert(pairs().contains((1L, 500001L)),
+          "the appended doc was not served by the next nearDuplicates")
+      } finally spark.conf.unset(GraftConf.CacheTtlKey)
     }
   }
 

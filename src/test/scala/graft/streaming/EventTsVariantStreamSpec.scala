@@ -18,6 +18,10 @@ import graft.{EventTs, TestSpark}
  * variants hold the SAME instants, so every query must return identical
  * rows — window counts, sessions (incl. the sentinel write path, which
  * constructs a raw-typed row per variant), and the enrich row shape.
+ * The same fixtures pin the harness plumbing: the sentinel is derived
+ * again when the events glob matches a new file, and `drain` holds its
+ * conf pins only across `start()`, so harness queries started from
+ * several threads on one session do not see each other's pins.
  */
 class EventTsVariantStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -36,6 +40,13 @@ class EventTsVariantStreamSpec extends AnyFunSuite {
   private def writeFixture(variant: EventTs.Variant): String = {
     val dir = Files.createTempDirectory(
       s"graft-evts-${variant.getClass.getSimpleName.stripSuffix("$")}-").toString
+    writeEvents(s"$dir/events.parquet", variant, events)
+    dir
+  }
+
+  /** Write `rows` (raw-typed by `variant`) as the parquet dir `path`. */
+  private def writeEvents(path: String, variant: EventTs.Variant,
+      rows: Seq[(Long, Long, String, Double)]): Unit = {
     val schema = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", variant.tsType),
@@ -43,13 +54,12 @@ class EventTsVariantStreamSpec extends AnyFunSuite {
       StructField("event_type", StringType),
       StructField("value", DoubleType),
       StructField("props", StringType)))
-    val rows = events.zipWithIndex.map { case ((sec, user, tpe, v), i) =>
+    val data = rows.zipWithIndex.map { case ((sec, user, tpe, v), i) =>
       Row(i.toLong, variant.rowValue(sec * 1000000L), user, tpe, v, "{}")
     }
     spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
-      .write.parquet(s"$dir/events.parquet")
-    dir
+        spark.sparkContext.parallelize(data, 1), schema)
+      .write.parquet(path)
   }
 
   private def collectSorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -85,5 +95,84 @@ class EventTsVariantStreamSpec extends AnyFunSuite {
     results.tail.foreach { case (v, rows) =>
       assert(rows == results.head._2, s"$v disagrees with ${results.head._1}")
     }
+  }
+
+  test("stream_sessions: a new file the events glob matches re-derives " +
+      "the sentinel") {
+    val dir = writeFixture(EventTs.Micros)
+    assert(StreamingQueries.qStreamSessions(spark, dir).count() == 4)
+    // user 3's one event, ten days after every other, in a sibling that
+    // `events.parquet*` matches: only a sentinel past it closes its session
+    writeEvents(s"$dir/events.parquet_late", EventTs.Micros,
+      Seq((base + 10L * 86400L, 3L, "view", 6.0)))
+    val rows = collectSorted(StreamingQueries.qStreamSessions(spark, dir))
+    assert(rows.size == 5 && rows.exists(_.startsWith("[3,")),
+      s"the late file's session is missing: $rows")
+  }
+
+  test("drain pins confs only across start(): while the stream runs the " +
+      "caller's session has its own values and the query's clone the pins") {
+    val parts = "spark.sql.shuffle.partitions"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val (partsBefore, noDataBefore) =
+      (spark.conf.get(parts), spark.conf.getOption(noData))
+    val started = new java.util.concurrent.CompletableFuture[
+      org.apache.spark.sql.streaming.StreamingQuery]()
+    val name = "pin_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val runner = new Thread(() =>
+      StreamingQueries.drain(spark, Map(parts -> "3", noData -> "false")) {
+        ckpt =>
+          val q = spark.readStream.format("rate")
+            .option("rowsPerSecond", "1").load()
+            .writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(
+              "200 milliseconds"))
+            .start()
+          started.complete(q)
+          q
+      })
+    runner.start()
+    val q = started.get(60, java.util.concurrent.TimeUnit.SECONDS)
+    try {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (spark.conf.get(parts) != partsBefore &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(q.isActive, "the stream must still be running")
+      assert(spark.conf.get(parts) == partsBefore)
+      assert(spark.conf.getOption(noData) == noDataBefore)
+      // the session every micro-batch plans against (protected in Scala)
+      val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming
+        .runtime.StreamingQueryWrapper].streamingQuery
+      val forStream = exec.getClass.getMethod("sparkSessionForStream")
+        .invoke(exec).asInstanceOf[org.apache.spark.sql.SparkSession]
+      assert(forStream.conf.get(parts) == "3")
+      assert(forStream.conf.get(noData) == "false")
+    } finally {
+      q.stop()
+      runner.join(60000)
+      spark.catalog.dropTempView(name)
+    }
+  }
+
+  test("stream_sessions and stream_join started from two threads on one " +
+      "session each equal their single-run rows") {
+    val dir = writeFixture(EventTs.Micros)
+    val sessions = collectSorted(StreamingQueries.qStreamSessions(spark, dir))
+    val joined = collectSorted(StreamingQueries.qStreamJoin(spark, dir))
+    assert(sessions.size == 4 && joined.size == 2)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 3).foreach { _ =>
+        val j = pool.submit(() =>
+          collectSorted(StreamingQueries.qStreamJoin(spark, dir)))
+        val s = pool.submit(() =>
+          collectSorted(StreamingQueries.qStreamSessions(spark, dir)))
+        assert(s.get == sessions)
+        assert(j.get == joined)
+      }
+    } finally pool.shutdown()
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == parts)
   }
 }
