@@ -21,11 +21,18 @@ import org.json4s.jackson.JsonMethods
  * log semantics directly so Delta tables index and serve even where the
  * connector jar can't be shipped).
  *
+ * Every reader of `_delta_log` — snapshot replay, the commit timeline,
+ * the change feed, the stream feed, vacuum, the orphan sweep and log
+ * cleanup — lists it through [[DeltaCodec.list]] and decodes actions
+ * through [[DeltaCodec]], which turns commit lines and checkpoint rows
+ * into the same typed actions; the replay absorbs them one at a time.
+ *
  * Scale note: snapshot state is FILE METADATA (one entry per live data
- * file), the same driver-side footprint every `FileIndex` already
- * carries — never row data. Checkpoint parquet is read through Spark;
- * JSON commits after the checkpoint are driver-parsed (they are small
- * by construction — that is what checkpoints are for).
+ * file, plus the tombstones within retention), the same driver-side
+ * footprint every `FileIndex` already carries — never row data.
+ * Checkpoint parquet is collected through Spark in one job; JSON commits
+ * after the checkpoint are driver-parsed (they are small by construction
+ * — that is what checkpoints are for).
  */
 final case class DeltaFileMeta(path: String, size: Long, modificationTime: Long,
     dv: Option[DvDescriptor] = None, stats: Option[String] = None,
@@ -76,7 +83,13 @@ final case class DeltaSnapshot(
     // configuration reconciled latest-wins; removed tombstones are
     // RETAINED (and restated by checkpoints) so a replay that starts
     // from the checkpoint still sees the removal
-    domains: Map[String, DomainMeta] = Map.empty) {
+    domains: Map[String, DomainMeta] = Map.empty,
+    // TOMBSTONES (`remove` actions) not cancelled by a later commit's
+    // add, keyed by the resolved scheme-normalized path (a checkpoint may
+    // restate one beside the live add of the same path under another
+    // deletion vector); checkpoints restate the unexpired ones and vacuum
+    // keys retention off them
+    tombstones: Map[String, CkptRemove] = Map.empty) {
   def schema: StructType =
     DataType.fromJson(schemaString).asInstanceOf[StructType]
 
@@ -124,13 +137,6 @@ object DeltaLog {
     Set("timestampNtz", "deletionVectors", "columnMapping", "v2Checkpoint",
       "typeWidening", "typeWidening-preview")
 
-  private[sources] val CommitRe = """(\d{20})\.json""".r
-  private val CkptSingleRe = """(\d{20})\.checkpoint\.parquet""".r
-  private val CkptMultiRe = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
-  // v2 spec checkpoints are uuid-named; the uuid never parses as the
-  // multi-part regex's all-digit groups, so the three stay disjoint
-  private val CkptV2Re = """(\d{20})\.checkpoint\.[0-9a-zA-Z-]+\.parquet""".r
-
   def logDir(root: Path): Path = new Path(root, "_delta_log")
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
@@ -138,463 +144,202 @@ object DeltaLog {
 
   /** A directory is a Delta table iff its `_delta_log` holds ≥1 commit. */
   def isDeltaTable(spark: SparkSession, root: String): Boolean = {
-    val dir = logDir(new Path(root))
-    val fs = fsOf(spark, dir)
-    fs.exists(dir) && fs.listStatus(dir).exists(s =>
-      CommitRe.pattern.matcher(s.getPath.getName).matches())
+    val p = new Path(root)
+    DeltaCodec.list(fsOf(spark, p), p).exists(_.commits.nonEmpty)
+  }
+
+  /** [[DeltaCodec.list]] of a directory that must hold a Delta table. */
+  private[sources] def listing(fs: FileSystem, rootStr: String): DeltaListing = {
+    val log = DeltaCodec.list(fs, new Path(rootStr)).getOrElse(
+      throw new IllegalArgumentException(
+        s"not a Delta table (no _delta_log): $rootStr"))
+    require(log.commits.nonEmpty, s"Delta log at $rootStr has no commit files")
+    log
   }
 
   /** The newest commit version, from one listing of the log (no
     * replay). */
-  private[sources] def latestVersion(spark: SparkSession, rootStr: String): Long = {
-    val dir = logDir(new Path(rootStr))
-    val fs = fsOf(spark, dir)
-    require(fs.exists(dir), s"not a Delta table (no _delta_log): $rootStr")
-    fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case CommitRe(v) => v.toLong }.maxOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"Delta log at $rootStr has no commit files"))
-  }
+  private[sources] def latestVersion(spark: SparkSession, rootStr: String): Long =
+    listing(fsOf(spark, new Path(rootStr)), rootStr).latest
 
   /** Replay the log to the latest version — or, with `versionAsOf`, to a
-    * historic one (time travel): checkpoint (if any, at or before the
-    * target) + the JSON commits after it, in version order. */
+    * historic one (time travel): the newest complete checkpoint at or
+    * before the target, then the JSON commits after it in version order,
+    * every action absorbed by one [[Replay]]. */
   def snapshot(spark: SparkSession, rootStr: String,
       versionAsOf: Option[Long] = None): DeltaSnapshot = {
     val root = new Path(rootStr)
-    val dir = logDir(root)
-    val fs = fsOf(spark, dir)
-    require(fs.exists(dir), s"not a Delta table (no _delta_log): $rootStr")
-
-    val entries = fs.listStatus(dir).toSeq
-    val commits: Map[Long, Path] = entries.flatMap { s =>
-      s.getPath.getName match {
-        case CommitRe(v) => Some(v.toLong -> s.getPath)
-        case _ => None
-      }
-    }.toMap
-    require(commits.nonEmpty, s"Delta log at $rootStr has no commit files")
+    val fs = fsOf(spark, root)
+    val log = listing(fs, rootStr)
     val latest = versionAsOf match {
       case Some(v) =>
-        require(v >= 0 && v <= commits.keys.max,
-          s"version $v out of range [0, ${commits.keys.max}] at $rootStr")
+        require(v >= 0 && v <= log.latest,
+          s"version $v out of range [0, ${log.latest}] at $rootStr")
         v
-      case None => commits.keys.max
+      case None => log.latest
     }
-
-    // checkpoints: single-part files, complete multi-part groups, or
-    // uuid-named v2 spec checkpoints (one file + optional sidecars).
-    // A version may legally hold SEVERAL instances — a classic AND a v2
-    // checkpoint, or two v2 checkpoints from racing writers — so
-    // candidates are grouped per instance, not pooled per version: any
-    // complete instance at the highest version <= latest wins.
-    val ckptSingles = mutable.Map.empty[Long, mutable.Buffer[Path]]
-    val ckptMulti = mutable.Map.empty[Long, mutable.Buffer[(Path, Int)]]
-    entries.foreach { s =>
-      s.getPath.getName match {
-        case CkptSingleRe(v) =>
-          ckptSingles.getOrElseUpdate(v.toLong, mutable.Buffer()) += s.getPath
-        case CkptMultiRe(v, _, n) =>
-          ckptMulti.getOrElseUpdate(v.toLong, mutable.Buffer()) += ((s.getPath, n.toInt))
-        case CkptV2Re(v) =>
-          ckptSingles.getOrElseUpdate(v.toLong, mutable.Buffer()) += s.getPath
-        case _ =>
-      }
-    }
-    def completeInstanceAt(v: Long): Option[Seq[Path]] = {
-      // a single-part or uuid v2 file is complete alone; multi-part
-      // groups (keyed by declared part count) need all n distinct parts
-      ckptSingles.get(v).map(ps => Seq(ps.minBy(_.getName)))
-        .orElse(ckptMulti.get(v).flatMap { parts =>
-          parts.groupBy(_._2).collectFirst {
-            case (n, ps) if ps.map(_._1.getName).distinct.size == n =>
-              ps.map(_._1).distinct.toSeq
-          }
-        })
-    }
-    val ckptChoice: Option[(Long, Seq[Path])] =
-      (ckptSingles.keySet ++ ckptMulti.keySet).filter(_ <= latest)
-        .toSeq.sorted.reverseIterator
-        .map(v => (v, completeInstanceAt(v)))
-        .collectFirst { case (v, Some(fs)) => (v, fs) }
-    val ckptVersion: Option[Long] = ckptChoice.map(_._1)
-
-    var schemaString: String = null
-    var tableId: Option[String] = None
-    var partitionColumns: Seq[String] = Nil
-    var minReaderVersion: Int = 1
-    var minWriterVersion: Int = 2
-    var readerFeatures: Set[String] = Set.empty
-    var writerFeatures: Set[String] = Set.empty
-    var tableConfiguration: Map[String, String] = Map.empty
-    val transactions = mutable.Map.empty[String, Long]
-    val domains = mutable.Map.empty[String, DomainMeta]
-    // live files keyed by the RESOLVED absolute path: adds and removes
-    // must cancel even when one writer logged a relative path and
-    // another an absolute one for the same file
-    val live = mutable.LinkedHashMap.empty[String, DeltaFileMeta]
-
-    def addFile(rawPath: String, size: Long, modTime: Long,
-        dv: Option[DvDescriptor] = None, stats: Option[String] = None,
-        baseRowId: Option[Long] = None,
-        defaultRowCommitVersion: Option[Long] = None): Unit = {
-      val abs = resolvePath(root, rawPath)
-      // key scheme-normalized: an add spelled `file:/x` (a clone's
-      // qualified absolute) and a remove spelled `/x` (URI.getPath of
-      // the same file) MUST cancel
-      live(DeltaTable.normPath(abs)) = DeltaFileMeta(abs, size, modTime, dv,
-        stats, baseRowId, defaultRowCommitVersion)
-    }
-
-    ckptChoice.foreach { case (_, instanceFiles) =>
-      val parts = instanceFiles.map(_.toString)
-      val ck = spark.read.parquet(parts: _*)
-      val cols = ck.schema.fieldNames.toSet
-      if (cols.contains("protocol")) {
-        val protoFields =
-          ck.schema("protocol").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val pr = ck.select("protocol.*")
-          .where("protocol.minReaderVersion is not null").collect().headOption
-        pr.foreach { r =>
-          minReaderVersion = r.getAs[Number]("minReaderVersion").intValue()
-          if (protoFields.contains("minWriterVersion")) {
-            Option(r.getAs[Number]("minWriterVersion"))
-              .foreach(n => minWriterVersion = n.intValue())
-          }
-          if (protoFields.contains("readerFeatures")) {
-            readerFeatures = Option(r.getAs[scala.collection.Seq[String]](
-              "readerFeatures")).map(_.toSet).getOrElse(Set.empty)
-          }
-          if (protoFields.contains("writerFeatures")) {
-            writerFeatures = Option(r.getAs[scala.collection.Seq[String]](
-              "writerFeatures")).map(_.toSet).getOrElse(Set.empty)
-          }
+    val replay = new Replay(root, rootStr)
+    val ckpt = log.checkpointAtOrBefore(latest)
+    ckpt.foreach { case (v, files) =>
+      val site = s"checkpoint $v at $rootStr"
+      DeltaCodec.readCheckpoint(spark, files, site).foreach(replay.absorbCheckpoint)
+      // v2 spec checkpoints park their file actions in `_sidecars/`
+      // parquet files named by `sidecar` actions; relative paths resolve
+      // against it
+      if (replay.sidecars.nonEmpty) {
+        val sidecarFiles = replay.sidecars.toSeq.map { sc =>
+          val p = new Path(java.net.URLDecoder.decode(sc.path, "UTF-8"))
+          if (p.isAbsolute) p else new Path(new Path(logDir(root), "_sidecars"), sc.path)
         }
-      }
-      if (cols.contains("metaData")) {
-        val mdFields =
-          ck.schema("metaData").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val md = ck.select("metaData.*")
-          .where("metaData.schemaString is not null").collect().headOption
-        md.foreach { r =>
-          if (mdFields.contains("id")) tableId = Option(r.getAs[String]("id"))
-          schemaString = r.getAs[String]("schemaString")
-          partitionColumns = Option(r.getAs[scala.collection.Seq[String]](
-            "partitionColumns")).map(_.toSeq).getOrElse(Nil)
-          if (mdFields.contains("configuration")) {
-            tableConfiguration = Option(r.getAs[Map[String, String]](
-              "configuration")).getOrElse(Map.empty)
-          }
-        }
-      }
-      // absorbs `add` rows from a checkpoint frame — the checkpoint file
-      // itself, or (v2 spec) each sidecar file it points at. Remove
-      // tombstones in a checkpoint are vacuum bookkeeping, not live
-      // files — only adds constitute the snapshot.
-      def absorbCheckpointAdds(ckf: org.apache.spark.sql.DataFrame): Unit = {
-        if (!ckf.schema.fieldNames.contains("add")) return
-        val addFields =
-          ckf.schema("add").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val dvStructFields: Set[String] =
-          if (!addFields.contains("deletionVector")) Set.empty
-          else ckf.schema("add").dataType.asInstanceOf[StructType]("deletionVector")
-            .dataType match {
-              case s: StructType => s.fieldNames.toSet
-              case _ => Set.empty
-            }
-        val dvNeeded = Set("storageType", "pathOrInlineDv", "sizeInBytes", "cardinality")
-        if (addFields.contains("deletionVector") && !dvNeeded.subsetOf(dvStructFields) &&
-            ckf.where("add.deletionVector is not null").count() > 0) {
-          // a DV struct we cannot fully decode: serving the table would
-          // resurrect deleted rows — refuse, don't guess
-          throw new UnsupportedDeltaProtocolException(
-            s"Delta checkpoint at $rootStr carries deletionVector structs " +
-              s"missing ${(dvNeeded -- dvStructFields).toSeq.sorted.mkString(", ")}; " +
-              "cannot decode the deletion vectors. Read this table with the " +
-              "delta-spark connector instead.")
-        }
-        val statsCol = if (addFields.contains("stats")) "add.stats"
-          else "cast(null as string) as stats"
-        val baseRowIdCol = if (addFields.contains("baseRowId")) "add.baseRowId"
-          else "cast(null as long) as baseRowId"
-        val dcvCol =
-          if (addFields.contains("defaultRowCommitVersion"))
-            "add.defaultRowCommitVersion"
-          else "cast(null as long) as defaultRowCommitVersion"
-        def rowIds(r: org.apache.spark.sql.Row, i: Int)
-            : (Option[Long], Option[Long]) =
-          (if (r.isNullAt(i)) None else Some(r.getLong(i)),
-            if (r.isNullAt(i + 1)) None else Some(r.getLong(i + 1)))
-        if (dvNeeded.subsetOf(dvStructFields)) {
-          val hasOffset = dvStructFields.contains("offset")
-          val offsetCol = if (hasOffset) "add.deletionVector.offset"
-            else "cast(null as int) as offset"
-          ckf.selectExpr("add.path", "add.size", "add.modificationTime",
-              "add.deletionVector.storageType", "add.deletionVector.pathOrInlineDv",
-              offsetCol, "add.deletionVector.sizeInBytes",
-              "add.deletionVector.cardinality", statsCol, baseRowIdCol, dcvCol)
-            .where("path is not null").collect()
-            .foreach { r =>
-              val dv = if (r.isNullAt(3)) None
-                else Some(DvDescriptor(r.getString(3), r.getString(4),
-                  if (r.isNullAt(5)) None else Some(r.getInt(5)),
-                  r.getInt(6), r.getLong(7)))
-              val (bri, dcv) = rowIds(r, 9)
-              addFile(r.getString(0), r.getLong(1), r.getLong(2), dv,
-                if (r.isNullAt(8)) None else Some(r.getString(8)), bri, dcv)
-            }
-        } else {
-          ckf.selectExpr("add.path", "add.size", "add.modificationTime",
-              statsCol, baseRowIdCol, dcvCol)
-            .where("path is not null").collect()
-            .foreach { r =>
-              val (bri, dcv) = rowIds(r, 4)
-              addFile(r.getString(0), r.getLong(1), r.getLong(2),
-                None, if (r.isNullAt(3)) None else Some(r.getString(3)),
-                bri, dcv)
-            }
-        }
-      }
-      if (cols.contains("txn")) {
-        ck.selectExpr("txn.appId", "txn.version")
-          .where("appId is not null").collect()
-          .foreach(r => transactions(r.getString(0)) =
-            r.getAs[Number](1).longValue())
-      }
-      if (cols.contains("domainMetadata")) {
-        ck.selectExpr("domainMetadata.domain",
-            "domainMetadata.configuration", "domainMetadata.removed")
-          .where("domain is not null").collect()
-          .foreach(r => domains(r.getString(0)) = DomainMeta(
-            Option(r.getString(1)).getOrElse(""),
-            !r.isNullAt(2) && r.getBoolean(2)))
-      }
-      absorbCheckpointAdds(ck)
-      // v2 spec checkpoints park their adds in `_sidecars/` parquet files
-      // named by `sidecar` actions; relative paths resolve against it
-      if (cols.contains("sidecar")) {
-        val sidecarPaths = ck.selectExpr("sidecar.path")
-          .where("path is not null").collect().map(_.getString(0))
-          .map { raw =>
-            val p = new Path(java.net.URLDecoder.decode(raw, "UTF-8"))
-            if (p.isAbsolute) p.toString
-            else new Path(new Path(dir, "_sidecars"), raw).toString
-          }
-        if (sidecarPaths.nonEmpty)
-          absorbCheckpointAdds(spark.read.parquet(sidecarPaths.toSeq: _*))
+        DeltaCodec.readCheckpoint(spark, sidecarFiles, site)
+          .foreach(replay.absorbCheckpoint)
       }
     }
-
-    val replayFrom = ckptVersion.map(_ + 1).getOrElse(0L)
-    (replayFrom to latest).foreach { v =>
-      val p = commits.getOrElse(v, throw new IllegalStateException(
+    (ckpt.map(_._1 + 1).getOrElse(0L) to latest).foreach { v =>
+      val st = log.commits.getOrElse(v, throw new IllegalStateException(
         s"Delta log at $rootStr is missing commit version $v " +
-          s"(have ${commits.keys.toSeq.sorted.mkString(",")})"))
-      readLines(fs, p).foreach { line =>
-        val j = JsonMethods.parse(line)
-        j \ "protocol" match {
-          case JObject(_) =>
-            (j \ "protocol" \ "minReaderVersion") match {
-              case JInt(n) => minReaderVersion = n.toInt
-              case JLong(n) => minReaderVersion = n.toInt
-              case _ =>
-            }
-            (j \ "protocol" \ "minWriterVersion") match {
-              case JInt(n) => minWriterVersion = n.toInt
-              case JLong(n) => minWriterVersion = n.toInt
-              case _ =>
-            }
-            (j \ "protocol" \ "readerFeatures") match {
-              case JArray(vals) =>
-                readerFeatures = vals.collect { case JString(s) => s }.toSet
-              case _ =>
-            }
-            (j \ "protocol" \ "writerFeatures") match {
-              case JArray(vals) =>
-                writerFeatures = vals.collect { case JString(s) => s }.toSet
-              case _ =>
-            }
-          case _ =>
-        }
-        j \ "metaData" match {
-          case JObject(_) =>
-            (j \ "metaData" \ "id") match {
-              case JString(s) => tableId = Some(s)
-              case _ =>
-            }
-            (j \ "metaData" \ "schemaString") match {
-              case JString(s) => schemaString = s
-              case _ =>
-            }
-            (j \ "metaData" \ "partitionColumns") match {
-              case JArray(vals) =>
-                partitionColumns = vals.collect { case JString(s) => s }
-              case _ =>
-            }
-            (j \ "metaData" \ "configuration") match {
-              case JObject(fields) =>
-                tableConfiguration = fields.collect {
-                  case (k, JString(v)) => k -> v
-                }.toMap
-              case _ =>
-            }
-          case _ =>
-        }
-        j \ "add" match {
-          case JObject(_) =>
-            val dv = (j \ "add" \ "deletionVector") match {
-              case JObject(_) =>
-                def str(f: String): String = (j \ "add" \ "deletionVector" \ f) match {
-                  case JString(s) => s
-                  case other => throw new IllegalStateException(
-                    s"deletionVector.$f is $other in commit $v at $rootStr")
-                }
-                def num(f: String): Option[Long] =
-                  (j \ "add" \ "deletionVector" \ f) match {
-                    case JInt(n) => Some(n.toLong)
-                    case JLong(n) => Some(n)
-                    case _ => None
-                  }
-                Some(DvDescriptor(str("storageType"), str("pathOrInlineDv"),
-                  num("offset").map(_.toInt),
-                  num("sizeInBytes").getOrElse(0L).toInt,
-                  num("cardinality").getOrElse(0L)))
-              case _ => None
-            }
-            val JString(path) = (j \ "add" \ "path"): @unchecked
-            val size = (j \ "add" \ "size") match {
-              case JInt(n) => n.toLong
-              case JLong(n) => n
-              case _ => 0L
-            }
-            val mt = (j \ "add" \ "modificationTime") match {
-              case JInt(n) => n.toLong
-              case JLong(n) => n
-              case _ => 0L
-            }
-            val stats = (j \ "add" \ "stats") match {
-              case JString(s) => Some(s)
-              case _ => None
-            }
-            def optLong(field: String): Option[Long] =
-              (j \ "add" \ field) match {
-                case JInt(n) => Some(n.toLong)
-                case JLong(n) => Some(n)
-                case _ => None
-              }
-            addFile(path, size, mt, dv, stats,
-              optLong("baseRowId"), optLong("defaultRowCommitVersion"))
-          case _ =>
-        }
-        j \ "remove" match {
-          case JObject(_) =>
-            (j \ "remove" \ "path") match {
-              case JString(path) =>
-                live.remove(DeltaTable.normPath(resolvePath(root, path)))
-              case _ =>
-            }
-          case _ =>
-        }
-        j \ "txn" match {
-          case JObject(_) =>
-            ((j \ "txn" \ "appId"), (j \ "txn" \ "version")) match {
-              case (JString(app), JInt(v)) => transactions(app) = v.toLong
-              case (JString(app), JLong(v)) => transactions(app) = v
-              case _ =>
-            }
-          case _ =>
-        }
-        j \ "domainMetadata" match {
-          case JObject(_) =>
-            (j \ "domainMetadata" \ "domain") match {
-              case JString(d) =>
-                // configuration is a serialized string by spec; tolerate
-                // a writer that inlined it as an object
-                val cfg = (j \ "domainMetadata" \ "configuration") match {
-                  case JString(s) => s
-                  case o: JObject => JsonMethods.compact(o)
-                  case _ => ""
-                }
-                val removed = (j \ "domainMetadata" \ "removed") == JBool(true)
-                domains(d) = DomainMeta(cfg, removed)
-              case _ =>
-            }
-          case _ =>
-        }
-      }
+          s"(have ${log.commits.keys.toSeq.sorted.mkString(",")})"))
+      DeltaCodec.readCommit(fs, st.getPath, v, rootStr)(_.foreach(replay.absorb))
+    }
+    replay.snapshot(latest)
+  }
+
+  /** Table state absorbed one action at a time, checkpoint rows and
+    * commit lines alike. */
+  private final class Replay(root: Path, rootStr: String) {
+    private var schemaString: String = null
+    private var tableId: Option[String] = None
+    private var partitionColumns: Seq[String] = Nil
+    private var protocol = CkptProtocol(1, 2, None, None)
+    private var configuration = Map.empty[String, String]
+    private val transactions = mutable.Map.empty[String, Long]
+    private val domains = mutable.Map.empty[String, DomainMeta]
+    // live files and tombstones keyed by the RESOLVED, scheme-normalized
+    // path: adds and removes must cancel even when one writer logged a
+    // relative path and another an absolute one for the same file, or a
+    // clone's qualified `file:/x` meets a remove spelled `/x`
+    private val live = mutable.LinkedHashMap.empty[String, DeltaFileMeta]
+    private val tombstones = mutable.Map.empty[String, CkptRemove]
+    val sidecars = mutable.Buffer.empty[CkptSidecar]
+
+    /** A checkpoint row. A checkpoint's adds and removes are already
+      * reconciled, so its `remove` is a tombstone only, never a removal
+      * of a live file: the protocol keys a file by (path, deletion-vector
+      * id), and a checkpoint taken after a DV update restates
+      * remove(p, dv1) beside the live add(p, dv2), in either row order. */
+    def absorbCheckpoint(action: DeltaAction): Unit = action match {
+      case a: CkptAdd => addLive(a)
+      case r: CkptRemove => tombstones(key(r.path)) = r
+      case other => absorb(other)
     }
 
-    // protocol gate — refuse loudly rather than serve silently-wrong rows.
-    // minReaderVersion 2 mandates column-mapping awareness (implemented:
-    // DeltaColumnMapping); 3 delegates to readerFeatures. Either way the
-    // table is only readable if every capability it demands is one this
-    // replay implements.
-    if (minReaderVersion > 1) {
-      val unsupported = readerFeatures -- SupportedReaderFeatures
-      if ((minReaderVersion == 2 || minReaderVersion == 3) && unsupported.isEmpty) {
-        // readable: v2's mandated capability (column mapping) is
-        // implemented; a v3 table whose every reader feature is
-        // implemented reads too. An EMPTY readerFeatures set is
-        // spec-legal (the table demands no capabilities).
-      } else {
-        val detail =
-          if (unsupported.nonEmpty) s"unsupported readerFeatures ${unsupported.toSeq.sorted.mkString("[", ", ", "]")}"
-          else s"minReaderVersion $minReaderVersion"
-        throw new UnsupportedDeltaProtocolException(
-          s"Delta table at $rootStr requires $detail; this jarless reader " +
-            "implements protocol 1 (plain add/remove replay" +
-            (if (SupportedReaderFeatures.nonEmpty)
-              s" + ${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}" else "") +
-            "). Reading anyway could return wrong results (resurrected " +
-            "deleted rows, mis-mapped columns). Read this table with the " +
-            "delta-spark connector instead.")
-      }
+    private def key(rawPath: String): String =
+      DeltaTable.normPath(resolvePath(root, rawPath))
+
+    private def addLive(a: CkptAdd): String = {
+      val abs = resolvePath(root, a.path)
+      val k = DeltaTable.normPath(abs)
+      live(k) = DeltaFileMeta(abs, a.size, a.modificationTime,
+        a.deletionVector, a.stats, a.baseRowId, a.defaultRowCommitVersion)
+      k
     }
-    val cmMode = tableConfiguration.getOrElse(DeltaColumnMapping.ModeKey, "none")
-    cmMode match {
-      case "none" =>
-      case "name" | "id" =>
-        // both modes require (and every conforming writer stores) a
-        // physicalName on every field — resolution goes by it. A partial
-        // mapping would mis-read columns: refuse, don't guess.
-        require(schemaString != null,
-          s"Delta log at $rootStr carries no metaData action (corrupt log?)")
-        val sch = DataType.fromJson(schemaString).asInstanceOf[StructType]
-        if (!DeltaColumnMapping.fullyMapped(sch)) {
+
+    /** A commit line. */
+    def absorb(action: DeltaAction): Unit = action match {
+      case p: CkptProtocol => protocol = p
+      case m: CkptMetaData =>
+        if (m.id.isDefined) tableId = m.id
+        schemaString = m.schemaString
+        partitionColumns = m.partitionColumns
+        configuration = m.configuration
+      case a: CkptAdd => tombstones -= addLive(a)
+      case r: CkptRemove =>
+        val k = key(r.path)
+        live -= k
+        tombstones(k) = r
+      case t: CkptTxn => transactions(t.appId) = t.version
+      case d: CkptDomainMetadata =>
+        domains(d.domain) = DomainMeta(d.configuration, d.removed)
+      case s: CkptSidecar => sidecars += s
+      case _: CkptCdc | _: CkptCommitInfo =>
+    }
+
+    def snapshot(version: Long): DeltaSnapshot = {
+      val minReaderVersion = protocol.minReaderVersion
+      val readerFeatures = protocol.readerFeatures.fold(Set.empty[String])(_.toSet)
+      // protocol gate — refuse loudly rather than serve silently-wrong rows.
+      // minReaderVersion 2 mandates column-mapping awareness (implemented:
+      // DeltaColumnMapping); 3 delegates to readerFeatures. Either way the
+      // table is only readable if every capability it demands is one this
+      // replay implements.
+      if (minReaderVersion > 1) {
+        val unsupported = readerFeatures -- SupportedReaderFeatures
+        if ((minReaderVersion == 2 || minReaderVersion == 3) && unsupported.isEmpty) {
+          // readable: v2's mandated capability (column mapping) is
+          // implemented; a v3 table whose every reader feature is
+          // implemented reads too. An EMPTY readerFeatures set is
+          // spec-legal (the table demands no capabilities).
+        } else {
+          val detail =
+            if (unsupported.nonEmpty) s"unsupported readerFeatures ${unsupported.toSeq.sorted.mkString("[", ", ", "]")}"
+            else s"minReaderVersion $minReaderVersion"
           throw new UnsupportedDeltaProtocolException(
-            s"Delta table at $rootStr declares column mapping mode '$cmMode' " +
-              "but not every field carries delta.columnMapping.physicalName " +
-              "metadata (non-conforming writer). Read it with the " +
+            s"Delta table at $rootStr requires $detail; this jarless reader " +
+              "implements protocol 1 (plain add/remove replay" +
+              (if (SupportedReaderFeatures.nonEmpty)
+                s" + ${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}" else "") +
+              "). Reading anyway could return wrong results (resurrected " +
+              "deleted rows, mis-mapped columns). Read this table with the " +
               "delta-spark connector instead.")
         }
-      case other =>
-        throw new UnsupportedDeltaProtocolException(
-          s"Delta table at $rootStr uses unknown column mapping mode " +
-            s"'$other'; refusing rather than mis-reading columns.")
+      }
+      require(schemaString != null,
+        s"Delta log at $rootStr carries no metaData action (corrupt log?)")
+      val cmMode = configuration.getOrElse(DeltaColumnMapping.ModeKey, "none")
+      cmMode match {
+        case "none" =>
+        case "name" | "id" =>
+          // both modes require (and every conforming writer stores) a
+          // physicalName on every field — resolution goes by it. A partial
+          // mapping would mis-read columns: refuse, don't guess.
+          val sch = DataType.fromJson(schemaString).asInstanceOf[StructType]
+          if (!DeltaColumnMapping.fullyMapped(sch)) {
+            throw new UnsupportedDeltaProtocolException(
+              s"Delta table at $rootStr declares column mapping mode '$cmMode' " +
+                "but not every field carries delta.columnMapping.physicalName " +
+                "metadata (non-conforming writer). Read it with the " +
+                "delta-spark connector instead.")
+          }
+        case other =>
+          throw new UnsupportedDeltaProtocolException(
+            s"Delta table at $rootStr uses unknown column mapping mode " +
+              s"'$other'; refusing rather than mis-reading columns.")
+      }
+      DeltaSnapshot(rootStr, version, schemaString, partitionColumns,
+        live.values.toSeq, minReaderVersion, protocol.minWriterVersion,
+        readerFeatures, protocol.writerFeatures.fold(Set.empty[String])(_.toSet),
+        configuration, transactions.toMap, tableId, domains.toMap,
+        tombstones.toMap)
     }
-
-    require(schemaString != null,
-      s"Delta log at $rootStr carries no metaData action (corrupt log?)")
-    DeltaSnapshot(rootStr, latest, schemaString, partitionColumns,
-      live.values.toSeq, minReaderVersion, minWriterVersion,
-      readerFeatures, writerFeatures, tableConfiguration,
-      transactions.toMap, tableId, domains.toMap)
   }
 
   /** Action paths are URL-encoded and root-relative (absolute paths are
     * legal for external files). */
   private[sources] def resolvePath(root: Path, raw: String): String = {
     val decoded = java.net.URLDecoder.decode(raw, "UTF-8")
-    val p = new Path(decoded)
-    if (p.isAbsolute) decoded else new Path(root, decoded).toString
+    // the common shape, plain relative segments, joins to the string
+    // `new Path(root, decoded)` spells without its two URI parses (they
+    // are most of a large checkpoint's replay time)
+    if (PlainRelative.matcher(decoded).matches())
+      root.toString.stripSuffix("/") + "/" + decoded
+    else {
+      val p = new Path(decoded)
+      if (p.isAbsolute) decoded else new Path(root, decoded).toString
+    }
   }
 
-  private[sources] def readLines(fs: FileSystem, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
-  }
+  private val PlainRelative =
+    """[\w=-][\w.=-]*(/[\w=-][\w.=-]*)*""".r.pattern
 }
 
 /**
@@ -707,41 +452,6 @@ object DeltaStats {
     } catch { case scala.util.control.NonFatal(_) => None }
 }
 
-// checkpoint row shape (public Delta checkpoint schema, minimal fields)
-private[sources] case class CkptFormat(
-    provider: String, options: Map[String, String])
-private[sources] case class CkptMetaData(
-    id: String, format: CkptFormat, schemaString: String,
-    partitionColumns: Seq[String], configuration: Map[String, String])
-private[sources] case class CkptProtocol(
-    minReaderVersion: Int, minWriterVersion: Int,
-    readerFeatures: Option[Seq[String]], writerFeatures: Option[Seq[String]])
-private[sources] case class CkptDv(
-    storageType: String, pathOrInlineDv: String, offset: Option[Int],
-    sizeInBytes: Int, cardinality: Long)
-private[sources] case class CkptAdd(
-    path: String, partitionValues: Map[String, String], size: Long,
-    modificationTime: Long, dataChange: Boolean,
-    deletionVector: Option[CkptDv] = None, stats: Option[String] = None,
-    baseRowId: Option[Long] = None,
-    defaultRowCommitVersion: Option[Long] = None)
-private[sources] case class CkptRemove(
-    path: String, deletionTimestamp: Long, dataChange: Boolean)
-private[sources] case class CkptTxn(appId: String, version: Long)
-private[sources] case class CkptCheckpointMetadata(
-    version: Long, tags: Option[Map[String, String]] = None)
-private[sources] case class CkptSidecar(
-    path: String, sizeInBytes: Long, modificationTime: Long)
-private[sources] case class CkptDomainMetadata(
-    domain: String, configuration: String, removed: Boolean)
-private[sources] case class CkptRow(
-    add: Option[CkptAdd], remove: Option[CkptRemove],
-    metaData: Option[CkptMetaData], protocol: Option[CkptProtocol],
-    txn: Option[CkptTxn] = None,
-    checkpointMetadata: Option[CkptCheckpointMetadata] = None,
-    sidecar: Option[CkptSidecar] = None,
-    domainMetadata: Option[CkptDomainMetadata] = None)
-
 /**
  * Snapshot-pinned reads and minimal transactional writes of Delta tables
  * (jarless — see [[DeltaLog]]).
@@ -774,8 +484,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val info = commitInfoLine(now, operation, parameters,
       if (ict) Some(nextIct(fs, root, version - 1, now)) else None)
     fs.mkdirs(DeltaLog.logDir(root))
-    val out = try CommitFence.create(fs,
-        new Path(DeltaLog.logDir(root), f"$version%020d.json"))
+    val out = try CommitFence.create(fs, DeltaCodec.commitPath(root, version))
       catch {
         case e: Throwable =>
           staged.foreach(fs.delete(_, false))
@@ -862,34 +571,14 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     * listing plus each commit's commitInfo line. */
   private[sources] def commits(spark: SparkSession,
       root: String): Seq[(Long, Long, String)] = {
-    val dir = DeltaLog.logDir(new Path(root))
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(dir), s"not a Delta table (no _delta_log): $root")
-    val out = fs.listStatus(dir).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case DeltaLog.CommitRe(v) =>
-          // read up to the commitInfo line only (writers put it first)
-          val in = fs.open(st.getPath)
-          val info =
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-              .filter(_.contains("\"commitInfo\""))
-              .map(l => JsonMethods.parse(l) \ "commitInfo")
-              .find(_ != JNothing).getOrElse(JNothing)
-            finally in.close()
-          val ts = (info \ "inCommitTimestamp") match {
-            case JInt(n) => n.toLong
-            case JLong(n) => n
-            case _ => st.getModificationTime
-          }
-          Some((v.toLong, ts, (info \ "operation") match {
-            case JString(op) => op
-            case _ => null
-          }))
-        case _ => None
-      }
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    DeltaLog.listing(fs, root).commits.toSeq.sortBy(_._1).map { case (v, st) =>
+      // read up to the commitInfo line only (writers put it first)
+      val info = DeltaCodec.readCommit(fs, st.getPath, v, root)(
+        _.collectFirst { case c: CkptCommitInfo => c })
+      (v, info.flatMap(_.inCommitTimestamp).getOrElse(st.getModificationTime),
+        info.flatMap(_.operation).orNull)
     }
-    require(out.nonEmpty, s"Delta log at $root has no commit files")
-    out.sortBy(_._1)
   }
 
   /** `timestampAsOf` companion to [[read]]'s `versionAsOf`: reads the
@@ -1100,16 +789,8 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       endVersion: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val root = new Path(rootStr)
-    val dir = DeltaLog.logDir(root)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(dir), s"not a Delta table (no _delta_log): $rootStr")
-    val commits: Map[Long, FileStatus] = fs.listStatus(dir).flatMap { st =>
-      st.getPath.getName match {
-        case DeltaLog.CommitRe(v) => Some(v.toLong -> st)
-        case _ => None
-      }
-    }.toMap
-    require(commits.nonEmpty, s"Delta log at $rootStr has no commit files")
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val commits = DeltaLog.listing(fs, rootStr).commits
     val end = endVersion.getOrElse(commits.keys.max)
     require(startVersion >= 0 && startVersion <= end && end <= commits.keys.max,
       s"changes range [$startVersion, $end] out of bounds " +
@@ -1137,33 +818,17 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       val cdc = mutable.Buffer.empty[String]
       val addsDc = mutable.Buffer.empty[String]
       val removesDc = mutable.Buffer.empty[String]
-      DeltaLog.readLines(fs, st.getPath).foreach { line =>
-        val j = JsonMethods.parse(line)
+      DeltaCodec.readCommit(fs, st.getPath, v, rootStr)(_.foreach {
         // the commit clock of [[commits]] (in-commit timestamp, else the
         // file's mtime), keeping CDF agreed with history() and
         // readTimestampAsOf()
-        (j \ "commitInfo" \ "inCommitTimestamp") match {
-          case JInt(n) => ts = n.toLong
-          case JLong(n) => ts = n
-          case _ =>
-        }
-        (j \ "metaData" \ "configuration") match {
-          case JObject(fields) =>
-            cfg = fields.collect { case (k, JString(s)) => k -> s }.toMap
-          case _ =>
-        }
-        def pathOf(kind: String): Option[String] = (j \ kind \ "path") match {
-          case JString(p) => Some(p)
-          case _ => None
-        }
-        def dataChange(kind: String): Boolean = (j \ kind \ "dataChange") match {
-          case JBool(b) => b
-          case _ => true // absent defaults to a data change
-        }
-        pathOf("cdc").foreach(cdc += _)
-        pathOf("add").foreach(p => if (dataChange("add")) addsDc += p)
-        pathOf("remove").foreach(p => if (dataChange("remove")) removesDc += p)
-      }
+        case c: CkptCommitInfo => c.inCommitTimestamp.foreach(ts = _)
+        case m: CkptMetaData => cfg = m.configuration
+        case c: CkptCdc => cdc += c.path
+        case a: CkptAdd if a.dataChange => addsDc += a.path
+        case r: CkptRemove if r.dataChange => removesDc += r.path
+        case _ =>
+      })
       v -> VActs(ts, cdc.toSeq, addsDc.toSeq, removesDc.toSeq,
         cdfEnabled(cfg))
     }
@@ -3531,17 +3196,12 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     * even when the wall clock does). */
   private def nextIct(fs: FileSystem, root: Path, priorVersion: Long,
       now: Long): Long = {
-    val p = new Path(DeltaLog.logDir(root), f"$priorVersion%020d.json")
+    val p = DeltaCodec.commitPath(root, priorVersion)
     val prior: Option[Long] =
       if (!fs.exists(p)) None
-      else DeltaLog.readLines(fs, p).iterator.map(JsonMethods.parse(_))
-        .collectFirst(Function.unlift { j =>
-          (j \ "commitInfo" \ "inCommitTimestamp") match {
-            case JInt(n) => Some(n.toLong)
-            case JLong(n) => Some(n)
-            case _ => None
-          }
-        })
+      else DeltaCodec.readCommit(fs, p, priorVersion, root.toString)(_.collectFirst {
+        case CkptCommitInfo(Some(ict), _) => ict
+      })
     math.max(now, prior.getOrElse(Long.MinValue) + 1)
   }
 
@@ -3598,35 +3258,34 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     // retention keys off the TOMBSTONE (remove-action deletionTimestamp),
     // not the data file's mtime: a file written long ago but removed
     // minutes ago must stay for the full window so time travel and
-    // concurrent snapshot readers keep working. Files with no tombstone
-    // (failed-write junk, or removes compacted away by log cleanup) fall
-    // back to the mtime gate.
-    val tombstoneTs = mutable.Map.empty[String, Long]
-    fs.listStatus(DeltaLog.logDir(root)).foreach { st =>
-      st.getPath.getName match {
-        case DeltaLog.CommitRe(_) =>
-          DeltaLog.readLines(fs, st.getPath).foreach { line =>
-            val j = JsonMethods.parse(line)
-            (j \ "remove" \ "path") match {
-              case JString(raw) =>
-                val abs = normPath(DeltaLog.resolvePath(root, raw))
-                val ts = (j \ "remove" \ "deletionTimestamp") match {
-                  case JInt(n) => n.toLong
-                  case JLong(n) => n
-                  case _ => Long.MaxValue // undated tombstone: never expire
-                }
-                // the LATEST removal governs a re-added-then-re-removed file
-                tombstoneTs(abs) = math.max(tombstoneTs.getOrElse(abs, 0L), ts)
-              case _ =>
-            }
-          }
-        case _ =>
+    // concurrent snapshot readers keep working. The replay carries every
+    // tombstone since its checkpoint plus the unexpired ones that
+    // checkpoint restates. The commits at or below the checkpoint that
+    // log retention still keeps are read too: a checkpoint may restate
+    // fewer tombstones than they hold (one written before checkpoints
+    // carried them, or a `retentionMs` beyond
+    // delta.deletedFileRetentionDuration). The latest removal governs.
+    // Files with no tombstone (failed-write junk, or removes whose
+    // commits are cleaned up and which expired out of the checkpoint)
+    // fall back to the mtime gate.
+    val removedAt = mutable.Map.empty[String, Long]
+    def tombstone(k: String, at: Long): Unit =
+      removedAt(k) = math.max(removedAt.getOrElse(k, 0L), at)
+    s.tombstones.foreach { case (k, r) => tombstone(k, r.deletedAt) }
+    val log = DeltaLog.listing(fs, rootStr)
+    log.checkpointAtOrBefore(log.latest).foreach { case (ckpt, _) =>
+      log.commits.filter(_._1 <= ckpt).foreach { case (v, st) =>
+        DeltaCodec.readCommit(fs, st.getPath, v, rootStr)(_.foreach {
+          case r: CkptRemove =>
+            tombstone(normPath(DeltaLog.resolvePath(root, r.path)), r.deletedAt)
+          case _ =>
+        })
       }
     }
     // cdc files are never "live": they serve only CDF reads within
     // retention, the same rule real VACUUM applies
     FsSweep.sweep(spark, fs, root, System.currentTimeMillis() - retentionMs,
-      dryRun, age = st => tombstoneTs.getOrElse(normPath(st.getPath.toString),
+      dryRun, age = st => removedAt.getOrElse(normPath(st.getPath.toString),
         st.getModificationTime))(sweepsInto)(_.filter { st =>
       FsSweep.plain(st.getPath.getName) &&
         (relOf(fs, root, st.getPath).startsWith("_change_data/") ||
@@ -3668,37 +3327,23 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     DeltaLog.snapshot(spark, rootStr) // assert it IS a Delta table
+    val log = DeltaLog.listing(fs, rootStr)
     val referenced = mutable.Set.empty[String]
-    def refAction(j: JValue): Unit =
-      Seq("add", "remove", "cdc").foreach { kind =>
-        (j \ kind \ "path") match {
-          case JString(raw) =>
-            referenced += normPath(DeltaLog.resolvePath(root, raw))
-            ((j \ kind \ "deletionVector" \ "storageType"),
-              (j \ kind \ "deletionVector" \ "pathOrInlineDv")) match {
-              case (JString(st), JString(p)) =>
-                DvDescriptor(st, p, None, 0, 0L).absolutePath(root)
-                  .foreach(ap => referenced += normPath(ap.toString))
-              case _ =>
-            }
-          case _ =>
-        }
-      }
-    val ckFiles = mutable.Buffer.empty[String]
-    var ckBytes = 0L
-    def scanLogTree(dir: Path): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) scanLogTree(st.getPath)
-        else if (n.endsWith(".json") && !n.startsWith(".")) {
-          DeltaLog.readLines(fs, st.getPath)
-            .foreach(line => refAction(JsonMethods.parse(line)))
-        } else if (n.endsWith(".parquet")) {
-          ckFiles += st.getPath.toString
-          ckBytes += st.getLen
-        }
-      }
-    scanLogTree(DeltaLog.logDir(root))
+    def ref(raw: String, dv: Option[DvDescriptor]): Unit = {
+      referenced += normPath(DeltaLog.resolvePath(root, raw))
+      dv.flatMap(_.absolutePath(root)).foreach(p => referenced += normPath(p.toString))
+    }
+    log.commits.foreach { case (v, st) =>
+      DeltaCodec.readCommit(fs, st.getPath, v, rootStr)(_.foreach {
+        case a: CkptAdd => ref(a.path, a.deletionVector)
+        case r: CkptRemove => ref(r.path, r.deletionVector)
+        case c: CkptCdc => ref(c.path, None)
+        case _ =>
+      })
+    }
+    val ckStatus = log.checkpointFiles.map(_._2) ++ log.sidecarFiles
+    val ckFiles = ckStatus.map(_.getPath.toString)
+    val ckBytes = ckStatus.map(_.getLen).sum
     FsSweep.sweep(spark, fs, root, olderThanMs, dryRun)(sweepsInto) { files =>
       val candidates = files.filter(st => FsSweep.plain(st.getPath.getName) &&
         !referenced.contains(normPath(st.getPath.toString)))
@@ -3711,11 +3356,9 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         // generations), falling back to per-file reads for a foreign
         // writer's incompatible frames rather than refusing
         val frames =
-          try Seq(spark.read.option("mergeSchema", "true")
-            .parquet(ckFiles.toSeq: _*))
+          try Seq(spark.read.option("mergeSchema", "true").parquet(ckFiles: _*))
           catch {
-            case scala.util.control.NonFatal(_) =>
-              ckFiles.toSeq.map(p => spark.read.parquet(p))
+            case scala.util.control.NonFatal(_) => ckFiles.map(p => spark.read.parquet(p))
           }
         val refDs = frames.map(f => CkOrphanRefs.referencedPaths(spark,
           fs.makeQualified(root).toString, f)).reduce(_ union _)
@@ -3782,7 +3425,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
       CkptRow(None, None, None, Some(proto)),
       CkptRow(None, None, Some(CkptMetaData(
         // the checkpoint RESTATES table metadata — including its id
-        s.tableId.getOrElse(java.util.UUID.randomUUID().toString),
+        Some(s.tableId.getOrElse(java.util.UUID.randomUUID().toString)),
         CkptFormat("parquet", Map()),
         s.schemaString, s.partitionColumns, s.configuration)), None)) ++
       // txn watermarks MUST survive the checkpoint: dropping one would
@@ -3797,18 +3440,25 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         CkptRow(None, None, None, None, None,
           domainMetadata = Some(CkptDomainMetadata(d, m.configuration, m.removed)))
       }
-    val addRows: Seq[CkptRow] =
+    // the UNEXPIRED tombstones (within delta.deletedFileRetentionDuration,
+    // default one week) ride along with the adds as the protocol
+    // requires, so vacuum keys retention off them after the commits below
+    // this checkpoint are cleaned up
+    val tombstoneHorizon = System.currentTimeMillis() -
+      s.configuration.get("delta.deletedFileRetentionDuration")
+        .flatMap(parseDuration).getOrElse(7L * 24 * 3600 * 1000)
+    val fileRows: Seq[CkptRow] =
       s.files.map { f =>
         val rel = relOf(fs, root, new Path(f.path))
         // DV descriptors MUST survive the checkpoint: dropping one here
         // would resurrect its deleted rows for every later replayer.
         // Row-tracking fields ride along for the same reason.
-        val dv = f.dv.map(d => CkptDv(d.storageType, d.pathOrInlineDv,
-          d.offset, d.sizeInBytes, d.cardinality))
         CkptRow(Some(CkptAdd(rel, LakeMaint.hiveValues(rel).toMap, f.size,
-          f.modificationTime, dataChange = false, dv, f.stats,
+          f.modificationTime, dataChange = false, f.dv, f.stats,
           f.baseRowId, f.defaultRowCommitVersion)), None, None, None)
-      }
+      } ++
+      s.tombstones.values.toSeq.filter(_.deletedAt > tombstoneHorizon).sortBy(_.path)
+        .map(r => CkptRow(None, Some(r.copy(dataChange = false)), None, None))
     val dir = DeltaLog.logDir(root)
     // BANDED writes past a part-size threshold: a streaming-ingest table
     // accumulates millions of add actions between OPTIMIZEs, and every
@@ -3822,7 +3472,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val partSize = math.max(1, spark.sessionState.conf.getConfString(
       "spark.graft.delta.checkpoint.partSize", "100000").toInt)
     val nParts = math.max(1, math.min(
-      (addRows.size + partSize - 1) / partSize,
+      (fileRows.size + partSize - 1) / partSize,
       spark.sessionState.conf.numShufflePartitions))
     val tmp = new Path(dir, s".ckpt-tmp-${s.version}")
     def writeParts(rs: Seq[CkptRow], n: Int): Seq[Path] = {
@@ -3840,9 +3490,10 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     }
     val hintParts: Option[Int] =
       if (v2 && nParts > 1) {
-        // adds stream from executors into _sidecars/; the manifest stays
-        // a single small file of sidecar pointers + table metadata
-        val parts = writeParts(addRows, nParts)
+        // file actions stream from executors into _sidecars/; the
+        // manifest stays a single small file of sidecar pointers + table
+        // metadata
+        val parts = writeParts(fileRows, nParts)
         val scDir = new Path(dir, "_sidecars")
         fs.mkdirs(scDir)
         val sidecarRows = parts.map { p =>
@@ -3859,7 +3510,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
           f"${s.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"))
         None
       } else if (!v2 && nParts > 1) {
-        val parts = writeParts(metaRows ++ addRows, nParts)
+        val parts = writeParts(metaRows ++ fileRows, nParts)
         val k = parts.size
         parts.zipWithIndex.foreach { case (p, i) =>
           claim(p, new Path(dir,
@@ -3867,7 +3518,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
         }
         Some(k)
       } else {
-        val parts = writeParts(metaRows ++ addRows, 1)
+        val parts = writeParts(metaRows ++ fileRows, 1)
         claim(parts.head, new Path(dir,
           if (v2)
             f"${s.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
@@ -3877,7 +3528,7 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     fs.delete(tmp, true)
     val hint = fs.create(new Path(dir, "_last_checkpoint"), true)
     try hint.write(
-      (s"""{"version":${s.version},"size":${metaRows.size + addRows.size}""" +
+      (s"""{"version":${s.version},"size":${metaRows.size + fileRows.size}""" +
         hintParts.map(p => s""","parts":$p""").getOrElse("") + "}")
         .getBytes(StandardCharsets.UTF_8))
     finally hint.close()
@@ -3920,17 +3571,12 @@ object DeltaTable extends org.apache.spark.internal.Logging {
     val retentionMs = conf.get("delta.logRetentionDuration")
       .flatMap(parseDuration).getOrElse(30L * 24 * 3600 * 1000)
     val cutoff = System.currentTimeMillis() - retentionMs
-    val dir = DeltaLog.logDir(root)
-    val CommitRe = """^(\d{20})\.json$""".r
-    val CkptRe = """^(\d{20})\.checkpoint(?:\.|$).*""".r
-    fs.listStatus(dir).foreach { st =>
-      val doomed = st.getPath.getName match {
-        case CommitRe(v) => v.toLong < ckptVersion
-        case CkptRe(v) => v.toLong < ckptVersion
-        case _ => false
+    DeltaCodec.list(fs, root).foreach { log =>
+      (log.commits.toSeq ++ log.checkpointFiles.map(c => c._1 -> c._2)).foreach {
+        case (v, st) =>
+          if (v < ckptVersion && st.getModificationTime < cutoff)
+            fs.delete(st.getPath, false)
       }
-      if (doomed && st.getModificationTime < cutoff)
-        fs.delete(st.getPath, false)
     }
   }
 

@@ -12,8 +12,6 @@ import org.apache.spark.sql.{SaveMode => BatchSaveMode}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.index.rules.PlanArtifacts
 import graft.streaming.SparkStreamingInternals
@@ -344,7 +342,7 @@ final class DeltaFeed(spark: SparkSession, path: String,
     extends LakeFeed(spark, path, options) {
 
   private val root = new Path(path)
-  private def commitFile(v: Long) = new Path(DeltaLog.logDir(root), f"$v%020d.json")
+  private def commitFile(v: Long) = DeltaCodec.commitPath(root, v)
   def kind: String = "Delta"
   def idColumn: String = ChangeStamps.DeltaId
   def startingIdOption: String = "startingVersion"
@@ -416,35 +414,17 @@ final class DeltaFeed(spark: SparkSession, path: String,
     var files, bytes, cdcFiles, cdcBytes = 0L
     val adds = mutable.Buffer.empty[String]
     var rewrites = false
-    DeltaLog.readLines(fs, commitFile(v)).foreach { line =>
-      val j = JsonMethods.parse(line)
-      def size(kind: String): Long = (j \ kind \ "size") match {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case _ => 0L
-      }
-      def dataChange(kind: String): Boolean = (j \ kind \ "dataChange") match {
-        case JBool(b) => b
-        case _ => true
-      }
-      (j \ "add" \ "path") match {
-        case JString(p) =>
-          files += 1; bytes += size("add")
-          if (dataChange("add")) (j \ "add" \ "deletionVector") match {
-            case JObject(_) => rewrites = true
-            case _ => adds += DeltaLog.resolvePath(root, p)
-          }
-        case _ =>
-      }
-      (j \ "cdc" \ "path") match {
-        case JString(_) => cdcFiles += 1; cdcBytes += size("cdc")
-        case _ =>
-      }
-      (j \ "remove" \ "path") match {
-        case JString(_) if dataChange("remove") => rewrites = true
-        case _ =>
-      }
-    }
+    DeltaCodec.readCommit(fs, commitFile(v), v, path)(_.foreach {
+      case a: CkptAdd =>
+        files += 1; bytes += a.size
+        if (a.dataChange) {
+          if (a.deletionVector.isDefined) rewrites = true
+          else adds += DeltaLog.resolvePath(root, a.path)
+        }
+      case c: CkptCdc => cdcFiles += 1; cdcBytes += c.size
+      case r: CkptRemove if r.dataChange => rewrites = true
+      case _ =>
+    })
     Commit(files, bytes, cdcFiles, cdcBytes,
       if (rewrites) None else Some(adds.toSeq))
   })
